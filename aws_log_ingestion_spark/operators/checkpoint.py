@@ -80,16 +80,6 @@ class CheckpointLog:
                 os.remove(os.path.join(self.dir, f))
 
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts — the lineage record each stage emits."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    return [{"partition_id": r["partition_id"], "rows": r["rows"]} for r in rows]
-
-
 def file_lineage(path: str) -> list[dict]:
     """Per-output-file row counts straight from parquet footers (pyarrow,
     no Spark job): the cheap physical form of per-partition lineage —
@@ -228,70 +218,90 @@ def observed_write_bucketed(
 ) -> int:
     """Stage write with PER-CONV-RANGE resume (finer than stage-level).
 
-    Conversations hash into ``n_buckets`` ranges (crc32(conv_id) %
+    Conversations hash into ``n_buckets`` buckets (crc32(conv_id) %
     n_buckets — content-derived, so deterministic across runs and uniform
-    under skew); buckets commit in ``n_batches`` sequential jobs, each
-    recording its own checkpoint + per-file lineage. A re-run ANTI-JOINS
-    the recorded batches: completed conversation ranges are filtered out
-    of the scan (never recomputed, never rewritten), so a mid-stage kill
-    loses at most 1/n_batches of the stage instead of all of it. Partition
-    overwrite is dynamic, so re-running a half-written batch overwrites
-    only its own bucket directories — idempotent. This is the distributed
-    analog of the reference's per-invocation at-least-once retry
-    (/root/reference/src/function.py:136-177): the unit of redelivery is
-    a conversation range, and the manifest is the dedup ledger.
+    under skew), grouped into ``n_batches`` ranges (bucket % n_batches).
+    Every PENDING range (one with no ``<stage>.b<k>`` record) is written
+    in ONE job: the plan is built, the input scanned and the Python trace
+    decode run once, not once per range (each Python-evaluating task pays
+    a fixed worker cost, see functions/tracing.py). One ``observe()``
+    counts the rows of each pending range; after the write, one footer
+    listing supplies each range's lineage, and each range still gets its
+    own checkpoint record. A re-run filters the committed ranges out of
+    the scan (never recomputed, never rewritten).
 
-    ``fail_after_batches`` is a test hook: raise after N batch commits to
-    simulate a mid-stage kill.
+    Partition overwrite is dynamic: output is staged under
+    ``.spark-staging-*`` and bucket directories are published at job
+    commit, so a kill DURING the job publishes nothing and records no
+    range — a fresh run killed mid-job redoes the whole stage. Once range
+    records exist, a resume rewrites only the pending ranges' bucket
+    directories — idempotent. This is the distributed analog of the
+    reference's per-invocation at-least-once retry (src/function.py:
+    136-177): the unit of redelivery is a conversation range, and the
+    manifest is the dedup ledger.
+
+    ``fail_after_batches`` is a test hook: after the write, raise once N
+    range records are committed, to simulate a kill between records.
     """
-    # Fresh start (no batch checkpoints) into a dir holding a previous
+    from pyspark.sql import Observation
+
+    prior = {k: log.read(f"{stage}.b{k}") for k in range(n_batches)}
+    pending = [k for k, rec in prior.items() if rec is None]
+    total = sum(rec["rows"] for rec in prior.values() if rec is not None)
+    # Fresh start (no range checkpoints) into a dir holding a previous
     # run's output: dynamic partition-overwrite only replaces buckets
     # present in the NEW data, so stale buckets from the old run would
     # survive and trip the lineage assert (or leak rows). Truncate first —
     # the Iceberg analog is CREATE OR REPLACE before the first snapshot.
-    if not any(log.is_done(f"{stage}.b{k}") for k in range(n_batches)):
-        if os.path.isdir(path):
-            import shutil
+    fresh = len(pending) == n_batches
+    if fresh and os.path.isdir(path):
+        import shutil
 
-            shutil.rmtree(path)
-    bucket = F.crc32(F.col("conv_id")) % n_buckets
-    staged = df.withColumn("conv_bucket", bucket.cast("int"))
-    total = 0
-    done_batches = []
-    for k in range(n_batches):
-        bstage = f"{stage}.b{k}"
-        prior = log.read(bstage)
-        if prior is not None:
-            total += prior["rows"]
-            done_batches.append(k)
-            continue
-        if fail_after_batches is not None and len(done_batches) >= fail_after_batches:
-            raise RuntimeError(f"injected kill after {fail_after_batches} batches")
-        from pyspark.sql import Observation
-
-        obs = Observation(f"obs_{bstage}")
-        part = staged.filter(F.col("conv_bucket") % n_batches == k).observe(
-            obs, F.count(F.lit(1)).alias("rows")
+        shutil.rmtree(path)
+    if pending:
+        bucket = F.crc32(F.col("conv_id")) % n_buckets
+        staged = df.withColumn("conv_bucket", bucket.cast("int"))
+        batch = F.col("conv_bucket") % n_batches
+        if not fresh:
+            staged = staged.filter(batch.isin(pending))
+        obs = Observation(f"obs_{stage}")
+        observed = staged.observe(
+            obs, *[F.sum((batch == k).cast("long")).alias(f"b{k}") for k in pending]
         )
         (
-            part.sortWithinPartitions("conv_bucket", *order_cols)
+            observed.sortWithinPartitions("conv_bucket", *order_cols)
             .write.mode("overwrite")
-            .options(**parquet_text_options(part))
+            .options(**parquet_text_options(observed))
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("conv_bucket")
             .parquet(path)
         )
-        rows = obs.get["rows"]
-        buckets = [b for b in range(n_buckets) if b % n_batches == k]
-        lineage = [
-            e
-            for e in file_lineage(path)
-            if any(e["file"].startswith(f"conv_bucket={b}/") for b in buckets)
-        ]
-        assert sum(e["rows"] for e in lineage) == rows, "bucket lineage drift"
-        log.record(bstage, {"rows": rows, "path": path, "buckets": buckets, "lineage": lineage})
-        total += rows
-        done_batches.append(k)
+        rows = {k: int(obs.get[f"b{k}"] or 0) for k in pending}
+        # one listing for every range; files outside the bucket dirs (a
+        # killed job's leftover .spark-staging-*) belong to no range
+        batch_of = {f"conv_bucket={b}": b % n_batches for b in range(n_buckets)}
+        lineages: dict[int, list[dict]] = {k: [] for k in pending}
+        for e in file_lineage(path):
+            k = batch_of.get(e["file"].split("/", 1)[0])
+            if k in lineages:
+                lineages[k].append(e)
+        committed = n_batches - len(pending)
+        for k in pending:
+            if fail_after_batches is not None and committed >= fail_after_batches:
+                raise RuntimeError(f"injected kill after {fail_after_batches} batches")
+            lineage = lineages[k]
+            assert sum(e["rows"] for e in lineage) == rows[k], "bucket lineage drift"
+            log.record(
+                f"{stage}.b{k}",
+                {
+                    "rows": rows[k],
+                    "path": path,
+                    "buckets": [b for b in range(n_buckets) if b % n_batches == k],
+                    "lineage": lineage,
+                },
+            )
+            total += rows[k]
+            committed += 1
     if log.read(stage) is None:
         log.record(stage, {"rows": total, "path": path, "batches": n_batches, "buckets": n_buckets})
     return total

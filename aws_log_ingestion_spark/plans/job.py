@@ -10,7 +10,9 @@ it. At 10^12 turns this trades one extra sequential write for 3-4
 recomputations of the conv_id window — and doubles as the resume point:
 a re-run that finds the hub checkpoint skips straight to the un-written
 sinks. Measured locally (2M turns): hub-through-storage beats both
-recompute-per-sink (~2.4x) and .cache() (~1.3x).
+recompute-per-sink (~2.4x) and .cache() (~1.3x). The hub itself is one
+Spark job that writes every pending conversation range, with one
+checkpoint record per range (operators/checkpoint.py).
 
 Run via spark-submit (package zipped by scripts/make_pyfiles.sh):
     spark-submit --py-files dist/aws_log_ingestion_spark.zip \
@@ -112,15 +114,18 @@ def run_pipeline(
 
     Idempotent: re-running with the same out_dir skips stages whose
     checkpoint record exists (kill-and-resume converges to identical
-    counts — BASELINE.md "Resume idempotency")."""
+    counts — BASELINE.md "Resume idempotency"). Inside the hub stage the
+    unit of resume is a conversation range: a kill after some range
+    records were committed rewrites only the rest; a kill during the hub
+    job itself publishes nothing, so the stage restarts from zero."""
     cfg = cfg or PipelineConfig()
     log = ckpt.CheckpointLog(out_dir)
     if not resume:
         log.clear()
 
-    # stage 0: the hub — the single wide shuffle, written once. Bucketed
-    # by conversation range with per-batch checkpoints: a mid-stage kill
-    # resumes from the last committed range, not from zero.
+    # stage 0: the hub — the single wide shuffle, written once, in one
+    # job. Bucketed by conversation range with per-range checkpoints: a
+    # resume rewrites only the ranges that have no record yet.
     hub_path = f"{out_dir}/classified"
     if not log.is_done("classified"):
         ckpt.observed_write_bucketed(

@@ -35,14 +35,18 @@ def _stub_aiohttp() -> None:
 
 
 def load_reference():
-    """Import /root/reference/src/function.py as module ``ref_function``."""
+    """Import the reference checkout at ``REFERENCE_PATH`` as module
+    ``ref_function``. A missing checkout raises FileNotFoundError naming
+    the path, on every call."""
     _stub_aiohttp()
     if "ref_function" in sys.modules:
         return sys.modules["ref_function"]
     spec = importlib.util.spec_from_file_location("ref_function", REFERENCE_PATH)
     mod = importlib.util.module_from_spec(spec)
-    sys.modules["ref_function"] = mod
+    # register only a module that loaded: a half-initialised entry would
+    # turn every later call's FileNotFoundError into an AttributeError
     spec.loader.exec_module(mod)
+    sys.modules["ref_function"] = mod
     return mod
 
 

@@ -4,6 +4,8 @@ reference oracle, and kill-and-resume idempotency (BASELINE.md targets)."""
 from __future__ import annotations
 
 import json
+import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,9 +42,29 @@ def _expected_counts():
     return counts
 
 
+def _hub_rows(spark, out_dir):
+    """The hub as plain dicts sorted by (conv_id, turn_idx), without the
+    bucket partition column (a stage-level hub write has none)."""
+    rows = spark.read.parquet(f"{out_dir}/classified").drop("conv_bucket").collect()
+    return sorted(
+        (r.asDict(recursive=True) for r in rows), key=lambda d: (d["conv_id"], d["turn_idx"])
+    )
+
+
 @pytest.fixture(scope="module")
 def run_dir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("pipeline_out"))
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, template_df, template_meta_df, tmp_path_factory):
+    """Expected values for the kill/resume tests, needing no reference: a
+    clean ``run_pipeline`` over the same input in a fresh dir. Returns
+    (out_dir, counts, hub rows)."""
+    out = str(tmp_path_factory.mktemp("clean_out"))
+    cfg = PipelineConfig(logging_enabled=True)
+    result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=False)
+    return out, result["counts"], _hub_rows(spark, out)
 
 
 def test_per_sink_counts_match_reference(spark, template_df, template_meta_df, run_dir):
@@ -74,19 +96,22 @@ def test_chunk_manifest_written(run_dir):
     assert all(t["raw_bytes"] > 0 for t in totals)
 
 
-def test_resume_is_idempotent(spark, template_df, template_meta_df, run_dir):
+def test_resume_is_idempotent(spark, template_df, template_meta_df, clean_run):
     """Re-running over an existing checkpoint dir reproduces identical
     counts without rewriting (manifest wall-times unchanged)."""
-    before = ckpt.read_manifest(None, run_dir)
+    out, counts, hub_rows = clean_run
+    before = ckpt.read_manifest(None, out)
+    assert "classified" in before
     cfg = PipelineConfig(logging_enabled=True)
-    result2 = run_pipeline(spark, template_df, template_meta_df, run_dir, cfg, resume=True)
-    after = ckpt.read_manifest(None, run_dir)
-    assert result2["counts"] == _expected_counts()
+    result2 = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
+    after = ckpt.read_manifest(None, out)
+    assert result2["counts"] == counts
+    assert _hub_rows(spark, out) == hub_rows
     for stage, payload in before.items():
         assert after[stage]["wall_time"] == payload["wall_time"], f"{stage} was rewritten"
 
 
-def test_partial_failure_resume(spark, template_df, template_meta_df, tmp_path):
+def test_partial_failure_resume(spark, template_df, template_meta_df, clean_run, tmp_path):
     """Simulate a mid-job kill: only the hub stage completes, then resume —
     final counts equal a clean run's and the hub is not rewritten."""
     out = str(tmp_path / "partial")
@@ -101,16 +126,18 @@ def test_partial_failure_resume(spark, template_df, template_meta_df, tmp_path):
     hub_time = log.read("classified")["wall_time"]
 
     result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
-    assert result["counts"] == _expected_counts()
+    _, counts, hub_rows = clean_run
+    assert result["counts"] == counts
+    assert _hub_rows(spark, out) == hub_rows
     assert ckpt.read_manifest(None, out)["classified"]["wall_time"] == hub_time
 
 
 def test_mid_stage_kill_resumes_per_conv_range(
-    spark, template_df, template_meta_df, tmp_path
+    spark, template_df, template_meta_df, clean_run, tmp_path
 ):
-    """Kill INSIDE the hub stage after 2 of 4 conversation-range batches:
-    resume completes only the missing ranges (completed batch records are
-    not rewritten) and converges to a clean run's counts."""
+    """Kill INSIDE the hub stage after 2 of 4 conversation-range records:
+    resume completes only the missing ranges (completed range records are
+    not rewritten) and converges to a clean run's counts and hub rows."""
     out = str(tmp_path / "midstage")
     cfg = PipelineConfig(logging_enabled=True)
     from aws_log_ingestion_spark.plans.job import prepare
@@ -126,13 +153,107 @@ def test_mid_stage_kill_resumes_per_conv_range(
     times = {k: log.read(f"classified.b{k}")["wall_time"] for k in done}
 
     result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
-    assert result["counts"] == _expected_counts()
+    _, counts, hub_rows = clean_run
+    assert result["counts"] == counts
+    assert _hub_rows(spark, out) == hub_rows
     for k, t in times.items():
         assert log.read(f"classified.b{k}")["wall_time"] == t, f"range batch {k} rewritten"
     assert sum(log.read(f"classified.b{k}")["rows"] for k in range(4)) == template_df.count()
     # lineage covers every bucket exactly once across batches
     buckets = [b for k in range(4) for b in log.read(f"classified.b{k}")["buckets"]]
     assert sorted(buckets) == list(range(32))
+
+
+def _bucket_files(path: str, buckets) -> dict[str, tuple[int, int]]:
+    """Every file in the hub's ``conv_bucket=<b>`` dirs -> (bytes, mtime_ns)."""
+    out = {}
+    for b in buckets:
+        d = os.path.join(path, f"conv_bucket={b}")
+        for f in os.listdir(d) if os.path.isdir(d) else []:
+            st = os.stat(os.path.join(d, f))
+            out[f"conv_bucket={b}/{f}"] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _sql_executions_for_group(spark, group: str) -> list[int]:
+    """Ids of the SQL executions (one per DataFrame action) that ran the
+    jobs of ``group``. AQE submits each query stage as its own Spark job,
+    so a single write shows up as several jobs of ONE execution."""
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    listed = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(listed.size()):
+        e = listed.apply(i)
+        ids = {int(j) for j in e.jobs().keys().mkString(",").split(",") if j}
+        if ids & jobs:
+            out.append(e.executionId())
+    return out
+
+
+def test_resume_of_two_pending_ranges_is_one_write_job(
+    spark, template_df, template_meta_df, tmp_path
+):
+    """Ranges 0 and 1 committed, 2 and 3 pending: the resume writes both
+    pending ranges in ONE job (not one per range) and leaves the committed
+    ranges' parquet files untouched, byte for byte and mtime."""
+    out = str(tmp_path / "two_pending")
+    path = f"{out}/classified"
+    cfg = PipelineConfig(logging_enabled=True)
+    from aws_log_ingestion_spark.plans.job import prepare
+
+    log = ckpt.CheckpointLog(out)
+    hub_df = prepare(template_df, template_meta_df, cfg)
+    with pytest.raises(RuntimeError, match="injected kill"):
+        ckpt.observed_write_bucketed(hub_df, path, log, "classified", fail_after_batches=2)
+    assert [k for k in range(4) if log.is_done(f"classified.b{k}")] == [0, 1]
+    done_buckets = [b for k in (0, 1) for b in log.read(f"classified.b{k}")["buckets"]]
+    committed = _bucket_files(path, done_buckets)
+    assert committed
+
+    sc = spark.sparkContext
+    group = f"hub_resume_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "resume of ranges 2 and 3")
+    try:
+        total = ckpt.observed_write_bucketed(hub_df, path, log, "classified")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(_sql_executions_for_group(spark, group)) == 1
+    assert total == template_df.count()
+    assert _bucket_files(path, done_buckets) == committed
+    buckets = [b for k in range(4) for b in log.read(f"classified.b{k}")["buckets"]]
+    assert sorted(buckets) == list(range(32))
+
+
+def test_task_failure_in_hub_job_publishes_nothing(
+    spark, template_df, template_meta_df, clean_run, tmp_path
+):
+    """A task failing inside the single hub job aborts it whole: no range
+    record, no published bucket dir. A rerun on clean input converges to
+    a clean run's counts and hub rows."""
+    out = str(tmp_path / "task_failure")
+    path = f"{out}/classified"
+    cfg = PipelineConfig(logging_enabled=True)
+    from aws_log_ingestion_spark.plans.job import prepare
+
+    poisoned = prepare(template_df, template_meta_df, cfg).withColumn(
+        "text",
+        F.when(F.col("conv_id") == "c0", F.raise_error(F.lit("injected task failure"))).otherwise(
+            F.col("text")
+        ),
+    )
+    log = ckpt.CheckpointLog(out)
+    with pytest.raises(Exception, match="injected task failure"):
+        ckpt.observed_write_bucketed(poisoned, path, log, "classified")
+    assert not [f for f in os.listdir(log.dir) if f.startswith("classified")]
+    assert not os.path.isdir(path) or not [
+        d for d in os.listdir(path) if d.startswith("conv_bucket=")
+    ]
+
+    result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
+    _, counts, hub_rows = clean_run
+    assert result["counts"] == counts
+    assert _hub_rows(spark, out) == hub_rows
 
 
 def test_iceberg_branch_selection(spark, tmp_path):
