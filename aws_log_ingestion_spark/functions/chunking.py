@@ -135,7 +135,8 @@ def build_log_message(
     order (message, timestamp, attributes{aws, extras}, trace.id last —
     /root/reference/src/function.py:525-545). Pure/stateless: the carried
     trace id and request id are INPUTS here, which is what lets the
-    salted replay rebuild any turn range without replaying earlier turns.
+    chunk count walk serialize any turn range without replaying earlier
+    turns.
     """
     log_message = {
         "message": message,
@@ -176,8 +177,8 @@ def empty_payload_len(obj) -> int:
 # DEFLATE's maximum compression ratio: one 258-byte match can encode in
 # ~2 bits with a degenerate Huffman table => gz_len >= raw_len/1032 for
 # ANY input. raw >= cap*1032 therefore PROVES gz >= cap (a guaranteed
-# re-split) without running gzip — the exactness shortcut the salted
-# replay uses to skip compressing the top of the recursion tree.
+# re-split) without running gzip — the exactness shortcut count_chunks_fast
+# uses to skip compressing the top of the recursion tree.
 GZIP_MAX_RATIO = 1032
 
 
@@ -244,46 +245,6 @@ def count_chunks_fast(
         stack.append((mid, hi))
         stack.append((lo, mid))
     return n_chunks, raw_total
-
-
-def frontier_intervals(
-    costs: list[int],
-    empty_len: int,
-    max_size: int = MAX_PAYLOAD_SIZE,
-    ratio: int = GZIP_MAX_RATIO,
-) -> list[tuple[int, int]]:
-    """Walk the binary-halving tree on exact raw byte sums; return the
-    maximal intervals that CANNOT be proven oversized (raw < cap*ratio).
-
-    Every interval above the frontier has gz >= raw/ratio >= cap, so the
-    reference recursion (iter_chunks) provably splits it — its chunks are
-    exactly the union of its children's chunks. Replaying each frontier
-    interval independently therefore reproduces the global recursion
-    bit-for-bit, while bounding per-task bytes to cap*ratio. ``ratio``
-    may be lowered when the payload's true compressibility is known
-    (exactness then requires gz >= raw/ratio to hold for the data).
-    Splits happen at mid = lo + (hi-lo)//2, the order iter_chunks uses.
-    """
-    n = len(costs)
-    prefix = [0]
-    for c in costs:
-        prefix.append(prefix[-1] + c)
-
-    def raw(lo: int, hi: int) -> int:
-        k = hi - lo
-        return empty_len + (prefix[hi] - prefix[lo]) + 2 * max(0, k - 1)
-
-    out: list[tuple[int, int]] = []
-    stack = [(0, n)]
-    while stack:
-        lo, hi = stack.pop()
-        if hi - lo <= 1 or raw(lo, hi) < max_size * ratio:
-            out.append((lo, hi))
-            continue
-        mid = lo + (hi - lo) // 2
-        stack.append((mid, hi))
-        stack.append((lo, mid))
-    return sorted(out)
 
 
 def split_infra(data: dict) -> tuple[dict, dict]:

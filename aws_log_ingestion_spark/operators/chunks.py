@@ -11,9 +11,9 @@ Scale notes:
   * groups are independent — Spark schedules one pandas call per
     conversation group; AQE balances partitions. A pathological hot
     conversation serialises its own group only.
-  * ``approx_chunk_counts`` is the pure-DataFrame scale path: an upper
-    bound from cumulative serialized bytes (no Python), clearly flagged
-    as NOT replay-parity (SURVEY.md §2 row 16 caveat).
+  * ``chunk_counts_fast`` is the production path: exact chunk counts
+    from pure-Catalyst byte arithmetic, with a Python walk (gzip only in
+    the ambiguous band) for the few conversations above the cap.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ CHUNK_STATS_SCHEMA = StructType(
 _REQUIRED = ["conv_id", "turn_idx", "text", "ts", "sink"]
 _META = ["owner", "log_group", "log_stream_name", "function_name", "invoked_function_arn"]
 # hub-materialised MELT fills (melt.with_melt_fills) — when present and
-# path == 'logging', _with_pos_and_state reuses them instead of paying a
+# path == 'logging', _staged_with_costs reuses them instead of paying a
 # second trace-decode UDF pass + refill window
 _FILLS = ["trace_id", "lambda_request_id"]
 
@@ -274,27 +274,6 @@ def chunk_replay_independent(
     return g.mapInPandas(gen, CHUNK_STATS_SCHEMA)
 
 
-FRONTIER_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("lo", LongType()),
-        StructField("hi", LongType()),
-    ]
-)
-
-INTERVAL_STATS_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("sink", StringType()),
-        StructField("path", StringType()),
-        StructField("n_events", LongType()),
-        StructField("n_chunks", LongType()),
-        StructField("total_gz_bytes", LongType()),
-        StructField("max_chunk_bytes", LongType()),
-    ]
-)
-
-
 def _conv_ordinal(conv_id: str) -> int:
     return int("".join(ch for ch in conv_id if ch.isdigit()) or 0)
 
@@ -308,8 +287,8 @@ def _build_event(conv_id: str, turn_idx: int, ts_millis: int, text: str) -> dict
 
 
 def _envelope(first, path: str, cfg: PipelineConfig):
-    """(payload-with-no-events, split_fn, message-builder context) for one
-    conversation — shared by the cost/frontier pass and interval replay."""
+    """One conversation's payload with no events — the envelope the count
+    walk serializes its ambiguous-band probes into."""
     conv_id = first["conv_id"]
     entry = C.build_entry(
         conv_id,
@@ -325,85 +304,8 @@ def _envelope(first, path: str, cfg: PipelineConfig):
             "log_group_name": first.get("log_group", "") or "",
             "log_stream_name": first.get("log_stream_name", "") or "",
         }
-        return C.build_infra_data(context, entry), C.split_infra
-    payload = C.build_melt_payload(entry, lambda_prefix=cfg.lambda_prefix, tags=dict(cfg.tags))
-    return payload, C.split_logging
-
-
-def _with_pos_and_state(
-    df: DataFrame, path: str, cfg: PipelineConfig, with_pos: bool = True
-) -> DataFrame:
-    """Stage 0 (pure Catalyst): 0-based event position per conversation,
-    epoch millis, and — for the logging path — the per-event carried
-    trace id / request id (same window fills the MELT projection uses),
-    so interval replay is STATELESS per event.
-
-    ``with_pos=False`` (the aggregate-only count/census/raw-cost paths)
-    skips BOTH conversation windows here — the row_number position and
-    the envelope-meta pinning — so when the fills are already hub
-    columns the whole staged frame is a narrow scan-side projection with
-    no exchange and no sort (guide §2.4: remove shuffles outright; the
-    per-conv aggregation that follows does its own map-side combine).
-    Consumers of the no-pos shape must (a) order groups by ``turn_idx``
-    instead of ``pos`` and (b) read conversation-level envelope values
-    via ``min_by(col, turn_idx)`` — exactly the turn_idx-min row the
-    pinned windows used, so results are identical even when meta varies
-    mid-conversation."""
-    from ..functions import patterns as P
-    from ..functions.tracing import trace_id_raw
-    from .classify import with_log_group
-
-    if "log_group" not in df.columns:
-        df = with_log_group(df, cfg)
-    run = (
-        W.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    df = df.withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))
-    if with_pos:
-        df = df.withColumn(
-            "pos",
-            (F.row_number().over(W.partitionBy("conv_id").orderBy("turn_idx")) - 1).cast("long"),
-        )
-        # Pin envelope meta to the conversation's turn_idx-min row — the SAME
-        # row the unsalted grouped replay reads (pdf.iloc[0] after sort). The
-        # cost pass, the rid predicate and every interval's replay then agree
-        # on one envelope even if meta varied mid-conversation, preserving the
-        # salted==unsalted bit-exactness guarantee unconditionally.
-        for m in _META:
-            if m in df.columns:
-                df = df.withColumn(m, F.first(F.col(m)).over(run))
-    if path == "logging":
-        if "trace_id" in df.columns and "lambda_request_id" in df.columns:
-            # The hub already materialised the MELT fills (plans/job.py
-            # prepare()): reuse them — no second trace-decode UDF pass,
-            # no refill window. Same values by construction
-            # (melt.with_melt_fills is the same window arithmetic).
-            df = df.withColumn("trace_fill", F.col("trace_id")).withColumn(
-                "rid_fill", F.col("lambda_request_id")
-            )
-        else:
-            t = F.col("text")
-            traw = trace_id_raw(t, P.is_nr_marker(t))
-            rid = F.when(
-                F.col("log_group").startswith(cfg.lambda_prefix),
-                P.extract_request_id(t),
-            )
-            # both fills in one select -> one Window exec (melt.py note)
-            df = df.select(
-                "*",
-                F.last(traw, ignorenulls=True).over(run).alias("__tr_last"),
-                F.last(rid, ignorenulls=True).over(run).alias("rid_fill"),
-            )
-            df = df.withColumn(
-                "trace_fill", F.nullif(F.col("__tr_last"), F.lit(""))
-            ).drop("__tr_last")
-    else:
-        df = df.withColumn("trace_fill", F.lit(None).cast("string")).withColumn(
-            "rid_fill", F.lit(None).cast("string")
-        )
-    return df
+        return C.build_infra_data(context, entry)
+    return C.build_melt_payload(entry, lambda_prefix=cfg.lambda_prefix, tags=dict(cfg.tags))
 
 
 def _message_for(path: str, row) -> dict:
@@ -415,177 +317,6 @@ def _message_for(path: str, row) -> dict:
         trace_id=row.trace_fill or None,
         lambda_request_id=row.rid_fill or None,
     )
-
-
-def chunk_replay_salted(
-    df: DataFrame,
-    path: str,
-    cfg: PipelineConfig | None = None,
-    ratio: int = C.GZIP_MAX_RATIO,
-) -> DataFrame:
-    """Two-level EXACT chunk replay — the 100 TB hot-conversation path
-    (SURVEY.md §4 item 1; replaces the one-group-per-conversation
-    ``chunk_replay`` straggler on 10^7-turn conversations).
-
-      1. per-event serialized byte costs (Arrow-batched, no grouping) —
-         json escaping is per-character so interval raw sizes are exact
-         prefix-sum arithmetic (functions/chunking.py:event_cost_*)
-      2. per-conversation frontier walk over (pos, cost) ONLY (two int64
-         columns — the hot conversation's text never ships to one task):
-         intervals with raw >= cap*ratio are provably oversized
-         (gz >= raw/1032) and split without gzipping
-      3. frontier intervals replay independently in parallel
-         (groupBy(conv_id, lo)), each bounded to cap*ratio raw bytes;
-         per-conversation totals merge associatively.
-
-    Bit-exact vs ``chunk_replay`` for any ``ratio`` that upper-bounds the
-    data's true gzip ratio (1032 is the DEFLATE-theoretic bound, always
-    safe); pinned by tests/test_chunks_vs_reference.py.
-    """
-    cfg = cfg or PipelineConfig()
-    max_size = cfg.max_payload_size
-    staged = _with_pos_and_state(df.select(*_select_cols(df, path)), path, cfg).drop("ts")
-
-    # ---- stage 1: per-event cost + per-conv envelope length (Arrow batch)
-    cost_cols = [
-        "conv_id", "turn_idx", "ts_millis", "text", "trace_fill", "rid_fill",
-        "log_group", "log_stream_name", "owner", "function_name",
-        "invoked_function_arn",
-    ]
-    cost_cols = [c for c in cost_cols if c in staged.columns]
-
-    def cost_gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            costs, empties = [], []
-            env_cache: dict[str, int] = {}
-            for row in pdf.itertuples(index=False):
-                if path == "infra":
-                    c = C.event_cost_infra(
-                        _build_event(row.conv_id, row.turn_idx, row.ts_millis, row.text)
-                    )
-                else:
-                    c = C.event_cost_logging(_message_for(path, row))
-                costs.append(c)
-                e = env_cache.get(row.conv_id)
-                if e is None:
-                    obj, _ = _envelope(row._asdict(), path, cfg)
-                    e = env_cache[row.conv_id] = C.empty_payload_len(obj)
-                empties.append(e)
-            out = pd.DataFrame(
-                {"conv_id": pdf["conv_id"], "cost": costs, "empty_len": empties}
-            )
-            out["pos"] = pdf["pos"].values
-            yield out
-
-    cost_schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("cost", LongType()),
-            StructField("empty_len", LongType()),
-            StructField("pos", LongType()),
-        ]
-    )
-    costs = staged.select(*cost_cols, "pos").mapInPandas(cost_gen, cost_schema)
-
-    # ---- stage 2: frontier walk over (pos, cost) per conversation
-    def frontier(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("pos")
-        iv = C.frontier_intervals(
-            pdf["cost"].tolist(), int(pdf["empty_len"].iloc[0]), max_size, ratio
-        )
-        return pd.DataFrame(
-            [{"conv_id": pdf["conv_id"].iloc[0], "lo": lo, "hi": hi} for lo, hi in iv]
-        )
-
-    frontiers = costs.groupBy("conv_id").applyInPandas(frontier, FRONTIER_SCHEMA)
-
-    # ---- stage 3: parallel exact replay of each frontier interval.
-    # No broadcast hint: under the hybrid routing (the production wiring)
-    # frontiers is tiny and AQE broadcasts it at runtime anyway; called
-    # standalone on a full corpus it is >= 1 row per conversation and a
-    # forced broadcast would OOM the driver — let AQE pick the strategy.
-    joined = staged.join(
-        frontiers,
-        (staged["conv_id"] == frontiers["conv_id"])
-        & (F.col("pos") >= F.col("lo"))
-        & (F.col("pos") < F.col("hi")),
-    ).drop(frontiers["conv_id"])
-
-    def replay(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("pos")
-        first = pdf.iloc[0]
-        obj, split_fn = _envelope(first, path, cfg)
-        msgs = [_message_for(path, row) for row in pdf.itertuples(index=False)]
-        if path == "infra":
-            import json
-
-            entry = json.loads(obj["entry"])
-            entry["logEvents"] = msgs
-            obj = {"context": obj["context"], "entry": json.dumps(entry)}
-        else:
-            obj = [{"common": obj[0]["common"], "logs": msgs}]
-        s = C.chunk_stats(obj, split_fn, max_size)
-        return pd.DataFrame(
-            [
-                {
-                    "conv_id": first["conv_id"],
-                    "sink": first["sink"],
-                    "path": path,
-                    "n_events": len(msgs),
-                    "n_chunks": s["n_chunks"],
-                    "total_gz_bytes": s["total_gz_bytes"],
-                    "max_chunk_bytes": s["max_chunk_bytes"],
-                }
-            ]
-        )
-
-    per_interval = joined.groupBy("conv_id", "lo").applyInPandas(
-        replay, INTERVAL_STATS_SCHEMA
-    )
-    return per_interval.groupBy("conv_id", "sink", "path").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("n_chunks").alias("n_chunks"),
-        F.sum("total_gz_bytes").alias("total_gz_bytes"),
-        F.max("max_chunk_bytes").alias("max_chunk_bytes"),
-    ).select(*[f.name for f in CHUNK_STATS_SCHEMA.fields])
-
-
-def chunk_replay_hybrid(
-    df: DataFrame,
-    path: str,
-    cfg: PipelineConfig | None = None,
-    hot_threshold: int = 100_000,
-    ratio: int = C.GZIP_MAX_RATIO,
-) -> DataFrame:
-    """Production chunk stage: size-routed replay.
-
-    One cheap count aggregate finds conversations above ``hot_threshold``
-    events; those go through the two-level ``chunk_replay_salted`` (no
-    single-task straggler), everything else through the plain grouped
-    replay (lower constant cost — the salted path's extra cost/frontier
-    passes aren't worth it for small groups; see BENCH/skew.md). Both
-    paths are exact, so the routing threshold is purely a performance
-    knob. The hot set is broadcast (it is tiny by construction — at most
-    total_rows / hot_threshold conversations).
-    """
-    cfg = cfg or PipelineConfig()
-    hot = (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > hot_threshold)
-        .select("conv_id")
-    )
-    cold_stats = chunk_replay(df.join(F.broadcast(hot), "conv_id", "left_anti"), path, cfg)
-    hot_stats = chunk_replay_salted(
-        df.join(F.broadcast(hot), "conv_id", "left_semi"), path, cfg, ratio=ratio
-    )
-    return cold_stats.unionByName(hot_stats)
 
 
 FAST_STATS_SCHEMA = StructType(
@@ -606,36 +337,72 @@ def _mcol(df: DataFrame, name: str):
     return F.col(name) if name in df.columns else F.lit("")
 
 
-def _staged_with_costs(
-    df: DataFrame, path: str, cfg: PipelineConfig, with_pos: bool = True
-):
-    """Stage 0/1 of the arithmetic chunk paths: carried fills (+ pos and
-    pinned meta when ``with_pos``, see ``_with_pos_and_state``), then the
-    EXACT per-event JSON byte cost and per-conversation empty-envelope
-    length as pure Catalyst columns (functions/jsoncost.py) — no Python
-    anywhere."""
-    from ..functions import jsoncost as jc
+def _staged_with_costs(df: DataFrame, path: str, cfg: PipelineConfig) -> DataFrame:
+    """Stage 0/1 of the arithmetic chunk paths (pure Catalyst, no Python):
+    epoch millis, the per-event carried trace id / request id for the
+    logging path (the same window fills the MELT projection uses), then
+    the EXACT per-event JSON byte cost (functions/jsoncost.py).
 
-    staged = _with_pos_and_state(
-        df.select(*_select_cols(df, path)), path, cfg, with_pos=with_pos
-    ).drop("ts")
-    if path == "infra":
-        cost = jc.event_cost_infra_expr(
-            F.col("text"), F.col("turn_idx"), F.col("ts_millis")
-        )
-    else:
+    When the fills are already hub columns the staged frame is a narrow
+    scan-side projection with no exchange and no sort (guide §2.4:
+    remove shuffles outright; the per-conv aggregation that follows does
+    its own map-side combine). It carries no event position and no
+    per-conversation meta, so consumers (a) order a conversation's rows
+    by ``turn_idx`` and (b) read conversation-level envelope values from
+    the turn_idx-min row (``_per_conv_raw``, the walk's ``iloc[0]``),
+    which keeps results exact even when meta varies mid-conversation.
+    The empty-envelope length is conversation-level too, so
+    ``_per_conv_raw`` computes it once per conversation."""
+    from ..functions import jsoncost as jc
+    from ..functions import patterns as P
+    from ..functions.tracing import trace_id_raw
+    from .classify import with_log_group
+
+    df = df.select(*_select_cols(df, path))
+    if "log_group" not in df.columns:
+        df = with_log_group(df, cfg)
+    df = df.withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))
+    if path == "logging":
+        if "trace_id" in df.columns and "lambda_request_id" in df.columns:
+            # The hub already materialised the MELT fills (plans/job.py
+            # prepare()): reuse them — no second trace-decode UDF pass,
+            # no refill window. Same values by construction
+            # (melt.with_melt_fills is the same window arithmetic).
+            df = df.withColumn("trace_fill", F.col("trace_id")).withColumn(
+                "rid_fill", F.col("lambda_request_id")
+            )
+        else:
+            run = (
+                W.partitionBy("conv_id")
+                .orderBy("turn_idx")
+                .rowsBetween(W.unboundedPreceding, W.currentRow)
+            )
+            t = F.col("text")
+            traw = trace_id_raw(t, P.is_nr_marker(t))
+            rid = F.when(
+                F.col("log_group").startswith(cfg.lambda_prefix),
+                P.extract_request_id(t),
+            )
+            # both fills in one select -> one Window exec (melt.py note)
+            df = df.select(
+                "*",
+                F.last(traw, ignorenulls=True).over(run).alias("__tr_last"),
+                F.last(rid, ignorenulls=True).over(run).alias("rid_fill"),
+            )
+            df = df.withColumn(
+                "trace_fill", F.nullif(F.col("__tr_last"), F.lit(""))
+            ).drop("__tr_last")
         cost = jc.event_cost_logging_expr(
             F.col("text"), F.col("ts_millis"), F.col("trace_fill"), F.col("rid_fill")
         )
-    staged = staged.withColumn("__cost", cost)
-    if with_pos:
-        # the interval-replay paths read __empty per row; the aggregate
-        # paths (with_pos=False) compute it once per conversation in
-        # _per_conv_raw instead — the envelope fields are conversation-
-        # constant, so evaluating their escape-count scans on every turn
-        # was pure repetition (measured in OPTIMIZATION_r07.md)
-        staged = staged.withColumn("__empty", _empty_expr(staged, path, cfg))
-    return staged
+    else:
+        df = df.withColumn("trace_fill", F.lit(None).cast("string")).withColumn(
+            "rid_fill", F.lit(None).cast("string")
+        )
+        cost = jc.event_cost_infra_expr(
+            F.col("text"), F.col("turn_idx"), F.col("ts_millis")
+        )
+    return df.drop("ts").withColumn("__cost", cost)
 
 
 def _empty_expr(df: DataFrame, path: str, cfg: PipelineConfig):
@@ -663,8 +430,8 @@ def _per_conv_raw(staged: DataFrame, path: str, cfg: PipelineConfig) -> DataFram
     map-side-combining aggregation, no window and NO SORT: costs are
     order-independent sums, and the conversation-level envelope values
     (sink + the meta fields the empty-envelope length needs) come from
-    the turn_idx-min row — exactly the row the old pinned-window
-    ``first()`` read, so results are identical even when meta varies
+    the turn_idx-min row — the row ``chunk_replay`` reads its envelope
+    from, so results are identical even when meta varies
     mid-conversation.
 
     Two deliberate shapes here:
@@ -726,10 +493,9 @@ def chunk_raw_costs(df: DataFrame, path: str, cfg: PipelineConfig | None = None)
     backbone the fast count path and capacity planning share.
     """
     cfg = cfg or PipelineConfig()
-    staged = _staged_with_costs(df, path, cfg, with_pos=False)
     from ..functions import jsoncost as jc
 
-    per_conv = _per_conv_raw(staged, path, cfg)
+    per_conv = _per_conv_raw(_staged_with_costs(df, path, cfg), path, cfg)
     return per_conv.select(
         "conv_id",
         "sink",
@@ -747,7 +513,6 @@ def chunk_census(
     path: str,
     cfg: PipelineConfig | None = None,
     caps: list[tuple[str, int]] | None = None,
-    ratio: int = C.GZIP_MAX_RATIO,
 ) -> DataFrame:
     """Per-sink PROOF census of the chunk recursion at one or more caps —
     the exactly-oracle-able face of the gzip chunk stage (VERDICT r4 #3).
@@ -760,7 +525,7 @@ def chunk_census(
       recursion (/root/reference/src/function.py:309-323) PROVABLY emits
       exactly one chunk, so these contribute exactly ``n_single_proved``
       chunks (``n_chunks_proved``).
-    - ``n_split_proved``: raw >= cap*ratio — gz >= raw/1032 >= cap, the
+    - ``n_split_proved``: raw >= cap*1032 — gz >= raw/1032 >= cap, the
       recursion provably splits (>= 2 chunks).
     - ``n_ambiguous``: the band between the proofs, where the true count
       genuinely requires compressing bytes (chunk_replay's job — the
@@ -777,12 +542,11 @@ def chunk_census(
     caps = caps or [("default", cfg.max_payload_size)]
     from ..functions import jsoncost as jc
 
-    staged = _staged_with_costs(df, path, cfg, with_pos=False)
-    per_conv = _per_conv_raw(staged, path, cfg)
+    per_conv = _per_conv_raw(_staged_with_costs(df, path, cfg), path, cfg)
     legs = []
     for cap_name, cap in caps:
         fits = jc.gz_upper_fits_expr(F.col("raw_bytes"), cap).cast("long")
-        split = (F.col("raw_bytes") >= F.lit(cap * ratio)).cast("long")
+        split = (F.col("raw_bytes") >= F.lit(cap * C.GZIP_MAX_RATIO)).cast("long")
         legs.append(
             per_conv.groupBy("sink")
             .agg(
@@ -817,10 +581,7 @@ def chunk_census(
 
 
 def chunk_counts_fast(
-    df: DataFrame,
-    path: str,
-    cfg: PipelineConfig | None = None,
-    ratio: int = C.GZIP_MAX_RATIO,
+    df: DataFrame, path: str, cfg: PipelineConfig | None = None
 ) -> DataFrame:
     """EXACT per-conversation chunk counts with gzip only where provably
     necessary — the production chunk stage (SURVEY.md §2 row 16 at scale).
@@ -841,7 +602,7 @@ def chunk_counts_fast(
     max_size = cfg.max_payload_size
     from ..functions import jsoncost as jc
 
-    staged = _staged_with_costs(df, path, cfg, with_pos=False)
+    staged = _staged_with_costs(df, path, cfg)
     per_conv = _per_conv_raw(staged, path, cfg)
     fits = jc.gz_upper_fits_expr(F.col("raw_bytes"), max_size)
     singles = per_conv.filter(fits).select(
@@ -854,8 +615,9 @@ def chunk_counts_fast(
     )
     big_ids = per_conv.filter(~fits).select("conv_id")
     # big_ids is tiny by construction (conversations > ~1 MB serialized);
-    # AQE broadcasts it at runtime — no hard hint for the same reason as
-    # the salted replay's frontier join.
+    # AQE broadcasts it at runtime. No hard hint: on a corpus of large
+    # conversations it is >= 1 row per conversation, and a forced
+    # broadcast would OOM the driver.
     big = staged.join(big_ids, "conv_id", "left_semi")
 
     def walk(pdf):
@@ -864,10 +626,8 @@ def chunk_counts_fast(
 
         import pandas as pd
 
-        # turn order, not pos: the no-window staged frame (with_pos=False)
-        # carries no pos column; turn_idx gives the identical ordering and
-        # iloc[0] is then exactly the turn_idx-min row the pinned-window
-        # shape read its envelope meta / __empty from
+        # turn order; iloc[0] is then the turn_idx-min row, the same row
+        # _per_conv_raw reads the envelope meta from
         pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         first = pdf.iloc[0]
         costs = [int(c) for c in pdf["__cost"]]
@@ -886,11 +646,10 @@ def chunk_counts_fast(
         msg_strs = [
             json.dumps(_message_for(path, row)) for row in pdf.itertuples(index=False)
         ]
-        obj0, _split = _envelope(first, path, cfg)
+        obj0 = _envelope(first, path, cfg)
         # empty-envelope length from the REAL no-events payload — the
         # ground truth the jsoncost Catalyst expr mirrors (pinned in
-        # tests/test_jsoncost.py); the staged frame no longer carries a
-        # per-row __empty column (computed per conversation instead)
+        # tests/test_jsoncost.py)
         empty = C.empty_payload_len(obj0)
         if path == "infra":
             entry0 = json.loads(obj0["entry"])
@@ -920,7 +679,7 @@ def chunk_counts_fast(
             def gz_len(lo: int, hi: int) -> int:
                 sub = pdf.iloc[lo:hi]
                 msgs = [_message_for(path, row) for row in sub.itertuples(index=False)]
-                obj, _ = _envelope(first, path, cfg)
+                obj = _envelope(first, path, cfg)
                 if path == "infra":
                     entry = json.loads(obj["entry"])
                     entry["logEvents"] = msgs
@@ -929,7 +688,7 @@ def chunk_counts_fast(
                     obj = [{"common": obj[0]["common"], "logs": msgs}]
                 return len(gzip.compress(json.dumps(obj).encode()))
 
-        n_chunks, raw_total = C.count_chunks_fast(costs, empty, max_size, gz_len, ratio)
+        n_chunks, raw_total = C.count_chunks_fast(costs, empty, max_size, gz_len)
         return pd.DataFrame(
             [
                 {
@@ -974,29 +733,4 @@ def chunk_totals(stats: DataFrame) -> DataFrame:
         F.sum("n_chunks").alias("n_chunks"),
         F.sum("total_gz_bytes").alias("total_gz_bytes"),
         F.max("max_chunk_bytes").alias("max_chunk_bytes"),
-    )
-
-
-def approx_chunk_counts(
-    df: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """Pure-DataFrame UPPER-BOUND chunk estimate (scale path, not parity).
-
-    Estimates each conversation's serialized size from per-event JSON
-    bytes and divides by the cap with a conservative 3x gzip factor.
-    Useful for capacity planning over 10^12 turns without touching
-    Python; the graded counts come from ``chunk_replay``.
-    """
-    cfg = cfg or PipelineConfig()
-    ev_bytes = F.octet_length(F.col("text")) + F.lit(120)  # id+ts+json overhead
-    per_conv = df.groupBy("conv_id", "sink").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(ev_bytes).alias("approx_json_bytes"),
-    )
-    return per_conv.withColumn(
-        "approx_chunks",
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.col("approx_json_bytes") / F.lit(cfg.max_payload_size * 3)),
-        ).cast("long"),
     )

@@ -38,7 +38,6 @@ def with_melt_fills(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
     decode_traces: bool = True,
-    split_scan: bool = True,
     carry_decode: bool = False,
     finalize: bool = True,
 ) -> DataFrame:
@@ -141,7 +140,7 @@ def with_melt_fills(
         )
         return decode_carried_traces(df) if finalize else df
 
-    if decode_traces and split_scan:
+    if decode_traces:
         is_nr_b = F.coalesce(is_nr, F.lit(False))
         markers = df.filter(is_nr_b).withColumn(
             "__trace_raw", trace_id_raw(t, F.lit(True))
@@ -150,16 +149,6 @@ def with_melt_fills(
             "__trace_raw", F.lit(None).cast("string")
         )
         df = markers.unionByName(rest)
-    elif decode_traces:
-        # split_scan=False: single-scan masked UDF (input masked, so the
-        # gzip work still touches only marker rows, but every row crosses
-        # Arrow — ~1us/row). Use this when the input's physical layout
-        # must be PRESERVED: a UnionExec reports unknown partitioning, so
-        # over a conv_id-bucketed table the split-scan shape would force
-        # the exchange bucketing just removed, while the masked form
-        # keeps the scan's clustering and the fill windows run
-        # exchange-free (bench.py bucketed-input mode).
-        df = df.withColumn("__trace_raw", trace_id_raw(t, is_nr))
     else:
         df = df.withColumn("__trace_raw", F.when(is_nr, F.lit("")))
     # request id: extract (search semantics), gate on lambda prefix, fill.

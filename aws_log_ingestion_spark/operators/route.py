@@ -69,20 +69,6 @@ def infra_rows(classified: DataFrame, sink: str, cfg: PipelineConfig | None = No
     return df
 
 
-def write_sink(df: DataFrame, path: str, order_cols=("conv_id", "turn_idx")) -> None:
-    """Overwrite-write one sink table, order preserved within files.
-
-    Parquet + overwrite here; on a real deployment this is an Iceberg
-    ``writeTo(...).overwritePartitions()`` whose atomic snapshot commit
-    provides the idempotency the reference approximates with HTTP retries
-    (SURVEY.md §2 row 17)."""
-    from .checkpoint import parquet_text_options
-
-    df.sortWithinPartitions(*order_cols).write.mode("overwrite").options(
-        **parquet_text_options(df)
-    ).parquet(path)
-
-
 def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """All infra rows in ONE pass, keeping ``sink`` as a partition column.
 

@@ -70,13 +70,13 @@ def key_skew_stats(
     target_rows_per_task: int = 100_000,
 ) -> DataFrame:
     """Skew diagnostic + salting planner: the top-k heaviest keys with
-    their integer per-million share of all rows and the salt count the
+    their integer per-million share of all rows and the salt count a
     two-level decomposition would use for them
-    (ceil(n_rows / target_rows_per_task) — the knob chunk_replay_salted
-    and the salted request-id fill take).
+    (ceil(n_rows / target_rows_per_task) — the knob the salted
+    request-id fill takes).
 
     The north rule demands skew handled EXPLICITLY; this is the operator
-    that finds the hot conversations to hand to the salted paths.  Scale
+    that finds the hot conversations to hand to the salted fill.  Scale
     shape: one map-side-combining groupBy on the key (hot keys collapse
     to one row per input partition before the shuffle), a broadcast of
     the ONE-row grand total (never a single-partition window over the

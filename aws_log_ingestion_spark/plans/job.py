@@ -186,7 +186,7 @@ def run_pipeline(
         # (tests/test_jsoncost.py) but the overwhelming majority of
         # conversations are answered by pure-Catalyst byte arithmetic —
         # zero Python, zero gzip. The exact-gz-bytes replay
-        # (chunk_replay_hybrid) remains available for byte-level audits.
+        # (chunk_replay) remains available for byte-level audits.
         stats_frames = []
         if cfg.infra_enabled:
             stats_frames.append(

@@ -6,7 +6,7 @@ classification truth table, filter survival sets, request-id forward-fill
 vector (/root/reference/test/log_ingestion_test.py:570-600), decodable
 NR_LAMBDA_MONITORING blobs (built the test/build-encoded-file.py:41-46
 way), and the big-split chunking conversation (:384-415). Deterministic:
-seeded RNG, fixed base timestamp 1548935491174
+fixed base timestamp 1548935491174
 (/root/reference/test/log_ingestion_test.py:23).
 """
 
@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import gzip
 import json
-import random
 import zlib
 from base64 import b64encode
 
@@ -136,47 +135,6 @@ def conv_meta_rows(rows: list[dict]) -> list[dict]:
                 "log_stream_name": "2019/01/31/[$LATEST]" + cid.lstrip("c").zfill(32),
             }
     return list(seen.values())
-
-
-def random_rows(
-    n_convs: int,
-    turns_per_conv: int,
-    seed: int = 42,
-    zipf_skew: float | None = None,
-) -> list[dict]:
-    """Bulk seeded corpus mixing archetypes (bench-scale input).
-
-    ``zipf_skew`` > 0 makes conversation sizes heavy-tailed (hot-conv
-    stress per FIXTURES.md §4 ``hot_conv``)."""
-    rng = random.Random(seed)
-    archetypes = [START, NR_SHORT, END, REPORT, TIMEOUT, OOM, GARBAGE, DOTNET]
-    tools = ["lambda", "lambda", "lambda", "vpc", "rds", "custom"]
-    rows = []
-    for c in range(n_convs):
-        tool = tools[c % len(tools)]
-        n = turns_per_conv
-        if zipf_skew:
-            n = max(1, int(turns_per_conv * (1.0 / (1 + c)) ** zipf_skew * n_convs / 4))
-        for i in range(n):
-            if tool == "lambda":
-                text = archetypes[rng.randrange(len(archetypes))]
-            elif tool == "vpc":
-                text = TEMPLATES["vpc"][1][0]
-            elif tool == "rds":
-                text = TEMPLATES["rds_other"][1][0]
-            else:
-                text = f"custom app line {i}"
-            rows.append(
-                {
-                    "conv_id": f"c{c}",
-                    "turn_idx": i,
-                    "role": ROLES[i % 4],
-                    "text": text,
-                    "tool": tool,
-                    "ts_millis": BASE_TS_MILLIS + i,
-                }
-            )
-    return rows
 
 
 def to_spark_df(spark, rows: list[dict]):

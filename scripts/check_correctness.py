@@ -42,6 +42,55 @@ def normalize(df):
     return sorted(rows)
 
 
+def duckdb_views(sf_dir: str):
+    """DuckDB connection with one view per parquet table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def compare_query(spark, con, sf_dir: str, name: str, fn, oracle: str | None):
+    """Run one queries() entry on Spark and its oracle SQL (if any) on
+    DuckDB; returns ``(ok, detail)``. A query without an oracle only has
+    to run; ``detail`` starts with MATCH or rows-only when ``ok``."""
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as ex:
+        return False, f"spark error {type(ex).__name__}: {ex}"
+    if oracle is None:
+        detail = f"rows-only ({len(sdf)} rows)"
+        if len(sdf) == 0 and name not in ("dedup_simhash",):
+            detail += f"\n      WARNING: {name} returned 0 rows"
+        return True, detail
+    try:
+        odf = con.execute(oracle).df()
+    except Exception as ex:
+        return False, f"duckdb error {ex}"
+    s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
+    if s_cols != o_cols:
+        return False, f"columns {s_cols} != {o_cols}"
+    # dtype alignment (the driver may compare schemas): require equal
+    # pandas dtypes modulo object/string
+    dt_mismatch = [
+        (c, str(sdf[c].dtype), str(odf[c].dtype))
+        for c in s_cols
+        if str(sdf[c].dtype) != str(odf[c].dtype)
+        and not (sdf[c].dtype == object or odf[c].dtype == object)
+    ]
+    if dt_mismatch:
+        return False, f"dtype mismatch {dt_mismatch}"
+    if len(sdf) != len(odf):
+        return False, f"rows {len(sdf)} != {len(odf)}"
+    ns, no = normalize(sdf), normalize(odf)
+    if ns != no:
+        diff = [(a, b) for a, b in zip(ns, no) if a != b][:3]
+        return False, f"value mismatch; first diffs: {diff}"
+    return True, f"MATCH ({len(sdf)} rows)"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -50,65 +99,17 @@ def main() -> int:
     from aws_log_ingestion_spark.session import get_spark
 
     spark = get_spark("correctness-check", cores=8, shuffle_partitions=16)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
-    qs = e.queries()
+    con = duckdb_views(sf_dir)
     oracles = e.oracle_sql()
     failures = []
-    for name, fn in qs.items():
+    for name, fn in e.queries().items():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as ex:
+        ok, detail = compare_query(spark, con, sf_dir, name, fn, oracles.get(name))
+        if not ok:
             failures.append(name)
-            print(f"FAIL  {name}: spark error {type(ex).__name__}: {ex}")
-            continue
-        if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-            if len(sdf) == 0 and name not in ("dedup_simhash",):
-                print(f"      WARNING: {name} returned 0 rows")
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception as ex:
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error {ex}")
-            continue
-        s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
-        if s_cols != o_cols:
-            failures.append(name)
-            print(f"FAIL  {name}: columns {s_cols} != {o_cols}")
-            continue
-        # dtype alignment (the driver may compare schemas): require equal
-        # pandas dtypes modulo object/string
-        dt_mismatch = [
-            (c, str(sdf[c].dtype), str(odf[c].dtype))
-            for c in s_cols
-            if str(sdf[c].dtype) != str(odf[c].dtype)
-            and not (sdf[c].dtype == object or odf[c].dtype == object)
-        ]
-        if dt_mismatch:
-            failures.append(name)
-            print(f"FAIL  {name}: dtype mismatch {dt_mismatch}")
-            continue
-        if len(sdf) != len(odf):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(sdf)} != {len(odf)}")
-            continue
-        ns, no = normalize(sdf), normalize(odf)
-        if ns != no:
-            failures.append(name)
-            diff = [(a, b) for a, b in zip(ns, no) if a != b][:3]
-            print(f"FAIL  {name}: value mismatch; first diffs: {diff}")
-            continue
-        print(f"ok    {name}: MATCH ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+        print(f"{'ok   ' if ok else 'FAIL '} {name}: {detail} [{time.time() - t0:.1f}s]")
 
     print(f"\n{len(failures)} failures: {failures}")
     spark.stop()

@@ -1,0 +1,46 @@
+"""The chunk-stage gate queries against their DuckDB oracles.
+
+``chunk_census``, ``chunk_gz_parity``, ``chunk_raw_costs`` and
+``chunk_events_by_sink`` run through the chunk staging
+(operators/chunks.py ``_staged_with_costs``); each is compared with its
+``oracle_sql()`` text by the same per-query comparison
+``scripts/check_correctness.py`` uses."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+SF_DIR = "/root/testdata/sf0.001"
+CHUNK_QUERIES = [
+    "chunk_census",
+    "chunk_gz_parity",
+    "chunk_raw_costs",
+    "chunk_events_by_sink",
+]
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(SF_DIR), reason=f"gate input {SF_DIR} is absent"
+)
+
+
+@pytest.fixture(scope="module")
+def duck():
+    from scripts.check_correctness import duckdb_views
+
+    con = duckdb_views(SF_DIR)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", CHUNK_QUERIES)
+def test_chunk_gate_query_matches_oracle(spark, duck, name):
+    import __spark_entry__ as e
+    from scripts.check_correctness import compare_query
+
+    ok, detail = compare_query(
+        spark, duck, SF_DIR, name, e.queries()[name], e.oracle_sql()[name]
+    )
+    assert ok, detail
+    assert detail.startswith("MATCH"), detail

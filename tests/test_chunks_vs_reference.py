@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.functions import chunking as C
-from aws_log_ingestion_spark.operators.chunks import approx_chunk_counts, chunk_replay, chunk_totals
+from aws_log_ingestion_spark.operators.chunks import chunk_replay, chunk_totals
 from aws_log_ingestion_spark.operators.classify import classify
 from aws_log_ingestion_spark.sources import datagen
 from reference_oracle import (
@@ -216,65 +216,15 @@ def test_chunk_census_proofs_hold_against_replay(
     assert all(c["n_ambiguous"] == 0 for (cp, _), c in census.items() if cp == "big")
 
 
-def test_approx_chunks_is_upper_bound_shapewise(spark, template_df):
-    cfg = PipelineConfig(max_payload_size=SMALL_CAP)
-    approx = approx_chunk_counts(classify(template_df, cfg), cfg).collect()
-    assert all(r["approx_chunks"] >= 1 for r in approx)
-
-
-def test_frontier_intervals_walk_properties():
-    """Frontier covers [0,n) disjointly in order; every ABOVE-frontier
-    node of the mid-split tree is provably oversized (raw >= cap*ratio),
-    every frontier interval is not (or is a single event)."""
-    costs = [100] * 1000
-    empty, cap, ratio = 50, 1000, 4
-
-    def raw(lo, hi):
-        return empty + sum(costs[lo:hi]) + 2 * max(0, hi - lo - 1)
-
-    iv = C.frontier_intervals(costs, empty, cap, ratio)
-    assert iv[0][0] == 0 and iv[-1][1] == 1000
-    for (a, b), (c, d) in zip(iv, iv[1:]):
-        assert b == c
-    for lo, hi in iv:
-        assert hi - lo == 1 or raw(lo, hi) < cap * ratio
-    # reconstruct the split tree: every strict ancestor must be oversized
-    frontier = set(iv)
-    stack = [(0, 1000)]
-    while stack:
-        lo, hi = stack.pop()
-        if (lo, hi) in frontier:
-            continue
-        assert raw(lo, hi) >= cap * ratio, (lo, hi)
-        mid = lo + (hi - lo) // 2
-        stack.extend([(lo, mid), (mid, hi)])
-
-
-def test_salted_replay_equals_unsalted_on_templates(
-    spark, template_df, template_meta_df
-):
-    from aws_log_ingestion_spark.operators.chunks import chunk_replay_salted
-    from aws_log_ingestion_spark.operators.enrich import enrich
-
-    cfg = PipelineConfig(max_payload_size=SMALL_CAP)
-    hub = enrich(classify(template_df, cfg), template_meta_df)
-    for path in ("infra", "logging"):
-        a = {r["conv_id"]: r.asDict() for r in chunk_replay(hub, path, cfg).collect()}
-        b = {
-            r["conv_id"]: r.asDict()
-            for r in chunk_replay_salted(hub, path, cfg).collect()
-        }
-        assert a == b, path
-
-
 def test_salted_decomposition_exact_on_hot_conversation(spark):
-    """Force a multi-interval frontier (ratio=4 is a valid gzip bound for
-    high-entropy hex text) and verify bit-exact chunk stats vs the
-    global-recursion replay on a single hot conversation."""
+    """One hot conversation of high-entropy text (~1.9x gzip ratio) at a
+    3000-byte cap: every node of the halving tree sits in the ambiguous
+    band, so chunk_counts_fast's walk gzips and recurses through many
+    levels of the same conversation. Its counts must equal the
+    global-recursion replay's."""
     import hashlib
 
-    from aws_log_ingestion_spark.functions import chunking as C2
-    from aws_log_ingestion_spark.operators.chunks import chunk_replay_salted
+    from aws_log_ingestion_spark.operators.chunks import chunk_counts_fast
 
     n = 600
     rows = [
@@ -282,8 +232,7 @@ def test_salted_decomposition_exact_on_hot_conversation(spark):
             "conv_id": "c0",
             "turn_idx": i,
             "role": "user",
-            # 4 DISTINCT digests per message: hex text with no internal
-            # repetition gzips at ~1.9x, so ratio=4 is a valid bound
+            # 4 DISTINCT digests per message: no internal repetition
             "text": "".join(
                 hashlib.sha256(f"{i}:{j}".encode()).hexdigest() for j in range(4)
             ),
@@ -295,33 +244,15 @@ def test_salted_decomposition_exact_on_hot_conversation(spark):
     df = datagen.to_spark_df(spark, rows)
     cfg = PipelineConfig(max_payload_size=3000)
     hub = classify(df, cfg)
+    keys = ("n_chunks", "n_events", "sink")
     for path in ("infra", "logging"):
-        exact = {r["conv_id"]: r.asDict() for r in chunk_replay(hub, path, cfg).collect()}
-        salted = {
-            r["conv_id"]: r.asDict()
-            for r in chunk_replay_salted(hub, path, cfg, ratio=4).collect()
+        exact = {
+            r["conv_id"]: tuple(r[k] for k in keys)
+            for r in chunk_replay(hub, path, cfg).collect()
         }
-        assert exact == salted, path
-        assert exact["c0"]["n_chunks"] > 4  # the replay really split
-    # sanity: ratio=4 really is a bound for this data (gzip >= raw/4)
-    blob = "".join(r["text"] for r in rows).encode()
-    assert len(gzip.compress(blob)) * 4 >= len(blob)
-
-
-def test_hybrid_routing_exact_regardless_of_threshold(
-    spark, template_df, template_meta_df
-):
-    """The hot/cold routing threshold is a pure performance knob: forcing
-    big_split (500 events) through the salted path changes nothing."""
-    from aws_log_ingestion_spark.operators.chunks import chunk_replay_hybrid
-    from aws_log_ingestion_spark.operators.enrich import enrich
-
-    cfg = PipelineConfig(max_payload_size=SMALL_CAP)
-    hub = enrich(classify(template_df, cfg), template_meta_df)
-    base = {r["conv_id"]: r.asDict() for r in chunk_replay(hub, "infra", cfg).collect()}
-    for threshold in (100_000, 100):  # all-cold vs big_split-hot
-        got = {
-            r["conv_id"]: r.asDict()
-            for r in chunk_replay_hybrid(hub, "infra", cfg, hot_threshold=threshold).collect()
+        fast = {
+            r["conv_id"]: tuple(r[k] for k in keys)
+            for r in chunk_counts_fast(hub, path, cfg).collect()
         }
-        assert got == base, threshold
+        assert exact == fast, path
+        assert exact["c0"][0] > 4  # the replay really split

@@ -178,8 +178,7 @@ def test_empty_len_exprs_match_pure(spark, meta, path):
     from aws_log_ingestion_spark.operators.chunks import _envelope
 
     cfg = PipelineConfig(tags={"env": "prod", "team": "a-b"})
-    obj, _split = _envelope(meta, path, cfg)
-    want = C.empty_payload_len(obj)
+    want = C.empty_payload_len(_envelope(meta, path, cfg))
     lit = {k: F.lit(v) for k, v in meta.items()}
     if path == "infra":
         expr = jc.empty_len_infra_expr(

@@ -299,6 +299,10 @@ def test_shingle_sets_equal_zipwith_reference(spark, n):
     docs = corpus.unionByName(edge)
     ref = {r["doc_id"]: r["sh_set"] for r in _zipwith_shingle_sets(docs, n).collect()}
     got = {r["doc_id"]: r["sh_set"] for r in dedup.shingle_sets(docs, n).collect()}
+    # Order-sensitive on purpose: this pins the zip_with formulation
+    # (array_distinct's first-occurrence order), not only the set. A
+    # rewrite that yields the same set in another order has to change
+    # this pin deliberately rather than pass it silently.
     assert got == ref
 
 
