@@ -96,25 +96,28 @@ def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> Dat
     return df
 
 
-def route_counts(classified: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Per-sink routed-row counts (the graded aggregate) in ONE pass.
-
-    Instead of 4 filtered count() jobs, compute a conditional aggregation:
+def route_count_exprs(
+    classified: DataFrame, cfg: PipelineConfig | None = None
+) -> list[F.Column]:
+    """The per-sink routed-row count aggregates over ``classified``:
     infra-lambda counts only surviving rows, vpc/other count all rows,
-    logging counts every row (the unfiltered tee, reference :270).
-    """
+    logging counts every row (the unfiltered tee, reference :270). A
+    disabled sink family counts 0. Usable in ``agg`` and ``observe``."""
     cfg = cfg or PipelineConfig()
     survives = _survives_col(classified)
-    agg = classified.agg(
-        F.sum(((F.col("sink") == SINK_LAMBDA) & survives).cast("long")).alias("infra_lambda_rows"),
-        F.sum((F.col("sink") == SINK_VPC).cast("long")).alias("infra_vpc_rows"),
-        F.sum((F.col("sink") == SINK_OTHER).cast("long")).alias("infra_other_rows"),
-        F.count(F.lit(1)).alias("logging_rows"),
-    )
-    if not cfg.infra_enabled:
-        agg = agg.withColumn("infra_lambda_rows", F.lit(0).cast("long")).withColumn(
-            "infra_vpc_rows", F.lit(0).cast("long")
-        ).withColumn("infra_other_rows", F.lit(0).cast("long"))
-    if not cfg.logging_enabled:
-        agg = agg.withColumn("logging_rows", F.lit(0).cast("long"))
-    return agg
+    zero = F.lit(0).cast("long")
+    exprs = []
+    for s in INFRA_SINKS:
+        hit = F.col("sink") == s
+        if s == SINK_LAMBDA:
+            hit = hit & survives
+        count = F.sum(hit.cast("long")) if cfg.infra_enabled else zero
+        exprs.append(count.alias(f"infra_{s}_rows"))
+    logging = F.count(F.lit(1)) if cfg.logging_enabled else zero
+    return exprs + [logging.alias("logging_rows")]
+
+
+def route_counts(classified: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+    """Per-sink routed-row counts (the graded aggregate) in ONE pass:
+    a conditional aggregation instead of 4 filtered count() jobs."""
+    return classified.agg(*route_count_exprs(classified, cfg))

@@ -26,15 +26,29 @@ while doing per-run work proportional to the NEW data:
   forward fills, chunk replay — SURVEY.md §2 rows 3, 8, 9, 16), so the
   affected conversations' prior raw turns are pulled back out of the
   hub (which keeps the raw transcript columns), unioned with the new
-  turns, recomputed, and written into the new batch; the old batches
-  drop those conversations via copy-on-write. COW granularity is
-  (ingest_batch, conv_bucket) on the hub — ``conv_bucket =
-  crc32(conv_id) % 32`` is computable from the key alone, so partition
-  pruning limits the rewrite to the buckets the new batch actually
-  touches — and whole-ingest_batch on the sinks. In the Iceberg
-  deployment this COW becomes row-level deletes (merge-on-read) or a
-  ``MERGE INTO``; the parquet fallback expresses the same contract with
-  the manifest as the ledger.
+  turns, recomputed, and written into the new batch. The old copies are
+  then superseded in two different ways:
+
+  * The hub (``classified/``) stays physically exact — it is the
+    recompute source and the resume point, and holds each input turn
+    once. Per affected (ingest_batch, conv_bucket) pair the retained
+    rows are staged in their final layout and swapped in with
+    ``os.rename``; ``conv_bucket = crc32(conv_id) % 32`` is computable
+    from the key alone, so only the buckets the new batch touches are
+    read and swapped. The swap runs no Spark job.
+  * The sinks (``infra``, ``logging``, ``chunk_stats``) of old batches
+    are never rewritten. The superseded conversations' old hub rows are
+    committed as ``tombstones/by_batch=N/`` (the raw columns plus the
+    ``ingest_batch`` they lived in) — an equality-delete file
+    on (ingest_batch, conv_id), the Iceberg v2 merge-on-read model
+    (https://iceberg.apache.org/spec/#row-level-deletes).
+
+Read contract: a sink's rows are ``live_rows(spark, out_dir, sink)`` —
+the raw sink minus the committed tombstones. A raw ``spark.read`` of a
+sink root still holds superseded conversations. The hub needs no
+tombstones (``hub_lookup`` and raw reads are exact). Per-sink counts
+stay footer-only: each batch record carries the rows its tombstones
+delete, and ``run_incremental`` subtracts them.
 
 Single-writer contract: one incremental run mutates an out_dir at a
 time (the checkpoint manifest is a ledger, not a lock). Iceberg's
@@ -57,18 +71,19 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..operators import checkpoint as ckpt
 from ..operators import chunks as chunk_op
 from ..operators.melt import melt_project
-from ..operators.route import INFRA_SINKS, infra_union
+from ..operators.route import INFRA_SINKS, infra_union, route_count_exprs
 from ..sources.derive import conv_meta_from_transcripts
 from .job import prepare
 
 RAW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 N_BUCKETS = 32  # must match checkpoint.observed_write_bucketed
+TOMBSTONES = "tombstones"
 
 
 def list_input_files(in_dir: str) -> list[dict]:
@@ -113,9 +128,13 @@ def _cfg_fingerprint(cfg: PipelineConfig) -> dict:
     return json.loads(json.dumps(fp))
 
 
-def _counts_from_lineage(out_dir: str, logging_enabled: bool) -> dict[str, int]:
-    """Per-sink row counts straight from parquet footers across ALL
-    batches — no Spark job. On Iceberg this is a manifest aggregate."""
+def _counts_from_lineage(
+    out_dir: str, logging_enabled: bool, deleted: list[dict]
+) -> dict[str, int]:
+    """Per-sink live row counts straight from parquet footers across ALL
+    batches, minus the rows each batch's tombstones delete (``deleted``:
+    one per-sink dict per batch) — no Spark job. On Iceberg this is a
+    manifest aggregate."""
     counts = {f"infra_{s}_rows": 0 for s in INFRA_SINKS}
     for entry in ckpt.file_lineage(os.path.join(out_dir, "infra")):
         for s in INFRA_SINKS:
@@ -126,6 +145,9 @@ def _counts_from_lineage(out_dir: str, logging_enabled: bool) -> dict[str, int]:
         counts["logging_rows"] = sum(
             e["rows"] for e in ckpt.file_lineage(os.path.join(out_dir, "logging"))
         )
+    for d in deleted:
+        for k in counts:
+            counts[k] -= d.get(k, 0)
     return counts
 
 
@@ -146,8 +168,20 @@ def _write_batch_partition(
     )
 
 
-def _staged_rows(path: str) -> int:
-    return sum(e["rows"] for e in ckpt.file_lineage(path))
+def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
+    """A sink's live rows across all ingest batches: the raw rows minus
+    every committed tombstone's (ingest_batch, conv_id). Columns and
+    their order are the raw sink's."""
+    rows = spark.read.parquet(os.path.join(out_dir, name))
+    tombstones = os.path.join(out_dir, TOMBSTONES)
+    if not os.path.isdir(tombstones):
+        return rows
+    dead = spark.read.parquet(tombstones).select("ingest_batch", "conv_id")
+    return rows.join(dead, ["ingest_batch", "conv_id"], "anti").select(*rows.columns)
+
+
+def _pair_dir(root: str, batch: int, bucket: int) -> str:
+    return os.path.join(root, f"ingest_batch={batch}", f"conv_bucket={bucket}")
 
 
 def hub_lookup(spark: SparkSession, out_dir: str, conv_id: str) -> DataFrame:
@@ -184,10 +218,11 @@ def run_incremental(
     nothing new to do.
 
     ``fail_at`` is a test hook simulating a mid-run kill: 'staged'
-    raises right after the COW staging commit, 'new_batch' after the
-    new batch's writes but before the COW commit, 'cow' after the COW
-    commit but before the batch record. A plain re-run must converge to
-    the same final state (tests/test_incremental.py).
+    raises right after the staging commit, 'new_batch' after the new
+    batch's writes but before the supersede commit, 'hub_rename' after
+    the commit's first hub rename, 'cow' after the commit but before the
+    batch record. A plain re-run must converge to the same final state
+    (tests/test_incremental.py).
     """
     cfg = cfg or PipelineConfig()
     log = ckpt.CheckpointLog(out_dir)
@@ -222,10 +257,11 @@ def run_incremental(
             f"input files are append-only; recorded files missing from "
             f"{in_dir}: {missing}"
         )
+    deleted = [rec.get("deleted", {}) for rec in batches]
     new_files = [f for f in current if f["file"] not in known]
     if not new_files:
         return {
-            "counts": _counts_from_lineage(out_dir, cfg.logging_enabled),
+            "counts": _counts_from_lineage(out_dir, cfg.logging_enabled, deleted),
             "batch_id": None,
             "new_files": [],
             "superseded_convs": 0,
@@ -234,35 +270,36 @@ def run_incremental(
     batch_id = len(batches)
     bstage = f"ingest.b{batch_id}"
     staging = os.path.join(out_dir, "_staging", f"b{batch_id}")
+    staged_hub = os.path.join(staging, "hub_retained")
+    staged_tombstones = os.path.join(staging, TOMBSTONES)
+    tombstones = os.path.join(out_dir, TOMBSTONES, f"by_batch={batch_id}")
     hub_root = os.path.join(out_dir, "classified")
-    sink_roots = {
-        "infra": (os.path.join(out_dir, "infra"), ["ingest_batch", "sink"]),
-        "logging": (os.path.join(out_dir, "logging"), ["ingest_batch"]),
-        "chunk_stats": (os.path.join(out_dir, "chunk_stats"), ["ingest_batch"]),
-    }
+    infra_root = os.path.join(out_dir, "infra")
+    logging_root = os.path.join(out_dir, "logging")
+    stats_root = os.path.join(out_dir, "chunk_stats")
 
     new_turns = spark.read.parquet(
         *[os.path.join(in_dir, f["file"]) for f in new_files]
     ).select(*RAW_COLS)
 
-    # --- overlap detection + COW staging (all BEFORE any mutation) ------
-    # The staged marker freezes the decision: a re-run after a mid-COW
-    # kill must not re-derive "affected" from a half-rewritten hub.
+    # --- overlap detection + staging (all BEFORE any mutation) ----------
+    # The staged marker freezes the decision: a re-run after a mid-commit
+    # kill must not re-derive "affected" from a half-swapped hub.
     staged = log.read(f"{bstage}.staged")
     new_file_names = [f["file"] for f in new_files]
     if staged is not None and staged.get("files") != new_file_names:
         # input grew between a killed attempt and this re-run: the frozen
         # overlap decision doesn't cover the newly arrived files. Before
-        # the COW commit the OLD batches are unmutated, so restaging is
-        # safe as long as the re-derivation ignores any half-written
-        # ingest_batch == batch_id partitions from the killed attempt
-        # (the filter below); after the COW commit the old batches no
-        # longer hold the superseded rows and the batch must finish with
-        # its original file set first.
+        # the supersede commit the OLD batches are unmutated, so
+        # restaging is safe as long as the re-derivation ignores any
+        # half-written ingest_batch == batch_id partitions from the killed
+        # attempt (the filter below); once the commit has begun the old
+        # hub no longer holds the superseded rows and the batch must
+        # finish with its original file set first.
         if log.read(f"{bstage}.cow") is not None:
             raise ValueError(
                 f"input files changed during recovery of batch {batch_id} "
-                "after its copy-on-write commit; re-run without the new "
+                "after its supersede commit; re-run without the new "
                 "files present is impossible — finish/inspect this batch "
                 "manually (staged data is under "
                 f"{staged['staging']}), then ingest the extra files as "
@@ -270,10 +307,17 @@ def run_incremental(
             )
         staged = None
     if staged is None:
+        # a stale retained dir from an earlier staging must never be
+        # renamed into the hub
+        shutil.rmtree(staging, ignore_errors=True)
         affected_pairs: list[list[int]] = []
         superseded_convs = 0
+        deleted_now: dict[str, int] = {}
+        retained_dirs: list[list[int]] = []
         if batches:
-            new_convs = new_turns.select("conv_id").distinct()
+            # no distinct(): the semi/anti joins below only test
+            # membership, and a distinct would add a shuffle to each
+            new_convs = new_turns.select("conv_id")
             # bucket ids are computable from the keys alone -> partition
             # pruning: only the buckets the new batch hashes into are read
             new_buckets = [
@@ -284,65 +328,64 @@ def run_incremental(
             # overlap derivation. A kill in the new_batch window leaves
             # ingest_batch == batch_id hub/sink partitions on disk with no
             # .cow record; a restage (input grew during recovery) that
-            # read them would (a) duplicate new_turns into superseded_raw
+            # read them would (a) duplicate new_turns into the tombstones
             # and (b) put (batch_id, bucket) into affected_pairs, whose
-            # COW commit then rmtree's the freshly rewritten batch's own
-            # partitions with empty retained rows — silently dropping
-            # conversations. On a first attempt nothing of batch_id
-            # exists yet, so the filter is a no-op there.
+            # commit then rmtree's the freshly written batch's own
+            # partitions — silently dropping conversations. On a first
+            # attempt nothing of batch_id exists yet, so the filter is a
+            # no-op there.
             hub = spark.read.parquet(hub_root).filter(
                 F.col("ingest_batch") != batch_id
             )
             candidates = hub.filter(F.col("conv_bucket").isin(new_buckets))
-            affected_pairs = sorted(
-                [int(r["ingest_batch"]), int(r["conv_bucket"])]
-                for r in candidates.join(new_convs, "conv_id", "semi")
-                .select("ingest_batch", "conv_bucket")
-                .distinct()
+            # one row per affected pair; a conversation lives in exactly
+            # one pair, so the per-pair counts add up to the superseded
+            # conversations
+            overlap = (
+                candidates.join(new_convs, "conv_id", "semi")
+                .groupBy("ingest_batch", "conv_bucket")
+                .agg(F.countDistinct("conv_id").alias("convs"))
                 .collect()
             )
+            affected_pairs = sorted(
+                [int(r["ingest_batch"]), int(r["conv_bucket"])] for r in overlap
+            )
+            superseded_convs = sum(int(r["convs"]) for r in overlap)
             if affected_pairs:
                 cond = None
                 for b, k in affected_pairs:
                     term = (F.col("ingest_batch") == b) & (F.col("conv_bucket") == k)
                     cond = term if cond is None else (cond | term)
                 affected_parts = hub.filter(cond)
-                superseded_raw = affected_parts.join(
-                    new_convs, "conv_id", "semi"
-                ).select(*RAW_COLS)
-                superseded_raw.write.mode("overwrite").parquet(
-                    os.path.join(staging, "superseded_raw")
+                # the superseded conversations' old hub rows: the recompute
+                # input, and after the commit the sinks' delete file. Its
+                # route counts are exactly the old sink rows it deletes.
+                superseded = affected_parts.join(new_convs, "conv_id", "semi")
+                obs = Observation("obs_tombstones")
+                superseded.observe(
+                    obs, *route_count_exprs(superseded, cfg)
+                ).select(*RAW_COLS, "ingest_batch").write.mode("overwrite").parquet(
+                    staged_tombstones
                 )
-                retained = affected_parts.join(new_convs, "conv_id", "anti")
-                retained.write.mode("overwrite").partitionBy(
-                    "ingest_batch", "conv_bucket"
-                ).parquet(os.path.join(staging, "hub_retained"))
-                superseded_convs = (
-                    spark.read.parquet(os.path.join(staging, "superseded_raw"))
-                    .select("conv_id")
-                    .distinct()
-                    .count()
+                deleted_now = {k: int(v or 0) for k, v in obs.get.items()}
+                _write_batch_partition(
+                    affected_parts.join(new_convs, "conv_id", "anti"),
+                    staged_hub,
+                    ["ingest_batch", "conv_bucket"],
+                    ["conv_id", "turn_idx"],
                 )
-                # sink retained rows per affected old batch (anti-join on
-                # conv_id; whole-batch granularity — Iceberg would do
-                # row-level deletes here)
-                affected_batches = sorted({b for b, _ in affected_pairs})
-                for name, (root, _pcols) in sink_roots.items():
-                    if not os.path.isdir(root):
-                        continue
-                    old = spark.read.parquet(root).filter(
-                        F.col("ingest_batch").isin(affected_batches)
-                    )
-                    old.join(new_convs, "conv_id", "anti").write.mode(
-                        "overwrite"
-                    ).partitionBy("ingest_batch").parquet(
-                        os.path.join(staging, f"{name}_retained")
-                    )
+                retained_dirs = [
+                    [b, k]
+                    for b, k in affected_pairs
+                    if os.path.isdir(_pair_dir(staged_hub, b, k))
+                ]
         log.record(
             f"{bstage}.staged",
             {
                 "affected_pairs": affected_pairs,
                 "superseded_convs": superseded_convs,
+                "deleted": deleted_now,
+                "retained_dirs": retained_dirs,
                 "staging": staging,
                 "files": new_file_names,
             },
@@ -356,8 +399,10 @@ def run_incremental(
     # --- recompute input: new turns + prior turns of superseded convs ---
     inc_turns = new_turns
     if affected_pairs:
+        # the tombstones sit in staging until the commit renames them
+        tomb_dir = staged_tombstones if os.path.isdir(staged_tombstones) else tombstones
         inc_turns = inc_turns.unionByName(
-            spark.read.parquet(os.path.join(staging, "superseded_raw"))
+            spark.read.parquet(tomb_dir).select(*RAW_COLS)
         )
     conv_meta = conv_meta_from_transcripts(inc_turns)
     inc_hub = (
@@ -377,14 +422,14 @@ def run_incremental(
     if cfg.infra_enabled:
         _write_batch_partition(
             infra_union(batch_hub, cfg).withColumn("ingest_batch", F.lit(batch_id)),
-            sink_roots["infra"][0],
+            infra_root,
             ["ingest_batch", "sink"],
             ["conv_id", "turn_idx"],
         )
     if cfg.logging_enabled:
         _write_batch_partition(
             melt_project(batch_hub, cfg).withColumn("ingest_batch", F.lit(batch_id)),
-            sink_roots["logging"][0],
+            logging_root,
             ["ingest_batch"],
             ["conv_id", "turn_idx"],
         )
@@ -401,7 +446,7 @@ def run_incremental(
             stats = stats.unionByName(extra)
         _write_batch_partition(
             stats.withColumn("ingest_batch", F.lit(batch_id)),
-            sink_roots["chunk_stats"][0],
+            stats_root,
             ["ingest_batch"],
             ["conv_id"],
         )
@@ -409,48 +454,42 @@ def run_incremental(
     if fail_at == "new_batch":
         raise RuntimeError("injected kill at new_batch")
 
-    # --- COW commit: drop superseded convs from old batches -------------
-    if affected_pairs and log.read(f"{bstage}.cow") is None:
-        # hub: rmtree the affected (batch, bucket) dirs (covers the
-        # all-rows-superseded partitions dynamic overwrite can't clear),
-        # then rewrite retained rows from staging — both idempotent.
+    # --- supersede commit: renames only, no Spark job -------------------
+    # The .cow record comes FIRST: from here on the old hub is no longer
+    # intact, so a restage is refused. Every step below is idempotent and
+    # re-applied by each re-run until the batch record lands.
+    if affected_pairs:
+        if log.read(f"{bstage}.cow") is None:
+            log.record(f"{bstage}.cow", {"affected_pairs": [list(p) for p in affected_pairs]})
+        moved = {tuple(p) for p in staged["retained_dirs"]}
         for b, k in affected_pairs:
-            shutil.rmtree(
-                os.path.join(hub_root, f"ingest_batch={b}", f"conv_bucket={k}"),
-                ignore_errors=True,
-            )
-        hub_staged = os.path.join(staging, "hub_retained")
-        if _staged_rows(hub_staged):
-            _write_batch_partition(
-                spark.read.parquet(hub_staged),
-                hub_root,
-                ["ingest_batch", "conv_bucket"],
-                ["conv_id", "turn_idx"],
-            )
-        affected_batches = sorted({b for b, _ in affected_pairs})
-        for name, (root, pcols) in sink_roots.items():
-            for b in affected_batches:
-                shutil.rmtree(
-                    os.path.join(root, f"ingest_batch={b}"), ignore_errors=True
-                )
-            staged_dir = os.path.join(staging, f"{name}_retained")
-            if _staged_rows(staged_dir):
-                _write_batch_partition(
-                    spark.read.parquet(staged_dir), root, pcols, ["conv_id"]
-                )
-        log.record(f"{bstage}.cow", {"affected_pairs": [list(p) for p in affected_pairs]})
+            live = _pair_dir(hub_root, b, k)
+            retained = _pair_dir(staged_hub, b, k)
+            if os.path.isdir(retained):
+                shutil.rmtree(live, ignore_errors=True)
+                os.rename(retained, live)
+                if fail_at == "hub_rename":
+                    raise RuntimeError("injected kill at hub_rename")
+            elif (b, k) not in moved:
+                # every row of the pair was superseded
+                shutil.rmtree(live, ignore_errors=True)
+        if os.path.isdir(staged_tombstones):
+            os.makedirs(os.path.dirname(tombstones), exist_ok=True)
+            os.rename(staged_tombstones, tombstones)
 
     if fail_at == "cow":
         raise RuntimeError("injected kill at cow")
 
     # --- totals + batch record (LAST: marks the files as ingested) ------
-    counts = _counts_from_lineage(out_dir, cfg.logging_enabled)
+    counts = _counts_from_lineage(
+        out_dir, cfg.logging_enabled, deleted + [staged["deleted"]]
+    )
     chunk_totals = []
-    if os.path.isdir(sink_roots["chunk_stats"][0]):
+    if os.path.isdir(stats_root):
         chunk_totals = [
             r.asDict()
             for r in chunk_op.chunk_totals_fast(
-                spark.read.parquet(sink_roots["chunk_stats"][0]).drop("ingest_batch")
+                live_rows(spark, out_dir, "chunk_stats").drop("ingest_batch")
             ).collect()
         ]
     log.record(
@@ -462,6 +501,7 @@ def run_incremental(
             "chunk_totals": chunk_totals,
             "superseded_convs": superseded_convs,
             "affected_pairs": [list(p) for p in affected_pairs],
+            "deleted": staged["deleted"],
             "config": fingerprint,
         },
     )

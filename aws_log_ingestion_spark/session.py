@@ -10,22 +10,65 @@ cores. AQE is on so the shuffle partition count self-corrects at runtime
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
+# the default local heap never exceeds this share of physical RAM: the
+# Python workers and the JVM's off-heap memory need the rest
+RAM_SHARE = 0.5
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _physical_ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _mem_bytes(spec: str) -> int:
+    """Bytes in a JVM memory string (``8g``, ``3072m``, ``512mb``); no
+    unit means MiB, as for ``spark.driver.memory``."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)(b?)", spec.strip().lower())
+    if not m:
+        raise ValueError(f"{spec!r} is not a JVM memory string such as 8g or 3072m")
+    n, unit, b = m.groups()
+    if unit:
+        return int(n) * _MEM_UNITS[unit]
+    return int(n) if b else int(n) << 20
+
+
 def _heap_for(cores: int | None) -> str:
-    """Heap scales with task-slot count (1.5 GB/core, floor 16 GB).
+    """Heap scales with task-slot count (1.5 GB/core, floor 16 GB),
+    capped at ``RAM_SHARE`` of physical RAM.
 
     This is the cluster-faithful model: a real N-executor cluster has
     N x executor-memory total, so a 4N-core local[] arm must get ~4x the
     heap of the N-core arm — a FIXED heap starves the wide arm's G1
     (measured: local[32] on 15M turns, 16g -> 394 CPU-s, 48g -> 299
-    CPU-s and 16.1s -> 12.0s wall). SPARK_DRIVER_MEMORY still overrides.
+    CPU-s and 16.1s -> 12.0s wall). On a box with less RAM than that the
+    cap wins: a heap the machine cannot back fails late, under load.
+    SPARK_DRIVER_MEMORY still overrides.
     """
-    if cores is None:
-        return "16g"
-    return f"{max(16, int(cores * 1.5))}g"
+    want_gb = 16 if cores is None else max(16, int(cores * 1.5))
+    cap_mb = int(_physical_ram_bytes() * RAM_SHARE) >> 20
+    return f"{min(want_gb << 10, cap_mb)}m"
+
+
+def _driver_memory(cores: int | None, master_env: str) -> str:
+    """``spark.driver.memory``: SPARK_DRIVER_MEMORY when set — refused
+    when it asks for more than physical RAM — else the default."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        ram = _physical_ram_bytes()
+        if _mem_bytes(env) > ram:
+            raise ValueError(
+                f"SPARK_DRIVER_MEMORY={env} exceeds this machine's physical "
+                f"RAM ({ram >> 20} MiB)"
+            )
+        return env
+    # under local-cluster the EXECUTORS hold the data; the driver only
+    # plans and collects small results
+    return "8g" if master_env.startswith("local-cluster") else _heap_for(cores)
 
 
 def get_spark(
@@ -50,9 +93,7 @@ def get_spark(
     if master_env:
         builder = builder.master(master_env)
         if master_env.startswith("local-cluster"):
-            import re as _re
-
-            m = _re.match(r"local-cluster\[(\d+),(\d+),(\d+)\]", master_env)
+            m = re.match(r"local-cluster\[(\d+),(\d+),(\d+)\]", master_env)
             if not m:
                 # A malformed string (spaces, 'g' suffix) would silently
                 # leave executors at the 1g default and OOM at bench
@@ -114,15 +155,7 @@ def get_spark(
         # to committer v1 per-write (ADVICE r4).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config(
-            "spark.driver.memory",
-            os.environ.get(
-                "SPARK_DRIVER_MEMORY",
-                # under local-cluster the EXECUTORS hold the data; the
-                # driver only plans and collects small results
-                "8g" if (master_env or "").startswith("local-cluster") else _heap_for(cores),
-            ),
-        )
+        .config("spark.driver.memory", _driver_memory(cores, master_env or ""))
     )
     # GC/JVM experiments without code changes (e.g. -XX:+UseParallelGC)
     java_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTIONS")

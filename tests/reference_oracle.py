@@ -10,10 +10,20 @@ _generate_payloads, format_agent_logs) are usable as golden oracles.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_PATH = "/root/reference/src/function.py"
+
+# For tests that load the reference checkout (its functions or its event
+# fixtures): skip, with the path in the reason, when it is not present.
+requires_reference = pytest.mark.skipif(
+    not os.path.exists(REFERENCE_PATH),
+    reason=f"reference checkout not found: {REFERENCE_PATH} is missing",
+)
 
 
 def _stub_aiohttp() -> None:

@@ -11,7 +11,7 @@ import json
 from hypothesis import given, settings, strategies as st
 
 from aws_log_ingestion_spark.functions import chunking as C
-from reference_oracle import oracle_infra_chunks, oracle_logging_chunks
+from reference_oracle import oracle_infra_chunks, oracle_logging_chunks, requires_reference
 
 CTX = {
     "function_name": "f",
@@ -38,6 +38,7 @@ msg = st.text(
 
 @settings(max_examples=25, deadline=None)
 @given(st.lists(msg, min_size=1, max_size=60), st.integers(min_value=400, max_value=3000))
+@requires_reference
 def test_infra_split_invariants_and_parity(messages, cap):
     entry = _entry(messages)
     data = C.build_infra_data(dict(CTX), entry)
@@ -61,6 +62,7 @@ def test_infra_split_invariants_and_parity(messages, cap):
 
 @settings(max_examples=15, deadline=None)
 @given(st.lists(msg, min_size=1, max_size=40), st.integers(min_value=500, max_value=2500))
+@requires_reference
 def test_logging_split_invariants_and_parity(messages, cap):
     entry = _entry(messages)
     payload = C.build_melt_payload(entry)
@@ -78,6 +80,7 @@ def test_logging_split_invariants_and_parity(messages, cap):
 
 @settings(max_examples=30, deadline=None)
 @given(msg)
+@requires_reference
 def test_melt_payload_single_event_parity(m):
     """Byte-exact MELT JSON for arbitrary single messages (key order,
     attribute placement) vs the reference."""

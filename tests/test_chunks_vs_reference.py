@@ -18,6 +18,7 @@ from aws_log_ingestion_spark.sources import datagen
 from reference_oracle import (
     oracle_infra_chunks,
     oracle_logging_chunks,
+    requires_reference,
     rows_to_entry,
 )
 
@@ -40,6 +41,7 @@ def _entry(name: str, conv_id: str = "c0") -> dict:
 
 
 @pytest.mark.parametrize("name", ["big_split", "plain_multi", "lambda_full", "vpc"])
+@requires_reference
 def test_infra_chunk_parity_pure(name):
     """Our pure replay produces the same number of chunks, the same sizes,
     and the same reconstruction as the reference's recursion."""
@@ -59,6 +61,7 @@ def test_infra_chunk_parity_pure(name):
 
 
 @pytest.mark.parametrize("name", ["big_split", "plain_multi", "trace_fill"])
+@requires_reference
 def test_logging_chunk_parity_pure(name):
     entry = _entry(name)
     payload = C.build_melt_payload(entry)
@@ -79,6 +82,7 @@ def test_every_chunk_under_cap():
         assert len(c) < SMALL_CAP
 
 
+@requires_reference
 def test_spark_chunk_replay_matches_pure(spark, template_df, template_meta_df):
     """The grouped applyInPandas operator reproduces the pure replay for
     every conversation (cap=1000 so big_split actually splits)."""

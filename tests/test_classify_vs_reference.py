@@ -14,6 +14,7 @@ from reference_oracle import (
     load_reference,
     oracle_entry_type,
     oracle_filtered_messages,
+    requires_reference,
     rows_to_entry,
 )
 
@@ -31,6 +32,7 @@ def classified(template_df):
     return classify(template_df).cache()
 
 
+@requires_reference
 def test_sink_matches_reference_entry_type(classified):
     spark_sinks = {
         r["conv_id"]: r["sink"]
@@ -53,6 +55,7 @@ def test_sink_is_conversation_constant(classified):
     assert multi == 0
 
 
+@requires_reference
 def test_lambda_filter_matches_reference(classified):
     """Per-turn text equality of infra-lambda survivors, in turn order."""
     survivors = (
@@ -88,6 +91,7 @@ def test_vpc_and_other_pass_through_unfiltered(classified, template_df):
             assert r["n"] == n_by_conv[r["conv_id"]]
 
 
+@requires_reference
 def test_is_lambda_message_per_line_parity(spark):
     """Line-level predicate parity over the full archetype corpus,
     including adversarial variants (SURVEY.md §7 'bug-compatible regexes')."""
@@ -132,6 +136,7 @@ def test_is_lambda_message_per_line_parity(spark):
         assert r["rep"] == bool(ref.REPORT_PATTERN.match(r["text"])), repr(r["text"])
 
 
+@requires_reference
 def test_format_agent_logs_parity(spark):
     ref = load_reference()
     corpus = [

@@ -13,9 +13,15 @@ from aws_log_ingestion_spark.operators.classify import classify
 from aws_log_ingestion_spark.operators.melt import melt_project
 from aws_log_ingestion_spark.operators.route import infra_rows
 from aws_log_ingestion_spark.sources import datagen
-from reference_oracle import load_reference, oracle_filtered_messages, rows_to_entry
+from reference_oracle import (
+    load_reference,
+    oracle_filtered_messages,
+    requires_reference,
+    rows_to_entry,
+)
 
 
+@requires_reference
 def test_session_timeout_matches_reference():
     ref = load_reference()
     assert session_timeout_seconds() == ref._calculate_session_timeout() == 13
@@ -31,6 +37,7 @@ def test_session_timeout_matches_reference():
         ("", ";"),
     ],
 )
+@requires_reference
 def test_parse_tags_matches_reference(monkeypatch, tags_str, delim):
     ref = load_reference()
     monkeypatch.setenv("NR_TAGS", tags_str)
@@ -47,6 +54,7 @@ def test_tags_attached_as_columns(spark, template_df):
     assert row["tag_env"] == "prod" and row["tag_team"] == "myTeam"
 
 
+@requires_reference
 def test_format_logs_end_to_end_matches_reference(spark):
     """NEW_RELIC_FORMAT_LOGS=true: survivors of the lambda filter are
     reformatted exactly as the reference's filter loop does
@@ -78,6 +86,7 @@ def test_format_logs_end_to_end_matches_reference(spark):
     assert "actual-payload" in got  # the reformat actually fired
 
 
+@requires_reference
 def test_region_endpoint_routing_matches_reference(monkeypatch):
     """License-key-prefix -> endpoint table parity, differential against
     the reference's own _get_infra_endpoint/_get_logging_endpoint
@@ -121,6 +130,7 @@ def test_region_endpoint_routing_matches_reference(monkeypatch):
 @pytest.mark.parametrize(
     "env", ["true", "True", "TRUE", "false", "1", "yes", None]
 )
+@requires_reference
 def test_debug_logging_flag_matches_reference(monkeypatch, env):
     from aws_log_ingestion_spark.config import debug_logging_enabled
 

@@ -17,7 +17,7 @@ from aws_log_ingestion_spark.sources.envelope import (
     encode_envelope,
     entries_to_turns,
 )
-from reference_oracle import load_reference
+from reference_oracle import load_reference, requires_reference
 
 FIXTURE_DIR = "/root/reference/test/events"
 FIXTURES = [
@@ -45,6 +45,7 @@ def decoded(spark):
     return decode_envelopes(df).cache()
 
 
+@requires_reference
 def test_envelope_roundtrip_entry_fields(decoded):
     entries = _fixture_entries()
     got = {r["idx"]: r["entry"] for r in decoded.collect()}
@@ -59,6 +60,7 @@ def test_envelope_roundtrip_entry_fields(decoded):
         ]
 
 
+@requires_reference
 def test_fixture_classification_matches_reference(decoded):
     """Run OUR classifier on the reference's own golden fixtures and
     compare against the reference's _get_entry_type verdicts."""
@@ -79,6 +81,7 @@ def test_fixture_classification_matches_reference(decoded):
         assert matches and all(s == etype for s in matches), (lg, etype, got)
 
 
+@requires_reference
 def test_trace_id_decodes_from_real_sam_blob(spark, decoded):
     """The NR_LAMBDA_MONITORING blob in entry_lambda_sam.json decodes to
     the traceId the reference's invoke_lambda.json fixture carries."""
@@ -95,6 +98,7 @@ def test_trace_id_decodes_from_real_sam_blob(spark, decoded):
     assert decode_trace_id_str(marker) == ref._get_trace_id(marker)
 
 
+@requires_reference
 def test_streaming_foreachbatch_equals_batch(spark, tmp_path):
     """availableNow stream over the template corpus produces the same
     per-sink counts as the batch job."""

@@ -1,10 +1,11 @@
 """Incremental ingest (plans/incremental.py): per-batch file diffing,
 batch-equivalence with the one-shot pipeline, and conversation-scoped
-copy-on-write recompute when late turns extend existing conversations.
+recompute when late turns extend existing conversations (hub swapped by
+rename, old sinks superseded by tombstones).
 
 The equivalence target is exact: after any sequence of incremental runs,
-every sink's row multiset equals ``run_pipeline`` over the full current
-input. The overlap batch includes a conversation whose extension FLIPS
+the hub's row multiset and every sink's live row multiset (``live_rows``)
+equal ``run_pipeline`` over the full current input. The overlap batch includes a conversation whose extension FLIPS
 its classification (an ``other`` conversation gains an NR marker line →
 the whole conversation becomes ``lambda`` and the infra filter applies),
 which only a conversation-scoped recompute can get right — a row-local
@@ -21,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.config import PipelineConfig
-from aws_log_ingestion_spark.plans.incremental import run_incremental
+from aws_log_ingestion_spark.plans.incremental import live_rows, run_incremental
 from aws_log_ingestion_spark.plans.job import run_pipeline
 from aws_log_ingestion_spark.sources.derive import (
     conv_meta_from_transcripts,
@@ -134,15 +135,27 @@ def _oneshot(spark, in_dir, out_dir):
 
 
 def _compare_outputs(spark, inc_out, one_out):
-    for sink, drop_inc, drop_one in [
-        ("classified", ["ingest_batch", "conv_bucket"], ["conv_bucket"]),
-        ("infra", ["ingest_batch"], []),
-        ("logging", ["ingest_batch"], []),
-        ("chunk_stats", ["ingest_batch"], []),
-    ]:
-        got = spark.read.parquet(f"{inc_out}/{sink}").drop(*drop_inc)
-        want = spark.read.parquet(f"{one_out}/{sink}").drop(*drop_one)
+    """The hub read raw (it is physically exact); the sinks read live."""
+    got = spark.read.parquet(f"{inc_out}/classified").drop("ingest_batch", "conv_bucket")
+    want = spark.read.parquet(f"{one_out}/classified").drop("conv_bucket")
+    _assert_same_rows(got, want, "classified")
+    for sink in ("infra", "logging", "chunk_stats"):
+        got = live_rows(spark, inc_out, sink).drop("ingest_batch")
+        want = spark.read.parquet(f"{one_out}/{sink}")
         _assert_same_rows(got, want, sink)
+
+
+def _sink_files(out_dir, batches):
+    """{path: (size, mtime_ns)} of every sink file of the given batches."""
+    files = {}
+    for sink in ("infra", "logging", "chunk_stats"):
+        for b in batches:
+            root = os.path.join(out_dir, sink, f"ingest_batch={b}")
+            for cur, _dirs, names in os.walk(root):
+                for name in names:
+                    st = os.stat(os.path.join(cur, name))
+                    files[os.path.join(cur, name)] = (st.st_size, st.st_mtime_ns)
+    return files
 
 
 def test_b0_bootstrap_equals_oneshot(spark, env):
@@ -167,6 +180,7 @@ def test_b1_disjoint_append(spark, env):
 
 def test_b2_overlap_copy_on_write(spark, env):
     _copy_parts(f"{env['stage']}/c", env["in_dir"], "batch_c")
+    env["old_sinks_before_b2"] = _sink_files(env["out"], [0, 1])
     result = run_incremental(spark, env["in_dir"], env["out"], CFG)
     assert result["batch_id"] == 2
     assert result["superseded_convs"] == 2  # c0 (fill) + c3 (flip)
@@ -176,7 +190,7 @@ def test_b2_overlap_copy_on_write(spark, env):
 
     hub = spark.read.parquet(f"{env['out']}/classified")
     extended = hub.filter(F.col("conv_id").isin(EXT_FILL_CONV, EXT_FLIP_CONV))
-    # COW removed the superseded conversations from the old batches…
+    # the hub swap removed the superseded conversations from the old batches…
     assert extended.filter(F.col("ingest_batch") < 2).count() == 0
     # …and the recomputed rows live (once) in the new batch
     assert (
@@ -189,7 +203,7 @@ def test_b2_overlap_copy_on_write(spark, env):
     # cross-batch forward fill: the late no-RequestId lines inherit the
     # request id from the conversation's old tail
     late = (
-        spark.read.parquet(f"{env['out']}/logging")
+        live_rows(spark, env["out"], "logging")
         .filter(
             (F.col("conv_id") == EXT_FILL_CONV)
             & F.col("message").startswith("late line")
@@ -198,6 +212,23 @@ def test_b2_overlap_copy_on_write(spark, env):
         .collect()
     )
     assert len(late) == 1 and late[0]["lambda_request_id"]
+
+
+def test_b2_old_sinks_tombstoned_not_rewritten(spark, env):
+    """The overlap append leaves every old-batch sink file untouched
+    (same bytes and mtime): the superseded conversations stay in the raw
+    old sinks, and only the tombstone-applying read drops them."""
+    before = env["old_sinks_before_b2"]
+    assert before and _sink_files(env["out"], [0, 1]) == before
+    extended = [EXT_FILL_CONV, EXT_FLIP_CONV]
+    for sink in ("infra", "logging", "chunk_stats"):
+        raw = spark.read.parquet(f"{env['out']}/{sink}")
+        live = live_rows(spark, env["out"], sink)
+        old_raw = raw.filter((F.col("ingest_batch") < 2) & F.col("conv_id").isin(extended))
+        old_live = live.filter((F.col("ingest_batch") < 2) & F.col("conv_id").isin(extended))
+        assert old_raw.count() > 0, sink
+        assert old_live.count() == 0, sink
+        assert live.filter(F.col("conv_id").isin(extended)).count() > 0, sink
 
 
 def test_noop_when_no_new_files(spark, env):
@@ -261,7 +292,7 @@ def test_kill_after_staging_resumes(spark, kill_env):
 
 
 def test_kill_before_cow_resumes(spark, kill_env, tmp_path_factory):
-    """Kill AFTER the new batch's writes but BEFORE the COW commit: the
+    """Kill AFTER the new batch's writes but BEFORE the supersede commit: the
     hub transiently holds the superseded conversations twice; the re-run
     must converge to the deduplicated final state."""
     base = tmp_path_factory.mktemp("inc_kill2")
@@ -282,10 +313,47 @@ def test_kill_before_cow_resumes(spark, kill_env, tmp_path_factory):
     _compare_outputs(spark, out, str(base / "oneshot"))
 
 
+def test_kill_after_first_hub_rename_resumes(spark, kill_env, tmp_path_factory):
+    """Kill inside the supersede commit, right after its first hub
+    rename: part of the hub is swapped, the rest and the tombstones are
+    still staged. The re-run must finish the commit and converge to the
+    one-shot outputs and counts."""
+    import zlib
+
+    base = tmp_path_factory.mktemp("inc_kill3")
+    in_dir = str(base / "input")
+    os.makedirs(in_dir)
+    _copy_parts(f"{kill_env['stage']}/a", in_dir, "batch_a")
+    # a copy of c0 under a conv_id in c0's bucket, so that bucket keeps
+    # retained rows and its hub dir is swapped by rename
+    bucket = zlib.crc32(EXT_FILL_CONV.encode()) % 32
+    mate = next(
+        f"{EXT_FILL_CONV}_mate{i}"
+        for i in range(10_000)
+        if zlib.crc32(f"{EXT_FILL_CONV}_mate{i}".encode()) % 32 == bucket
+    )
+    spark.read.parquet(f"{kill_env['stage']}/a").filter(
+        F.col("conv_id") == EXT_FILL_CONV
+    ).withColumn("conv_id", F.lit(mate)).coalesce(1).write.parquet(str(base / "mate"))
+    _copy_parts(str(base / "mate"), in_dir, "batch_a_mate")
+    out = str(base / "out")
+    assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
+    _copy_parts(f"{kill_env['stage']}/c", in_dir, "batch_c")
+    with pytest.raises(RuntimeError, match="injected kill at hub_rename"):
+        run_incremental(spark, in_dir, out, CFG, fail_at="hub_rename")
+    result = run_incremental(spark, in_dir, out, CFG)
+    assert result["batch_id"] == 1
+    assert result["superseded_convs"] == 2
+    one = _oneshot(spark, in_dir, str(base / "oneshot"))
+    assert result["counts"] == one["counts"]
+    _compare_outputs(spark, out, str(base / "oneshot"))
+    assert not os.path.exists(os.path.join(out, "_staging", "b1"))
+
+
 def test_b3_double_supersede_extension_only_batch(spark, env):
     """Batch D holds ONLY late turns for a conversation already
-    recomputed into batch 2 by the previous overlap — the COW must chase
-    the conversation to its CURRENT batch, and a batch with zero new
+    recomputed into batch 2 by the previous overlap — the supersede must
+    chase the conversation to its CURRENT batch, and a batch with zero new
     conversations must still commit cleanly."""
     hub = spark.read.parquet(f"{env['out']}/classified")
     tail = (
@@ -382,7 +450,7 @@ def test_files_arriving_during_recovery_restage(spark, split_c, tmp_path_factory
 
 
 def test_files_arriving_after_cow_commit_refused(spark, split_c, tmp_path_factory):
-    """Kill at 'cow' (old batches already rewritten), then more files
+    """Kill at 'cow' (old hub pairs swapped, tombstones committed), then more files
     arrive: the batch can no longer be re-derived, so the run refuses
     loudly; finishing with the original file set first, then ingesting
     the extra files as the next batch, converges."""
@@ -423,7 +491,7 @@ def test_files_arriving_during_new_batch_recovery_restage(
     input files arrive before the re-run. The restage must derive the
     overlap from the OLD batches only (ingest_batch != batch_id):
     reading the half-written batch would duplicate its rows into
-    superseded_raw and rmtree the freshly rewritten batch's own
+    the tombstones and rmtree the freshly rewritten batch's own
     partitions with empty retained rows, silently dropping
     conversations. Mirrors test_files_arriving_during_recovery_restage
     one failure window later."""

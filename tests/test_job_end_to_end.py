@@ -18,6 +18,7 @@ from reference_oracle import (
     load_reference,
     oracle_entry_type,
     oracle_filtered_messages,
+    requires_reference,
     rows_to_entry,
 )
 
@@ -52,28 +53,24 @@ def _hub_rows(spark, out_dir):
 
 
 @pytest.fixture(scope="module")
-def run_dir(tmp_path_factory):
-    return str(tmp_path_factory.mktemp("pipeline_out"))
-
-
-@pytest.fixture(scope="module")
 def clean_run(spark, template_df, template_meta_df, tmp_path_factory):
-    """Expected values for the kill/resume tests, needing no reference: a
-    clean ``run_pipeline`` over the same input in a fresh dir. Returns
-    (out_dir, counts, hub rows)."""
+    """A clean ``run_pipeline`` over the templates in a fresh dir: the
+    output the sink tests read and the expected values of the kill/resume
+    tests, needing no reference. Returns (out_dir, counts, hub rows)."""
     out = str(tmp_path_factory.mktemp("clean_out"))
     cfg = PipelineConfig(logging_enabled=True)
     result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=False)
     return out, result["counts"], _hub_rows(spark, out)
 
 
-def test_per_sink_counts_match_reference(spark, template_df, template_meta_df, run_dir):
-    cfg = PipelineConfig(logging_enabled=True)
-    result = run_pipeline(spark, template_df, template_meta_df, run_dir, cfg, resume=False)
-    assert result["counts"] == _expected_counts()
+@requires_reference
+def test_per_sink_counts_match_reference(clean_run):
+    _, counts, _ = clean_run
+    assert counts == _expected_counts()
 
 
-def test_sink_files_ordered_and_readable(spark, run_dir):
+def test_sink_files_ordered_and_readable(spark, clean_run):
+    run_dir, _, _ = clean_run
     lam = spark.read.parquet(f"{run_dir}/infra").filter(F.col("sink") == "lambda")
     assert lam.count() > 0
     # per-turn order within each conversation is reconstructible
@@ -82,7 +79,8 @@ def test_sink_files_ordered_and_readable(spark, run_dir):
     assert [r["text"] for r in got] == [datagen.NR_SHORT, datagen.REPORT]
 
 
-def test_chunk_manifest_written(run_dir):
+def test_chunk_manifest_written(clean_run):
+    run_dir, _, _ = clean_run
     manifest = ckpt.read_manifest(None, run_dir)
     assert "chunks" in manifest
     totals = manifest["chunks"]["totals"]

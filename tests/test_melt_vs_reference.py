@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.operators.melt import melt_project, to_payload_struct
 from aws_log_ingestion_spark.sources import datagen
-from reference_oracle import oracle_melt, rows_to_entry
+from reference_oracle import oracle_melt, requires_reference, rows_to_entry
 
 
 def _oracle_logs(name: str, conv_id: str) -> list[dict]:
@@ -33,6 +33,7 @@ def _spark_logs(melted, conv_id: str) -> list[dict]:
 
 
 @pytest.mark.parametrize("name", sorted(datagen.TEMPLATES))
+@requires_reference
 def test_melt_per_turn_parity(melted, name):
     """message, timestamp, trace.id and lambda_request_id match the
     reference per turn, in order — including the trace-clear semantics
