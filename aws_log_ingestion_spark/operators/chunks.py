@@ -18,6 +18,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -713,6 +715,21 @@ def chunk_counts_fast(
         walk, FAST_STATS_SCHEMA
     )
     return singles.unionByName(big_stats)
+
+
+def sink_chunk_counts(
+    infra: DataFrame | None, hub: DataFrame | None, cfg: PipelineConfig
+) -> DataFrame | None:
+    """The ``chunk_stats`` sink: ``chunk_counts_fast`` of the routed infra
+    rows (``route.infra_union``) unioned with that of the hub (the logging
+    tee is unfiltered). A disabled family passes None; None when both
+    are."""
+    frames = []
+    if infra is not None:
+        frames.append(chunk_counts_fast(infra, "infra", cfg))
+    if hub is not None:
+        frames.append(chunk_counts_fast(hub, "logging", cfg))
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def chunk_totals_fast(stats: DataFrame) -> DataFrame:

@@ -101,8 +101,9 @@ def with_melt_fills(
         is_lambda_group = F.col("log_group").startswith(cfg.lambda_prefix)
         rid = F.when(is_lambda_group, P.extract_request_id(t))
         # temp aliases then withColumn: an upstream frame may already
-        # carry lambda_request_id (streaming cross-batch state) and
-        # select("*", alias) would duplicate it where withColumn replaces
+        # carry lambda_request_id (classify's own fill, the default
+        # fill_request_ids=True) and select("*", alias) would duplicate
+        # it where withColumn replaces
         df = df.select(
             "*",
             F.last("__trace_raw", ignorenulls=True).over(run).alias("__tr_last"),

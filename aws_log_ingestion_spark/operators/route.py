@@ -7,7 +7,9 @@ dropping non-(REPORT|lambda-message) lines first (:252-257). Here each
 family/EntryType combination is a filtered write to its own table —
 separate tables (not a partition column) because the sinks carry
 different schemas, exactly like the reference's differently-shaped
-payloads (SURVEY.md §2 row 15).
+payloads (SURVEY.md §2 row 15). ``write_sinks`` is the one place that
+builds the sink frames; the batch, incremental and streaming runners
+each pass only their commit.
 
 Writes sort within partitions by (conv_id, turn_idx) so per-turn order —
 load-bearing in the reference's tests — is physically preserved and
@@ -20,7 +22,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions import patterns as P
+from .chunks import sink_chunk_counts
 from .classify import SINK_LAMBDA, SINK_OTHER, SINK_VPC
+from .melt import melt_project
 
 INFRA_SINKS = (SINK_LAMBDA, SINK_VPC, SINK_OTHER)
 
@@ -94,6 +98,35 @@ def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> Dat
             F.when(is_lambda, P.format_agent_logs(F.col("text"))).otherwise(F.col("text")),
         )
     return df
+
+
+def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
+    """The fan-out every runner shares: build each enabled sink's frame
+    from the hub and hand it to ``commit(name, df, partition_by,
+    order_by)``, in the order infra, logging, chunk_stats. The commit
+    owns the write (checkpointed, per-batch overwrite or streaming
+    append), applying the partition and order columns fixed here.
+
+    - ``infra``: ``infra_union``, partitioned by ``sink``.
+    - ``logging``: ``melt_project`` (a pure projection when the hub
+      carries the MELT fills).
+    - ``chunk_stats``: ``chunks.sink_chunk_counts``, written unsorted.
+    """
+    infra = infra_union(hub, cfg) if cfg.infra_enabled else None
+    if infra is not None:
+        commit("infra", infra, ["sink"], ["conv_id", "turn_idx"])
+    if cfg.logging_enabled:
+        commit("logging", melt_project(hub, cfg), [], ["conv_id", "turn_idx"])
+    stats = sink_chunk_counts(infra, hub if cfg.logging_enabled else None, cfg)
+    if stats is not None:
+        commit("chunk_stats", stats, [], [])
+
+
+def sorted_within(df: DataFrame, partition_by: list[str], order_by: list[str]) -> DataFrame:
+    """``df`` sorted within partitions by a sink's partition then order
+    columns; unchanged when it has neither."""
+    cols = [*partition_by, *order_by]
+    return df.sortWithinPartitions(*cols) if cols else df
 
 
 def route_count_exprs(

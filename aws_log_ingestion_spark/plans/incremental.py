@@ -76,8 +76,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from ..config import PipelineConfig
 from ..operators import checkpoint as ckpt
 from ..operators import chunks as chunk_op
-from ..operators.melt import melt_project
-from ..operators.route import INFRA_SINKS, infra_union, route_count_exprs
+from ..operators.route import INFRA_SINKS, route_count_exprs, write_sinks
 from ..sources.derive import conv_meta_from_transcripts
 from .job import prepare
 
@@ -274,8 +273,6 @@ def run_incremental(
     staged_tombstones = os.path.join(staging, TOMBSTONES)
     tombstones = os.path.join(out_dir, TOMBSTONES, f"by_batch={batch_id}")
     hub_root = os.path.join(out_dir, "classified")
-    infra_root = os.path.join(out_dir, "infra")
-    logging_root = os.path.join(out_dir, "logging")
     stats_root = os.path.join(out_dir, "chunk_stats")
 
     new_turns = spark.read.parquet(
@@ -419,37 +416,15 @@ def run_incremental(
         F.col("ingest_batch") == batch_id
     ).drop("ingest_batch", "conv_bucket")
 
-    if cfg.infra_enabled:
+    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
         _write_batch_partition(
-            infra_union(batch_hub, cfg).withColumn("ingest_batch", F.lit(batch_id)),
-            infra_root,
-            ["ingest_batch", "sink"],
-            ["conv_id", "turn_idx"],
+            df.withColumn("ingest_batch", F.lit(batch_id)),
+            os.path.join(out_dir, name),
+            ["ingest_batch", *partition_by],
+            order_by,
         )
-    if cfg.logging_enabled:
-        _write_batch_partition(
-            melt_project(batch_hub, cfg).withColumn("ingest_batch", F.lit(batch_id)),
-            logging_root,
-            ["ingest_batch"],
-            ["conv_id", "turn_idx"],
-        )
-    stats_frames = []
-    if cfg.infra_enabled:
-        stats_frames.append(
-            chunk_op.chunk_counts_fast(infra_union(batch_hub, cfg), "infra", cfg)
-        )
-    if cfg.logging_enabled:
-        stats_frames.append(chunk_op.chunk_counts_fast(batch_hub, "logging", cfg))
-    if stats_frames:
-        stats = stats_frames[0]
-        for extra in stats_frames[1:]:
-            stats = stats.unionByName(extra)
-        _write_batch_partition(
-            stats.withColumn("ingest_batch", F.lit(batch_id)),
-            stats_root,
-            ["ingest_batch"],
-            ["conv_id"],
-        )
+
+    write_sinks(batch_hub, cfg, commit)
 
     if fail_at == "new_batch":
         raise RuntimeError("injected kill at new_batch")

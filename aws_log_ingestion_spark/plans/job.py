@@ -24,15 +24,15 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..config import PipelineConfig
+from ..config import PipelineConfig, resolve_logging_endpoint
 from ..operators import checkpoint as ckpt
 from ..operators import chunks as chunk_op
 from ..operators.classify import classify
 from ..operators.enrich import enrich
-from ..operators.melt import melt_project, with_melt_fills, with_melt_fills_salted
-from ..operators.route import INFRA_SINKS, infra_union, route_counts
+from ..operators.melt import with_melt_fills, with_melt_fills_salted
+from ..operators.route import INFRA_SINKS, infra_url, sorted_within, write_sinks
 from ..sources.derive import conv_meta_from_events, transcripts_from_events
 
 # a conversation above this many turns would serialise the hub's conv_id
@@ -134,74 +134,55 @@ def run_pipeline(
     hub = spark.read.parquet(hub_path).drop("conv_bucket")
 
     counts: dict[str, int] = {}
-    if cfg.infra_enabled:
-        # one partitioned write replaces three filtered jobs
-        if not log.is_done("infra"):
-            from pyspark.sql import Observation
 
-            obs = Observation("obs_infra")
-            observed = infra_union(hub, cfg).observe(
-                obs,
-                *[
-                    F.sum((F.col("sink") == s).cast("long")).alias(s)
-                    for s in INFRA_SINKS
-                ],
+    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
+        path = f"{out_dir}/{name}"
+        if name == "infra":
+            # one partitioned write replaces three filtered jobs
+            if not log.is_done("infra"):
+                obs = Observation("obs_infra")
+                observed = df.observe(
+                    obs,
+                    *[F.sum((F.col("sink") == s).cast("long")).alias(s) for s in INFRA_SINKS],
+                )
+                sorted_within(observed, partition_by, order_by).write.mode(
+                    "overwrite"
+                ).options(**ckpt.parquet_text_options(observed)).partitionBy(
+                    *partition_by
+                ).parquet(path)
+                per_sink = {s: int(obs.get[s] or 0) for s in INFRA_SINKS}
+                log.record(
+                    "infra",
+                    {
+                        "rows": sum(per_sink.values()),
+                        "per_sink": per_sink,
+                        # routing metadata: the region-resolved ingest URL
+                        # each sink partition would ship to (reference
+                        # :384-393)
+                        "endpoints": {s: infra_url(s, cfg) for s in INFRA_SINKS},
+                        "lineage": ckpt.file_lineage(path),
+                    },
+                )
+            per_sink = log.read("infra")["per_sink"]
+            for s in INFRA_SINKS:
+                counts[f"infra_{s}_rows"] = per_sink[s]
+        elif name == "logging":
+            counts["logging_rows"] = ckpt.observed_write(
+                df,
+                path,
+                log,
+                "logging",
+                order_cols=order_by,
+                extra={"endpoint": resolve_logging_endpoint(cfg)},
             )
-            observed.sortWithinPartitions("sink", "conv_id", "turn_idx").write.mode(
-                "overwrite"
-            ).options(**ckpt.parquet_text_options(observed)).partitionBy(
-                "sink"
-            ).parquet(f"{out_dir}/infra")
-            per_sink = {s: int(obs.get[s] or 0) for s in INFRA_SINKS}
-            from ..operators.route import infra_url
-
-            log.record(
-                "infra",
-                {
-                    "rows": sum(per_sink.values()),
-                    "per_sink": per_sink,
-                    # routing metadata: the region-resolved ingest URL each
-                    # sink partition would ship to (reference :384-393)
-                    "endpoints": {s: infra_url(s, cfg) for s in INFRA_SINKS},
-                    "lineage": ckpt.file_lineage(f"{out_dir}/infra"),
-                },
-            )
-        per_sink = log.read("infra")["per_sink"]
-        for s in INFRA_SINKS:
-            counts[f"infra_{s}_rows"] = per_sink[s]
-
-    if cfg.logging_enabled:
-        from ..config import resolve_logging_endpoint
-
-        counts["logging_rows"] = ckpt.observed_write(
-            melt_project(hub, cfg),
-            f"{out_dir}/logging",
-            log,
-            "logging",
-            extra={"endpoint": resolve_logging_endpoint(cfg)},
-        )
-
-    if not log.is_done("chunks"):
-        # chunk_counts_fast: n_chunks is bit-identical to the gzip replay
-        # (tests/test_jsoncost.py) but the overwhelming majority of
-        # conversations are answered by pure-Catalyst byte arithmetic —
-        # zero Python, zero gzip. The exact-gz-bytes replay
-        # (chunk_replay) remains available for byte-level audits.
-        stats_frames = []
-        if cfg.infra_enabled:
-            stats_frames.append(
-                chunk_op.chunk_counts_fast(infra_union(hub, cfg), "infra", cfg)
-            )
-        if cfg.logging_enabled:
-            stats_frames.append(chunk_op.chunk_counts_fast(hub, "logging", cfg))
-        if stats_frames:
-            stats = stats_frames[0]
-            for extra in stats_frames[1:]:
-                stats = stats.unionByName(extra)
-            stats.write.mode("overwrite").parquet(f"{out_dir}/chunk_stats")
-            totals = chunk_op.chunk_totals_fast(
-                spark.read.parquet(f"{out_dir}/chunk_stats")
-            ).collect()
+        elif not log.is_done("chunks"):
+            # chunk_counts_fast: n_chunks is bit-identical to the gzip
+            # replay (tests/test_jsoncost.py) but the overwhelming majority
+            # of conversations are answered by pure-Catalyst byte
+            # arithmetic — zero Python, zero gzip. The exact-gz-bytes
+            # replay (chunk_replay) remains available for byte-level audits.
+            sorted_within(df, partition_by, order_by).write.mode("overwrite").parquet(path)
+            totals = chunk_op.chunk_totals_fast(spark.read.parquet(path)).collect()
             log.record(
                 "chunks",
                 {
@@ -209,6 +190,8 @@ def run_pipeline(
                     "rows": int(sum(r["n_chunks"] for r in totals)),
                 },
             )
+
+    write_sinks(hub, cfg, commit)
 
     manifest = ckpt.read_manifest(spark, out_dir)
     return {"counts": counts, "manifest": manifest}

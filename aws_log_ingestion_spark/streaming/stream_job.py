@@ -3,11 +3,13 @@
 The reference is invocation-driven — each Lambda call is an isolated
 micro-batch with no cross-invocation state, no event-time windows, no
 late-data policy (SURVEY.md §2 "Streaming-only": none). That maps 1:1
-onto ``foreachBatch``: every micro-batch runs the SAME batch functions
-(classify -> enrich -> route), so batch/stream semantics cannot drift.
-Forward-fills stay correct because a conversation arrives within one
-invocation in the reference model; a cross-batch fill variant would use
-``applyInPandasWithState`` (not needed for parity, noted for extension).
+onto ``foreachBatch``: every micro-batch builds the same hub as the
+batch job (``plans.job.prepare``) and writes it through the same fan-out
+(``route.write_sinks``), so batch/stream semantics cannot drift.
+Forward-fills are correct when a conversation arrives within one
+micro-batch, the reference's model. A conversation whose turns span
+input batches is ``plans/incremental.py::run_incremental``'s job: it
+recomputes the whole conversation from the hub's raw turns.
 
 Sinks are append-mode parquet (Iceberg in production); the checkpoint
 location gives exactly-once per micro-batch — the streaming analog of
@@ -20,26 +22,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import PipelineConfig
 from ..operators.checkpoint import parquet_text_options
-from ..operators.classify import classify
-from ..operators.enrich import enrich
-from ..operators.melt import melt_project
-from ..operators.route import infra_union
+from ..operators.route import sorted_within, write_sinks
+from ..plans.job import prepare
 
 
 def make_batch_processor(
     conv_meta: DataFrame,
     out_dir: str,
     cfg: PipelineConfig | None = None,
-    chunk_stats: bool = False,
 ):
-    """The foreachBatch function: identical dataflow to plans/job.py.
-
-    ``chunk_stats=True`` adds the batch job's chunk stage per
-    micro-batch: ``chunk_counts_fast`` over the same hub, appended to
-    ``out_dir/chunk_stats``. Under the reference's invocation model
-    (whole conversations per micro-batch) the appended union equals the
-    batch job's one-shot stats exactly — pinned by
-    tests/test_stateful_streaming.py."""
+    """The foreachBatch function: the batch job's hub and its three
+    sinks (infra, logging, chunk_stats), appended per micro-batch. Under
+    the reference's invocation model (whole conversations per
+    micro-batch) the appended sinks equal the batch job's — pinned by
+    tests/test_stateful_streaming.py and tests/test_sink_fanout.py."""
     cfg = cfg or PipelineConfig()
 
     # The session default is committer v2 (fast, but a mid-batch failure
@@ -49,116 +45,21 @@ def make_batch_processor(
     # (the existing at-least-once story) can duplicate rows (ADVICE r4).
     _v1 = {"mapreduce.fileoutputcommitter.algorithm.version": "1"}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators import chunks as chunk_op
+    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
+        sorted_within(df, partition_by, order_by).write.mode("append").options(
+            **parquet_text_options(df), **_v1
+        ).partitionBy(*partition_by).parquet(f"{out_dir}/{name}")
 
-        # materialize the hub once per micro-batch — up to four sinks
-        # read it (infra, logging, and both chunk legs), mirroring the
-        # batch job's checkpointed hub
-        hub = enrich(classify(batch_df, cfg), conv_meta).persist()
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        # materialize the hub once per micro-batch — the sinks and both
+        # chunk legs read it, mirroring the batch job's checkpointed hub
+        hub = prepare(batch_df, conv_meta, cfg).persist()
         try:
-            if cfg.infra_enabled:
-                iu = infra_union(hub, cfg)
-                iu.sortWithinPartitions(
-                    "sink", "conv_id", "turn_idx"
-                ).write.mode("append").options(
-                    **parquet_text_options(iu), **_v1
-                ).partitionBy("sink").parquet(f"{out_dir}/infra")
-            if cfg.logging_enabled:
-                mp = melt_project(hub, cfg)
-                mp.write.mode("append").options(
-                    **parquet_text_options(mp), **_v1
-                ).parquet(f"{out_dir}/logging")
-            if chunk_stats:
-                frames = []
-                if cfg.infra_enabled:
-                    frames.append(
-                        chunk_op.chunk_counts_fast(
-                            infra_union(hub, cfg), "infra", cfg
-                        )
-                    )
-                if cfg.logging_enabled:
-                    frames.append(
-                        chunk_op.chunk_counts_fast(hub, "logging", cfg)
-                    )
-                if frames:
-                    st = frames[0]
-                    for extra in frames[1:]:
-                        st = st.unionByName(extra)
-                    st.write.mode("append").options(
-                        **parquet_text_options(st), **_v1
-                    ).parquet(f"{out_dir}/chunk_stats")
+            write_sinks(hub, cfg, commit)
         finally:
             hub.unpersist()
 
     return process
-
-
-def melt_stream_fills(stream: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Cross-batch MELT fills for a transcript stream, batch-gated.
-
-    ``stateful_melt_fill_full`` carries trace/request ids across
-    micro-batch boundaries; the request-id gate on the lambda log-group
-    prefix (reference :538, melt.with_melt_fills) is applied HERE —
-    log_group derives from the conversation-constant ``tool``, so
-    masking the filled column afterwards is exactly equivalent to
-    masking the extract before the fill."""
-    from ..operators.classify import with_log_group
-    from .stateful import stateful_melt_fill_full
-
-    cfg = cfg or PipelineConfig()
-    filled = with_log_group(stateful_melt_fill_full(stream), cfg)
-    from pyspark.sql import functions as F
-
-    return filled.withColumn(
-        "lambda_request_id",
-        F.when(
-            F.col("log_group").startswith(cfg.lambda_prefix),
-            F.col("lambda_request_id"),
-        ),
-    )
-
-
-def run_stream_stateful_logging(
-    spark: SparkSession,
-    input_dir: str,
-    conv_meta: DataFrame,
-    out_dir: str,
-    cfg: PipelineConfig | None = None,
-):
-    """Logging (MELT) sink with CROSS-BATCH fill state: unlike the plain
-    ``run_stream`` skin (per-invocation semantics — correct when whole
-    conversations arrive in one micro-batch, the reference's model), this
-    composition keeps per-turn parity with the batch job even when one
-    conversation is SPLIT across micro-batches: the stateful stage owns
-    the trace/request-id carry, and each micro-batch's ``melt_project``
-    is then a pure projection (fills already present)."""
-    from ..sources.datagen import to_spark_df  # for schema only
-
-    cfg = cfg or PipelineConfig()
-    schema = to_spark_df(spark, []).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-        input_dir
-    )
-    filled = melt_stream_fills(stream, cfg)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        hub = enrich(batch_df, conv_meta)
-        mp = melt_project(hub, cfg)
-        # same committer-v1 pin as make_batch_processor: an un-gated
-        # streaming append must not expose partial task files
-        mp.write.mode("append").options(
-            **parquet_text_options(mp),
-            **{"mapreduce.fileoutputcommitter.algorithm.version": "1"},
-        ).parquet(f"{out_dir}/logging")
-
-    return (
-        filled.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{out_dir}/_stream_checkpoint")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def run_stream(

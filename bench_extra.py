@@ -35,10 +35,9 @@ from aws_log_ingestion_spark.operators.chunks import (
     chunk_totals,
     chunk_totals_fast,
 )
-from aws_log_ingestion_spark.operators.classify import classify
-from aws_log_ingestion_spark.operators.enrich import enrich
-from aws_log_ingestion_spark.operators.melt import melt_project, with_melt_fills
+from aws_log_ingestion_spark.operators.melt import melt_project
 from aws_log_ingestion_spark.operators.route import infra_union, route_counts
+from aws_log_ingestion_spark.plans.job import prepare
 from aws_log_ingestion_spark.session import get_spark
 from aws_log_ingestion_spark.sources import derive
 
@@ -94,9 +93,7 @@ def main() -> None:
         cfg = PipelineConfig(logging_enabled=True)
 
         if "job" in groups or "chunk" in groups:
-            hub_df = enrich(
-                classify(with_melt_fills(t, cfg), cfg, fill_request_ids=False), meta
-            )
+            hub_df = prepare(t, meta, cfg)
             # warm codegen + python workers once
             noop(hub_df)
 

@@ -1,7 +1,8 @@
 """Property-style tests for the payload-split replay (pure Python, no
 Spark): the reference's own pinned invariants
 (/root/reference/test/log_ingestion_test.py:384-415) over randomized but
-seeded inputs, plus exact parity with the reference recursion."""
+seeded inputs, which need no reference checkout, plus exact parity with
+the reference recursion, which does."""
 
 from __future__ import annotations
 
@@ -36,6 +37,46 @@ msg = st.text(
 )
 
 
+def _count_chunks_fast(events: list[dict], build, cost, cap: int) -> int:
+    """``count_chunks_fast``'s chunk count for the payload ``build``
+    makes of ``events``: per-event costs, the empty envelope, and the
+    real gzip length of an event interval's payload."""
+    n, _raw = C.count_chunks_fast(
+        [cost(e) for e in events],
+        C.empty_payload_len(build([])),
+        cap,
+        lambda lo, hi: len(gzip.compress(json.dumps(build(events[lo:hi])).encode())),
+    )
+    return n
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(msg, min_size=1, max_size=60), st.integers(min_value=400, max_value=3000))
+def test_infra_split_invariants(messages, cap):
+    """Reference-free: the chunks rebuild the input events in order,
+    each is under the cap unless it holds a single event, and
+    ``count_chunks_fast`` counts exactly the chunks ``iter_chunks``
+    emits."""
+    entry = _entry(messages)
+    data = C.build_infra_data(dict(CTX), entry)
+    ours = list(C.iter_chunks(data, C.split_infra, cap))
+
+    rebuilt = []
+    for c in ours:
+        payload = json.loads(gzip.decompress(c))
+        assert list(payload.keys()) == ["context", "entry"]
+        events = json.loads(payload["entry"])["logEvents"]
+        rebuilt.extend(events)
+        # every chunk under cap unless it holds a single unsplittable event
+        assert len(c) < cap or len(events) == 1
+    assert rebuilt == entry["logEvents"]  # loss-free, order-preserving
+
+    def build(events):
+        return C.build_infra_data(dict(CTX), {**entry, "logEvents": events})
+
+    assert _count_chunks_fast(entry["logEvents"], build, C.event_cost_infra, cap) == len(ours)
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.lists(msg, min_size=1, max_size=60), st.integers(min_value=400, max_value=3000))
 @requires_reference
@@ -46,18 +87,30 @@ def test_infra_split_invariants_and_parity(messages, cap):
     theirs = oracle_infra_chunks(entry, dict(CTX), cap)
     assert [len(c) for c in ours] == [len(c) for c in theirs]
 
-    rebuilt = []
-    for c in ours:
-        payload = json.loads(gzip.decompress(c))
-        assert list(payload.keys()) == ["context", "entry"]
-        rebuilt.extend(json.loads(payload["entry"])["logEvents"])
-    assert rebuilt == entry["logEvents"]  # loss-free, order-preserving
 
+@settings(max_examples=15, deadline=None)
+@given(st.lists(msg, min_size=1, max_size=40), st.integers(min_value=500, max_value=2500))
+def test_logging_split_invariants(messages, cap):
+    """Reference-free: the chunks' logs carry the input messages in
+    order, each chunk is under the cap unless it holds a single log, and
+    ``count_chunks_fast`` counts exactly the chunks ``iter_chunks``
+    emits."""
+    entry = _entry(messages)
+    payload = C.build_melt_payload(entry)
+    ours = list(C.iter_chunks(payload, C.split_logging, cap))
+
+    logs = []
     for c in ours:
-        # every chunk under cap unless it holds a single unsplittable event
-        if len(c) >= cap:
-            payload = json.loads(gzip.decompress(c))
-            assert len(json.loads(payload["entry"])["logEvents"]) == 1
+        part = json.loads(gzip.decompress(c))
+        assert set(part[0].keys()) == {"common", "logs"}
+        logs.extend(part[0]["logs"])
+        assert len(c) < cap or len(part[0]["logs"]) == 1
+    assert [l["message"] for l in logs] == [e["message"] for e in entry["logEvents"]]
+
+    def build(sub):
+        return [{"common": payload[0]["common"], "logs": sub}]
+
+    assert _count_chunks_fast(payload[0]["logs"], build, C.event_cost_logging, cap) == len(ours)
 
 
 @settings(max_examples=15, deadline=None)
@@ -69,13 +122,6 @@ def test_logging_split_invariants_and_parity(messages, cap):
     ours = list(C.iter_chunks(payload, C.split_logging, cap))
     theirs = oracle_logging_chunks(entry, dict(CTX), cap)
     assert [len(c) for c in ours] == [len(c) for c in theirs]
-
-    logs = []
-    for c in ours:
-        part = json.loads(gzip.decompress(c))
-        assert set(part[0].keys()) == {"common", "logs"}
-        logs.extend(part[0]["logs"])
-    assert [l["message"] for l in logs] == [e["message"] for e in entry["logEvents"]]
 
 
 @settings(max_examples=30, deadline=None)

@@ -98,10 +98,11 @@ def test_trace_id_decodes_from_real_sam_blob(spark, decoded):
     assert decode_trace_id_str(marker) == ref._get_trace_id(marker)
 
 
-@requires_reference
 def test_streaming_foreachbatch_equals_batch(spark, tmp_path):
     """availableNow stream over the template corpus produces the same
-    per-sink counts as the batch job."""
+    per-sink counts and rows as a clean ``run_pipeline`` over the same
+    input."""
+    from aws_log_ingestion_spark.plans.job import run_pipeline
     from aws_log_ingestion_spark.streaming.stream_job import run_stream
 
     rows = datagen.all_template_rows()
@@ -110,22 +111,29 @@ def test_streaming_foreachbatch_equals_batch(spark, tmp_path):
 
     in_dir = str(tmp_path / "stream_in")
     out_dir = str(tmp_path / "stream_out")
+    batch_dir = str(tmp_path / "batch_out")
     tdf.write.mode("overwrite").parquet(in_dir)
 
     cfg = PipelineConfig(logging_enabled=True)
     q = run_stream(spark, in_dir, meta, out_dir, cfg, trigger_once=True)
     q.awaitTermination(120)
+    exp = run_pipeline(
+        spark, spark.read.parquet(in_dir), meta, batch_dir, cfg, resume=False
+    )["counts"]
 
     infra = spark.read.parquet(f"{out_dir}/infra")
-    logging_rows = spark.read.parquet(f"{out_dir}/logging").count()
+    logging = spark.read.parquet(f"{out_dir}/logging")
     got = {
         r["sink"]: r["n"]
         for r in infra.groupBy("sink").agg(F.count("*").alias("n")).collect()
     }
-    from test_job_end_to_end import _expected_counts
-
-    exp = _expected_counts()
     assert got.get("lambda", 0) == exp["infra_lambda_rows"]
     assert got.get("vpc", 0) == exp["infra_vpc_rows"]
     assert got.get("other", 0) == exp["infra_other_rows"]
-    assert logging_rows == exp["logging_rows"]
+    assert logging.count() == exp["logging_rows"]
+
+    for sink, df in (("infra", infra), ("logging", logging)):
+        want = spark.read.parquet(f"{batch_dir}/{sink}")
+        df = df.select(*want.columns)
+        assert df.exceptAll(want).count() == 0
+        assert want.exceptAll(df).count() == 0

@@ -1,43 +1,34 @@
-"""Cross-batch stateful forward-fill: state must survive the micro-batch
-boundary (two availableNow runs over a growing file source share one
-checkpoint)."""
+"""Fills across input batches and the foreachBatch streaming skin.
+
+A conversation whose turns arrive in different input files is
+``run_incremental``'s job: each new file is one ingest batch, and a
+conversation that reappears is recomputed whole from the hub's raw turns,
+so the trace/request-id carry survives the batch boundary. The streaming
+skin (``run_stream`` / ``make_batch_processor``) covers the reference's
+model, whole conversations per micro-batch."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from aws_log_ingestion_spark.config import PipelineConfig
+from aws_log_ingestion_spark.plans.incremental import live_rows, run_incremental
 from aws_log_ingestion_spark.sources import datagen
-from aws_log_ingestion_spark.streaming.stateful import stateful_request_fill
+
+CFG = PipelineConfig(logging_enabled=True)
 
 
-def _write_batch(spark, in_dir: str, rows: list[dict], name: str) -> None:
-    datagen.to_spark_df(spark, rows).write.mode("append").parquet(in_dir)
-
-
-def _run_available_now(spark, in_dir: str, out_dir: str, ckpt: str) -> None:
-    schema = datagen.to_spark_df(spark, []).schema
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    q = (
-        stateful_request_fill(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+def _ingest(spark, in_dir: str, out_dir: str, rows: list[dict]) -> None:
+    """Append ``rows`` as one new input file and ingest it as one batch."""
+    datagen.to_spark_df(spark, rows).coalesce(1).write.mode("append").parquet(in_dir)
+    assert run_incremental(spark, in_dir, out_dir, CFG)["batch_id"] is not None
 
 
 def test_request_id_carries_across_micro_batches(spark, tmp_path):
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     uuid_a, uuid_b = datagen.UUID_A, datagen.UUID_B
 
-    # batch 1: conv sets request id A, then two probe lines without ids
+    # batch 1: conv sets request id A, then a probe line without an id
     batch1 = [
         {"conv_id": "cx", "turn_idx": 0, "role": "user", "tool": "lambda",
          "text": f"START RequestId: {uuid_a} Version: $LATEST",
@@ -45,10 +36,9 @@ def test_request_id_carries_across_micro_batches(spark, tmp_path):
         {"conv_id": "cx", "turn_idx": 1, "role": "user", "tool": "lambda",
          "text": "no id here", "ts_millis": datagen.BASE_TS_MILLIS + 1},
     ]
-    _write_batch(spark, in_dir, batch1, "b1")
-    _run_available_now(spark, in_dir, out_dir, ckpt)
+    _ingest(spark, in_dir, out_dir, batch1)
 
-    # batch 2 (new files, same checkpoint): carry must still be A until B
+    # batch 2 (a new file): the carry must still be A until B
     batch2 = [
         {"conv_id": "cx", "turn_idx": 2, "role": "user", "tool": "lambda",
          "text": "still no id", "ts_millis": datagen.BASE_TS_MILLIS + 2},
@@ -58,50 +48,29 @@ def test_request_id_carries_across_micro_batches(spark, tmp_path):
         {"conv_id": "cy", "turn_idx": 0, "role": "user", "tool": "lambda",
          "text": "fresh conversation, no id", "ts_millis": datagen.BASE_TS_MILLIS},
     ]
-    _write_batch(spark, in_dir, batch2, "b2")
-    _run_available_now(spark, in_dir, out_dir, ckpt)
+    _ingest(spark, in_dir, out_dir, batch2)
 
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["lambda_request_id"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
+    live = live_rows(spark, out_dir, "logging").collect()
+    got = {(r["conv_id"], r["turn_idx"]): r["lambda_request_id"] for r in live}
+    assert len(got) == len(live) == 5
     assert got[("cx", 0)] == uuid_a
     assert got[("cx", 1)] == uuid_a
-    assert got[("cx", 2)] == uuid_a  # <- crossed the micro-batch boundary
+    assert got[("cx", 2)] == uuid_a  # <- crossed the batch boundary
     assert got[("cx", 3)] == uuid_b
     assert got[("cy", 0)] is None  # fresh conversation starts empty
 
 
 def test_trace_id_carries_and_clears_across_micro_batches(spark, tmp_path):
-    """MELT trace semantics across the micro-batch boundary: a decodable
-    NR marker in batch 1 must still fill turns arriving in batch 2, and an
+    """MELT trace semantics across the batch boundary: a decodable NR
+    marker in batch 1 must still fill turns arriving in batch 2, and an
     UNDECODABLE marker in batch 2 must clear the carry (''-clears, ref
     src/function.py:519-532). Request ids carry independently."""
     from aws_log_ingestion_spark.sources.derive import (
         DECODABLE_NR_MARKER,
         DECODABLE_NR_TRACE_ID,
     )
-    from aws_log_ingestion_spark.streaming.stateful import stateful_melt_fill
 
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "min"),
-        str(tmp_path / "mout"),
-        str(tmp_path / "mckpt"),
-    )
-
-    def run_once():
-        schema = datagen.to_spark_df(spark, []).schema
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            stateful_melt_fill(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    in_dir, out_dir = str(tmp_path / "min"), str(tmp_path / "mout")
 
     # batch 1: decodable marker sets the trace carry; request id set after
     batch1 = [
@@ -111,8 +80,7 @@ def test_trace_id_carries_and_clears_across_micro_batches(spark, tmp_path):
          "text": f"START RequestId: {datagen.UUID_A} Version: $LATEST",
          "ts_millis": datagen.BASE_TS_MILLIS + 1},
     ]
-    _write_batch(spark, in_dir, batch1, "b1")
-    run_once()
+    _ingest(spark, in_dir, out_dir, batch1)
 
     # batch 2: plain turn (trace must still be filled from batch 1), then
     # an undecodable marker clears it; later turn sees NULL trace but
@@ -125,13 +93,11 @@ def test_trace_id_carries_and_clears_across_micro_batches(spark, tmp_path):
         {"conv_id": "ct", "turn_idx": 4, "role": "user", "tool": "lambda",
          "text": "after the clear", "ts_millis": datagen.BASE_TS_MILLIS + 4},
     ]
-    _write_batch(spark, in_dir, batch2, "b2")
-    run_once()
+    _ingest(spark, in_dir, out_dir, batch2)
 
-    got = {
-        r["turn_idx"]: (r["trace_id"], r["lambda_request_id"])
-        for r in spark.read.parquet(out_dir).where(F.col("conv_id") == "ct").collect()
-    }
+    live = live_rows(spark, out_dir, "logging").where(F.col("conv_id") == "ct").collect()
+    got = {r["turn_idx"]: (r["trace_id"], r["lambda_request_id"]) for r in live}
+    assert len(got) == len(live) == 5
     tid = DECODABLE_NR_TRACE_ID
     assert got[0] == (tid, None)
     assert got[1] == (tid, datagen.UUID_A)
@@ -197,67 +163,45 @@ def test_windowed_turn_rate_stream_equals_batch(spark, template_df, tmp_path):
 def test_stream_stateful_logging_equals_batch_melt_over_3_batch_split(
     spark, template_df, tmp_path
 ):
-    """VERDICT r3 #8: the COMPOSED streaming logging job (stateful
-    cross-batch fills + per-batch pure-projection melt) must equal the
-    batch melt_project per turn — message, timestamp, trace_id AND
-    lambda_request_id — over a 3-micro-batch split that cuts EVERY
-    conversation mid-stream (maxFilesPerTrigger=1, one file per third of
-    each conversation's turns)."""
-    from aws_log_ingestion_spark.config import PipelineConfig
-    from aws_log_ingestion_spark.sources import datagen as dg
-    from aws_log_ingestion_spark.streaming.stream_job import run_stream_stateful_logging
+    """VERDICT r3 #8: logging ingested over a 3-batch split that cuts
+    EVERY conversation mid-stream (one file per third of each
+    conversation's turns, one ``run_incremental`` per file) must equal
+    ``run_pipeline``'s logging over the full input per turn — message,
+    timestamp, trace_id AND lambda_request_id."""
+    from aws_log_ingestion_spark.plans.job import run_pipeline
+    from aws_log_ingestion_spark.sources.derive import conv_meta_from_transcripts
 
-    cfg = PipelineConfig(logging_enabled=True)
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
 
     # three files, each holding a CONTIGUOUS turn range of every
     # conversation (0-1, 2-3, 4+) — no multi-turn conversation is
-    # batch-local, and ranges arrive in turn order (the streaming file
-    # source orders batches by modification time, hence the sleeps; rows
-    # arriving out of turn order are LATE DATA by the operator's stated
-    # policy and are exercised by the dedicated late-row test above)
-    import time as _time
-
+    # batch-local
     part_of = (
         F.when(F.col("turn_idx") < 2, 0).when(F.col("turn_idx") < 4, 1).otherwise(2)
     )
+    batch_ids = []
     for part in range(3):
         template_df.filter(part_of == part).coalesce(1).write.mode("append").parquet(
             in_dir
         )
-        _time.sleep(1.1)
+        batch_ids.append(run_incremental(spark, in_dir, out_dir, CFG)["batch_id"])
+    # sanity: the split really produced 3 batches
+    assert batch_ids == [0, 1, 2]
 
-    rows = dg.all_template_rows()
-    meta = dg.meta_to_spark_df(spark, dg.conv_meta_rows(rows))
-    q = run_stream_stateful_logging(spark, in_dir, meta, out_dir, cfg)
-    q.awaitTermination(180)
+    batch_dir = str(tmp_path / "batch")
+    run_pipeline(
+        spark, template_df, conv_meta_from_transcripts(template_df), batch_dir, CFG,
+        resume=False,
+    )
 
-    from aws_log_ingestion_spark.operators.enrich import enrich
-    from aws_log_ingestion_spark.operators.melt import melt_project
-
-    cols = [
-        "conv_id", "turn_idx", "message", "timestamp", "trace_id",
-        "lambda_request_id", "attr_role", "attr_tool", "log_group",
-    ]
     key = lambda d: (d["conv_id"], d["turn_idx"])
-    got = sorted(
-        (
-            {c: r[c] for c in cols}
-            for r in spark.read.parquet(f"{out_dir}/logging").collect()
-        ),
-        key=key,
-    )
-    want = sorted(
-        (
-            {c: r[c] for c in cols}
-            for r in melt_project(enrich(template_df, meta), cfg).collect()
-        ),
-        key=key,
-    )
+    want_df = spark.read.parquet(f"{batch_dir}/logging")
+    got_df = live_rows(spark, out_dir, "logging").drop("ingest_batch")
+    assert sorted(got_df.columns) == sorted(want_df.columns)
+    got = sorted((r.asDict() for r in got_df.collect()), key=key)
+    want = sorted((r.asDict() for r in want_df.collect()), key=key)
     assert got == want
-    # sanity: the split really produced >= 3 micro-batches (progress log)
-    assert len(q.recentProgress) >= 3
 
 
 def test_run_stream_3_conversation_batches_equals_batch_job(spark, tmp_path):
@@ -319,8 +263,8 @@ def test_run_stream_3_conversation_batches_equals_batch_job(spark, tmp_path):
 
 
 def test_stream_chunk_stats_equal_batch_over_3_batches(spark, tmp_path):
-    """VERDICT r5 #8: the streaming chunk stage. foreachBatch with
-    chunk_stats=True appends chunk_counts_fast per micro-batch; under a
+    """VERDICT r5 #8: the streaming chunk stage. foreachBatch appends
+    chunk_counts_fast per micro-batch; under a
     3-batch CONVERSATION-ALIGNED split the appended union must equal the
     batch job's one-shot chunk stats row-for-row (and therefore the
     rolled-up totals)."""
@@ -351,9 +295,7 @@ def test_stream_chunk_stats_equal_batch_over_3_batches(spark, tmp_path):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
-        .writeStream.foreachBatch(
-            make_batch_processor(meta, out_dir, cfg, chunk_stats=True)
-        )
+        .writeStream.foreachBatch(make_batch_processor(meta, out_dir, cfg))
         .option("checkpointLocation", f"{out_dir}/_ckpt")
         .outputMode("update")
         .trigger(availableNow=True)
