@@ -7,10 +7,12 @@ whose third element is base64(gzip(json)); the trace id lives at
 ``data.span_event_data[2][0][0].traceId``; every failure yields "".
 
 gzip-inside-a-cell cannot be expressed in Catalyst, so this is one of the
-pipeline's two Python touchpoints — an Arrow-vectorized pandas UDF. Cost
-control comes from placement, not the UDF itself: callers must pre-filter
-to NR-marker rows (a tiny minority) so Arrow ships only surviving rows
-(SURVEY.md §4 item 4).
+pipeline's two Python touchpoints — ONE Arrow-vectorized pandas UDF,
+``decode_trace_id``. Cost control comes from placement, not the UDF
+itself: its one production call site, ``operators/melt.py::
+_decode_markers``, filters to the NR-marker rows (a tiny minority)
+first, so Arrow ships only those (SURVEY.md §4 item 4); every fill
+shape carries that branch's output.
 
 Once the rows are filtered, TASK COUNT, not decoded rows, sets the
 Python CPU: every task that evaluates a Python UDF pays a fixed ~0.28
@@ -30,7 +32,7 @@ from __future__ import annotations
 import json
 from base64 import b64decode
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 
 from .gzguard import gunzip_capped
 
@@ -64,69 +66,19 @@ _decode_udf = None
 
 
 def decode_trace_id(col: Column) -> Column:
-    """Vectorized (Arrow-batched) trace-id decode; '' when undecodable.
+    """Vectorized (Arrow-batched) trace-id decode of marker lines: ''
+    when a line does not decode, NULL for a NULL input.
+
+    Memoized per Arrow batch: the decode is a pure function of the
+    marker text, so identical blobs in one batch (ubiquitous in agent
+    logs — the same monitoring payload repeats) gzip-decode once; a
+    unique blob pays one dict probe (~100 ns) next to a ~10 us gzip+json
+    decode (guide §4.5: amortize per-task work).
 
     The pandas UDF is built lazily — registering a pandas_udf requires an
     active SparkSession, which must not be an import-time dependency."""
     global _decode_udf
     if _decode_udf is None:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        def _raw(messages):
-            return messages.map(decode_trace_id_str)
-
-        # real (non-stringified) annotations: `from __future__ import
-        # annotations` would stringify inline hints beyond Spark's resolver
-        _raw.__annotations__ = {"messages": pd.Series, "return": pd.Series}
-        _udf = pandas_udf(_raw, "string")
-
-        _decode_udf = _udf
-    return _decode_udf(col)
-
-
-def trace_id_raw(text: Column, is_nr_marker: Column) -> Column:
-    """Decode result on marker lines, NULL elsewhere.
-
-    Critically, a FAILED decode on a marker line yields '' (not NULL): the
-    reference RESETS the carried trace id on every marker line (:521-523),
-    so '' must flow into the forward-fill and clobber any earlier value.
-    Downstream attaches ``trace.id`` only when non-empty (:531-532) via
-    ``nullif(fill, '')``.
-
-    The UDF INPUT is masked (NULL for non-marker rows), not just the
-    output: ``when(cond, udf(x))`` still ships every row through Arrow
-    and runs the decode on it, while ``udf(when(cond, x))`` ships NULLs
-    that short-circuit — the gzip+json work only touches marker rows.
-
-    The decode goes through the per-batch MEMOIZED UDF: the decode is a
-    pure function of the marker text, so identical blobs in one Arrow
-    batch (ubiquitous in agent logs — the same monitoring payload
-    repeats) gzip-decode once; unique blobs pay one dict probe (~100 ns)
-    next to a ~10 us gzip+json decode. Values are identical to the
-    unmemoized UDF by determinism (guide §4.5: amortize per-task work).
-    """
-    return F.when(is_nr_marker, decode_trace_id_memo(F.when(is_nr_marker, text)))
-
-
-_decode_memo_udf = None
-
-
-def decode_trace_id_memo(col: Column) -> Column:
-    """Per-batch MEMOIZED decode for post-window carried marker text.
-
-    The zero-exchange (bucketed-ingest) plan cannot place an Arrow UDF
-    before the fill window — EvalPythonExec reports UnknownPartitioning,
-    which would force back the very exchange bucketing removes. Instead
-    the window carries the latest marker LINE (pure Catalyst last()) and
-    this UDF decodes the carried text AFTER the windows. Consecutive
-    rows of a conversation share the same carried blob, so a per-batch
-    dict memo does ~one real gzip decode per marker while Arrow ships
-    the (heavily repeated, dictionary-encodable) carried strings.
-    NULL in -> NULL out; failed decode -> '' (the reference's clear
-    semantics, same as decode_trace_id)."""
-    global _decode_memo_udf
-    if _decode_memo_udf is None:
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
@@ -143,6 +95,8 @@ def decode_trace_id_memo(col: Column) -> Column:
 
             return messages.map(one)
 
+        # real (non-stringified) annotations: `from __future__ import
+        # annotations` would stringify inline hints beyond Spark's resolver
         _memo.__annotations__ = {"messages": pd.Series, "return": pd.Series}
-        _decode_memo_udf = pandas_udf(_memo, "string")
-    return _decode_memo_udf(col)
+        _decode_udf = pandas_udf(_memo, "string")
+    return _decode_udf(col)

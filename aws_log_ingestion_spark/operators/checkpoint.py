@@ -17,7 +17,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # Free-text / unique-id string columns. A parquet dictionary attempt on
 # these always overflows its size cap and falls back to plain encoding,
@@ -206,21 +206,32 @@ def observed_write(
     return rows
 
 
+#: hub buckets: ``conv_bucket = crc32(conv_id) % N_BUCKETS`` —
+#: content-derived, so deterministic across runs and uniform under skew,
+#: and computable from a conv_id alone (``incremental.hub_lookup``)
+N_BUCKETS = 32
+#: resume ranges of ``observed_write_bucketed``: bucket % N_BATCHES
+N_BATCHES = 4
+HUB_ORDER = ("conv_id", "turn_idx")
+
+
+def conv_bucket(conv_id: Column | str = "conv_id") -> Column:
+    """The hub's ``conv_bucket`` of a conv_id column (or literal)."""
+    return (F.crc32(conv_id) % N_BUCKETS).cast("int")
+
+
 def observed_write_bucketed(
     df: DataFrame,
     path: str,
     log: CheckpointLog,
     stage: str,
-    n_buckets: int = 32,
-    n_batches: int = 4,
-    order_cols=("conv_id", "turn_idx"),
     fail_after_batches: int | None = None,
 ) -> int:
     """Stage write with PER-CONV-RANGE resume (finer than stage-level).
 
-    Conversations hash into ``n_buckets`` buckets (crc32(conv_id) %
-    n_buckets — content-derived, so deterministic across runs and uniform
-    under skew), grouped into ``n_batches`` ranges (bucket % n_batches).
+    Conversations hash into ``N_BUCKETS`` buckets (``conv_bucket``),
+    grouped into ``N_BATCHES`` ranges (bucket % N_BATCHES), each sorted
+    by ``HUB_ORDER`` within its files.
     Every PENDING range (one with no ``<stage>.b<k>`` record) is written
     in ONE job: the plan is built, the input scanned and the Python trace
     decode run once, not once per range (each Python-evaluating task pays
@@ -245,7 +256,7 @@ def observed_write_bucketed(
     """
     from pyspark.sql import Observation
 
-    prior = {k: log.read(f"{stage}.b{k}") for k in range(n_batches)}
+    prior = {k: log.read(f"{stage}.b{k}") for k in range(N_BATCHES)}
     pending = [k for k, rec in prior.items() if rec is None]
     total = sum(rec["rows"] for rec in prior.values() if rec is not None)
     # Fresh start (no range checkpoints) into a dir holding a previous
@@ -253,15 +264,14 @@ def observed_write_bucketed(
     # present in the NEW data, so stale buckets from the old run would
     # survive and trip the lineage assert (or leak rows). Truncate first —
     # the Iceberg analog is CREATE OR REPLACE before the first snapshot.
-    fresh = len(pending) == n_batches
+    fresh = len(pending) == N_BATCHES
     if fresh and os.path.isdir(path):
         import shutil
 
         shutil.rmtree(path)
     if pending:
-        bucket = F.crc32(F.col("conv_id")) % n_buckets
-        staged = df.withColumn("conv_bucket", bucket.cast("int"))
-        batch = F.col("conv_bucket") % n_batches
+        staged = df.withColumn("conv_bucket", conv_bucket())
+        batch = F.col("conv_bucket") % N_BATCHES
         if not fresh:
             staged = staged.filter(batch.isin(pending))
         obs = Observation(f"obs_{stage}")
@@ -269,7 +279,7 @@ def observed_write_bucketed(
             obs, *[F.sum((batch == k).cast("long")).alias(f"b{k}") for k in pending]
         )
         (
-            observed.sortWithinPartitions("conv_bucket", *order_cols)
+            observed.sortWithinPartitions("conv_bucket", *HUB_ORDER)
             .write.mode("overwrite")
             .options(**parquet_text_options(observed))
             .option("partitionOverwriteMode", "dynamic")
@@ -279,13 +289,13 @@ def observed_write_bucketed(
         rows = {k: int(obs.get[f"b{k}"] or 0) for k in pending}
         # one listing for every range; files outside the bucket dirs (a
         # killed job's leftover .spark-staging-*) belong to no range
-        batch_of = {f"conv_bucket={b}": b % n_batches for b in range(n_buckets)}
+        batch_of = {f"conv_bucket={b}": b % N_BATCHES for b in range(N_BUCKETS)}
         lineages: dict[int, list[dict]] = {k: [] for k in pending}
         for e in file_lineage(path):
             k = batch_of.get(e["file"].split("/", 1)[0])
             if k in lineages:
                 lineages[k].append(e)
-        committed = n_batches - len(pending)
+        committed = N_BATCHES - len(pending)
         for k in pending:
             if fail_after_batches is not None and committed >= fail_after_batches:
                 raise RuntimeError(f"injected kill after {fail_after_batches} batches")
@@ -296,14 +306,14 @@ def observed_write_bucketed(
                 {
                     "rows": rows[k],
                     "path": path,
-                    "buckets": [b for b in range(n_buckets) if b % n_batches == k],
+                    "buckets": [b for b in range(N_BUCKETS) if b % N_BATCHES == k],
                     "lineage": lineage,
                 },
             )
             total += rows[k]
             committed += 1
     if log.read(stage) is None:
-        log.record(stage, {"rows": total, "path": path, "batches": n_batches, "buckets": n_buckets})
+        log.record(stage, {"rows": total, "path": path, "batches": N_BATCHES, "buckets": N_BUCKETS})
     return total
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -47,7 +47,7 @@ _REQUIRED = ["conv_id", "turn_idx", "text", "ts", "sink"]
 _META = ["owner", "log_group", "log_stream_name", "function_name", "invoked_function_arn"]
 # hub-materialised MELT fills (melt.with_melt_fills) — when present and
 # path == 'logging', _staged_with_costs reuses them instead of paying a
-# second trace-decode UDF pass + refill window
+# second trace-decode pass + refill window
 _FILLS = ["trace_id", "lambda_request_id"]
 
 
@@ -340,10 +340,10 @@ def _mcol(df: DataFrame, name: str):
 
 
 def _staged_with_costs(df: DataFrame, path: str, cfg: PipelineConfig) -> DataFrame:
-    """Stage 0/1 of the arithmetic chunk paths (pure Catalyst, no Python):
-    epoch millis, the per-event carried trace id / request id for the
-    logging path (the same window fills the MELT projection uses), then
-    the EXACT per-event JSON byte cost (functions/jsoncost.py).
+    """Stage 0/1 of the arithmetic chunk paths: epoch millis, the
+    per-event carried trace id / request id for the logging path (the
+    hub's fills, or ``melt.with_melt_fills`` when the frame has none),
+    then the EXACT per-event JSON byte cost (functions/jsoncost.py).
 
     When the fills are already hub columns the staged frame is a narrow
     scan-side projection with no exchange and no sort (guide §2.4:
@@ -356,44 +356,23 @@ def _staged_with_costs(df: DataFrame, path: str, cfg: PipelineConfig) -> DataFra
     The empty-envelope length is conversation-level too, so
     ``_per_conv_raw`` computes it once per conversation."""
     from ..functions import jsoncost as jc
-    from ..functions import patterns as P
-    from ..functions.tracing import trace_id_raw
     from .classify import with_log_group
+    from .melt import with_melt_fills
 
     df = df.select(*_select_cols(df, path))
     if "log_group" not in df.columns:
         df = with_log_group(df, cfg)
     df = df.withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))
     if path == "logging":
-        if "trace_id" in df.columns and "lambda_request_id" in df.columns:
-            # The hub already materialised the MELT fills (plans/job.py
-            # prepare()): reuse them — no second trace-decode UDF pass,
-            # no refill window. Same values by construction
-            # (melt.with_melt_fills is the same window arithmetic).
-            df = df.withColumn("trace_fill", F.col("trace_id")).withColumn(
-                "rid_fill", F.col("lambda_request_id")
-            )
-        else:
-            run = (
-                W.partitionBy("conv_id")
-                .orderBy("turn_idx")
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            t = F.col("text")
-            traw = trace_id_raw(t, P.is_nr_marker(t))
-            rid = F.when(
-                F.col("log_group").startswith(cfg.lambda_prefix),
-                P.extract_request_id(t),
-            )
-            # both fills in one select -> one Window exec (melt.py note)
-            df = df.select(
-                "*",
-                F.last(traw, ignorenulls=True).over(run).alias("__tr_last"),
-                F.last(rid, ignorenulls=True).over(run).alias("rid_fill"),
-            )
-            df = df.withColumn(
-                "trace_fill", F.nullif(F.col("__tr_last"), F.lit(""))
-            ).drop("__tr_last")
+        # The production hub already materialised the MELT fills
+        # (plans/job.py prepare()); any other frame gets them from the
+        # same with_melt_fills, so the chunk costs see the logging
+        # sink's exact trace_id / lambda_request_id values.
+        if not all(c in df.columns for c in _FILLS):
+            df = with_melt_fills(df, cfg)
+        df = df.withColumn("trace_fill", F.col("trace_id")).withColumn(
+            "rid_fill", F.col("lambda_request_id")
+        )
         cost = jc.event_cost_logging_expr(
             F.col("text"), F.col("ts_millis"), F.col("trace_fill"), F.col("rid_fill")
         )

@@ -23,6 +23,8 @@ parallel-scan decomposition; SURVEY.md §4 item 1).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from ..config import PipelineConfig
@@ -155,8 +157,8 @@ def forward_fill(
 
 def forward_fill_salted(
     df: DataFrame,
-    value_col: str,
-    out_col: str,
+    value_col: str | Sequence[str],
+    out_col: str | Sequence[str],
     order_col: str = "turn_idx",
     salt_range: int = 100_000,
 ) -> DataFrame:
@@ -173,8 +175,17 @@ def forward_fill_salted(
               (last non-null among strictly-earlier blocks); broadcast
               back and coalesce.
 
-    Exactly equivalent to the naive window for any salt_range >= 1.
+    ``value_col`` and ``out_col`` may be equal-length lists: every pair
+    fills in the same pass (one block window, one per-block aggregate,
+    one carry window, one join). Exactly equivalent to the naive window
+    for any salt_range >= 1.
     """
+    values = [value_col] if isinstance(value_col, str) else list(value_col)
+    outs = [out_col] if isinstance(out_col, str) else list(out_col)
+    blk = [f"__blk{i}" for i in range(len(values))]
+    ends = [f"__blk_last{i}" for i in range(len(values))]
+    carry = [f"__carry{i}" for i in range(len(values))]
+
     salt = F.floor(F.col(order_col) / F.lit(salt_range)).cast("long")
     df = df.withColumn("__salt", salt)
 
@@ -183,11 +194,14 @@ def forward_fill_salted(
         .orderBy(order_col)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    df = df.withColumn("__block_fill", F.last(value_col, ignorenulls=True).over(w_block))
+    # one select -> one Window exec for every fill
+    df = df.select(
+        "*", *[F.last(v, ignorenulls=True).over(w_block).alias(b) for v, b in zip(values, blk)]
+    )
 
     # one row per block: the block's final carried value
     block_last = df.groupBy("conv_id", "__salt").agg(
-        F.max_by(F.col("__block_fill"), F.col(order_col)).alias("__blk_last")
+        *[F.max_by(F.col(b), F.col(order_col)).alias(e) for b, e in zip(blk, ends)]
     )
     # carry-in = last non-null block-final among earlier blocks
     w_carry = (
@@ -195,16 +209,17 @@ def forward_fill_salted(
         .orderBy("__salt")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    carry = block_last.withColumn(
-        "__carry", F.last("__blk_last", ignorenulls=True).over(w_carry)
-    ).select("conv_id", "__salt", "__carry")
-
-    # Plain equi-join: AQE broadcasts `carry` when small (the common case);
-    # at 10^12 turns / 10^5-turn blocks it is ~10^7 rows and AQE falls back
-    # to a shuffle join that co-partitions with the groupBy output.
-    out = (
-        df.join(carry, ["conv_id", "__salt"], "left")
-        .withColumn(out_col, F.coalesce("__block_fill", "__carry"))
-        .drop("__salt", "__block_fill", "__carry")
+    carry_df = block_last.select(
+        "conv_id",
+        "__salt",
+        *[F.last(e, ignorenulls=True).over(w_carry).alias(c) for e, c in zip(ends, carry)],
     )
-    return out
+
+    # Plain equi-join: AQE broadcasts the carry side when small (the
+    # common case); at 10^12 turns / 10^5-turn blocks it is ~10^7 rows
+    # and AQE falls back to a shuffle join that co-partitions with the
+    # groupBy output.
+    out = df.join(carry_df, ["conv_id", "__salt"], "left")
+    for o, b, c in zip(outs, blk, carry, strict=True):
+        out = out.withColumn(o, F.coalesce(b, c))
+    return out.drop("__salt", *blk, *carry)

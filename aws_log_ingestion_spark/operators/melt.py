@@ -3,8 +3,11 @@
 Re-expresses ``_package_log_payload`` (/root/reference/src/function.py:
 511-566) relationally. Per turn, in conversation order:
 
-  * trace-id refresh on NR-marker lines (decode UDF) + carry-forward to
-    all later turns; empty decode CLEARS the carry (:519-532)
+  * trace-id refresh on NR-marker lines + carry-forward to all later
+    turns; empty decode CLEARS the carry (:519-532). One rule, one
+    decode: ``_decode_markers`` runs the Arrow UDF on the marker rows
+    only, and every fill shape (``with_melt_fills``' union or
+    marker_join attach, ``with_melt_fills_salted``) carries its output
   * message/timestamp projection (:525-529) — epoch millis
   * extra-key -> attributes copy with ``id`` dropped (:534-536); our
     ``turn_idx`` plays the role of ``id`` — excluded from the payload,
@@ -29,17 +32,41 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..config import PipelineConfig
 from ..functions import patterns as P
-from ..functions.tracing import trace_id_raw
-from .classify import with_log_group
+from ..functions.tracing import decode_trace_id
+from .classify import forward_fill_salted, with_log_group
 from .enrich import with_common_attributes
+
+
+def _decode_markers(df: DataFrame) -> DataFrame:
+    """The NR-marker rows only, each with its decode in ``__trace_raw``:
+    the one place the trace-decode UDF runs.
+
+    Filtering BEFORE the UDF is the cost control: even an input-masked
+    UDF ships every row through Arrow (measured ~1us/row = half the
+    logging stage at 5M turns), while the filtered branch ships only the
+    ~1% marker rows. A FAILED decode yields '' (not NULL): the reference
+    RESETS the carried trace id on every marker line (:521-523), so ''
+    flows into the forward fill and clobbers any earlier value; the fill
+    then attaches ``trace.id`` only when non-empty (:531-532) via
+    ``nullif(fill, '')``."""
+    t = F.col("text")
+    is_nr = F.coalesce(P.is_nr_marker(t), F.lit(False))
+    return df.filter(is_nr).withColumn("__trace_raw", decode_trace_id(t))
+
+
+def _union_markers(df: DataFrame) -> DataFrame:
+    """``_decode_markers`` unioned with the rest of the rows, whose
+    ``__trace_raw`` is a NULL literal."""
+    is_nr = F.coalesce(P.is_nr_marker(F.col("text")), F.lit(False))
+    rest = df.filter(~is_nr).withColumn("__trace_raw", F.lit(None).cast("string"))
+    return _decode_markers(df).unionByName(rest)
 
 
 def with_melt_fills(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
     decode_traces: bool = True,
-    carry_decode: bool = False,
-    finalize: bool = True,
+    carry_decode: bool | str = False,
 ) -> DataFrame:
     """The two ordered conversation fills the MELT payload needs:
     ``trace_id`` (NR-marker decode, carried forward, ''-clears) and
@@ -50,43 +77,41 @@ def with_melt_fills(
     the fills ONCE during the hub write (whose conv_id exchange they
     share) and the logging sink becomes a pure projection of hub columns
     — no second conv_id shuffle+sort over 10^12 turns (BENCH/plans.md).
+
+    The decoded marker rows (``_decode_markers``) are attached in one of
+    two ways, then both fills run in one window:
+
+    * default: union with the null-literal rest of the rows. The union
+      feeds the window's conv_id exchange and stays linear at 10^12
+      turns (no driver-side collect, no broadcast limit); the doubled
+      scan is columnar + filter-pushed, ~free next to the Arrow
+      round-trip. One fact-side Exchange on any layout.
+    * ``carry_decode="marker_join"``: left join on (conv_id, turn_idx).
+      Over a conv_id-bucketed main side the join co-partitions on the
+      subset key conv_id (session.py sets
+      spark.sql.requireAllClusterKeysForCoPartition=false): only the
+      tiny marker side shuffles and the fill window stacks
+      exchange-free after it. On a random layout it costs a
+      SortMergeJoin (3 Exchanges, 3 Sorts) once the marker side is too
+      large to broadcast, so it is the attach step for clustered input
+      only.
+
+    ``carry_decode`` accepts only a falsy value or ``"marker_join"``.
     """
+    if carry_decode and carry_decode != "marker_join":
+        raise ValueError(f"carry_decode must be falsy or 'marker_join', got {carry_decode!r}")
     cfg = cfg or PipelineConfig()
     if "log_group" not in df.columns:
         df = with_log_group(df, cfg)
 
     t = F.col("text")
-    is_nr = P.is_nr_marker(t)
-    run = (
-        W.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-
-    # trace id: decode on marker rows only ('' on failure, NULL on
-    # non-marker rows), forward-fill, then ''->NULL for attachment.
-    # Split-scan shape: even an input-MASKED udf ships every row through
-    # Arrow (measured ~1us/row = half the logging stage at 5M turns), so
-    # the marker branch is filtered BEFORE the UDF and unioned with the
-    # null-literal rest — the UDF touches only the ~1% marker rows, the
-    # union feeds the window's existing conv_id exchange, and unlike a
-    # broadcast-join of decoded markers this stays linear at 10^12 turns
-    # (no driver-side collect, no broadcast limit). The doubled scan is
-    # columnar + filter-pushed, i.e. ~free next to the Arrow round-trip.
-    if decode_traces and carry_decode == "marker_join":
-        # BEST-OF-BOTH zero-exchange shape: decode ONLY the ~1% marker
-        # rows in a side branch (Arrow ships 1% of rows, like split-scan)
-        # and LEFT-JOIN the decoded values back on (conv_id, turn_idx).
-        # Over a conv_id-bucketed main side the join co-partitions on the
-        # subset key conv_id (session.py sets
-        # spark.sql.requireAllClusterKeysForCoPartition=false): only the
-        # tiny marker side shuffles, the main side keeps its clustering,
-        # and the fill windows stack exchange-free after the join.
-        is_nr_b = F.coalesce(is_nr, F.lit(False))
-        markers = df.filter(is_nr_b).select(
+    if not decode_traces:
+        df = df.withColumn("__trace_raw", F.when(P.is_nr_marker(t), F.lit("")))
+    elif carry_decode:
+        markers = _decode_markers(df).select(
             F.col("conv_id").alias("__m_conv"),
             F.col("turn_idx").alias("__m_turn"),
-            trace_id_raw(t, F.lit(True)).alias("__trace_raw"),
+            "__trace_raw",
         )
         df = df.join(
             markers,
@@ -94,69 +119,24 @@ def with_melt_fills(
             & (F.col("turn_idx") == F.col("__m_turn")),
             "left",
         ).drop("__m_conv", "__m_turn")
-        # BOTH fills in one projection: window expressions declared in the
-        # same select land in ONE Window exec (an interleaved Project
-        # between two withColumns defeats CollapseWindow — observed as two
-        # Window passes over the sorted 5M rows in the r7 plan dump)
-        is_lambda_group = F.col("log_group").startswith(cfg.lambda_prefix)
-        rid = F.when(is_lambda_group, P.extract_request_id(t))
-        # temp aliases then withColumn: an upstream frame may already
-        # carry lambda_request_id (classify's own fill, the default
-        # fill_request_ids=True) and select("*", alias) would duplicate
-        # it where withColumn replaces
-        df = df.select(
-            "*",
-            F.last("__trace_raw", ignorenulls=True).over(run).alias("__tr_last"),
-            F.last(rid, ignorenulls=True).over(run).alias("__rid_last"),
-        )
-        return (
-            df.withColumn("trace_id", F.nullif(F.col("__tr_last"), F.lit("")))
-            .withColumn("lambda_request_id", F.col("__rid_last"))
-            .drop("__trace_raw", "__tr_last", "__rid_last")
-        )
-
-    if decode_traces and carry_decode:
-        # ZERO-EXCHANGE shape (bucketed-ingest plan): carry the latest
-        # marker LINE through the fill window (pure Catalyst) and decode
-        # the carried text AFTER every window via decode_carried_traces.
-        # Any pre-window Arrow UDF reports UnknownPartitioning and forces
-        # back the conv_id exchange a bucketed scan just removed; the
-        # post-window placement keeps scan->sort->window->project with no
-        # shuffle at all. Semantics identical to decode-then-carry:
-        # decode is a deterministic function of the marker text, and a
-        # failed decode still yields '' -> NULL (the clear semantics).
-        # With finalize=False the caller may interpose MORE same-key
-        # windows (e.g. classify's max) before decode_carried_traces —
-        # keeping ALL windows adjacent on one clustering.
-        is_lambda_group = F.col("log_group").startswith(cfg.lambda_prefix)
-        rid = F.when(is_lambda_group, P.extract_request_id(t))
-        # one select -> one Window exec for both fills (see marker_join)
-        df = df.select(
-            "*",
-            F.last(F.when(is_nr, t), ignorenulls=True).over(run).alias("__trace_carry"),
-            F.last(rid, ignorenulls=True).over(run).alias("__rid_last"),
-        )
-        df = df.withColumn("lambda_request_id", F.col("__rid_last")).drop(
-            "__rid_last"
-        )
-        return decode_carried_traces(df) if finalize else df
-
-    if decode_traces:
-        is_nr_b = F.coalesce(is_nr, F.lit(False))
-        markers = df.filter(is_nr_b).withColumn(
-            "__trace_raw", trace_id_raw(t, F.lit(True))
-        )
-        rest = df.filter(~is_nr_b).withColumn(
-            "__trace_raw", F.lit(None).cast("string")
-        )
-        df = markers.unionByName(rest)
     else:
-        df = df.withColumn("__trace_raw", F.when(is_nr, F.lit("")))
-    # request id: extract (search semantics), gate on lambda prefix, fill.
-    # Both fills declared in ONE select so they share a single Window
-    # exec (see the marker_join branch note).
-    is_lambda_group = F.col("log_group").startswith(cfg.lambda_prefix)
-    rid = F.when(is_lambda_group, P.extract_request_id(t))
+        df = _union_markers(df)
+
+    run = (
+        W.partitionBy("conv_id")
+        .orderBy("turn_idx")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    rid = F.when(
+        F.col("log_group").startswith(cfg.lambda_prefix), P.extract_request_id(t)
+    )
+    # BOTH fills in one select: window expressions declared in the same
+    # select land in ONE Window exec (an interleaved Project between two
+    # withColumns defeats CollapseWindow — observed as two Window passes
+    # over the sorted 5M rows in the r7 plan dump). Temp aliases then
+    # withColumn: an upstream frame may already carry lambda_request_id
+    # (classify's own fill, the default fill_request_ids=True) and
+    # select("*", alias) would duplicate it where withColumn replaces.
     df = df.select(
         "*",
         F.last("__trace_raw", ignorenulls=True).over(run).alias("__tr_last"),
@@ -174,87 +154,43 @@ def with_melt_fills_salted(
     cfg: PipelineConfig | None = None,
     salt_range: int = 100_000,
 ) -> DataFrame:
-    """Skew-proof variant of ``with_melt_fills``: both conversation fills
-    via the two-pass salted scan (``classify.forward_fill_salted``'s
-    decomposition, done once for the pair).
+    """Skew-proof variant of ``with_melt_fills``: the same decoded marker
+    branch (union attach), then both conversation fills in one
+    ``classify.forward_fill_salted`` pass.
 
     A single 10^7-turn conversation serialises the naive conv_id window
-    on one task; here the ordered window partitions on (conv_id,
-    floor(turn_idx/salt_range)) — every task bounded at ``salt_range``
-    rows — and a per-block carry (one row per block) propagates the
-    running value across blocks. Exactly equivalent to the naive fills
-    for any salt_range >= 1 (pinned in tests/test_skew.py). The carry
-    join is keyed on (conv_id, __salt), which is balanced by
-    construction; AQE broadcasts the tiny carry side in the common case.
-    """
+    on one task; the salted scan bounds every task at ``salt_range``
+    rows. Exactly equivalent to the naive fills for any salt_range >= 1
+    (pinned in tests/test_skew.py)."""
     cfg = cfg or PipelineConfig()
     if "log_group" not in df.columns:
         df = with_log_group(df, cfg)
 
-    t = F.col("text")
-    is_nr_b = F.coalesce(P.is_nr_marker(t), F.lit(False))
-    # split-scan trace decode, as in the default path: Arrow ships only
-    # the ~1% marker rows; the union feeds the block window's exchange
-    markers = df.filter(is_nr_b).withColumn("__trace_raw", trace_id_raw(t, F.lit(True)))
-    rest = df.filter(~is_nr_b).withColumn("__trace_raw", F.lit(None).cast("string"))
-    df = markers.unionByName(rest)
-    is_lambda_group = F.col("log_group").startswith(cfg.lambda_prefix)
-    df = df.withColumn("__rid_raw", F.when(is_lambda_group, P.extract_request_id(t)))
-
-    df = df.withColumn(
-        "__salt", F.floor(F.col("turn_idx") / F.lit(salt_range)).cast("long")
+    rid = F.when(
+        F.col("log_group").startswith(cfg.lambda_prefix),
+        P.extract_request_id(F.col("text")),
     )
-    w_block = (
-        W.partitionBy("conv_id", "__salt")
-        .orderBy("turn_idx")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    df = _union_markers(df).withColumn("__rid_raw", rid)
+    df = forward_fill_salted(
+        df,
+        ["__trace_raw", "__rid_raw"],
+        ["trace_id", "lambda_request_id"],
+        salt_range=salt_range,
     )
-    df = df.withColumn(
-        "__tr_blk", F.last("__trace_raw", ignorenulls=True).over(w_block)
-    ).withColumn("__rid_blk", F.last("__rid_raw", ignorenulls=True).over(w_block))
-
-    # one row per block: the block-final carried value of each fill
-    block_last = df.groupBy("conv_id", "__salt").agg(
-        F.max_by("__tr_blk", F.col("turn_idx")).alias("__tr_last"),
-        F.max_by("__rid_blk", F.col("turn_idx")).alias("__rid_last"),
-    )
-    w_carry = (
-        W.partitionBy("conv_id").orderBy("__salt").rowsBetween(W.unboundedPreceding, -1)
-    )
-    carry = block_last.select(
-        "conv_id",
-        "__salt",
-        F.last("__tr_last", ignorenulls=True).over(w_carry).alias("__tr_carry"),
-        F.last("__rid_last", ignorenulls=True).over(w_carry).alias("__rid_carry"),
-    )
-    out = (
-        df.join(carry, ["conv_id", "__salt"], "left")
-        # ''-clears AFTER the carry, exactly like nullif(fill, '') in the
-        # naive path: a failed/empty marker decode still clears the carry
-        .withColumn(
-            "trace_id",
-            F.nullif(F.coalesce("__tr_blk", "__tr_carry"), F.lit("")),
-        )
-        .withColumn("lambda_request_id", F.coalesce("__rid_blk", "__rid_carry"))
-    )
-    return out.drop(
-        "__trace_raw", "__rid_raw", "__salt",
-        "__tr_blk", "__rid_blk", "__tr_carry", "__rid_carry",
-    )
+    # ''-clears AFTER the carry, exactly like nullif(fill, '') in the
+    # naive path: a failed/empty marker decode still clears the carry
+    return df.withColumn(
+        "trace_id", F.nullif(F.col("trace_id"), F.lit(""))
+    ).drop("__trace_raw", "__rid_raw")
 
 
 def decode_carried_traces(df: DataFrame) -> DataFrame:
-    """Finish the carry-decode fill: decode the carried marker text into
-    ``trace_id`` (memoized — ~one gzip decode per marker per batch) and
-    drop the carry column. Kept separate from ``with_melt_fills`` so the
-    caller can stack every same-clustering window BEFORE the Arrow node
-    (which would otherwise split the window group and re-introduce an
-    exchange between them)."""
-    from ..functions.tracing import decode_trace_id_memo
-
+    """Decode a carried marker line ``__trace_carry`` into ``trace_id``
+    and drop the carry column. No fill in this package produces
+    ``__trace_carry`` any more; the function stays importable because
+    ``bench.py`` imports it."""
     return df.withColumn(
-        "trace_id",
-        F.nullif(decode_trace_id_memo(F.col("__trace_carry")), F.lit("")),
+        "trace_id", F.nullif(decode_trace_id(F.col("__trace_carry")), F.lit(""))
     ).drop("__trace_carry")
 
 

@@ -33,7 +33,7 @@ while doing per-run work proportional to the NEW data:
     recompute source and the resume point, and holds each input turn
     once. Per affected (ingest_batch, conv_bucket) pair the retained
     rows are staged in their final layout and swapped in with
-    ``os.rename``; ``conv_bucket = crc32(conv_id) % 32`` is computable
+    ``os.rename``; ``ckpt.conv_bucket`` (crc32(conv_id) % 32) is computable
     from the key alone, so only the buckets the new batch touches are
     read and swapped. The swap runs no Spark job.
   * The sinks (``infra``, ``logging``, ``chunk_stats``) of old batches
@@ -81,7 +81,6 @@ from ..sources.derive import conv_meta_from_transcripts
 from .job import prepare
 
 RAW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-N_BUCKETS = 32  # must match checkpoint.observed_write_bucketed
 TOMBSTONES = "tombstones"
 
 
@@ -110,10 +109,6 @@ def _batch_records(log: ckpt.CheckpointLog) -> list[dict]:
         records.append(rec)
         k += 1
     return records
-
-
-def _bucket_col():
-    return (F.crc32(F.col("conv_id")) % N_BUCKETS).cast("int")
 
 
 def _cfg_fingerprint(cfg: PipelineConfig) -> dict:
@@ -186,18 +181,15 @@ def _pair_dir(root: str, batch: int, bucket: int) -> str:
 def hub_lookup(spark: SparkSession, out_dir: str, conv_id: str) -> DataFrame:
     """Point lookup of one conversation across all ingest batches.
 
-    ``conv_bucket = crc32(conv_id) % 32`` is computable from the key
-    alone, so the scan carries a partition filter and touches 1/32 of
-    the table's files regardless of batch count — the read-path payoff
-    of the bucketed layout (at 10^12 turns: one bucket's manifest, not
-    the table's). The residual conv_id equality prunes further via
-    parquet row-group stats (sinks sort within files by conv_id)."""
-    import zlib
-
-    bucket = zlib.crc32(conv_id.encode()) % N_BUCKETS
+    ``ckpt.conv_bucket`` of a literal key constant-folds, so the scan
+    carries a partition filter and touches 1/``N_BUCKETS`` of the
+    table's files regardless of batch count — the read-path payoff of
+    the bucketed layout (at 10^12 turns: one bucket's manifest, not the
+    table's). The residual conv_id equality prunes further via parquet
+    row-group stats (sinks sort within files by conv_id)."""
     return (
         spark.read.parquet(os.path.join(out_dir, "classified"))
-        .filter(F.col("conv_bucket") == bucket)
+        .filter(F.col("conv_bucket") == ckpt.conv_bucket(F.lit(conv_id)))
         .filter(F.col("conv_id") == conv_id)
     )
 
@@ -319,7 +311,7 @@ def run_incremental(
             # pruning: only the buckets the new batch hashes into are read
             new_buckets = [
                 r["b"]
-                for r in new_convs.select(_bucket_col().alias("b")).distinct().collect()
+                for r in new_convs.select(ckpt.conv_bucket().alias("b")).distinct().collect()
             ]
             # ADVICE r6 (high): exclude THIS batch's partitions from the
             # overlap derivation. A kill in the new_batch window leaves
@@ -405,7 +397,7 @@ def run_incremental(
     inc_hub = (
         prepare(inc_turns, conv_meta, cfg)
         .withColumn("ingest_batch", F.lit(batch_id))
-        .withColumn("conv_bucket", _bucket_col())
+        .withColumn("conv_bucket", ckpt.conv_bucket())
     )
 
     # --- new-batch hub + sinks (dynamic overwrite = idempotent) ---------

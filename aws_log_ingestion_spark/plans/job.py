@@ -85,13 +85,15 @@ def prepare(
     skewed = bool(threshold) and max_conv_rows(transcripts) > threshold
     hub = transcripts
     if cfg.logging_enabled:
-        # Fills FIRST: with_melt_fills unions the marker/rest scan split
-        # and pays the conv_id exchange + (conv_id, turn_idx) sort; the
-        # classifier's unordered max-window then rides the SAME
-        # clustering with no new exchange or sort. The reverse order
-        # duplicates the classify window into both union branches (each
-        # with its own exchange+sort) — 3 exchanges instead of 1
-        # (plan-asserted in scripts/dump_plans.py).
+        # Fills FIRST: both shapes decode the NR-marker rows in one
+        # filtered branch (melt._decode_markers) unioned with the rest.
+        # The plain fill pays the conv_id exchange + (conv_id, turn_idx)
+        # sort; the classifier's unordered max-window then rides the
+        # SAME clustering with no new exchange or sort. The reverse
+        # order duplicates the classify window into both union branches
+        # (each with its own exchange+sort) — 3 exchanges instead of 1
+        # (plan-asserted in scripts/dump_plans.py). The salted shape
+        # fills both columns in one classify.forward_fill_salted pass.
         hub = (
             with_melt_fills_salted(hub, cfg)
             if skewed

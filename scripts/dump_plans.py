@@ -6,8 +6,9 @@ depends on:
     window computations
   * enrich: BroadcastHashJoin (fact side never shuffles for the join)
   * sink scan: filter pushdown + column pruning reach the parquet scan
-  * melt: ArrowEvalPython (the trace UDF) sits AFTER the scan projection,
-    fed by the masked column
+  * trace decode: every ArrowEvalPython (the trace UDF) sits directly
+    on the NR-marker Filter branch — in the hub, the standalone melt and
+    the chunk stage over a hub without fills
 """
 
 from __future__ import annotations
@@ -40,6 +41,18 @@ def fmt(df) -> str:
     return buf.getvalue()
 
 
+def assert_decode_on_marker_filter(p: str) -> None:
+    """Every ArrowEvalPython node's child is a Filter whose condition is
+    the NR-marker predicate (not its negation): Arrow ships marker rows
+    only."""
+    on_filter = re.findall(r"ArrowEvalPython \((\d+)\)\n[ :|]*\+- Filter \((\d+)\)", p)
+    n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", p))
+    assert on_filter and len(on_filter) == n_arrow, f"trace decode off the marker filter: {p}"
+    for _, fid in on_filter:
+        cond = re.search(rf"\({fid}\) Filter\n(?:.*\n)*?Condition : (.*)", p).group(1)
+        assert "NR_LAMBDA_MONITORING" in cond and "NOT" not in cond, cond
+
+
 def main() -> None:
     spark = get_spark("plans", cores=8)
     sf = "/root/testdata/sf0.001"
@@ -69,7 +82,8 @@ def main() -> None:
     n_sorts = len(re.findall(r"\(\d+\) Sort", p))
     assert n_sorts == 1, f"one Sort should serve max-window AND fills, got {n_sorts}"
     assert re.search(r"turn_idx#\d+ ASC", p), "fill window must sort by (conv_id, turn_idx)"
-    assert "ArrowEvalPython" in p, "hub carries the split-scan trace decode"
+    assert "ArrowEvalPython" in p, "hub carries the trace decode"
+    assert_decode_on_marker_filter(p)
     assert "BroadcastHashJoin" in p, "enrich must be a broadcast join"
 
     # infra-only hub (logging disabled -> no fills): NO sort at all —
@@ -117,6 +131,17 @@ def main() -> None:
     assert "ArrowEvalPython" in p, "trace decode should be Arrow-vectorized"
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
     assert n_exchanges == 1, f"melt should reuse one conv_id exchange, got {n_exchanges}"
+    assert_decode_on_marker_filter(p)
+
+    # chunk stage over a hub WITHOUT the fills (classify + enrich only):
+    # the logging costs take their fills from with_melt_fills, so the
+    # trace decode runs on the NR-marker branch, never on every row
+    from aws_log_ingestion_spark.operators.chunks import chunk_census
+
+    p = fmt(chunk_census(enrich(classify(t, cfg), meta), "logging", cfg))
+    sections["chunk_census logging over a hub without fills"] = p
+    assert "ArrowEvalPython" in p, "fill-less chunk stage must decode traces"
+    assert_decode_on_marker_filter(p)
 
     # embedding near-dup: bucketed equi-join, never a cartesian product
     from aws_log_ingestion_spark.operators.similarity import neardup_pairs_lsh
@@ -131,11 +156,13 @@ def main() -> None:
     out = ["# Physical plans (judge reference) — generated by scripts/dump_plans.py\n"]
     out.append(
         "Asserted properties: hub = 1 fact Exchange + 1 shared Sort + "
-        "BroadcastHashJoin, carrying the MELT fills and the Arrow trace "
-        "decode (split-scan, markers only); sink reads push `sink=` "
-        "filters and prune to read columns; infra_union is shuffle-free; "
-        "hub-fed MELT is a PURE projection (no Exchange/Window/Python); "
-        "standalone MELT keeps the one-exchange self-filling path.\n"
+        "BroadcastHashJoin, carrying the MELT fills; sink reads push "
+        "`sink=` filters and prune to read columns; infra_union is "
+        "shuffle-free; hub-fed MELT is a PURE projection (no "
+        "Exchange/Window/Python); standalone MELT keeps the one-exchange "
+        "self-filling path; in the hub, the standalone MELT and the "
+        "chunk stage over a hub without fills, every Arrow trace decode "
+        "sits on the NR-marker Filter branch (marker rows only).\n"
     )
     for name, plan in sections.items():
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import gzip
 import json
+import math
+import random
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from aws_log_ingestion_spark.functions import chunking as C
 from reference_oracle import oracle_infra_chunks, oracle_logging_chunks, requires_reference
@@ -37,6 +39,41 @@ msg = st.text(
 )
 
 
+# every payload of two or more of these events is over a 400 B cap, so
+# the halving recurses all the way down to single events
+_rng = random.Random(0)
+SPLIT_ALL = ["".join(chr(_rng.randrange(33, 0x2FF)) for _ in range(200)) for _ in range(16)]
+
+
+def _chunks_and_depth(obj, split_fn, cap: int) -> tuple[list[bytes], int]:
+    """``iter_chunks``' chunks and the deepest level its recursion
+    reached (the top call is level 1). The recursive calls resolve the
+    module attribute, so a counting wrapper installed there sees each."""
+    real = C.iter_chunks
+    level = deepest = 0
+
+    def counted(o, fn, m):
+        nonlocal level, deepest
+        level += 1
+        deepest = max(deepest, level)
+        try:
+            yield from real(o, fn, m)
+        finally:
+            level -= 1
+
+    C.iter_chunks = counted
+    try:
+        chunks = list(counted(obj, split_fn, cap))
+    finally:
+        C.iter_chunks = real
+    return chunks, deepest
+
+
+def _depth_bound(n_events: int) -> int:
+    """Binary halving to single events takes ceil(log2(n)) + 1 levels."""
+    return math.ceil(math.log2(n_events)) + 1
+
+
 def _count_chunks_fast(events: list[dict], build, cost, cap: int) -> int:
     """``count_chunks_fast``'s chunk count for the payload ``build``
     makes of ``events``: per-event costs, the empty envelope, and the
@@ -52,14 +89,16 @@ def _count_chunks_fast(events: list[dict], build, cost, cap: int) -> int:
 
 @settings(max_examples=25, deadline=None)
 @given(st.lists(msg, min_size=1, max_size=60), st.integers(min_value=400, max_value=3000))
+@example(SPLIT_ALL, 400)
 def test_infra_split_invariants(messages, cap):
     """Reference-free: the chunks rebuild the input events in order,
-    each is under the cap unless it holds a single event, and
+    each is under the cap unless it holds a single event,
     ``count_chunks_fast`` counts exactly the chunks ``iter_chunks``
-    emits."""
+    emits, and the halving recurses at most ceil(log2(n)) + 1 levels."""
     entry = _entry(messages)
     data = C.build_infra_data(dict(CTX), entry)
-    ours = list(C.iter_chunks(data, C.split_infra, cap))
+    ours, depth = _chunks_and_depth(data, C.split_infra, cap)
+    assert depth <= _depth_bound(len(messages))
 
     rebuilt = []
     for c in ours:
@@ -90,14 +129,16 @@ def test_infra_split_invariants_and_parity(messages, cap):
 
 @settings(max_examples=15, deadline=None)
 @given(st.lists(msg, min_size=1, max_size=40), st.integers(min_value=500, max_value=2500))
+@example(SPLIT_ALL, 500)
 def test_logging_split_invariants(messages, cap):
     """Reference-free: the chunks' logs carry the input messages in
-    order, each chunk is under the cap unless it holds a single log, and
+    order, each chunk is under the cap unless it holds a single log,
     ``count_chunks_fast`` counts exactly the chunks ``iter_chunks``
-    emits."""
+    emits, and the halving recurses at most ceil(log2(n)) + 1 levels."""
     entry = _entry(messages)
     payload = C.build_melt_payload(entry)
-    ours = list(C.iter_chunks(payload, C.split_logging, cap))
+    ours, depth = _chunks_and_depth(payload, C.split_logging, cap)
+    assert depth <= _depth_bound(len(messages))
 
     logs = []
     for c in ours:

@@ -276,7 +276,7 @@ def test_chunk_counts_fast_matches_exact_replay(
 
 @pytest.mark.parametrize("cap", [1000, 1000 * 1024])
 def test_chunk_counts_fast_reuses_hub_fills(
-    spark, template_df, template_meta_df, cap
+    spark, template_df, template_meta_df, cap, tmp_path
 ):
     """When the hub carries the materialised MELT fills
     (melt.with_melt_fills), the chunk cost pass reuses them instead of
@@ -288,7 +288,10 @@ def test_chunk_counts_fast_reuses_hub_fills(
 
     cfg = PipelineConfig(max_payload_size=cap)
     base = enrich(classify(template_df, cfg), template_meta_df)
-    hub = with_melt_fills(base, cfg)
+    # materialised like the job's hub (parquet write + read), so the
+    # reuse plan holds no decode of its own
+    with_melt_fills(base, cfg).write.parquet(str(tmp_path / "hub"))
+    hub = spark.read.parquet(str(tmp_path / "hub"))
     recompute = {
         r["conv_id"]: r.asDict()
         for r in chunk_counts_fast(base, "logging", cfg).collect()
@@ -296,9 +299,11 @@ def test_chunk_counts_fast_reuses_hub_fills(
     reuse_df = chunk_counts_fast(hub, "logging", cfg)
     reuse = {r["conv_id"]: r.asDict() for r in reuse_df.collect()}
     assert reuse == recompute
-    # the reuse plan must not pay a second Arrow trace-decode pass
-    plan = reuse_df._jdf.queryExecution().executedPlan().toString()
-    assert "trace_id_raw" not in plan
+    # the reuse plan must not pay a second Arrow trace-decode pass; the
+    # recompute plan does pay one, so the check is live
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan(reuse_df)
+    assert "ArrowEvalPython" in plan(chunk_counts_fast(base, "logging", cfg))
 
 
 @pytest.mark.parametrize("path", ["infra", "logging"])
