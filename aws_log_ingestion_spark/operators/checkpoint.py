@@ -7,17 +7,21 @@ commit atomicity is the sink write, and JOB-level resume is this module —
 a checkpoint table recording, per stage and sink, row counts and
 per-partition lineage, written after each successful sink commit. A
 re-run consults the manifest and skips (or verifies) completed sinks, so
-a mid-job kill converges to identical per-sink counts.
+a mid-job kill converges to identical per-sink counts. The hub is one
+write with one record (``observed_write_bucketed``). ``write_parquet``
+is the package's one DataFrame parquet writer; every runner commits
+through it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 # Free-text / unique-id string columns. A parquet dictionary attempt on
 # these always overflows its size cap and falls back to plain encoding,
@@ -156,22 +160,51 @@ def sink_format(spark) -> dict:
     }
 
 
-def _write_observed(observed: DataFrame, path: str, stage: str, order_cols) -> dict:
-    """Route one sorted sink write: Iceberg ``writeTo`` when a catalog is
-    usable, parquet path otherwise. Returns the manifest fragment."""
-    spark = observed.sparkSession
-    fmt = sink_format(spark)
-    sorted_df = observed.sortWithinPartitions(*order_cols)
-    if fmt["format"] == "iceberg":
-        table = f"{fmt['catalog']}.{ICEBERG_NAMESPACE}.{stage}"
-        # createOrReplace = one atomic snapshot commit per stage — the
-        # Iceberg analog of the parquet overwrite + manifest record
-        sorted_df.writeTo(table).using("iceberg").createOrReplace()
-        return {**fmt, "table": table}
-    sorted_df.write.mode("overwrite").options(
-        **parquet_text_options(sorted_df)
-    ).parquet(path)
-    return {**fmt, "path": path}
+def write_parquet(
+    df: DataFrame,
+    path: str,
+    partition_by=(),
+    order_by=(),
+    mode: str = "overwrite",
+) -> None:
+    """The package's one DataFrame parquet writer.
+
+    Sorts within partitions by ``partition_by`` then ``order_by`` (no
+    Sort when both are empty) and always sets ``parquet_text_options``.
+    ``mode`` is how the write commits:
+
+    - ``"overwrite"``: replace ``path`` whole (checkpoint-gated stage
+      writes).
+    - ``"dynamic"``: replace only the partition directories present in
+      ``df``; output is staged and published at job commit, so a failed
+      job publishes nothing (the hub, every incremental batch write).
+    - ``"append"``: add files (the streaming skin).
+    """
+    cols = [*partition_by, *order_by]
+    if cols:
+        df = df.sortWithinPartitions(*cols)
+    options = parquet_text_options(df)
+    if mode == "dynamic":
+        options["partitionOverwriteMode"] = "dynamic"
+    elif mode == "append":
+        # The session default is committer v2 (fast, but a mid-job failure
+        # can leave partial task files visible); the overwrite modes'
+        # checkpoint truncate gate cleans those up, but appends have no
+        # truncate gate — pin them back to v1 so only a whole-batch replay
+        # (the existing at-least-once story) can duplicate rows (ADVICE r4).
+        options["mapreduce.fileoutputcommitter.algorithm.version"] = "1"
+    writer = df.write.mode("append" if mode == "append" else "overwrite").options(**options)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+
+
+def _record_with_lineage(log: CheckpointLog, stage: str, path: str, record: dict) -> None:
+    """Record ``stage`` with the footer lineage of ``path``, which must
+    hold exactly the observed ``record["rows"]``."""
+    lineage = file_lineage(path)
+    assert sum(e["rows"] for e in lineage) == record["rows"], "lineage/observe count drift"
+    log.record(stage, {**record, "lineage": lineage})
 
 
 def observed_write(
@@ -182,7 +215,8 @@ def observed_write(
     order_cols=("conv_id", "turn_idx"),
     extra: dict | None = None,
 ) -> int:
-    """Write one sink with observe() metrics + checkpoint record.
+    """Write one sink with observe() metrics + checkpoint record: Iceberg
+    ``writeTo`` when a catalog is usable, ``write_parquet`` otherwise.
 
     Returns the row count. If the stage is already checkpointed, the
     write is skipped and the recorded count returned (idempotent resume).
@@ -191,27 +225,28 @@ def observed_write(
     prior = log.read(stage)
     if prior is not None:
         return prior["rows"]
-    from pyspark.sql import Observation
-
     obs = Observation(f"obs_{stage}")
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    sink_info = _write_observed(observed, path, stage, order_cols)
-    rows = obs.get["rows"]
-    record = {"rows": rows, **sink_info, **(extra or {})}
-    if sink_info["format"] == "parquet":
-        lineage = file_lineage(path)
-        assert sum(e["rows"] for e in lineage) == rows, "lineage/observe count drift"
-        record["lineage"] = lineage
-    log.record(stage, record)
-    return rows
+    fmt = sink_format(df.sparkSession)
+    if fmt["format"] == "iceberg":
+        table = f"{fmt['catalog']}.{ICEBERG_NAMESPACE}.{stage}"
+        # createOrReplace = one atomic snapshot commit per stage — the
+        # Iceberg analog of the parquet overwrite + manifest record
+        observed.sortWithinPartitions(*order_cols).writeTo(table).using(
+            "iceberg"
+        ).createOrReplace()
+        log.record(stage, {"rows": obs.get["rows"], **fmt, "table": table, **(extra or {})})
+    else:
+        write_parquet(observed, path, order_by=order_cols)
+        record = {"rows": obs.get["rows"], **fmt, "path": path, **(extra or {})}
+        _record_with_lineage(log, stage, path, record)
+    return obs.get["rows"]
 
 
 #: hub buckets: ``conv_bucket = crc32(conv_id) % N_BUCKETS`` —
 #: content-derived, so deterministic across runs and uniform under skew,
 #: and computable from a conv_id alone (``incremental.hub_lookup``)
 N_BUCKETS = 32
-#: resume ranges of ``observed_write_bucketed``: bucket % N_BATCHES
-N_BATCHES = 4
 HUB_ORDER = ("conv_id", "turn_idx")
 
 
@@ -220,101 +255,39 @@ def conv_bucket(conv_id: Column | str = "conv_id") -> Column:
     return (F.crc32(conv_id) % N_BUCKETS).cast("int")
 
 
-def observed_write_bucketed(
-    df: DataFrame,
-    path: str,
-    log: CheckpointLog,
-    stage: str,
-    fail_after_batches: int | None = None,
-) -> int:
-    """Stage write with PER-CONV-RANGE resume (finer than stage-level).
+def observed_write_bucketed(df: DataFrame, path: str, log: CheckpointLog, stage: str) -> int:
+    """The hub write: one Spark job, one checkpoint record.
 
-    Conversations hash into ``N_BUCKETS`` buckets (``conv_bucket``),
-    grouped into ``N_BATCHES`` ranges (bucket % N_BATCHES), each sorted
-    by ``HUB_ORDER`` within its files.
-    Every PENDING range (one with no ``<stage>.b<k>`` record) is written
-    in ONE job: the plan is built, the input scanned and the Python trace
-    decode run once, not once per range (each Python-evaluating task pays
-    a fixed worker cost, see functions/tracing.py). One ``observe()``
-    counts the rows of each pending range; after the write, one footer
-    listing supplies each range's lineage, and each range still gets its
-    own checkpoint record. A re-run filters the committed ranges out of
-    the scan (never recomputed, never rewritten).
+    Conversations hash into ``N_BUCKETS`` ``conv_bucket=`` directories,
+    each sorted by ``HUB_ORDER`` within its files. One ``observe()``
+    counts the rows and one footer listing supplies the lineage, which
+    must sum to that count; then ``stage`` is recorded. If the stage is
+    already recorded, the write is skipped and the recorded count
+    returned.
 
-    Partition overwrite is dynamic: output is staged under
-    ``.spark-staging-*`` and bucket directories are published at job
-    commit, so a kill DURING the job publishes nothing and records no
-    range — a fresh run killed mid-job redoes the whole stage. Once range
-    records exist, a resume rewrites only the pending ranges' bucket
-    directories — idempotent. This is the distributed analog of the
-    reference's per-invocation at-least-once retry (src/function.py:
-    136-177): the unit of redelivery is a conversation range, and the
-    manifest is the dedup ledger.
-
-    ``fail_after_batches`` is a test hook: after the write, raise once N
-    range records are committed, to simulate a kill between records.
+    Without a record the old output is removed first: dynamic partition
+    overwrite only replaces the buckets present in the new data, so a
+    previous run's other buckets would survive (the Iceberg analog is
+    CREATE OR REPLACE). The write itself is a dynamic partition
+    overwrite: output is staged under ``.spark-staging-*`` and the bucket
+    directories are published at job commit, so a job killed or failed
+    mid-write publishes nothing. A kill at any point before the record
+    redoes the whole hub — the distributed analog of the reference's
+    per-invocation at-least-once retry (src/function.py:136-177), with
+    the manifest as the dedup ledger.
     """
-    from pyspark.sql import Observation
-
-    prior = {k: log.read(f"{stage}.b{k}") for k in range(N_BATCHES)}
-    pending = [k for k, rec in prior.items() if rec is None]
-    total = sum(rec["rows"] for rec in prior.values() if rec is not None)
-    # Fresh start (no range checkpoints) into a dir holding a previous
-    # run's output: dynamic partition-overwrite only replaces buckets
-    # present in the NEW data, so stale buckets from the old run would
-    # survive and trip the lineage assert (or leak rows). Truncate first —
-    # the Iceberg analog is CREATE OR REPLACE before the first snapshot.
-    fresh = len(pending) == N_BATCHES
-    if fresh and os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path)
-    if pending:
-        staged = df.withColumn("conv_bucket", conv_bucket())
-        batch = F.col("conv_bucket") % N_BATCHES
-        if not fresh:
-            staged = staged.filter(batch.isin(pending))
-        obs = Observation(f"obs_{stage}")
-        observed = staged.observe(
-            obs, *[F.sum((batch == k).cast("long")).alias(f"b{k}") for k in pending]
-        )
-        (
-            observed.sortWithinPartitions("conv_bucket", *HUB_ORDER)
-            .write.mode("overwrite")
-            .options(**parquet_text_options(observed))
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("conv_bucket")
-            .parquet(path)
-        )
-        rows = {k: int(obs.get[f"b{k}"] or 0) for k in pending}
-        # one listing for every range; files outside the bucket dirs (a
-        # killed job's leftover .spark-staging-*) belong to no range
-        batch_of = {f"conv_bucket={b}": b % N_BATCHES for b in range(N_BUCKETS)}
-        lineages: dict[int, list[dict]] = {k: [] for k in pending}
-        for e in file_lineage(path):
-            k = batch_of.get(e["file"].split("/", 1)[0])
-            if k in lineages:
-                lineages[k].append(e)
-        committed = N_BATCHES - len(pending)
-        for k in pending:
-            if fail_after_batches is not None and committed >= fail_after_batches:
-                raise RuntimeError(f"injected kill after {fail_after_batches} batches")
-            lineage = lineages[k]
-            assert sum(e["rows"] for e in lineage) == rows[k], "bucket lineage drift"
-            log.record(
-                f"{stage}.b{k}",
-                {
-                    "rows": rows[k],
-                    "path": path,
-                    "buckets": [b for b in range(N_BUCKETS) if b % N_BATCHES == k],
-                    "lineage": lineage,
-                },
-            )
-            total += rows[k]
-            committed += 1
-    if log.read(stage) is None:
-        log.record(stage, {"rows": total, "path": path, "batches": N_BATCHES, "buckets": N_BUCKETS})
-    return total
+    prior = log.read(stage)
+    if prior is not None:
+        return prior["rows"]
+    shutil.rmtree(path, ignore_errors=True)
+    obs = Observation(f"obs_{stage}")
+    observed = df.withColumn("conv_bucket", conv_bucket()).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
+    write_parquet(observed, path, ["conv_bucket"], HUB_ORDER, mode="dynamic")
+    record = {"rows": obs.get["rows"], "path": path, "buckets": N_BUCKETS}
+    _record_with_lineage(log, stage, path, record)
+    return record["rows"]
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> dict:

@@ -51,11 +51,13 @@ _META = ["owner", "log_group", "log_stream_name", "function_name", "invoked_func
 _FILLS = ["trace_id", "lambda_request_id"]
 
 
-def _select_cols(df: DataFrame, path: str) -> list[str]:
+def _select_cols(df: DataFrame, fills: bool = False) -> list[str]:
+    """The chunk stage's input columns; ``fills`` adds the hub's MELT
+    fill columns when the frame carries them."""
     cols = [c for c in _REQUIRED + _META if c in df.columns]
     if "log_group" not in df.columns and "tool" in df.columns:
         cols.append("tool")  # with_log_group derives log_group from tool
-    if path == "logging" and all(c in df.columns for c in _FILLS):
+    if fills and all(c in df.columns for c in _FILLS):
         cols += _FILLS
     missing = [c for c in _REQUIRED if c not in df.columns]
     if missing:
@@ -63,12 +65,70 @@ def _select_cols(df: DataFrame, path: str) -> list[str]:
     return cols
 
 
+def _replay_input(df: DataFrame) -> DataFrame:
+    """The two gzip replays' column prologue: the chunk columns, with
+    epoch millis computed JVM-side — pandas' timestamp unit (ns vs us)
+    must never leak into the byte-exact JSON replay."""
+    return (
+        df.select(*_select_cols(df))
+        .withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))
+        .drop("ts")
+    )
+
+
+def _conv_ordinal(conv_id: str) -> int:
+    return int("".join(ch for ch in conv_id if ch.isdigit()) or 0)
+
+
+def _build_event(conv_ordinal: int, turn_idx: int, ts_millis: int, text: str) -> dict:
+    return {
+        "id": C.make_event_id(conv_ordinal, int(turn_idx)),
+        "timestamp": int(ts_millis),
+        "message": text,
+    }
+
+
+def _envelope(first, path: str, cfg: PipelineConfig, events=()):
+    """One conversation's payload for ``path``: its entry, holding
+    ``events`` in turn order, wrapped in the infra context or the MELT
+    payload. ``first`` is the conversation's turn_idx-min row (anything
+    with ``get``); absent or null meta is ''. With no events it is the
+    envelope the count walk serializes its ambiguous-band probes into."""
+
+    def meta(name):
+        return first.get(name, "") or ""
+
+    entry = C.build_entry(
+        first["conv_id"], meta("log_group"), meta("log_stream_name"), meta("owner"), list(events)
+    )
+    if path == "infra":
+        context = {
+            "function_name": meta("function_name"),
+            "invoked_function_arn": meta("invoked_function_arn"),
+            "log_group_name": meta("log_group"),
+            "log_stream_name": meta("log_stream_name"),
+        }
+        return C.build_infra_data(context, entry)
+    return C.build_melt_payload(entry, lambda_prefix=cfg.lambda_prefix, tags=dict(cfg.tags))
+
+
+def _replay_row(first, path: str, cfg: PipelineConfig, events: list[dict]) -> dict:
+    """One ``CHUNK_STATS_SCHEMA`` row: the exact gzip-halving replay of
+    the conversation's payload."""
+    split_fn = C.split_infra if path == "infra" else C.split_logging
+    s = C.chunk_stats(_envelope(first, path, cfg, events), split_fn, cfg.max_payload_size)
+    return {
+        "conv_id": first["conv_id"],
+        "sink": first["sink"],
+        "path": path,
+        "n_events": len(events),
+        **s,
+    }
+
+
 def _group_stats_factory(path: str, cfg: PipelineConfig):
-    """Build the per-group pandas function (driver-side closure; only the
-    config scalars are captured, not DataFrames)."""
-    max_size = cfg.max_payload_size
-    lambda_prefix = cfg.lambda_prefix
-    tags = dict(cfg.tags)
+    """Build the per-group pandas function (driver-side closure; only
+    ``path`` and the config are captured, not DataFrames)."""
 
     def stats(pdf):
         import numpy as np
@@ -83,58 +143,15 @@ def _group_stats_factory(path: str, cfg: PipelineConfig):
         tv = pdf["turn_idx"].to_numpy()
         order = np.argsort(tv)
         i0 = int(order[0])
-        conv_id = pdf["conv_id"].iat[0]
-        sink = pdf["sink"].iat[i0]
-
-        def meta(name):
-            return (pdf[name].iat[i0] if name in pdf.columns else "") or ""
-
-        conv_ordinal = int("".join(ch for ch in conv_id if ch.isdigit()) or 0)
-
-        ts_v = pdf["ts_millis"].to_numpy()[order]
-        txt_v = pdf["text"].to_numpy()[order]
+        first = {c: pdf[c].iat[i0] for c in pdf.columns}
+        ordinal = _conv_ordinal(first["conv_id"])
         events = [
-            {
-                "id": C.make_event_id(conv_ordinal, int(t)),
-                "timestamp": int(ts),
-                "message": m,
-            }
-            for t, ts, m in zip(tv[order], ts_v, txt_v)
+            _build_event(ordinal, t, ts, m)
+            for t, ts, m in zip(
+                tv[order], pdf["ts_millis"].to_numpy()[order], pdf["text"].to_numpy()[order]
+            )
         ]
-        entry = C.build_entry(
-            conv_id,
-            meta("log_group"),
-            meta("log_stream_name"),
-            meta("owner"),
-            events,
-        )
-        if path == "infra":
-            context = {
-                "function_name": meta("function_name"),
-                "invoked_function_arn": meta("invoked_function_arn"),
-                "log_group_name": meta("log_group"),
-                "log_stream_name": meta("log_stream_name"),
-            }
-            obj = C.build_infra_data(context, entry)
-            split_fn = C.split_infra
-        else:
-            obj = C.build_melt_payload(entry, lambda_prefix=lambda_prefix, tags=tags)
-            split_fn = C.split_logging
-
-        s = C.chunk_stats(obj, split_fn, max_size)
-        return pd.DataFrame(
-            [
-                {
-                    "conv_id": conv_id,
-                    "sink": sink,
-                    "path": path,
-                    "n_events": len(events),
-                    "n_chunks": s["n_chunks"],
-                    "total_gz_bytes": s["total_gz_bytes"],
-                    "max_chunk_bytes": s["max_chunk_bytes"],
-                }
-            ]
-        )
+        return pd.DataFrame([_replay_row(first, path, cfg, events)])
 
     return stats
 
@@ -147,15 +164,7 @@ def chunk_replay(df: DataFrame, path: str, cfg: PipelineConfig | None = None) ->
     for logging — reference :252-261 vs :270).
     """
     cfg = cfg or PipelineConfig()
-    cols = [c for c in _REQUIRED + _META if c in df.columns]
-    missing = [c for c in _REQUIRED if c not in df.columns]
-    if missing:
-        raise ValueError(f"chunk_replay missing columns: {missing}")
-    # epoch millis computed JVM-side: pandas timestamp unit (ns vs us)
-    # must never leak into the byte-exact JSON replay
-    slim = df.select(*cols).withColumn(
-        "ts_millis", F.unix_millis(F.col("ts").cast("timestamp"))
-    ).drop("ts")
+    slim = _replay_input(df)
     # Explicit conv_id repartition at the session's shuffle-partition
     # count: the replay shuffles FEW BYTES but burns heavy Python CPU
     # (json+gzip per conversation), exactly the shape AQE's byte-based
@@ -186,21 +195,17 @@ def chunk_replay_independent(
     ``chunk_replay``: conversations are assembled JVM-side with
     ``groupBy().agg(sort_array(collect_list(struct(...))))`` (hash
     aggregate + JVM lexicographic struct sort) instead of
-    ``applyInPandas`` grouping + pandas ``sort_values``; the stats run
-    through ``mapInPandas`` over pre-assembled rows instead of a grouped
-    pandas call. A bug in either side's grouping, ordering, Arrow
-    transfer, or timestamp handling shows up as a totals mismatch. Only
-    the leaf recursion (functions/chunking.py) is shared — that leaf is
-    pinned byte-for-byte against the reference's ``_generate_payloads``
-    (src/function.py:309-323) in tests/test_chunks_vs_reference.py."""
+    ``applyInPandas`` grouping + numpy argsort; the stats run through
+    ``mapInPandas`` over pre-assembled rows instead of a grouped pandas
+    call. A bug in either side's grouping, ordering or Arrow transfer
+    shows up as a totals mismatch. Shared with ``chunk_replay``: the
+    column prologue (``_replay_input``, incl. the JVM-side epoch millis),
+    the payload builder (``_envelope`` / ``_replay_row``) and the leaf
+    recursion (functions/chunking.py) — that leaf is pinned byte-for-byte
+    against the reference's ``_generate_payloads`` (src/function.py:
+    309-323) in tests/test_chunks_vs_reference.py."""
     cfg = cfg or PipelineConfig()
-    cols = [c for c in _REQUIRED + _META if c in df.columns]
-    missing = [c for c in _REQUIRED if c not in df.columns]
-    if missing:
-        raise ValueError(f"chunk_replay_independent missing columns: {missing}")
-    slim = df.select(*cols).withColumn(
-        "ts_millis", F.unix_millis(F.col("ts").cast("timestamp"))
-    ).drop("ts")
+    slim = _replay_input(df)
     meta_cols = [c for c in slim.columns if c not in ("conv_id", "turn_idx", "ts_millis", "text")]
     # turn_idx is unique per conversation, so the lexicographic struct
     # sort IS the turn order; meta rides in the struct so the first
@@ -210,9 +215,6 @@ def chunk_replay_independent(
             F.collect_list(F.struct("turn_idx", "ts_millis", "text", *meta_cols))
         ).alias("evs")
     )
-    max_size = cfg.max_payload_size
-    lambda_prefix = cfg.lambda_prefix
-    tags = dict(cfg.tags)
     out_cols = [f.name for f in CHUNK_STATS_SCHEMA.fields]
 
     def gen(batches):
@@ -221,98 +223,19 @@ def chunk_replay_independent(
         for pdf in batches:
             out = []
             for conv_id, evs in zip(pdf["conv_id"], pdf["evs"]):
-                evs = list(evs)
-                first = evs[0]
-                conv_ordinal = int(
-                    "".join(ch for ch in conv_id if ch.isdigit()) or 0
-                )
+                ordinal = _conv_ordinal(conv_id)
                 events = [
-                    {
-                        "id": C.make_event_id(conv_ordinal, int(e["turn_idx"])),
-                        "timestamp": int(e["ts_millis"]),
-                        "message": e["text"],
-                    }
-                    for e in evs
+                    _build_event(ordinal, e["turn_idx"], e["ts_millis"], e["text"]) for e in evs
                 ]
-                entry = C.build_entry(
-                    conv_id,
-                    first.get("log_group", "") or "",
-                    first.get("log_stream_name", "") or "",
-                    first.get("owner", "") or "",
-                    events,
-                )
-                if path == "infra":
-                    context = {
-                        "function_name": first.get("function_name", "") or "",
-                        "invoked_function_arn": first.get(
-                            "invoked_function_arn", ""
-                        )
-                        or "",
-                        "log_group_name": first.get("log_group", "") or "",
-                        "log_stream_name": first.get("log_stream_name", "")
-                        or "",
-                    }
-                    obj = C.build_infra_data(context, entry)
-                    split_fn = C.split_infra
-                else:
-                    obj = C.build_melt_payload(
-                        entry, lambda_prefix=lambda_prefix, tags=tags
-                    )
-                    split_fn = C.split_logging
-                s = C.chunk_stats(obj, split_fn, max_size)
-                out.append(
-                    {
-                        "conv_id": conv_id,
-                        "sink": first["sink"],
-                        "path": path,
-                        "n_events": len(events),
-                        "n_chunks": s["n_chunks"],
-                        "total_gz_bytes": s["total_gz_bytes"],
-                        "max_chunk_bytes": s["max_chunk_bytes"],
-                    }
-                )
+                out.append(_replay_row({**evs[0], "conv_id": conv_id}, path, cfg, events))
             yield pd.DataFrame(out, columns=out_cols)
 
     return g.mapInPandas(gen, CHUNK_STATS_SCHEMA)
 
 
-def _conv_ordinal(conv_id: str) -> int:
-    return int("".join(ch for ch in conv_id if ch.isdigit()) or 0)
-
-
-def _build_event(conv_id: str, turn_idx: int, ts_millis: int, text: str) -> dict:
-    return {
-        "id": C.make_event_id(_conv_ordinal(conv_id), int(turn_idx)),
-        "timestamp": int(ts_millis),
-        "message": text,
-    }
-
-
-def _envelope(first, path: str, cfg: PipelineConfig):
-    """One conversation's payload with no events — the envelope the count
-    walk serializes its ambiguous-band probes into."""
-    conv_id = first["conv_id"]
-    entry = C.build_entry(
-        conv_id,
-        first.get("log_group", "") or "",
-        first.get("log_stream_name", "") or "",
-        first.get("owner", "") or "",
-        [],
-    )
-    if path == "infra":
-        context = {
-            "function_name": first.get("function_name", "") or "",
-            "invoked_function_arn": first.get("invoked_function_arn", "") or "",
-            "log_group_name": first.get("log_group", "") or "",
-            "log_stream_name": first.get("log_stream_name", "") or "",
-        }
-        return C.build_infra_data(context, entry)
-    return C.build_melt_payload(entry, lambda_prefix=cfg.lambda_prefix, tags=dict(cfg.tags))
-
-
 def _message_for(path: str, row) -> dict:
     if path == "infra":
-        return _build_event(row.conv_id, row.turn_idx, row.ts_millis, row.text)
+        return _build_event(_conv_ordinal(row.conv_id), row.turn_idx, row.ts_millis, row.text)
     return C.build_log_message(
         row.text,
         int(row.ts_millis),
@@ -359,7 +282,7 @@ def _staged_with_costs(df: DataFrame, path: str, cfg: PipelineConfig) -> DataFra
     from .classify import with_log_group
     from .melt import with_melt_fills
 
-    df = df.select(*_select_cols(df, path))
+    df = df.select(*_select_cols(df, fills=path == "logging"))
     if "log_group" not in df.columns:
         df = with_log_group(df, cfg)
     df = df.withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))

@@ -104,8 +104,9 @@ def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     """The fan-out every runner shares: build each enabled sink's frame
     from the hub and hand it to ``commit(name, df, partition_by,
     order_by)``, in the order infra, logging, chunk_stats. The commit
-    owns the write (checkpointed, per-batch overwrite or streaming
-    append), applying the partition and order columns fixed here.
+    owns the write: ``checkpoint.write_parquet`` with the partition and
+    order columns fixed here, in its checkpointed overwrite, per-batch
+    dynamic overwrite or streaming append mode.
 
     - ``infra``: ``infra_union``, partitioned by ``sink``.
     - ``logging``: ``melt_project`` (a pure projection when the hub
@@ -120,13 +121,6 @@ def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     stats = sink_chunk_counts(infra, hub if cfg.logging_enabled else None, cfg)
     if stats is not None:
         commit("chunk_stats", stats, [], [])
-
-
-def sorted_within(df: DataFrame, partition_by: list[str], order_by: list[str]) -> DataFrame:
-    """``df`` sorted within partitions by a sink's partition then order
-    columns; unchanged when it has neither."""
-    cols = [*partition_by, *order_by]
-    return df.sortWithinPartitions(*cols) if cols else df
 
 
 def route_count_exprs(

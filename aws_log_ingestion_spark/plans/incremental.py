@@ -152,14 +152,7 @@ def _write_batch_partition(
     Only the partitions present in ``df`` are replaced — a re-run after a
     mid-write kill converges (idempotent), and other batches' directories
     are never touched."""
-    (
-        df.sortWithinPartitions(*partition_cols, *order_cols)
-        .write.mode("overwrite")
-        .options(**ckpt.parquet_text_options(df))
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(root)
-    )
+    ckpt.write_parquet(df, root, partition_cols, order_cols, mode="dynamic")
 
 
 def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
@@ -351,10 +344,11 @@ def run_incremental(
                 # route counts are exactly the old sink rows it deletes.
                 superseded = affected_parts.join(new_convs, "conv_id", "semi")
                 obs = Observation("obs_tombstones")
-                superseded.observe(
-                    obs, *route_count_exprs(superseded, cfg)
-                ).select(*RAW_COLS, "ingest_batch").write.mode("overwrite").parquet(
-                    staged_tombstones
+                ckpt.write_parquet(
+                    superseded.observe(obs, *route_count_exprs(superseded, cfg)).select(
+                        *RAW_COLS, "ingest_batch"
+                    ),
+                    staged_tombstones,
                 )
                 deleted_now = {k: int(v or 0) for k, v in obs.get.items()}
                 _write_batch_partition(

@@ -11,8 +11,9 @@ recomputations of the conv_id window — and doubles as the resume point:
 a re-run that finds the hub checkpoint skips straight to the un-written
 sinks. Measured locally (2M turns): hub-through-storage beats both
 recompute-per-sink (~2.4x) and .cache() (~1.3x). The hub itself is one
-Spark job that writes every pending conversation range, with one
-checkpoint record per range (operators/checkpoint.py).
+Spark job with one checkpoint record (operators/checkpoint.py::
+observed_write_bucketed); every write goes through
+``checkpoint.write_parquet``.
 
 Run via spark-submit (package zipped by scripts/make_pyfiles.sh):
     spark-submit --py-files dist/aws_log_ingestion_spark.zip \
@@ -32,7 +33,7 @@ from ..operators import chunks as chunk_op
 from ..operators.classify import classify
 from ..operators.enrich import enrich
 from ..operators.melt import with_melt_fills, with_melt_fills_salted
-from ..operators.route import INFRA_SINKS, infra_url, sorted_within, write_sinks
+from ..operators.route import INFRA_SINKS, infra_url, write_sinks
 from ..sources.derive import conv_meta_from_events, transcripts_from_events
 
 # a conversation above this many turns would serialise the hub's conv_id
@@ -116,18 +117,16 @@ def run_pipeline(
 
     Idempotent: re-running with the same out_dir skips stages whose
     checkpoint record exists (kill-and-resume converges to identical
-    counts — BASELINE.md "Resume idempotency"). Inside the hub stage the
-    unit of resume is a conversation range: a kill after some range
-    records were committed rewrites only the rest; a kill during the hub
-    job itself publishes nothing, so the stage restarts from zero."""
+    counts — BASELINE.md "Resume idempotency"). The unit of resume is a
+    stage: a kill anywhere before the hub's record (during its job, or
+    after the job but before the record) rewrites the whole hub once."""
     cfg = cfg or PipelineConfig()
     log = ckpt.CheckpointLog(out_dir)
     if not resume:
         log.clear()
 
     # stage 0: the hub — the single wide shuffle, written once, in one
-    # job. Bucketed by conversation range with per-range checkpoints: a
-    # resume rewrites only the ranges that have no record yet.
+    # job, into conv_bucket directories, with one checkpoint record.
     hub_path = f"{out_dir}/classified"
     if not log.is_done("classified"):
         ckpt.observed_write_bucketed(
@@ -147,11 +146,7 @@ def run_pipeline(
                     obs,
                     *[F.sum((F.col("sink") == s).cast("long")).alias(s) for s in INFRA_SINKS],
                 )
-                sorted_within(observed, partition_by, order_by).write.mode(
-                    "overwrite"
-                ).options(**ckpt.parquet_text_options(observed)).partitionBy(
-                    *partition_by
-                ).parquet(path)
+                ckpt.write_parquet(observed, path, partition_by, order_by)
                 per_sink = {s: int(obs.get[s] or 0) for s in INFRA_SINKS}
                 log.record(
                     "infra",
@@ -183,7 +178,7 @@ def run_pipeline(
             # of conversations are answered by pure-Catalyst byte
             # arithmetic — zero Python, zero gzip. The exact-gz-bytes
             # replay (chunk_replay) remains available for byte-level audits.
-            sorted_within(df, partition_by, order_by).write.mode("overwrite").parquet(path)
+            ckpt.write_parquet(df, path, partition_by, order_by)
             totals = chunk_op.chunk_totals_fast(spark.read.parquet(path)).collect()
             log.record(
                 "chunks",

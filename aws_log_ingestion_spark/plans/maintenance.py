@@ -158,12 +158,7 @@ def compact_parquet_root(
         staged = os.path.join(staging_base, job["dir"])
         df = spark.read.parquet(leaf)
         cols = [c for c in order_cols if c in df.columns]
-        out = df.coalesce(job["target_files"])
-        if cols:
-            out = out.sortWithinPartitions(*cols)
-        out.write.mode("overwrite").options(
-            **ckpt.parquet_text_options(out)
-        ).parquet(staged)
+        ckpt.write_parquet(df.coalesce(job["target_files"]), staged, order_by=cols)
         rows_before, rows_after = _rows_in(leaf), _rows_in(staged)
         if rows_before != rows_after:
             raise RuntimeError(

@@ -11,7 +11,8 @@ micro-batch, the reference's model. A conversation whose turns span
 input batches is ``plans/incremental.py::run_incremental``'s job: it
 recomputes the whole conversation from the hub's raw turns.
 
-Sinks are append-mode parquet (Iceberg in production); the checkpoint
+Sinks are append-mode parquet (``checkpoint.write_parquet`` with
+``mode="append"``, v1 committer; Iceberg in production); the checkpoint
 location gives exactly-once per micro-batch — the streaming analog of
 the batch job's checkpoint table.
 """
@@ -21,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import PipelineConfig
-from ..operators.checkpoint import parquet_text_options
-from ..operators.route import sorted_within, write_sinks
+from ..operators.checkpoint import write_parquet
+from ..operators.route import write_sinks
 from ..plans.job import prepare
 
 
@@ -38,17 +39,8 @@ def make_batch_processor(
     tests/test_stateful_streaming.py and tests/test_sink_fanout.py."""
     cfg = cfg or PipelineConfig()
 
-    # The session default is committer v2 (fast, but a mid-batch failure
-    # can leave partial task files visible); the batch job's checkpoint
-    # truncate gate cleans those up, but these streaming appends have no
-    # truncate gate — pin them back to v1 so only a whole-batch replay
-    # (the existing at-least-once story) can duplicate rows (ADVICE r4).
-    _v1 = {"mapreduce.fileoutputcommitter.algorithm.version": "1"}
-
     def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
-        sorted_within(df, partition_by, order_by).write.mode("append").options(
-            **parquet_text_options(df), **_v1
-        ).partitionBy(*partition_by).parquet(f"{out_dir}/{name}")
+        write_parquet(df, f"{out_dir}/{name}", partition_by, order_by, mode="append")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # materialize the hub once per micro-batch — the sinks and both

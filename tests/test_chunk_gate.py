@@ -1,10 +1,16 @@
-"""The chunk-stage gate queries against their DuckDB oracles.
+"""The pipeline and chunk-stage gate queries against their DuckDB oracles.
 
-``chunk_census``, ``chunk_gz_parity``, ``chunk_raw_costs`` and
-``chunk_events_by_sink`` run through the chunk staging
-(operators/chunks.py ``_staged_with_costs``); each is compared with its
-``oracle_sql()`` text by the same per-query comparison
-``scripts/check_correctness.py`` uses."""
+Each query in ``GATE_QUERIES`` is compared with its ``oracle_sql()``
+text on sf0.001 by the same per-query comparison
+``scripts/check_correctness.py`` uses, and must report MATCH:
+
+- the pipeline queries, from the derived transcripts through parse,
+  classify, routing, the MELT projection and fills, enrichment and the
+  trace decode;
+- the chunk queries ``chunk_census``, ``chunk_gz_parity``,
+  ``chunk_raw_costs`` and ``chunk_events_by_sink``, which run through the
+  chunk staging (operators/chunks.py ``_staged_with_costs``) and, for
+  ``chunk_gz_parity``, both gzip replays."""
 
 from __future__ import annotations
 
@@ -13,7 +19,18 @@ import os
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-CHUNK_QUERIES = [
+GATE_QUERIES = [
+    "transcripts_derive",
+    "parse_flags",
+    "classify_sinks",
+    "route_counts",
+    "infra_lambda_filtered",
+    "agent_reformat",
+    "request_id_fill",
+    "melt_shape",
+    "conv_meta_derive",
+    "enrich_owner",
+    "trace_decode",
     "chunk_census",
     "chunk_gz_parity",
     "chunk_raw_costs",
@@ -34,7 +51,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", CHUNK_QUERIES)
+@pytest.mark.parametrize("name", GATE_QUERIES)
 def test_chunk_gate_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as e
     from scripts.check_correctness import compare_query

@@ -212,6 +212,11 @@ def test_b2_overlap_copy_on_write(spark, env):
         .collect()
     )
     assert len(late) == 1 and late[0]["lambda_request_id"]
+    # one live chunk_stats row per (conv_id, path): the superseded
+    # conversations' old-batch rows are tombstoned
+    stats = live_rows(spark, env["out"], "chunk_stats")
+    assert stats.filter(F.col("ingest_batch") == 2).count() > 0
+    assert stats.count() == stats.select("conv_id", "path").distinct().count()
 
 
 def test_b2_old_sinks_tombstoned_not_rewritten(spark, env):

@@ -3,7 +3,6 @@ reference oracle, and kill-and-resume idempotency (BASELINE.md targets)."""
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -130,36 +129,60 @@ def test_partial_failure_resume(spark, template_df, template_meta_df, clean_run,
     assert ckpt.read_manifest(None, out)["classified"]["wall_time"] == hub_time
 
 
+def test_chunk_stats_one_row_per_conv_and_path(spark, clean_run):
+    """``chunk_stats`` holds exactly one row per (conv_id, path): the
+    prerequisite for taking per-path conversation counts as plain row
+    counts."""
+    run_dir, _, _ = clean_run
+    stats = spark.read.parquet(f"{run_dir}/chunk_stats")
+    assert stats.count() > 0
+    assert stats.count() == stats.select("conv_id", "path").distinct().count()
+
+
 def test_mid_stage_kill_resumes_per_conv_range(
-    spark, template_df, template_meta_df, clean_run, tmp_path
+    spark, template_df, template_meta_df, clean_run, tmp_path, monkeypatch
 ):
-    """Kill INSIDE the hub stage after 2 of 4 conversation-range records:
-    resume completes only the missing ranges (completed range records are
-    not rewritten) and converges to a clean run's counts and hub rows."""
+    """Kill after the hub job commits but before its checkpoint record:
+    the resume rewrites the hub exactly once and converges to a clean
+    run's counts and hub rows. The new record's lineage sums to the input
+    turns and lies only under the hub's ``conv_bucket=0..31`` dirs."""
     out = str(tmp_path / "midstage")
+    path = f"{out}/classified"
     cfg = PipelineConfig(logging_enabled=True)
-    from aws_log_ingestion_spark.plans.job import prepare
+    record = ckpt.CheckpointLog.record
 
+    def killed(self, stage, payload):
+        if stage == "classified":
+            raise RuntimeError("injected kill before the hub record")
+        record(self, stage, payload)
+
+    with monkeypatch.context() as m:
+        m.setattr(ckpt.CheckpointLog, "record", killed)
+        with pytest.raises(RuntimeError, match="injected kill"):
+            run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
     log = ckpt.CheckpointLog(out)
-    hub_df = prepare(template_df, template_meta_df, cfg)
-    with pytest.raises(RuntimeError, match="injected kill"):
-        ckpt.observed_write_bucketed(
-            hub_df, f"{out}/classified", log, "classified", fail_after_batches=2
-        )
-    done = [k for k in range(4) if log.read(f"classified.b{k}") is not None]
-    assert len(done) == 2
-    times = {k: log.read(f"classified.b{k}")["wall_time"] for k in done}
+    assert not os.listdir(log.dir)
+    assert [d for d in os.listdir(path) if d.startswith("conv_bucket=")]
 
+    writes = []
+    write = ckpt.write_parquet
+
+    def counted(df, target, *a, **k):
+        writes.append(target)
+        write(df, target, *a, **k)
+
+    monkeypatch.setattr(ckpt, "write_parquet", counted)
     result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
     _, counts, hub_rows = clean_run
+    assert writes.count(path) == 1
     assert result["counts"] == counts
     assert _hub_rows(spark, out) == hub_rows
-    for k, t in times.items():
-        assert log.read(f"classified.b{k}")["wall_time"] == t, f"range batch {k} rewritten"
-    assert sum(log.read(f"classified.b{k}")["rows"] for k in range(4)) == template_df.count()
-    # lineage covers every bucket exactly once across batches
-    buckets = [b for k in range(4) for b in log.read(f"classified.b{k}")["buckets"]]
-    assert sorted(buckets) == list(range(32))
+    rec = log.read("classified")
+    n_turns = template_df.count()
+    assert rec["rows"] == n_turns
+    assert sum(e["rows"] for e in rec["lineage"]) == n_turns
+    buckets = {f"conv_bucket={b}" for b in range(ckpt.N_BUCKETS)}
+    assert {e["file"].split("/", 1)[0] for e in rec["lineage"]} <= buckets
 
 
 def _bucket_files(path: str, buckets) -> dict[str, tuple[int, int]]:
@@ -191,26 +214,29 @@ def _sql_executions_for_group(spark, group: str) -> list[int]:
 def test_resume_of_two_pending_ranges_is_one_write_job(
     spark, template_df, template_meta_df, tmp_path
 ):
-    """Ranges 0 and 1 committed, 2 and 3 pending: the resume writes both
-    pending ranges in ONE job (not one per range) and leaves the committed
-    ranges' parquet files untouched, byte for byte and mtime."""
-    out = str(tmp_path / "two_pending")
+    """A dir holding stale hub output and no hub record: the resume
+    writes the hub in ONE SQL execution and no stale file survives, not
+    even in a bucket dir the new data never writes (a dynamic partition
+    overwrite alone would keep it)."""
+    out = str(tmp_path / "stale_hub")
     path = f"{out}/classified"
     cfg = PipelineConfig(logging_enabled=True)
     from aws_log_ingestion_spark.plans.job import prepare
 
     log = ckpt.CheckpointLog(out)
     hub_df = prepare(template_df, template_meta_df, cfg)
-    with pytest.raises(RuntimeError, match="injected kill"):
-        ckpt.observed_write_bucketed(hub_df, path, log, "classified", fail_after_batches=2)
-    assert [k for k in range(4) if log.is_done(f"classified.b{k}")] == [0, 1]
-    done_buckets = [b for k in (0, 1) for b in log.read(f"classified.b{k}")["buckets"]]
-    committed = _bucket_files(path, done_buckets)
-    assert committed
+    ckpt.observed_write_bucketed(hub_df, path, log, "classified")
+    os.remove(os.path.join(log.dir, "classified.json"))
+    stale = _bucket_files(path, range(ckpt.N_BUCKETS))
+    orphan = os.path.join(path, "conv_bucket=99")
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "part-stale.parquet"), "wb") as f:
+        f.write(b"stale")
+    assert stale
 
     sc = spark.sparkContext
     group = f"hub_resume_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "resume of ranges 2 and 3")
+    sc.setJobGroup(group, "hub resume over stale output")
     try:
         total = ckpt.observed_write_bucketed(hub_df, path, log, "classified")
     finally:
@@ -218,15 +244,15 @@ def test_resume_of_two_pending_ranges_is_one_write_job(
         sc.setLocalProperty("spark.job.description", None)
     assert len(_sql_executions_for_group(spark, group)) == 1
     assert total == template_df.count()
-    assert _bucket_files(path, done_buckets) == committed
-    buckets = [b for k in range(4) for b in log.read(f"classified.b{k}")["buckets"]]
-    assert sorted(buckets) == list(range(32))
+    assert not os.path.exists(orphan)
+    assert not set(_bucket_files(path, range(ckpt.N_BUCKETS))) & set(stale)
+    assert sum(e["rows"] for e in log.read("classified")["lineage"]) == total
 
 
 def test_task_failure_in_hub_job_publishes_nothing(
     spark, template_df, template_meta_df, clean_run, tmp_path
 ):
-    """A task failing inside the single hub job aborts it whole: no range
+    """A task failing inside the single hub job aborts it whole: no hub
     record, no published bucket dir. A rerun on clean input converges to
     a clean run's counts and hub rows."""
     out = str(tmp_path / "task_failure")
