@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig, resolve_logging_endpoint
 from ..operators import checkpoint as ckpt
-from ..operators import chunks as chunk_op
 from ..operators.classify import classify
 from ..operators.enrich import enrich
 from ..operators.melt import with_melt_fills, with_melt_fills_salted
@@ -105,6 +104,51 @@ def prepare(
     )
 
 
+#: the ``chunk_stats`` (sink, path) pairs and the summed columns that
+#: ``chunk_totals_fast`` rolls up
+_CHUNK_PAIRS = [(s, p) for p in ("infra", "logging") for s in INFRA_SINKS]
+_CHUNK_SUMS = ("n_events", "n_chunks", "raw_bytes")
+
+
+def _chunk_total_exprs() -> list:
+    """``chunk_totals_fast`` as ``observe()`` aggregates: per (sink, path)
+    pair, its row count and the sums of ``_CHUNK_SUMS``. The row count is
+    ``n_convs`` because ``chunk_stats`` holds one row per (conv_id, path)
+    (tests/test_job_end_to_end.py)."""
+    exprs = []
+    for s, p in _CHUNK_PAIRS:
+        hit = (F.col("sink") == s) & (F.col("path") == p)
+        exprs.append(F.count(F.when(hit, 1)).alias(f"{s}_{p}_n_convs"))
+        exprs += [F.sum(F.when(hit, F.col(c))).alias(f"{s}_{p}_{c}") for c in _CHUNK_SUMS]
+    return exprs
+
+
+def _chunk_totals(metrics: dict) -> list[dict]:
+    """The observed ``_chunk_total_exprs`` as ``chunk_totals_fast`` rows,
+    one per (sink, path) pair that has conversations."""
+    return [
+        {
+            "sink": s,
+            "path": p,
+            "n_convs": metrics[f"{s}_{p}_n_convs"],
+            **{c: metrics[f"{s}_{p}_{c}"] for c in _CHUNK_SUMS},
+        }
+        for s, p in _CHUNK_PAIRS
+        if metrics[f"{s}_{p}_n_convs"]
+    ]
+
+
+def codegen_compilations(spark: SparkSession) -> int | None:
+    """Classes the session's JVM has compiled from generated code so far
+    (Spark's ``CodegenMetrics`` compilation count), or None when the
+    counter cannot be read."""
+    try:
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(metrics.METRIC_COMPILATION_TIME().getCount())
+    except Exception:
+        return None
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -121,6 +165,7 @@ def run_pipeline(
     stage: a kill anywhere before the hub's record (during its job, or
     after the job but before the record) rewrites the whole hub once."""
     cfg = cfg or PipelineConfig()
+    codegen_start = codegen_compilations(spark)
     log = ckpt.CheckpointLog(out_dir)
     if not resume:
         log.clear()
@@ -178,13 +223,23 @@ def run_pipeline(
             # of conversations are answered by pure-Catalyst byte
             # arithmetic — zero Python, zero gzip. The exact-gz-bytes
             # replay (chunk_replay) remains available for byte-level audits.
-            ckpt.write_parquet(df, path, partition_by, order_by)
-            totals = chunk_op.chunk_totals_fast(spark.read.parquet(path)).collect()
+            # The totals ride the write as observe() sums: no re-read.
+            obs = Observation("obs_chunks")
+            ckpt.write_parquet(
+                df.observe(obs, *_chunk_total_exprs()), path, partition_by, order_by
+            )
+            totals = _chunk_totals(obs.get)
+            now = codegen_compilations(spark)
             log.record(
                 "chunks",
                 {
-                    "totals": [r.asDict() for r in totals],
-                    "rows": int(sum(r["n_chunks"] for r in totals)),
+                    "totals": totals,
+                    "rows": sum(t["n_chunks"] for t in totals),
+                    # classes compiled since this call began: a generated-
+                    # class cache too small for the plans shows up here
+                    "codegen_classes": None
+                    if codegen_start is None or now is None
+                    else now - codegen_start,
                 },
             )
 

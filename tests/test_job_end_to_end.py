@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators import checkpoint as ckpt
+from aws_log_ingestion_spark.operators.chunks import chunk_totals_fast
 from aws_log_ingestion_spark.plans.job import run_pipeline
 from aws_log_ingestion_spark.sources import datagen
 from reference_oracle import (
@@ -40,6 +41,10 @@ def _expected_counts():
             counts["infra_other_rows"] += len(rows)
         counts["logging_rows"] += len(rows)  # unfiltered tee (reference :270)
     return counts
+
+
+def _sorted_items(d: dict) -> tuple:
+    return tuple(sorted(d.items()))
 
 
 def _hub_rows(spark, out_dir):
@@ -78,11 +83,17 @@ def test_sink_files_ordered_and_readable(spark, clean_run):
     assert [r["text"] for r in got] == [datagen.NR_SHORT, datagen.REPORT]
 
 
-def test_chunk_manifest_written(clean_run):
+def test_chunk_manifest_written(spark, clean_run):
     run_dir, _, _ = clean_run
     manifest = ckpt.read_manifest(None, run_dir)
     assert "chunks" in manifest
     totals = manifest["chunks"]["totals"]
+    # the totals observed on the write equal a rollup of what it wrote
+    rollup = chunk_totals_fast(spark.read.parquet(f"{run_dir}/chunk_stats")).collect()
+    assert sorted(map(_sorted_items, totals)) == sorted(
+        _sorted_items(r.asDict()) for r in rollup
+    )
+    assert manifest["chunks"]["rows"] == sum(t["n_chunks"] for t in totals)
     assert {t["path"] for t in totals} == {"infra", "logging"}
     by = {(t["sink"], t["path"]): t for t in totals}
     # logging tee covers every conversation regardless of sink
