@@ -7,10 +7,11 @@ commit atomicity is the sink write, and JOB-level resume is this module —
 a checkpoint table recording, per stage and sink, row counts and
 per-partition lineage, written after each successful sink commit. A
 re-run consults the manifest and skips (or verifies) completed sinks, so
-a mid-job kill converges to identical per-sink counts. The hub is one
-write with one record (``observed_write_bucketed``). ``write_parquet``
-is the package's one DataFrame parquet writer; every runner commits
-through it.
+a mid-job kill converges to identical per-sink counts. Every
+``run_pipeline`` stage commits through ``commit_stage``, which counts on
+the write itself (an Iceberg snapshot summary, not a rescan).
+``write_parquet`` is the package's one DataFrame parquet writer; every
+runner commits through it.
 """
 
 from __future__ import annotations
@@ -199,12 +200,39 @@ def write_parquet(
     writer.parquet(path)
 
 
-def _record_with_lineage(log: CheckpointLog, stage: str, path: str, record: dict) -> None:
-    """Record ``stage`` with the footer lineage of ``path``, which must
-    hold exactly the observed ``record["rows"]``."""
+def checked_lineage(path: str, rows: int) -> list[dict]:
+    """The footer lineage of ``path``, which must hold exactly the
+    observed ``rows``."""
     lineage = file_lineage(path)
-    assert sum(e["rows"] for e in lineage) == record["rows"], "lineage/observe count drift"
-    log.record(stage, {**record, "lineage": lineage})
+    assert sum(e["rows"] for e in lineage) == rows, f"{path}: lineage/observe count drift"
+    return lineage
+
+
+def commit_stage(
+    df: DataFrame, path: str, log: CheckpointLog, stage: str, partition_by=(), order_by=(),
+    metrics=(), payload=None, mode: str = "overwrite",
+) -> dict:
+    """The one parquet stage commit; returns the stage's record.
+
+    A recorded stage is skipped (idempotent resume). Otherwise one
+    ``observe()`` on the ``write_parquet`` job counts ``rows`` and
+    evaluates ``metrics``; the footer lineage must sum to ``rows``; and
+    the stage is recorded once with ``rows``, ``path``, ``lineage`` and
+    ``payload(observed)``, which may override ``rows``.
+    """
+    prior = log.read(stage)
+    if prior is not None:
+        return prior
+    obs = Observation(f"obs_{stage}")
+    write_parquet(
+        df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics),
+        path, partition_by, order_by, mode,
+    )
+    got = obs.get
+    record = {"rows": got["rows"], "path": path, "lineage": checked_lineage(path, got["rows"])}
+    record.update(payload(got) if payload else {})
+    log.record(stage, record)
+    return record
 
 
 def observed_write(
@@ -216,7 +244,7 @@ def observed_write(
     extra: dict | None = None,
 ) -> int:
     """Write one sink with observe() metrics + checkpoint record: Iceberg
-    ``writeTo`` when a catalog is usable, ``write_parquet`` otherwise.
+    ``writeTo`` when a catalog is usable, ``commit_stage`` otherwise.
 
     Returns the row count. If the stage is already checkpointed, the
     write is skipped and the recorded count returned (idempotent resume).
@@ -225,21 +253,19 @@ def observed_write(
     prior = log.read(stage)
     if prior is not None:
         return prior["rows"]
+    fmt = sink_format(df.sparkSession)
+    if fmt["format"] == "parquet":
+        payload = {**fmt, **(extra or {})}
+        return commit_stage(df, path, log, stage, (), order_cols, payload=lambda _: payload)["rows"]
     obs = Observation(f"obs_{stage}")
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    fmt = sink_format(df.sparkSession)
-    if fmt["format"] == "iceberg":
-        table = f"{fmt['catalog']}.{ICEBERG_NAMESPACE}.{stage}"
-        # createOrReplace = one atomic snapshot commit per stage — the
-        # Iceberg analog of the parquet overwrite + manifest record
-        observed.sortWithinPartitions(*order_cols).writeTo(table).using(
-            "iceberg"
-        ).createOrReplace()
-        log.record(stage, {"rows": obs.get["rows"], **fmt, "table": table, **(extra or {})})
-    else:
-        write_parquet(observed, path, order_by=order_cols)
-        record = {"rows": obs.get["rows"], **fmt, "path": path, **(extra or {})}
-        _record_with_lineage(log, stage, path, record)
+    table = f"{fmt['catalog']}.{ICEBERG_NAMESPACE}.{stage}"
+    # createOrReplace = one atomic snapshot commit per stage — the
+    # Iceberg analog of the parquet overwrite + manifest record
+    observed.sortWithinPartitions(*order_cols).writeTo(table).using(
+        "iceberg"
+    ).createOrReplace()
+    log.record(stage, {"rows": obs.get["rows"], **fmt, "table": table, **(extra or {})})
     return obs.get["rows"]
 
 
@@ -259,11 +285,9 @@ def observed_write_bucketed(df: DataFrame, path: str, log: CheckpointLog, stage:
     """The hub write: one Spark job, one checkpoint record.
 
     Conversations hash into ``N_BUCKETS`` ``conv_bucket=`` directories,
-    each sorted by ``HUB_ORDER`` within its files. One ``observe()``
-    counts the rows and one footer listing supplies the lineage, which
-    must sum to that count; then ``stage`` is recorded. If the stage is
-    already recorded, the write is skipped and the recorded count
-    returned.
+    each sorted by ``HUB_ORDER`` within its files, and ``commit_stage``
+    records the stage with ``buckets``. If the stage is already
+    recorded, the write is skipped and the recorded count returned.
 
     Without a record the old output is removed first: dynamic partition
     overwrite only replaces the buckets present in the new data, so a
@@ -280,14 +304,10 @@ def observed_write_bucketed(df: DataFrame, path: str, log: CheckpointLog, stage:
     if prior is not None:
         return prior["rows"]
     shutil.rmtree(path, ignore_errors=True)
-    obs = Observation(f"obs_{stage}")
-    observed = df.withColumn("conv_bucket", conv_bucket()).observe(
-        obs, F.count(F.lit(1)).alias("rows")
-    )
-    write_parquet(observed, path, ["conv_bucket"], HUB_ORDER, mode="dynamic")
-    record = {"rows": obs.get["rows"], "path": path, "buckets": N_BUCKETS}
-    _record_with_lineage(log, stage, path, record)
-    return record["rows"]
+    return commit_stage(
+        df.withColumn("conv_bucket", conv_bucket()), path, log, stage, ["conv_bucket"], HUB_ORDER,
+        payload=lambda _: {"buckets": N_BUCKETS}, mode="dynamic",
+    )["rows"]
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> dict:

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 
 from ..config import PipelineConfig
 from ..functions import chunking as C
+from .classify import SINK_LAMBDA, SINK_OTHER, SINK_VPC
 
 CHUNK_STATS_SCHEMA = StructType(
     [
@@ -156,6 +157,14 @@ def _group_stats_factory(path: str, cfg: PipelineConfig):
     return stats
 
 
+def _shuffle_partitions(df: DataFrame) -> int:
+    """``spark.sql.shuffle.partitions``, else the default parallelism."""
+    try:
+        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return df.sparkSession.sparkContext.defaultParallelism
+
+
 def chunk_replay(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> DataFrame:
     """Per-conversation chunk statistics via exact gzip-halving replay.
 
@@ -175,11 +184,7 @@ def chunk_replay(df: DataFrame, path: str, cfg: PipelineConfig | None = None) ->
     # clustering (no second exchange). Scale-adaptive: the count comes
     # from spark.sql.shuffle.partitions (sized per deployment), not a
     # constant (guide §2.5/§2.2).
-    try:
-        n_parts = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_parts = slim.sparkSession.sparkContext.defaultParallelism
-    return slim.repartition(n_parts, "conv_id").groupBy("conv_id").applyInPandas(
+    return slim.repartition(_shuffle_partitions(slim), "conv_id").groupBy("conv_id").applyInPandas(
         _group_stats_factory(path, cfg), CHUNK_STATS_SCHEMA
     )
 
@@ -609,10 +614,7 @@ def chunk_counts_fast(
     # same AQE-mis-sizing guard as chunk_replay: the ambiguous-band walk
     # is Python-CPU-heavy per conversation, so pin its parallelism to the
     # session's shuffle-partition count rather than its (tiny) byte size
-    try:
-        n_parts = int(big.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_parts = big.sparkSession.sparkContext.defaultParallelism
+    n_parts = _shuffle_partitions(big)
     big_stats = big.repartition(n_parts, "conv_id").groupBy("conv_id").applyInPandas(
         walk, FAST_STATS_SCHEMA
     )
@@ -642,6 +644,35 @@ def chunk_totals_fast(stats: DataFrame) -> DataFrame:
         F.sum("n_chunks").alias("n_chunks"),
         F.sum("raw_bytes").alias("raw_bytes"),
     )
+
+
+#: the ``chunk_stats`` (sink, path) pairs and the summed columns that
+#: ``chunk_totals_fast`` rolls up
+_CHUNK_PAIRS = [(s, p) for p in ("infra", "logging") for s in (SINK_LAMBDA, SINK_VPC, SINK_OTHER)]
+_CHUNK_SUMS = ("n_events", "n_chunks", "raw_bytes")
+
+
+def chunk_total_exprs() -> list:
+    """``chunk_totals_fast`` as ``observe()`` aggregates: per (sink, path)
+    pair, its row count and the sums of ``_CHUNK_SUMS``. The row count is
+    ``n_convs`` because ``chunk_stats`` holds one row per (conv_id, path)
+    (tests/test_job_end_to_end.py)."""
+    exprs = []
+    for s, p in _CHUNK_PAIRS:
+        hit = (F.col("sink") == s) & (F.col("path") == p)
+        exprs.append(F.count(F.when(hit, 1)).alias(f"{s}_{p}_n_convs"))
+        exprs += [F.sum(F.when(hit, F.col(c))).alias(f"{s}_{p}_{c}") for c in _CHUNK_SUMS]
+    return exprs
+
+
+def observed_chunk_totals(metrics: dict) -> list[dict]:
+    """The observed ``chunk_total_exprs`` as ``chunk_totals_fast`` rows,
+    one per (sink, path) pair that has conversations."""
+    return [
+        {"sink": s, "path": p, **{c: metrics[f"{s}_{p}_{c}"] for c in ("n_convs", *_CHUNK_SUMS)}}
+        for s, p in _CHUNK_PAIRS
+        if metrics[f"{s}_{p}_n_convs"]
+    ]
 
 
 def chunk_totals(stats: DataFrame) -> DataFrame:

@@ -97,6 +97,8 @@ def classify(
     agg skew-immune, and the join's hot partition is AQE-skew-splittable
     (a window partition is not). Chosen by plans.job.prepare's skew probe
     for corpora with a conversation above the per-task row threshold.
+    It covers the sink flag only (with ``fill_request_ids`` it raises
+    ValueError; the salted fill is ``melt.with_melt_fills_salted``'s).
     """
     cfg = cfg or PipelineConfig()
     if "log_group" not in df.columns:
@@ -128,9 +130,7 @@ def classify(
         return df.withColumn("sink", sink).drop("__any_lambda")
 
     if skew_safe:
-        df = df.withColumn("__rid_masked", F.when(is_lambda_group, F.col("req_id_raw")))
-        df = forward_fill_salted(df, "__rid_masked", "lambda_request_id")
-        return df.withColumn("sink", sink).drop("__any_lambda", "__rid_masked")
+        raise ValueError("skew_safe covers the sink flag only; pass fill_request_ids=False")
 
     # Request-id fill only applies under the lambda log-group prefix
     # (:538): the extract is masked, then carried forward.

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions import patterns as P
-from .chunks import sink_chunk_counts
+from .chunks import chunk_total_exprs, sink_chunk_counts
 from .classify import SINK_LAMBDA, SINK_OTHER, SINK_VPC
 from .melt import melt_project
 
@@ -103,24 +103,33 @@ def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> Dat
 def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     """The fan-out every runner shares: build each enabled sink's frame
     from the hub and hand it to ``commit(name, df, partition_by,
-    order_by)``, in the order infra, logging, chunk_stats. The commit
-    owns the write: ``checkpoint.write_parquet`` with the partition and
-    order columns fixed here, in its checkpointed overwrite, per-batch
-    dynamic overwrite or streaming append mode.
+    order_by, metrics)``, in the order infra, logging, chunk_stats. The
+    commit owns the write: ``checkpoint.write_parquet`` with the
+    partition and order columns fixed here, in its checkpointed
+    overwrite, per-batch dynamic overwrite or streaming append mode.
+    ``metrics`` are the ``observe()`` aggregates a counting commit puts
+    on the write, so no runner re-reads a sink to count it.
 
-    - ``infra``: ``infra_union``, partitioned by ``sink``.
+    - ``infra``: ``infra_union``, partitioned by ``sink``; observes
+      ``infra_<sink>_rows`` per infra sink.
     - ``logging``: ``melt_project`` (a pure projection when the hub
-      carries the MELT fills).
-    - ``chunk_stats``: ``chunks.sink_chunk_counts``, written unsorted.
+      carries the MELT fills); observes ``logging_rows``.
+    - ``chunk_stats``: ``chunks.sink_chunk_counts``, written unsorted;
+      observes the per-(sink, path) ``chunks.chunk_total_exprs``.
     """
+    order = ["conv_id", "turn_idx"]
     infra = infra_union(hub, cfg) if cfg.infra_enabled else None
     if infra is not None:
-        commit("infra", infra, ["sink"], ["conv_id", "turn_idx"])
+        per_sink = [
+            F.count(F.when(F.col("sink") == s, 1)).alias(f"infra_{s}_rows") for s in INFRA_SINKS
+        ]
+        commit("infra", infra, ["sink"], order, per_sink)
     if cfg.logging_enabled:
-        commit("logging", melt_project(hub, cfg), [], ["conv_id", "turn_idx"])
+        rows = [F.count(F.lit(1)).alias("logging_rows")]
+        commit("logging", melt_project(hub, cfg), [], order, rows)
     stats = sink_chunk_counts(infra, hub if cfg.logging_enabled else None, cfg)
     if stats is not None:
-        commit("chunk_stats", stats, [], [])
+        commit("chunk_stats", stats, [], [], chunk_total_exprs())
 
 
 def route_count_exprs(

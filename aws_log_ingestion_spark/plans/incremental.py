@@ -46,9 +46,10 @@ while doing per-run work proportional to the NEW data:
 Read contract: a sink's rows are ``live_rows(spark, out_dir, sink)`` —
 the raw sink minus the committed tombstones. A raw ``spark.read`` of a
 sink root still holds superseded conversations. The hub needs no
-tombstones (``hub_lookup`` and raw reads are exact). Per-sink counts
-stay footer-only: each batch record carries the rows its tombstones
-delete, and ``run_incremental`` subtracts them.
+tombstones (``hub_lookup`` and raw reads are exact). Counts carry
+forward, as in an Iceberg snapshot summary: a batch record's ``counts``
+are the previous record's, plus what this batch's sink writes observed,
+minus the rows its tombstones delete; no earlier batch's files are read.
 
 Single-writer contract: one incremental run mutates an out_dir at a
 time (the checkpoint manifest is a ledger, not a lock). Iceberg's
@@ -120,29 +121,6 @@ def _cfg_fingerprint(cfg: PipelineConfig) -> dict:
     fp = {k: (sorted(v.items()) if isinstance(v, dict) else v)
           for k, v in dataclasses.asdict(cfg).items()}
     return json.loads(json.dumps(fp))
-
-
-def _counts_from_lineage(
-    out_dir: str, logging_enabled: bool, deleted: list[dict]
-) -> dict[str, int]:
-    """Per-sink live row counts straight from parquet footers across ALL
-    batches, minus the rows each batch's tombstones delete (``deleted``:
-    one per-sink dict per batch) — no Spark job. On Iceberg this is a
-    manifest aggregate."""
-    counts = {f"infra_{s}_rows": 0 for s in INFRA_SINKS}
-    for entry in ckpt.file_lineage(os.path.join(out_dir, "infra")):
-        for s in INFRA_SINKS:
-            if f"sink={s}/" in entry["file"]:
-                counts[f"infra_{s}_rows"] += entry["rows"]
-                break
-    if logging_enabled:
-        counts["logging_rows"] = sum(
-            e["rows"] for e in ckpt.file_lineage(os.path.join(out_dir, "logging"))
-        )
-    for d in deleted:
-        for k in counts:
-            counts[k] -= d.get(k, 0)
-    return counts
 
 
 def _write_batch_partition(
@@ -241,11 +219,14 @@ def run_incremental(
             f"input files are append-only; recorded files missing from "
             f"{in_dir}: {missing}"
         )
-    deleted = [rec.get("deleted", {}) for rec in batches]
+    counts = dict.fromkeys([f"infra_{s}_rows" for s in INFRA_SINKS], 0)
+    if cfg.logging_enabled:
+        counts["logging_rows"] = 0
+    counts.update(batches[-1]["counts"] if batches else {})
     new_files = [f for f in current if f["file"] not in known]
     if not new_files:
         return {
-            "counts": _counts_from_lineage(out_dir, cfg.logging_enabled, deleted),
+            "counts": counts,
             "batch_id": None,
             "new_files": [],
             "superseded_convs": 0,
@@ -258,7 +239,6 @@ def run_incremental(
     staged_tombstones = os.path.join(staging, TOMBSTONES)
     tombstones = os.path.join(out_dir, TOMBSTONES, f"by_batch={batch_id}")
     hub_root = os.path.join(out_dir, "classified")
-    stats_root = os.path.join(out_dir, "chunk_stats")
 
     new_turns = spark.read.parquet(
         *[os.path.join(in_dir, f["file"]) for f in new_files]
@@ -402,13 +382,22 @@ def run_incremental(
         F.col("ingest_batch") == batch_id
     ).drop("ingest_batch", "conv_bucket")
 
-    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
+    observed: dict[str, dict] = {}
+
+    def commit(name, df, partition_by, order_by, metrics) -> None:
+        # observed below the literal ingest_batch, so the write's sort can
+        # still drop that constant key; only this batch's footers are read
+        obs = Observation(f"obs_{name}")
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
+        root = os.path.join(out_dir, name)
         _write_batch_partition(
             df.withColumn("ingest_batch", F.lit(batch_id)),
-            os.path.join(out_dir, name),
+            root,
             ["ingest_batch", *partition_by],
             order_by,
         )
+        observed[name] = obs.get
+        ckpt.checked_lineage(f"{root}/ingest_batch={batch_id}", observed[name]["rows"])
 
     write_sinks(batch_hub, cfg, commit)
 
@@ -442,17 +431,10 @@ def run_incremental(
         raise RuntimeError("injected kill at cow")
 
     # --- totals + batch record (LAST: marks the files as ingested) ------
-    counts = _counts_from_lineage(
-        out_dir, cfg.logging_enabled, deleted + [staged["deleted"]]
-    )
-    chunk_totals = []
-    if os.path.isdir(stats_root):
-        chunk_totals = [
-            r.asDict()
-            for r in chunk_op.chunk_totals_fast(
-                live_rows(spark, out_dir, "chunk_stats").drop("ingest_batch")
-            ).collect()
-        ]
+    added = {**observed.get("infra", {}), **observed.get("logging", {})}
+    counts = {k: v + added.get(k, 0) - staged["deleted"].get(k, 0) for k, v in counts.items()}
+    stats = observed.get("chunk_stats")
+    chunk_totals = chunk_op.observed_chunk_totals(stats) if stats else []
     log.record(
         bstage,
         {

@@ -25,10 +25,11 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig, resolve_logging_endpoint
 from ..operators import checkpoint as ckpt
+from ..operators import chunks as chunk_op
 from ..operators.classify import classify
 from ..operators.enrich import enrich
 from ..operators.melt import with_melt_fills, with_melt_fills_salted
@@ -104,40 +105,6 @@ def prepare(
     )
 
 
-#: the ``chunk_stats`` (sink, path) pairs and the summed columns that
-#: ``chunk_totals_fast`` rolls up
-_CHUNK_PAIRS = [(s, p) for p in ("infra", "logging") for s in INFRA_SINKS]
-_CHUNK_SUMS = ("n_events", "n_chunks", "raw_bytes")
-
-
-def _chunk_total_exprs() -> list:
-    """``chunk_totals_fast`` as ``observe()`` aggregates: per (sink, path)
-    pair, its row count and the sums of ``_CHUNK_SUMS``. The row count is
-    ``n_convs`` because ``chunk_stats`` holds one row per (conv_id, path)
-    (tests/test_job_end_to_end.py)."""
-    exprs = []
-    for s, p in _CHUNK_PAIRS:
-        hit = (F.col("sink") == s) & (F.col("path") == p)
-        exprs.append(F.count(F.when(hit, 1)).alias(f"{s}_{p}_n_convs"))
-        exprs += [F.sum(F.when(hit, F.col(c))).alias(f"{s}_{p}_{c}") for c in _CHUNK_SUMS]
-    return exprs
-
-
-def _chunk_totals(metrics: dict) -> list[dict]:
-    """The observed ``_chunk_total_exprs`` as ``chunk_totals_fast`` rows,
-    one per (sink, path) pair that has conversations."""
-    return [
-        {
-            "sink": s,
-            "path": p,
-            "n_convs": metrics[f"{s}_{p}_n_convs"],
-            **{c: metrics[f"{s}_{p}_{c}"] for c in _CHUNK_SUMS},
-        }
-        for s, p in _CHUNK_PAIRS
-        if metrics[f"{s}_{p}_n_convs"]
-    ]
-
-
 def codegen_compilations(spark: SparkSession) -> int | None:
     """Classes the session's JVM has compiled from generated code so far
     (Spark's ``CodegenMetrics`` compilation count), or None when the
@@ -181,31 +148,34 @@ def run_pipeline(
 
     counts: dict[str, int] = {}
 
-    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
+    def infra_record(observed: dict) -> dict:
+        return {
+            "per_sink": {s: observed[f"infra_{s}_rows"] for s in INFRA_SINKS},
+            # routing metadata: the region-resolved ingest URL each sink
+            # partition would ship to (reference :384-393)
+            "endpoints": {s: infra_url(s, cfg) for s in INFRA_SINKS},
+        }
+
+    def chunks_record(observed: dict) -> dict:
+        totals = chunk_op.observed_chunk_totals(observed)
+        now = codegen_compilations(spark)
+        return {
+            "totals": totals,
+            "rows": sum(t["n_chunks"] for t in totals),
+            # classes compiled since this call began: a generated-class
+            # cache too small for the plans shows up here
+            "codegen_classes": None
+            if codegen_start is None or now is None
+            else now - codegen_start,
+        }
+
+    def commit(name, df, partition_by, order_by, metrics) -> None:
         path = f"{out_dir}/{name}"
         if name == "infra":
             # one partitioned write replaces three filtered jobs
-            if not log.is_done("infra"):
-                obs = Observation("obs_infra")
-                observed = df.observe(
-                    obs,
-                    *[F.sum((F.col("sink") == s).cast("long")).alias(s) for s in INFRA_SINKS],
-                )
-                ckpt.write_parquet(observed, path, partition_by, order_by)
-                per_sink = {s: int(obs.get[s] or 0) for s in INFRA_SINKS}
-                log.record(
-                    "infra",
-                    {
-                        "rows": sum(per_sink.values()),
-                        "per_sink": per_sink,
-                        # routing metadata: the region-resolved ingest URL
-                        # each sink partition would ship to (reference
-                        # :384-393)
-                        "endpoints": {s: infra_url(s, cfg) for s in INFRA_SINKS},
-                        "lineage": ckpt.file_lineage(path),
-                    },
-                )
-            per_sink = log.read("infra")["per_sink"]
+            per_sink = ckpt.commit_stage(
+                df, path, log, "infra", partition_by, order_by, metrics, infra_record
+            )["per_sink"]
             for s in INFRA_SINKS:
                 counts[f"infra_{s}_rows"] = per_sink[s]
         elif name == "logging":
@@ -217,30 +187,14 @@ def run_pipeline(
                 order_cols=order_by,
                 extra={"endpoint": resolve_logging_endpoint(cfg)},
             )
-        elif not log.is_done("chunks"):
+        else:
             # chunk_counts_fast: n_chunks is bit-identical to the gzip
             # replay (tests/test_jsoncost.py) but the overwhelming majority
             # of conversations are answered by pure-Catalyst byte
             # arithmetic — zero Python, zero gzip. The exact-gz-bytes
             # replay (chunk_replay) remains available for byte-level audits.
-            # The totals ride the write as observe() sums: no re-read.
-            obs = Observation("obs_chunks")
-            ckpt.write_parquet(
-                df.observe(obs, *_chunk_total_exprs()), path, partition_by, order_by
-            )
-            totals = _chunk_totals(obs.get)
-            now = codegen_compilations(spark)
-            log.record(
-                "chunks",
-                {
-                    "totals": totals,
-                    "rows": sum(t["n_chunks"] for t in totals),
-                    # classes compiled since this call began: a generated-
-                    # class cache too small for the plans shows up here
-                    "codegen_classes": None
-                    if codegen_start is None or now is None
-                    else now - codegen_start,
-                },
+            ckpt.commit_stage(
+                df, path, log, "chunks", partition_by, order_by, metrics, chunks_record
             )
 
     write_sinks(hub, cfg, commit)

@@ -39,7 +39,8 @@ def make_batch_processor(
     tests/test_stateful_streaming.py and tests/test_sink_fanout.py."""
     cfg = cfg or PipelineConfig()
 
-    def commit(name: str, df: DataFrame, partition_by: list[str], order_by: list[str]) -> None:
+    def commit(name, df, partition_by, order_by, _metrics) -> None:
+        # a micro-batch keeps no per-sink record, so it observes nothing
         write_parquet(df, f"{out_dir}/{name}", partition_by, order_by, mode="append")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -22,6 +22,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.config import PipelineConfig
+from aws_log_ingestion_spark.operators import checkpoint as ckpt
+from aws_log_ingestion_spark.operators.chunks import chunk_totals_fast
 from aws_log_ingestion_spark.plans.incremental import live_rows, run_incremental
 from aws_log_ingestion_spark.plans.job import run_pipeline
 from aws_log_ingestion_spark.sources.derive import (
@@ -145,6 +147,10 @@ def _compare_outputs(spark, inc_out, one_out):
         _assert_same_rows(got, want, sink)
 
 
+def _sorted_items(d: dict) -> tuple:
+    return tuple(sorted(d.items()))
+
+
 def _sink_files(out_dir, batches):
     """{path: (size, mtime_ns)} of every sink file of the given batches."""
     files = {}
@@ -234,6 +240,21 @@ def test_b2_old_sinks_tombstoned_not_rewritten(spark, env):
         assert old_raw.count() > 0, sink
         assert old_live.count() == 0, sink
         assert live.filter(F.col("conv_id").isin(extended)).count() > 0, sink
+
+
+def test_batch_records_hold_own_chunk_totals(spark, env):
+    """Each batch record's ``chunk_totals`` are that batch's own
+    ``chunk_stats`` rolled up, as observed on its write."""
+    log = ckpt.CheckpointLog(env["out"])
+    for k in range(3):
+        rec = log.read(f"ingest.b{k}")
+        rollup = chunk_totals_fast(
+            spark.read.parquet(f"{env['out']}/chunk_stats/ingest_batch={k}")
+        ).collect()
+        assert rec["chunk_totals"], k
+        assert sorted(map(_sorted_items, rec["chunk_totals"])) == sorted(
+            _sorted_items(r.asDict()) for r in rollup
+        ), k
 
 
 def test_noop_when_no_new_files(spark, env):
@@ -511,6 +532,27 @@ def test_files_arriving_during_new_batch_recovery_restage(
     _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
     result = run_incremental(spark, in_dir, out, CFG)
     assert result["batch_id"] == 1
+    one = _oneshot(spark, in_dir, oneshot)
+    assert result["counts"] == one["counts"]
+    _compare_outputs(spark, out, oneshot)
+
+
+def test_append_reads_no_earlier_batch_sink_files(spark, env, tmp_path_factory):
+    """An append counts from the previous batch record plus its own
+    writes: with batch 0's sink files moved away, it still returns the
+    one-shot counts over both batches."""
+    in_dir, out, oneshot = _fresh(tmp_path_factory, env["stage"], "inc_noreread")
+    assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
+    sinks = ("infra", "logging", "chunk_stats")
+    moves = [(os.path.join(out, s, "ingest_batch=0"), f"{out}_{s}_b0") for s in sinks]
+    for src, dst in moves:
+        os.rename(src, dst)
+    _copy_parts(f"{env['stage']}/b", in_dir, "batch_b")  # disjoint from a
+    result = run_incremental(spark, in_dir, out, CFG)
+    for src, dst in moves:
+        os.rename(dst, src)
+    assert result["batch_id"] == 1
+    assert result["superseded_convs"] == 0
     one = _oneshot(spark, in_dir, oneshot)
     assert result["counts"] == one["counts"]
     _compare_outputs(spark, out, oneshot)

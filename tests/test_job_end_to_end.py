@@ -102,6 +102,16 @@ def test_chunk_manifest_written(spark, clean_run):
     # the fast count stage proves counts arithmetically; n_chunks >= convs
     assert all(t["n_chunks"] >= t["n_convs"] for t in totals)
     assert all(t["raw_bytes"] > 0 for t in totals)
+    # every stage record carries its footer lineage, checked against the
+    # rows its write observed: chunk_stats rows (not the n_chunks `rows`)…
+    chunks = manifest["chunks"]
+    assert chunks["path"] == f"{run_dir}/chunk_stats"
+    stats_rows = spark.read.parquet(f"{run_dir}/chunk_stats").count()
+    assert sum(e["rows"] for e in chunks["lineage"]) == stats_rows
+    # …and the infra rows of all three sinks
+    infra = manifest["infra"]
+    assert sum(e["rows"] for e in infra["lineage"]) == sum(infra["per_sink"].values())
+    assert infra["rows"] == sum(infra["per_sink"].values())
 
 
 def test_resume_is_idempotent(spark, template_df, template_meta_df, clean_run):
