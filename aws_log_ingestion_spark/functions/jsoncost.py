@@ -8,7 +8,7 @@ fields. This module turns that observation into:
 
   * Spark ``Column`` builders (``esc_len``, ``event_cost_*_expr``,
     ``empty_len_*_expr``) — the zero-Python cost pre-pass used by
-    ``operators/chunks.py:chunk_counts_fast``;
+    ``operators/chunks.py`` (``_staged``, the one chunk-stage projection);
   * DuckDB SQL fragment builders (the ``*_sql`` twins) — the exact
     oracle for the ``chunk_raw_costs`` driver queries.
 

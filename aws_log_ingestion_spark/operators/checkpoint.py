@@ -23,6 +23,7 @@ import time
 import uuid
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 # Free-text / unique-id string columns. A parquet dictionary attempt on
 # these always overflows its size cap and falls back to plain encoding,
@@ -208,28 +209,62 @@ def checked_lineage(path: str, rows: int) -> list[dict]:
     return lineage
 
 
+def observed_writes(write, df: DataFrame, metrics=(), follow=None) -> dict:
+    """One sink write and its optional follow-up, counted on the writes.
+
+    ``write(df, append=False)`` runs with one ``observe()`` that counts
+    ``rows`` and evaluates ``metrics``. Then, when ``follow`` is given,
+    ``follow()`` is called; a frame it returns goes through
+    ``write(frame, append=True)``, observed the same way. Returns the
+    observed metrics summed over the writes (a sum over no rows is None).
+    """
+
+    def observed(frame: DataFrame, append: bool) -> dict:
+        obs = Observation()
+        write(frame.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics), append)
+        return obs.get
+
+    got = observed(df, False)
+    extra = follow() if follow else None
+    if extra is None:
+        return got
+    more = observed(extra, True)
+    return {
+        k: more[k] if v is None else v if more[k] is None else v + more[k]
+        for k, v in got.items()
+    }
+
+
 def commit_stage(
     df: DataFrame, path: str, log: CheckpointLog, stage: str, partition_by=(), order_by=(),
-    metrics=(), payload=None, mode: str = "overwrite",
+    metrics=(), payload=None, mode: str = "overwrite", follow=None,
 ) -> dict:
     """The one parquet stage commit; returns the stage's record.
 
-    A recorded stage is skipped (idempotent resume). Otherwise one
-    ``observe()`` on the ``write_parquet`` job counts ``rows`` and
-    evaluates ``metrics``; the footer lineage must sum to ``rows``; and
-    the stage is recorded once with ``rows``, ``path``, ``lineage`` and
-    ``payload(observed)``, which may override ``rows``.
+    A recorded stage is skipped (idempotent resume). Otherwise
+    ``write_parquet`` writes ``df`` in ``mode`` and appends the frame
+    ``follow()`` may return (``observed_writes``, whose observed
+    ``rows`` and ``metrics`` cover both writes); the footer lineage must
+    sum to ``rows``; and the stage is recorded once, after both writes,
+    with ``rows``, ``path``, ``lineage``, the written ``schema`` (as
+    ``schema.json()``, for ``read_with_schema``) and ``payload(observed)``,
+    which may override ``rows``. A kill before the record re-runs the whole
+    stage, and its overwrite removes an appended follow-up.
     """
     prior = log.read(stage)
     if prior is not None:
         return prior
-    obs = Observation(f"obs_{stage}")
-    write_parquet(
-        df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics),
-        path, partition_by, order_by, mode,
-    )
-    got = obs.get
-    record = {"rows": got["rows"], "path": path, "lineage": checked_lineage(path, got["rows"])}
+
+    def write(frame: DataFrame, append: bool) -> None:
+        write_parquet(frame, path, partition_by, order_by, "append" if append else mode)
+
+    got = observed_writes(write, df, metrics, follow)
+    record = {
+        "rows": got["rows"],
+        "path": path,
+        "lineage": checked_lineage(path, got["rows"]),
+        "schema": df.schema.json(),
+    }
     record.update(payload(got) if payload else {})
     log.record(stage, record)
     return record
@@ -308,6 +343,12 @@ def observed_write_bucketed(df: DataFrame, path: str, log: CheckpointLog, stage:
         df.withColumn("conv_bucket", conv_bucket()), path, log, stage, ["conv_bucket"], HUB_ORDER,
         payload=lambda _: {"buckets": N_BUCKETS}, mode="dynamic",
     )["rows"]
+
+
+def read_with_schema(spark: SparkSession, schema_json: str, *paths: str) -> DataFrame:
+    """Parquet ``paths`` read with a schema the code already holds (a
+    record's ``schema``): no schema-inference job."""
+    return spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(*paths)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> dict:

@@ -11,16 +11,24 @@ Scale notes:
   * groups are independent — Spark schedules one pandas call per
     conversation group; AQE balances partitions. A pathological hot
     conversation serialises its own group only.
-  * ``chunk_counts_fast`` is the production path: exact chunk counts
-    from pure-Catalyst byte arithmetic, with a Python walk (gzip only in
-    the ambiguous band) for the few conversations above the cap.
+  * ``sink_chunk_counts`` is the production chunk stage, in two phases.
+    Phase 1, every run: both paths' per-conversation aggregates from ONE
+    pass over the hub (``_per_conv``), and every (conv_id, path) whose
+    payload provably fits one chunk answered by pure-Catalyst byte
+    arithmetic, with no Python and no walk in the plan. Phase 2, only
+    when that write observed a row over the cap: the exact
+    ``count_chunks_fast`` walk (gzip only in the ambiguous band) of just
+    those rows, appended to the same sink.
+  * ``chunk_counts_fast``, ``chunk_raw_costs`` and ``chunk_census`` are
+    one-path compositions of the same per-conversation frame and walk.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -46,23 +54,24 @@ CHUNK_STATS_SCHEMA = StructType(
 
 _REQUIRED = ["conv_id", "turn_idx", "text", "ts", "sink"]
 _META = ["owner", "log_group", "log_stream_name", "function_name", "invoked_function_arn"]
-# hub-materialised MELT fills (melt.with_melt_fills) — when present and
-# path == 'logging', _staged_with_costs reuses them instead of paying a
-# second trace-decode pass + refill window
+# hub-materialised MELT fills (melt.with_melt_fills): the logging leg's
+# costs reuse them instead of paying a second trace-decode pass + refill
+# window
 _FILLS = ["trace_id", "lambda_request_id"]
 
 
-def _select_cols(df: DataFrame, fills: bool = False) -> list[str]:
-    """The chunk stage's input columns; ``fills`` adds the hub's MELT
-    fill columns when the frame carries them."""
-    cols = [c for c in _REQUIRED + _META if c in df.columns]
-    if "log_group" not in df.columns and "tool" in df.columns:
-        cols.append("tool")  # with_log_group derives log_group from tool
-    if fills and all(c in df.columns for c in _FILLS):
-        cols += _FILLS
+def _check_required(df: DataFrame) -> None:
     missing = [c for c in _REQUIRED if c not in df.columns]
     if missing:
         raise ValueError(f"chunk stage missing columns: {missing}")
+
+
+def _select_cols(df: DataFrame) -> list[str]:
+    """The gzip replays' input columns."""
+    _check_required(df)
+    cols = [c for c in _REQUIRED + _META if c in df.columns]
+    if "log_group" not in df.columns and "tool" in df.columns:
+        cols.append("tool")  # with_log_group derives log_group from tool
     return cols
 
 
@@ -267,267 +276,185 @@ def _mcol(df: DataFrame, name: str):
     return F.col(name) if name in df.columns else F.lit("")
 
 
-def _staged_with_costs(df: DataFrame, path: str, cfg: PipelineConfig) -> DataFrame:
-    """Stage 0/1 of the arithmetic chunk paths: epoch millis, the
-    per-event carried trace id / request id for the logging path (the
-    hub's fills, or ``melt.with_melt_fills`` when the frame has none),
-    then the EXACT per-event JSON byte cost (functions/jsoncost.py).
+def _staged(df: DataFrame, cfg: PipelineConfig, legs: dict) -> DataFrame:
+    """The one projection every arithmetic chunk path aggregates.
 
-    When the fills are already hub columns the staged frame is a narrow
-    scan-side projection with no exchange and no sort (guide §2.4:
-    remove shuffles outright; the per-conv aggregation that follows does
-    its own map-side combine). It carries no event position and no
-    per-conversation meta, so consumers (a) order a conversation's rows
-    by ``turn_idx`` and (b) read conversation-level envelope values from
-    the turn_idx-min row (``_per_conv_raw``, the walk's ``iloc[0]``),
-    which keeps results exact even when meta varies mid-conversation.
-    The empty-envelope length is conversation-level too, so
-    ``_per_conv_raw`` computes it once per conversation."""
+    ``legs`` maps each path to ``(keep, text)``: Columns over ``df``
+    selecting the rows that reach that path (None keeps every row) and
+    their payload text. Per row the projection carries the conversation
+    keys (``conv_id``, ``turn_idx``, ``sink``, the envelope meta), epoch
+    millis, the logging path's carried trace id / request id, and per leg
+    ``__keep_<path>``, ``__text_<path>`` and the EXACT per-event JSON byte
+    cost ``__cost_<path>`` (functions/jsoncost.py; null on rows the leg
+    drops).
+
+    The logging fills are the hub's (plans/job.py ``prepare``); a frame
+    without them gets them from the same ``melt.with_melt_fills``, so the
+    costs see the logging sink's exact values. Over a hub that carries
+    the fills the projection is narrow: no exchange, no sort."""
     from ..functions import jsoncost as jc
     from .classify import with_log_group
     from .melt import with_melt_fills
 
-    df = df.select(*_select_cols(df, fills=path == "logging"))
+    _check_required(df)
     if "log_group" not in df.columns:
         df = with_log_group(df, cfg)
-    df = df.withColumn("ts_millis", F.unix_millis(F.col("ts").cast("timestamp")))
-    if path == "logging":
-        # The production hub already materialised the MELT fills
-        # (plans/job.py prepare()); any other frame gets them from the
-        # same with_melt_fills, so the chunk costs see the logging
-        # sink's exact trace_id / lambda_request_id values.
-        if not all(c in df.columns for c in _FILLS):
-            df = with_melt_fills(df, cfg)
-        df = df.withColumn("trace_fill", F.col("trace_id")).withColumn(
-            "rid_fill", F.col("lambda_request_id")
-        )
-        cost = jc.event_cost_logging_expr(
-            F.col("text"), F.col("ts_millis"), F.col("trace_fill"), F.col("rid_fill")
-        )
-    else:
-        df = df.withColumn("trace_fill", F.lit(None).cast("string")).withColumn(
-            "rid_fill", F.lit(None).cast("string")
-        )
-        cost = jc.event_cost_infra_expr(
-            F.col("text"), F.col("turn_idx"), F.col("ts_millis")
-        )
-    return df.drop("ts").withColumn("__cost", cost)
+    fills = "logging" in legs
+    if fills and not all(c in df.columns for c in _FILLS):
+        df = with_melt_fills(df, cfg)
+    # the infra payload never carries the fills
+    none = F.lit(None).cast("string")
+    cols = [
+        "conv_id",
+        "turn_idx",
+        "sink",
+        *[m for m in _META if m in df.columns],
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_millis"),
+        (F.col("trace_id") if fills else none).alias("trace_fill"),
+        (F.col("lambda_request_id") if fills else none).alias("rid_fill"),
+    ]
+    for path, (keep, text) in legs.items():
+        cols += [
+            (F.lit(True) if keep is None else keep).alias(f"__keep_{path}"),
+            text.alias(f"__text_{path}"),
+        ]
+    staged = df.select(*cols)
+    # Measured and not adopted: the same costs built as Spark SQL text
+    # (jsoncost's *_sql twins through F.expr) cut the py4j calls of one
+    # chunk-frame build from ~7,000 to ~1,450, but op wall and CPU did
+    # not move.
+    for path in legs:
+        text = F.col(f"__text_{path}")
+        if path == "infra":
+            cost = jc.event_cost_infra_expr(text, F.col("turn_idx"), F.col("ts_millis"))
+        else:
+            cost = jc.event_cost_logging_expr(
+                text, F.col("ts_millis"), F.col("trace_fill"), F.col("rid_fill")
+            )
+        staged = staged.withColumn(f"__cost_{path}", F.when(F.col(f"__keep_{path}"), cost))
+    return staged
 
 
-def _empty_expr(df: DataFrame, path: str, cfg: PipelineConfig):
-    """EXACT empty-envelope byte length from the frame's meta columns
-    (functions/jsoncost.py; absent meta = '' exactly like the grouped
-    replay's ``first.get(name, '') or ''``)."""
+def _empty_expr(df: DataFrame, paths: list[str], cfg: PipelineConfig):
+    """EXACT empty-envelope byte length of each row's ``path`` from its
+    meta columns (functions/jsoncost.py; absent meta = '' exactly like
+    the grouped replay's ``first.get(name, '') or ''``)."""
     from ..functions import jsoncost as jc
 
-    if path == "infra":
-        return jc.empty_len_infra_expr(
+    exprs = {
+        "infra": jc.empty_len_infra_expr(
             F.col("conv_id"),
             _mcol(df, "log_group"),
             _mcol(df, "log_stream_name"),
             _mcol(df, "owner"),
             _mcol(df, "function_name"),
             _mcol(df, "invoked_function_arn"),
-        )
-    return jc.empty_len_logging_expr(
-        cfg, _mcol(df, "log_group"), _mcol(df, "log_stream_name")
+        ),
+        "logging": jc.empty_len_logging_expr(
+            cfg, _mcol(df, "log_group"), _mcol(df, "log_stream_name")
+        ),
+    }
+    if len(paths) == 1:
+        return exprs[paths[0]]
+    return F.when(F.col("path") == "infra", exprs["infra"]).otherwise(exprs["logging"])
+
+
+def _per_conv(staged: DataFrame, paths: list[str], cfg: PipelineConfig) -> DataFrame:
+    """One row per (conv_id, path) that has rows in that leg: ``sink``,
+    ``n_events`` and the EXACT raw payload size ``raw_bytes``, from ONE
+    pass over a ``_staged`` frame — map-side-combining aggregation, no
+    window and NO SORT. Costs are order-independent sums; each leg's
+    envelope values (sink + the meta the empty-envelope length needs)
+    come from its turn_idx-min row, the row the replay and the walk read
+    the envelope from, so results are exact even when meta varies
+    mid-conversation or the first infra row is a later turn.
+
+    Deliberate shapes:
+    * The counts aggregate is ALL-LONG (per leg: row count, cost sum,
+      minimum turn). A string-valued min_by/first is not a mutable
+      aggregation-buffer type and silently demotes the aggregate to a
+      SortAggregate, a sort of every fact row (observed in the r7 plan
+      diff). Strings (sink, meta) travel as grouping KEYS of one
+      keys-only ``firsts`` aggregate, joined to the counts once on
+      conv_id and the legs' minimum turns.
+    * ``inline`` of one struct per leg turns each joined row into its
+      per-path rows, and ``__empty`` is computed after that: once per
+      (conversation, path), not once per turn."""
+    meta = [m for m in _META if m in staged.columns]
+    turn = {p: F.when(F.col(f"__keep_{p}"), F.col("turn_idx")) for p in paths}
+    counts = staged.groupBy("conv_id").agg(
+        *[
+            agg
+            for p in paths
+            for agg in (
+                F.count(turn[p]).alias(f"__n_{p}"),
+                F.sum(f"__cost_{p}").alias(f"__cost_{p}"),
+                F.min(turn[p]).alias(f"__t_{p}"),
+            )
+        ]
     )
-
-
-def _per_conv_raw(staged: DataFrame, path: str, cfg: PipelineConfig) -> DataFrame:
-    """Per-conversation raw totals over a ``_staged_with_costs`` frame —
-    map-side-combining aggregation, no window and NO SORT: costs are
-    order-independent sums, and the conversation-level envelope values
-    (sink + the meta fields the empty-envelope length needs) come from
-    the turn_idx-min row — the row ``chunk_replay`` reads its envelope
-    from, so results are identical even when meta varies
-    mid-conversation.
-
-    Two deliberate shapes here:
-    * The core aggregation buffers are ALL-LONG: a string-valued
-      min_by/first is not a mutable aggregation-buffer type, which
-      silently demotes the whole aggregate to SortAggregate —
-      re-introducing a full sort of the fact rows, the exact thing this
-      path removes (observed in the r7 plan diff). Strings (sink, meta)
-      travel as grouping KEYS of a second, keys-only aggregate (keys may
-      be strings; only buffer values are restricted) joined back on the
-      turn_idx-min row — exactly one match per conversation.
-    * ``__empty`` is computed AFTER that join, once per conversation:
-      its escape-count scans run over rows = conversations instead of
-      rows = turns (the envelope fields are conversation-level)."""
-    core = (
-        staged.groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("__cost").alias("__cost_sum"),
-            F.min("turn_idx").alias("__min_t"),
-        )
+    firsts = staged.groupBy("conv_id", "sink", *meta).agg(
+        *[F.min(turn[p]).alias(f"__t_{p}") for p in paths]
     )
-    meta_keys = [m for m in _META if m in staged.columns]
-    firsts = staged.groupBy("conv_id", "sink", *meta_keys).agg(
-        F.min("turn_idx").alias("__t")
+    # explicit aliases: both sides aggregate the same staged frame, so
+    # bare df["col"] references in the self-join condition are ambiguous
+    hit = {p: F.col(f"__f.__t_{p}") == F.col(f"__c.__t_{p}") for p in paths}
+    joined = counts.alias("__c").join(
+        firsts.alias("__f"),
+        (F.col("__c.conv_id") == F.col("__f.conv_id")) & reduce(lambda a, b: a | b, hit.values()),
     )
-    # explicit aliases: core and firsts share lineage (both aggregate the
-    # same staged frame), so bare df["col"] references in the self-join
-    # condition are ambiguous
-    c, f = core.alias("__pcr_c"), firsts.alias("__pcr_f")
-    j = c.join(
-        f,
-        (F.col("__pcr_c.conv_id") == F.col("__pcr_f.conv_id"))
-        & (F.col("__pcr_f.__t") == F.col("__pcr_c.__min_t")),
-    ).select(
-        "__pcr_c.conv_id",
-        "__pcr_c.n_events",
-        "__pcr_c.__cost_sum",
-        "__pcr_f.sink",
-        *[f"__pcr_f.{m}" for m in meta_keys],
+    rows = joined.select(
+        "__c.conv_id",
+        "__f.sink",
+        *[f"__f.{m}" for m in meta],
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(p).alias("path"),
+                        hit[p].alias("__hit"),
+                        F.col(f"__c.__n_{p}").alias("n_events"),
+                        F.col(f"__c.__cost_{p}").alias("__cost_sum"),
+                    )
+                    for p in paths
+                ]
+            )
+        ),
+    ).filter(F.col("__hit"))
+    raw = (
+        _empty_expr(rows, paths, cfg)
+        + F.col("__cost_sum")
+        + F.lit(2) * (F.col("n_events") - 1)
     )
-    j = j.withColumn("__empty", _empty_expr(j, path, cfg)).withColumn(
-        "raw_bytes",
-        F.col("__empty") + F.col("__cost_sum") + F.lit(2) * (F.col("n_events") - 1),
-    )
-    return j.drop(*meta_keys)
+    return rows.select("conv_id", "sink", "path", "n_events", raw.alias("raw_bytes"))
 
 
-def chunk_raw_costs(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Per-conversation EXACT raw payload size — zero Python, one shuffle.
-
-    ``raw_bytes`` is the byte length of ``json.dumps`` of the
-    conversation's full payload (reference ``_send_log_entry`` payload
-    construction, /root/reference/src/function.py:223-283): envelope +
-    sum of per-event costs + 2 bytes per separator. ``fits_single`` is 1
-    when the payload PROVABLY gzips under the cap (gz_len_upper_bound),
-    i.e. the reference recursion emits exactly one chunk. Fully
-    SQL-expressible, hence exactly oracle-able — this is the arithmetic
-    backbone the fast count path and capacity planning share.
-    """
-    cfg = cfg or PipelineConfig()
+def _fits(cfg: PipelineConfig):
     from ..functions import jsoncost as jc
 
-    per_conv = _per_conv_raw(_staged_with_costs(df, path, cfg), path, cfg)
-    return per_conv.select(
-        "conv_id",
-        "sink",
-        F.lit(path).alias("path"),
-        "n_events",
-        "raw_bytes",
-        jc.gz_upper_fits_expr(F.col("raw_bytes"), cfg.max_payload_size)
-        .cast("int")
-        .alias("fits_single"),
+    return jc.gz_upper_fits_expr(F.col("raw_bytes"), cfg.max_payload_size)
+
+
+def over_cap_expr(cfg: PipelineConfig):
+    """``observe()`` aggregate ``over_cap``: the (conv_id, path) rows
+    whose payload does not provably gzip under the cap, the rows only the
+    walk can count."""
+    return F.count(F.when(~_fits(cfg), 1)).alias("over_cap")
+
+
+def _singles(per_conv: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The ``_per_conv`` rows that provably fit one chunk, as
+    ``FAST_STATS_SCHEMA`` rows with ``n_chunks = 1``: ZERO Python and
+    ZERO gzip."""
+    return per_conv.filter(_fits(cfg)).select(
+        "conv_id", "sink", "path", "n_events", F.lit(1).cast("long").alias("n_chunks"), "raw_bytes"
     )
 
 
-def chunk_census(
-    df: DataFrame,
-    path: str,
-    cfg: PipelineConfig | None = None,
-    caps: list[tuple[str, int]] | None = None,
-) -> DataFrame:
-    """Per-sink PROOF census of the chunk recursion at one or more caps —
-    the exactly-oracle-able face of the gzip chunk stage (VERDICT r4 #3).
-
-    For each (cap, sink) bucket, classifies every conversation's
-    top-level payload by pure raw-byte arithmetic (zero gzip, zero
-    Python):
-
-    - ``n_single_proved``: gz_len_upper_bound(raw) < cap — the reference
-      recursion (/root/reference/src/function.py:309-323) PROVABLY emits
-      exactly one chunk, so these contribute exactly ``n_single_proved``
-      chunks (``n_chunks_proved``).
-    - ``n_split_proved``: raw >= cap*1032 — gz >= raw/1032 >= cap, the
-      recursion provably splits (>= 2 chunks).
-    - ``n_ambiguous``: the band between the proofs, where the true count
-      genuinely requires compressing bytes (chunk_replay's job — the
-      rows-only gz-totals query).
-
-    At the production 1 MB cap every synthetic conversation is proved
-    single, so n_chunks_proved == n_convs — the real n_chunks total,
-    SQL-oracle-able end to end; at a forced-split cap (2000 B) the same
-    arithmetic honestly reports everything ambiguous. One shuffle
-    (conv_id agg); each extra cap is a re-aggregation of the tiny
-    per-conversation frame, not a rescan.
-    """
-    cfg = cfg or PipelineConfig()
-    caps = caps or [("default", cfg.max_payload_size)]
-    from ..functions import jsoncost as jc
-
-    per_conv = _per_conv_raw(_staged_with_costs(df, path, cfg), path, cfg)
-    legs = []
-    for cap_name, cap in caps:
-        fits = jc.gz_upper_fits_expr(F.col("raw_bytes"), cap).cast("long")
-        split = (F.col("raw_bytes") >= F.lit(cap * C.GZIP_MAX_RATIO)).cast("long")
-        legs.append(
-            per_conv.groupBy("sink")
-            .agg(
-                F.count(F.lit(1)).alias("n_convs"),
-                F.sum("n_events").alias("n_events"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum(fits).alias("n_single_proved"),
-                F.sum(split).alias("n_split_proved"),
-            )
-            .select(
-                F.lit(cap_name).alias("cap"),
-                "sink",
-                F.lit(path).alias("path"),
-                "n_convs",
-                "n_events",
-                "raw_bytes",
-                "n_single_proved",
-                "n_split_proved",
-                (
-                    F.col("n_convs") - F.col("n_single_proved") - F.col("n_split_proved")
-                ).alias("n_ambiguous"),
-                F.col("n_single_proved").alias("n_chunks_proved"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out.select(
-        "cap", "sink", "path", "n_convs", "n_events", "raw_bytes",
-        "n_single_proved", "n_split_proved", "n_ambiguous", "n_chunks_proved",
-    )
-
-
-def chunk_counts_fast(
-    df: DataFrame, path: str, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """EXACT per-conversation chunk counts with gzip only where provably
-    necessary — the production chunk stage (SURVEY.md §2 row 16 at scale).
-
-    Pure-Catalyst cost pre-pass -> per-conversation raw totals; every
-    conversation whose payload provably fits one chunk
-    (``gz_len_upper_bound(raw) < cap`` — the overwhelming majority at the
-    1 MB cap) is answered with ZERO Python and ZERO gzip. Only oversized
-    conversations route through an Arrow-grouped ``count_chunks_fast``
-    walk that gzips nothing but the ambiguous band of the halving tree.
-    n_chunks is bit-identical to ``chunk_replay`` (pinned by
-    tests/test_chunks_vs_reference.py); the byte stat here is
-    ``raw_bytes`` (uncompressed ship volume) — exact gz byte totals
-    remain ``chunk_replay``'s job since they require compressing every
-    chunk by definition.
-    """
-    cfg = cfg or PipelineConfig()
+def _walk_group(cfg: PipelineConfig):
+    """The per-(conv_id, path) pandas function of the exact count walk
+    (driver-side closure; only the config is captured)."""
     max_size = cfg.max_payload_size
-    from ..functions import jsoncost as jc
-
-    staged = _staged_with_costs(df, path, cfg)
-    per_conv = _per_conv_raw(staged, path, cfg)
-    fits = jc.gz_upper_fits_expr(F.col("raw_bytes"), max_size)
-    singles = per_conv.filter(fits).select(
-        "conv_id",
-        "sink",
-        F.lit(path).alias("path"),
-        "n_events",
-        F.lit(1).cast("long").alias("n_chunks"),
-        "raw_bytes",
-    )
-    big_ids = per_conv.filter(~fits).select("conv_id")
-    # big_ids is tiny by construction (conversations > ~1 MB serialized);
-    # AQE broadcasts it at runtime. No hard hint: on a corpus of large
-    # conversations it is >= 1 row per conversation, and a forced
-    # broadcast would OOM the driver.
-    big = staged.join(big_ids, "conv_id", "left_semi")
 
     def walk(pdf):
         import gzip
@@ -536,9 +463,10 @@ def chunk_counts_fast(
         import pandas as pd
 
         # turn order; iloc[0] is then the turn_idx-min row, the same row
-        # _per_conv_raw reads the envelope meta from
+        # _per_conv reads the envelope meta from
         pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         first = pdf.iloc[0]
+        path = first["path"]
         costs = [int(c) for c in pdf["__cost"]]
 
         # Pre-serialize each event's message JSON ONCE (VERDICT r3 #6):
@@ -611,29 +539,213 @@ def chunk_counts_fast(
             ]
         )
 
+    return walk
+
+
+def _walk(
+    staged: DataFrame, per_conv: DataFrame, paths: list[str], cfg: PipelineConfig
+) -> DataFrame:
+    """EXACT ``FAST_STATS_SCHEMA`` rows for the (conv_id, path) rows of
+    ``per_conv`` over the cap: the legs' rows of ``staged``, semi-joined
+    to those pairs, run through the Arrow-grouped ``count_chunks_fast``
+    walk, which gzips nothing but the ambiguous band of the halving
+    tree."""
+    meta = [m for m in _META if m in staged.columns]
+    events = reduce(
+        DataFrame.unionByName,
+        [
+            staged.filter(F.col(f"__keep_{p}")).select(
+                "conv_id",
+                F.lit(p).alias("path"),
+                "turn_idx",
+                "ts_millis",
+                F.col(f"__text_{p}").alias("text"),
+                "trace_fill",
+                "rid_fill",
+                "sink",
+                *meta,
+                F.col(f"__cost_{p}").alias("__cost"),
+            )
+            for p in paths
+        ],
+    )
+    # the over-cap set is tiny by construction (conversations > ~1 MB serialized
+    # at the production cap); AQE broadcasts it at runtime. No hard hint:
+    # on a corpus of large conversations it is >= 1 row per conversation,
+    # and a forced broadcast would OOM the driver.
+    over = per_conv.filter(~_fits(cfg)).select("conv_id", "path")
+    big = events.join(over, ["conv_id", "path"], "left_semi")
     # same AQE-mis-sizing guard as chunk_replay: the ambiguous-band walk
     # is Python-CPU-heavy per conversation, so pin its parallelism to the
     # session's shuffle-partition count rather than its (tiny) byte size
-    n_parts = _shuffle_partitions(big)
-    big_stats = big.repartition(n_parts, "conv_id").groupBy("conv_id").applyInPandas(
-        walk, FAST_STATS_SCHEMA
+    return big.repartition(_shuffle_partitions(big), "conv_id").groupBy(
+        "conv_id", "path"
+    ).applyInPandas(_walk_group(cfg), FAST_STATS_SCHEMA)
+
+
+def _one_leg(df: DataFrame, path: str, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """(``_staged``, ``_per_conv``) of ``df`` as the rows of one path
+    (lambda-filtered infra rows for 'infra', the hub for 'logging')."""
+    staged = _staged(df, cfg, {path: (None, F.col("text"))})
+    return staged, _per_conv(staged, [path], cfg)
+
+
+def chunk_raw_costs(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> DataFrame:
+    """Per-conversation EXACT raw payload size — zero Python, one shuffle.
+
+    ``raw_bytes`` is the byte length of ``json.dumps`` of the
+    conversation's full payload (reference ``_send_log_entry`` payload
+    construction, /root/reference/src/function.py:223-283): envelope +
+    sum of per-event costs + 2 bytes per separator. ``fits_single`` is 1
+    when the payload PROVABLY gzips under the cap (gz_len_upper_bound),
+    i.e. the reference recursion emits exactly one chunk. Fully
+    SQL-expressible, hence exactly oracle-able — this is the arithmetic
+    backbone the fast count path and capacity planning share.
+    """
+    cfg = cfg or PipelineConfig()
+    _, per_conv = _one_leg(df, path, cfg)
+    return per_conv.select(
+        "conv_id",
+        "sink",
+        "path",
+        "n_events",
+        "raw_bytes",
+        _fits(cfg).cast("int").alias("fits_single"),
     )
-    return singles.unionByName(big_stats)
+
+
+def chunk_census(
+    df: DataFrame,
+    path: str,
+    cfg: PipelineConfig | None = None,
+    caps: list[tuple[str, int]] | None = None,
+) -> DataFrame:
+    """Per-sink PROOF census of the chunk recursion at one or more caps —
+    the exactly-oracle-able face of the gzip chunk stage (VERDICT r4 #3).
+
+    For each (cap, sink) bucket, classifies every conversation's
+    top-level payload by pure raw-byte arithmetic (zero gzip, zero
+    Python):
+
+    - ``n_single_proved``: gz_len_upper_bound(raw) < cap — the reference
+      recursion (/root/reference/src/function.py:309-323) PROVABLY emits
+      exactly one chunk, so these contribute exactly ``n_single_proved``
+      chunks (``n_chunks_proved``).
+    - ``n_split_proved``: raw >= cap*1032 — gz >= raw/1032 >= cap, the
+      recursion provably splits (>= 2 chunks).
+    - ``n_ambiguous``: the band between the proofs, where the true count
+      genuinely requires compressing bytes (chunk_replay's job — the
+      rows-only gz-totals query).
+
+    At the production 1 MB cap every synthetic conversation is proved
+    single, so n_chunks_proved == n_convs — the real n_chunks total,
+    SQL-oracle-able end to end; at a forced-split cap (2000 B) the same
+    arithmetic honestly reports everything ambiguous. One shuffle
+    (conv_id agg); each extra cap is a re-aggregation of the tiny
+    per-conversation frame, not a rescan.
+    """
+    cfg = cfg or PipelineConfig()
+    caps = caps or [("default", cfg.max_payload_size)]
+    from ..functions import jsoncost as jc
+
+    _, per_conv = _one_leg(df, path, cfg)
+    legs = []
+    for cap_name, cap in caps:
+        fits = jc.gz_upper_fits_expr(F.col("raw_bytes"), cap).cast("long")
+        split = (F.col("raw_bytes") >= F.lit(cap * C.GZIP_MAX_RATIO)).cast("long")
+        legs.append(
+            per_conv.groupBy("sink")
+            .agg(
+                F.count(F.lit(1)).alias("n_convs"),
+                F.sum("n_events").alias("n_events"),
+                F.sum("raw_bytes").alias("raw_bytes"),
+                F.sum(fits).alias("n_single_proved"),
+                F.sum(split).alias("n_split_proved"),
+            )
+            .select(
+                F.lit(cap_name).alias("cap"),
+                "sink",
+                F.lit(path).alias("path"),
+                "n_convs",
+                "n_events",
+                "raw_bytes",
+                "n_single_proved",
+                "n_split_proved",
+                (
+                    F.col("n_convs") - F.col("n_single_proved") - F.col("n_split_proved")
+                ).alias("n_ambiguous"),
+                F.col("n_single_proved").alias("n_chunks_proved"),
+            )
+        )
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out.select(
+        "cap", "sink", "path", "n_convs", "n_events", "raw_bytes",
+        "n_single_proved", "n_split_proved", "n_ambiguous", "n_chunks_proved",
+    )
+
+
+def chunk_counts_fast(
+    df: DataFrame, path: str, cfg: PipelineConfig | None = None
+) -> DataFrame:
+    """EXACT per-conversation chunk counts of one path with gzip only
+    where provably necessary, as one DataFrame (SURVEY.md §2 row 16 at
+    scale); the one-leg composition of what ``sink_chunk_counts`` splits
+    into a common-case write and a follow-up.
+
+    Pure-Catalyst cost pre-pass -> per-conversation raw totals; every
+    conversation whose payload provably fits one chunk
+    (``gz_len_upper_bound(raw) < cap`` — the overwhelming majority at the
+    1 MB cap) is answered with ZERO Python and ZERO gzip. Only oversized
+    conversations route through the Arrow-grouped ``count_chunks_fast``
+    walk that gzips nothing but the ambiguous band of the halving tree.
+    n_chunks is bit-identical to ``chunk_replay`` (pinned by
+    tests/test_chunks_vs_reference.py); the byte stat here is
+    ``raw_bytes`` (uncompressed ship volume) — exact gz byte totals
+    remain ``chunk_replay``'s job since they require compressing every
+    chunk by definition.
+    """
+    cfg = cfg or PipelineConfig()
+    staged, per_conv = _one_leg(df, path, cfg)
+    return _singles(per_conv, cfg).unionByName(_walk(staged, per_conv, [path], cfg))
 
 
 def sink_chunk_counts(
-    infra: DataFrame | None, hub: DataFrame | None, cfg: PipelineConfig
-) -> DataFrame | None:
-    """The ``chunk_stats`` sink: ``chunk_counts_fast`` of the routed infra
-    rows (``route.infra_union``) unioned with that of the hub (the logging
-    tee is unfiltered). A disabled family passes None; None when both
-    are."""
-    frames = []
-    if infra is not None:
-        frames.append(chunk_counts_fast(infra, "infra", cfg))
-    if hub is not None:
-        frames.append(chunk_counts_fast(hub, "logging", cfg))
-    return reduce(DataFrame.unionByName, frames) if frames else None
+    hub: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, Callable[[], DataFrame | None]] | None:
+    """The ``chunk_stats`` sink of the hub, as ``(singles, follow)``; None
+    when both sink families are disabled.
+
+    Both legs come from ONE pass over the hub (``_per_conv``): the infra
+    leg keeps the rows and text ``route.infra_union`` writes
+    (``route.infra_leg``), the logging leg every row (the unfiltered
+    tee). ``singles`` is the common case: the rows that provably fit one
+    chunk, with no walk in its plan. Its write also observes
+    ``over_cap_expr`` before the fit filter; ``follow()``, called after
+    that write, returns None when no row was over the cap, and otherwise
+    the exact walk of just those (conv_id, path) rows, recomputed from
+    the same per-conversation frame, for the runner to append."""
+    from .route import infra_leg
+
+    legs = {}
+    if cfg.infra_enabled:
+        legs["infra"] = infra_leg(hub, cfg)
+    if cfg.logging_enabled:
+        legs["logging"] = (None, F.col("text"))
+    if not legs:
+        return None
+    staged = _staged(hub, cfg, legs)
+    per_conv = _per_conv(staged, list(legs), cfg)
+    seen = Observation()
+    singles = _singles(per_conv.observe(seen, over_cap_expr(cfg)), cfg)
+
+    def follow() -> DataFrame | None:
+        if not seen.get["over_cap"]:
+            return None
+        return _walk(staged, per_conv, list(legs), cfg)
+
+    return singles, follow
 
 
 def chunk_totals_fast(stats: DataFrame) -> DataFrame:

@@ -18,11 +18,11 @@ run-length encodes well in parquet.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions import patterns as P
-from .chunks import chunk_total_exprs, sink_chunk_counts
+from .chunks import chunk_total_exprs, over_cap_expr, sink_chunk_counts
 from .classify import SINK_LAMBDA, SINK_OTHER, SINK_VPC
 from .melt import melt_project
 
@@ -73,6 +73,21 @@ def infra_rows(classified: DataFrame, sink: str, cfg: PipelineConfig | None = No
     return df
 
 
+def infra_leg(classified: DataFrame, cfg: PipelineConfig | None = None) -> tuple[Column, Column]:
+    """The infra family's ``(keep, text)`` over ``classified``: the rows
+    that reach an infra sink (lambda-sink rows that survive the filter,
+    every vpc/other row; reference :252-261) and their payload text (the
+    optional .NET reformat of lambda survivors, :199-202).
+    ``infra_union`` writes exactly these rows and texts, and the chunk
+    stage's infra leg costs them (``chunks.sink_chunk_counts``)."""
+    cfg = cfg or PipelineConfig()
+    is_lambda = F.col("sink") == SINK_LAMBDA
+    text = F.col("text")
+    if cfg.format_logs:
+        text = F.when(is_lambda, P.format_agent_logs(text)).otherwise(text)
+    return ~is_lambda | _survives_col(classified), text
+
+
 def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """All infra rows in ONE pass, keeping ``sink`` as a partition column.
 
@@ -80,56 +95,58 @@ def infra_union(classified: DataFrame, cfg: PipelineConfig | None = None) -> Dat
     ``partitionBy('sink')`` replaces three filtered jobs — one scan, one
     sort, one commit instead of three (the reference's three URL paths
     map to the three partition directories). The lambda filter and
-    optional reformat apply only to lambda-sink rows.
+    optional reformat (``infra_leg``) apply only to lambda-sink rows.
     """
-    cfg = cfg or PipelineConfig()
+    keep, text = infra_leg(classified, cfg)
     # The hub may carry the MELT fill columns (materialised for the
     # logging sink); the infra payload is the raw filtered entry and
     # never attaches them (/root/reference/src/function.py:255-261) —
     # drop to keep the infra schema (and write bytes) unchanged.
-    survives = _survives_col(classified)
-    classified = classified.drop("trace_id", "lambda_request_id")
-    is_lambda = F.col("sink") == SINK_LAMBDA
-    keep = ~is_lambda | survives
-    df = classified.filter(keep)
-    if cfg.format_logs:
-        df = df.withColumn(
-            "text",
-            F.when(is_lambda, P.format_agent_logs(F.col("text"))).otherwise(F.col("text")),
-        )
-    return df
+    return (
+        classified.filter(keep)
+        .withColumn("text", text)
+        .drop("trace_id", "lambda_request_id")
+    )
 
 
 def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     """The fan-out every runner shares: build each enabled sink's frame
     from the hub and hand it to ``commit(name, df, partition_by,
-    order_by, metrics)``, in the order infra, logging, chunk_stats. The
-    commit owns the write: ``checkpoint.write_parquet`` with the
-    partition and order columns fixed here, in its checkpointed
+    order_by, metrics, follow=None)``, in the order infra, logging,
+    chunk_stats. The commit owns the write: ``checkpoint.write_parquet``
+    with the partition and order columns fixed here, in its checkpointed
     overwrite, per-batch dynamic overwrite or streaming append mode.
     ``metrics`` are the ``observe()`` aggregates a counting commit puts
-    on the write, so no runner re-reads a sink to count it.
+    on the write, so no runner re-reads a sink to count it. ``follow``,
+    when given, is called once after the write; a frame it returns is
+    appended to the same sink with the same partition and order columns
+    and observed with the same ``metrics``, and the commit records the
+    stage once, after both writes, with the two writes' metrics summed.
 
     - ``infra``: ``infra_union``, partitioned by ``sink``; observes
       ``infra_<sink>_rows`` per infra sink.
     - ``logging``: ``melt_project`` (a pure projection when the hub
       carries the MELT fills); observes ``logging_rows``.
-    - ``chunk_stats``: ``chunks.sink_chunk_counts``, written unsorted;
-      observes the per-(sink, path) ``chunks.chunk_total_exprs``.
+    - ``chunk_stats``: ``chunks.sink_chunk_counts``, written unsorted:
+      the rows that provably fit one chunk, then, only when that write
+      saw a (conv_id, path) row over the cap, the follow-up's exact walk
+      of those rows. Observes the per-(sink, path)
+      ``chunks.chunk_total_exprs`` and ``over_cap``.
     """
     order = ["conv_id", "turn_idx"]
-    infra = infra_union(hub, cfg) if cfg.infra_enabled else None
-    if infra is not None:
+    if cfg.infra_enabled:
         per_sink = [
             F.count(F.when(F.col("sink") == s, 1)).alias(f"infra_{s}_rows") for s in INFRA_SINKS
         ]
-        commit("infra", infra, ["sink"], order, per_sink)
+        commit("infra", infra_union(hub, cfg), ["sink"], order, per_sink)
     if cfg.logging_enabled:
         rows = [F.count(F.lit(1)).alias("logging_rows")]
         commit("logging", melt_project(hub, cfg), [], order, rows)
-    stats = sink_chunk_counts(infra, hub if cfg.logging_enabled else None, cfg)
-    if stats is not None:
-        commit("chunk_stats", stats, [], [], chunk_total_exprs())
+    chunks = sink_chunk_counts(hub, cfg)
+    if chunks is not None:
+        singles, follow = chunks
+        metrics = [*chunk_total_exprs(), over_cap_expr(cfg)]
+        commit("chunk_stats", singles, [], [], metrics, follow)
 
 
 def route_count_exprs(

@@ -73,6 +73,13 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from ..config import PipelineConfig
 from ..operators import checkpoint as ckpt
@@ -81,7 +88,20 @@ from ..operators.route import INFRA_SINKS, route_count_exprs, write_sinks
 from ..sources.derive import conv_meta_from_transcripts
 from .job import prepare
 
-RAW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+#: the transcript columns an input file contributes, with their types:
+#: input files and tombstones are read with this schema, so no read
+#: starts a schema-inference job
+RAW_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", TimestampType()),
+    ]
+)
+RAW_COLS = RAW_SCHEMA.fieldNames()
 TOMBSTONES = "tombstones"
 
 
@@ -240,9 +260,9 @@ def run_incremental(
     tombstones = os.path.join(out_dir, TOMBSTONES, f"by_batch={batch_id}")
     hub_root = os.path.join(out_dir, "classified")
 
-    new_turns = spark.read.parquet(
+    new_turns = spark.read.schema(RAW_SCHEMA).parquet(
         *[os.path.join(in_dir, f["file"]) for f in new_files]
-    ).select(*RAW_COLS)
+    )
 
     # --- overlap detection + staging (all BEFORE any mutation) ----------
     # The staged marker freezes the decision: a re-run after a mid-commit
@@ -296,7 +316,7 @@ def run_incremental(
             # partitions — silently dropping conversations. On a first
             # attempt nothing of batch_id exists yet, so the filter is a
             # no-op there.
-            hub = spark.read.parquet(hub_root).filter(
+            hub = ckpt.read_with_schema(spark, batches[-1]["schema"], hub_root).filter(
                 F.col("ingest_batch") != batch_id
             )
             candidates = hub.filter(F.col("conv_bucket").isin(new_buckets))
@@ -365,7 +385,7 @@ def run_incremental(
         # the tombstones sit in staging until the commit renames them
         tomb_dir = staged_tombstones if os.path.isdir(staged_tombstones) else tombstones
         inc_turns = inc_turns.unionByName(
-            spark.read.parquet(tomb_dir).select(*RAW_COLS)
+            spark.read.schema(RAW_SCHEMA).parquet(tomb_dir)
         )
     conv_meta = conv_meta_from_transcripts(inc_turns)
     inc_hub = (
@@ -378,25 +398,32 @@ def run_incremental(
     _write_batch_partition(
         inc_hub, hub_root, ["ingest_batch", "conv_bucket"], ["conv_id", "turn_idx"]
     )
-    batch_hub = spark.read.parquet(hub_root).filter(
+    hub_schema = inc_hub.schema.json()
+    batch_hub = ckpt.read_with_schema(spark, hub_schema, hub_root).filter(
         F.col("ingest_batch") == batch_id
     ).drop("ingest_batch", "conv_bucket")
 
     observed: dict[str, dict] = {}
 
-    def commit(name, df, partition_by, order_by, metrics) -> None:
+    def commit(name, df, partition_by, order_by, metrics, follow=None) -> None:
         # observed below the literal ingest_batch, so the write's sort can
         # still drop that constant key; only this batch's footers are read
-        obs = Observation(f"obs_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
         root = os.path.join(out_dir, name)
-        _write_batch_partition(
-            df.withColumn("ingest_batch", F.lit(batch_id)),
-            root,
-            ["ingest_batch", *partition_by],
-            order_by,
-        )
-        observed[name] = obs.get
+        cols = ["ingest_batch", *partition_by]
+
+        def write(frame: DataFrame, append: bool) -> None:
+            frame = frame.withColumn("ingest_batch", F.lit(batch_id))
+            if append:
+                # a follow-up appends into the partition just overwritten
+                ckpt.write_parquet(frame, root, cols, order_by, mode="append")
+            else:
+                _write_batch_partition(frame, root, cols, order_by)
+
+        if follow is not None:
+            # a first write with no rows replaces no partition, so a
+            # killed attempt's appended follow-up is removed here
+            shutil.rmtree(f"{root}/ingest_batch={batch_id}", ignore_errors=True)
+        observed[name] = ckpt.observed_writes(write, df, metrics, follow)
         ckpt.checked_lineage(f"{root}/ingest_batch={batch_id}", observed[name]["rows"])
 
     write_sinks(batch_hub, cfg, commit)
@@ -442,10 +469,12 @@ def run_incremental(
             "files": new_files,
             "counts": counts,
             "chunk_totals": chunk_totals,
+            "over_cap": stats["over_cap"] if stats else 0,
             "superseded_convs": superseded_convs,
             "affected_pairs": [list(p) for p in affected_pairs],
             "deleted": staged["deleted"],
             "config": fingerprint,
+            "schema": hub_schema,
         },
     )
     shutil.rmtree(staging, ignore_errors=True)

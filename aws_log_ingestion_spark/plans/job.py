@@ -144,7 +144,9 @@ def run_pipeline(
         ckpt.observed_write_bucketed(
             prepare(transcripts, conv_meta, cfg), hub_path, log, "classified"
         )
-    hub = spark.read.parquet(hub_path).drop("conv_bucket")
+    hub = ckpt.read_with_schema(spark, log.read("classified")["schema"], hub_path).drop(
+        "conv_bucket"
+    )
 
     counts: dict[str, int] = {}
 
@@ -162,6 +164,7 @@ def run_pipeline(
         return {
             "totals": totals,
             "rows": sum(t["n_chunks"] for t in totals),
+            "over_cap": observed["over_cap"],
             # classes compiled since this call began: a generated-class
             # cache too small for the plans shows up here
             "codegen_classes": None
@@ -169,7 +172,7 @@ def run_pipeline(
             else now - codegen_start,
         }
 
-    def commit(name, df, partition_by, order_by, metrics) -> None:
+    def commit(name, df, partition_by, order_by, metrics, follow=None) -> None:
         path = f"{out_dir}/{name}"
         if name == "infra":
             # one partitioned write replaces three filtered jobs
@@ -188,13 +191,15 @@ def run_pipeline(
                 extra={"endpoint": resolve_logging_endpoint(cfg)},
             )
         else:
-            # chunk_counts_fast: n_chunks is bit-identical to the gzip
-            # replay (tests/test_jsoncost.py) but the overwhelming majority
-            # of conversations are answered by pure-Catalyst byte
-            # arithmetic — zero Python, zero gzip. The exact-gz-bytes
-            # replay (chunk_replay) remains available for byte-level audits.
+            # chunk_stats: the rows that provably fit one chunk (pure
+            # Catalyst byte arithmetic, zero Python, zero gzip), then the
+            # follow-up's exact walk appended only when that write saw a
+            # row over the cap; one record after both writes. The
+            # exact-gz-bytes replay (chunk_replay) remains available for
+            # byte-level audits.
             ckpt.commit_stage(
-                df, path, log, "chunks", partition_by, order_by, metrics, chunks_record
+                df, path, log, "chunks", partition_by, order_by, metrics, chunks_record,
+                follow=follow,
             )
 
     write_sinks(hub, cfg, commit)

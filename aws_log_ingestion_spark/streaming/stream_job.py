@@ -39,9 +39,14 @@ def make_batch_processor(
     tests/test_stateful_streaming.py and tests/test_sink_fanout.py."""
     cfg = cfg or PipelineConfig()
 
-    def commit(name, df, partition_by, order_by, _metrics) -> None:
-        # a micro-batch keeps no per-sink record, so it observes nothing
-        write_parquet(df, f"{out_dir}/{name}", partition_by, order_by, mode="append")
+    def commit(name, df, partition_by, order_by, _metrics, follow=None) -> None:
+        # a micro-batch keeps no per-sink record, so it observes nothing;
+        # a follow-up frame is one more append
+        path = f"{out_dir}/{name}"
+        write_parquet(df, path, partition_by, order_by, mode="append")
+        extra = follow() if follow else None
+        if extra is not None:
+            write_parquet(extra, path, partition_by, order_by, mode="append")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # materialize the hub once per micro-batch — the sinks and both

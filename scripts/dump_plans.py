@@ -9,6 +9,9 @@ depends on:
   * trace decode: every ArrowEvalPython (the trace UDF) sits directly
     on the NR-marker Filter branch — in the hub, the standalone melt and
     the chunk stage over a hub without fills
+  * chunk_stats at the 1 MB cap: one pass over the hub — no
+    FlatMapGroupsInPandas, no ArrowEvalPython, no SortAggregate, at
+    most 2 hash Exchanges
 """
 
 from __future__ import annotations
@@ -116,6 +119,20 @@ def main() -> None:
     sections["infra_union (single-pass partitioned sink)"] = p
     assert "Exchange" not in p, "infra_union must be narrow (no shuffle)"
 
+    # production chunk_stats at the 1 MB cap: both legs from one pass
+    # over the hub, the walk left to a follow-up that runs only when the
+    # write sees a row over the cap
+    from aws_log_ingestion_spark.operators.chunks import sink_chunk_counts
+
+    singles, _ = sink_chunk_counts(hub, cfg)
+    p = fmt(singles)
+    sections["chunk_stats (production, 1 MB cap): one hub pass, no walk"] = p
+    assert "FlatMapGroupsInPandas" not in p, "the common-case chunk plan must not walk"
+    assert "ArrowEvalPython" not in p, "the common-case chunk plan must not run Python"
+    assert "SortAggregate" not in p, "the chunk aggregates must stay hash aggregates"
+    n_exchanges = len(re.findall(r"^\(\d+\) Exchange$", p, re.M))
+    assert n_exchanges <= 2, f"chunk_stats: at most the 2 aggregates' exchanges, got {n_exchanges}"
+
     # hub carries the fills -> the logging sink is a PURE projection:
     # zero exchanges, zero windows, zero Python (the 10^12-turn property)
     p = fmt(melt_project(hub, cfg))
@@ -162,7 +179,9 @@ def main() -> None:
         "Exchange/Window/Python); standalone MELT keeps the one-exchange "
         "self-filling path; in the hub, the standalone MELT and the "
         "chunk stage over a hub without fills, every Arrow trace decode "
-        "sits on the NR-marker Filter branch (marker rows only).\n"
+        "sits on the NR-marker Filter branch (marker rows only); the "
+        "production chunk_stats plan at the 1 MB cap has no pandas walk, "
+        "no Python UDF, no SortAggregate and at most 2 hash Exchanges.\n"
     )
     for name, plan in sections.items():
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")

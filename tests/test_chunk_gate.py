@@ -9,7 +9,7 @@ text on sf0.001 by the same per-query comparison
   trace decode;
 - the chunk queries ``chunk_census``, ``chunk_gz_parity``,
   ``chunk_raw_costs`` and ``chunk_events_by_sink``, which run through the
-  chunk staging (operators/chunks.py ``_staged_with_costs``) and, for
+  chunk staging (operators/chunks.py ``_staged`` and ``_per_conv``) and, for
   ``chunk_gz_parity``, both gzip replays."""
 
 from __future__ import annotations
