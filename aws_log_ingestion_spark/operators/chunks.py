@@ -25,6 +25,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from functools import reduce
 
@@ -451,6 +452,33 @@ def _singles(per_conv: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _payload_text(obj0, path: str, msg_strs: list[str]) -> Callable[[int, int], str]:
+    """``(lo, hi) -> text``: the ``json.dumps`` of the no-events envelope
+    ``obj0`` holding events ``lo:hi``, assembled by string joins from
+    each event's pre-serialized JSON (``msg_strs``). Bit-exact because
+    json.dumps joins list elements with ', ' and dict construction order
+    is stable; for infra the events live inside the JSON-escaped entry
+    STRING, so each message is escaped once up front (escaping is
+    per-character: escape(a+b) == escape(a) + escape(b), and the ', '
+    joiner escapes to itself)."""
+    if path == "infra":
+        entry0 = json.loads(obj0["entry"])
+        entry0["logEvents"] = []
+        tmpl = json.dumps({"context": obj0["context"], "entry": json.dumps(entry0)})
+        marker = '\\"logEvents\\": []'
+        parts = [json.dumps(m)[1:-1] for m in msg_strs]
+    else:
+        tmpl = json.dumps([{"common": obj0[0]["common"], "logs": []}])
+        marker = '"logs": []'
+        parts = msg_strs
+    # the events list is the template's last key at every level, so its
+    # marker is the last occurrence: any envelope text that holds the
+    # marker text comes before it
+    pre, _, post = tmpl.rpartition(marker)
+    head, tail = marker[:-1], marker[-1]  # '..."...": [' and ']'
+    return lambda lo, hi: pre + head + ", ".join(parts[lo:hi]) + tail + post
+
+
 def _walk_group(cfg: PipelineConfig):
     """The per-(conv_id, path) pandas function of the exact count walk
     (driver-side closure; only the config is captured)."""
@@ -458,7 +486,6 @@ def _walk_group(cfg: PipelineConfig):
 
     def walk(pdf):
         import gzip
-        import json
 
         import pandas as pd
 
@@ -471,15 +498,10 @@ def _walk_group(cfg: PipelineConfig):
 
         # Pre-serialize each event's message JSON ONCE (VERDICT r3 #6):
         # ambiguous-band probes then assemble the payload text by string
-        # joins instead of re-dumping the node's whole sub-payload per
-        # probe — the per-probe cost drops from O(sub-payload json.dumps)
-        # to O(sub-payload strlen), removing the O(n log n) re-serialize
-        # over a hot conversation's full text. Bit-exact because
-        # json.dumps joins list elements with ', ' and dict construction
-        # order is stable; for infra the events live inside the
-        # JSON-escaped entry STRING, so each message is escaped once up
-        # front (escaping is per-character: escape(a+b) == escape(a) +
-        # escape(b), and the ', ' joiner escapes to itself).
+        # joins (_payload_text) instead of re-dumping the node's whole
+        # sub-payload per probe — the per-probe cost drops from
+        # O(sub-payload json.dumps) to O(sub-payload strlen), removing the
+        # O(n log n) re-serialize over a hot conversation's full text.
         msg_strs = [
             json.dumps(_message_for(path, row)) for row in pdf.itertuples(index=False)
         ]
@@ -488,42 +510,10 @@ def _walk_group(cfg: PipelineConfig):
         # ground truth the jsoncost Catalyst expr mirrors (pinned in
         # tests/test_jsoncost.py)
         empty = C.empty_payload_len(obj0)
-        if path == "infra":
-            entry0 = json.loads(obj0["entry"])
-            entry0["logEvents"] = []
-            tmpl = json.dumps(
-                {"context": obj0["context"], "entry": json.dumps(entry0)}
-            )
-            marker = '\\"logEvents\\": []'
-            parts = [json.dumps(m)[1:-1] for m in msg_strs]
-        else:
-            tmpl = json.dumps([{"common": obj0[0]["common"], "logs": []}])
-            marker = '"logs": []'
-            parts = msg_strs
+        payload = _payload_text(obj0, path, msg_strs)
 
-        if tmpl.count(marker) == 1:
-            pre, post = tmpl.split(marker)
-            head, tail = marker[:-1], marker[-1]  # '..."...": [' and ']'
-
-            def gz_len(lo: int, hi: int) -> int:
-                s = pre + head + ", ".join(parts[lo:hi]) + tail + post
-                return len(gzip.compress(s.encode()))
-
-        else:
-            # envelope metadata happens to contain the marker text
-            # (pathological): fall back to the per-probe re-dump — slower
-            # but identical bytes
-            def gz_len(lo: int, hi: int) -> int:
-                sub = pdf.iloc[lo:hi]
-                msgs = [_message_for(path, row) for row in sub.itertuples(index=False)]
-                obj = _envelope(first, path, cfg)
-                if path == "infra":
-                    entry = json.loads(obj["entry"])
-                    entry["logEvents"] = msgs
-                    obj = {"context": obj["context"], "entry": json.dumps(entry)}
-                else:
-                    obj = [{"common": obj[0]["common"], "logs": msgs}]
-                return len(gzip.compress(json.dumps(obj).encode()))
+        def gz_len(lo: int, hi: int) -> int:
+            return len(gzip.compress(payload(lo, hi).encode()))
 
         n_chunks, raw_total = C.count_chunks_fast(costs, empty, max_size, gz_len)
         return pd.DataFrame(

@@ -16,9 +16,17 @@ while doing per-run work proportional to the NEW data:
 - Every output root gains an ``ingest_batch`` partition level:
   ``classified/ingest_batch=N/conv_bucket=K/``,
   ``infra/ingest_batch=N/sink=S/``, ``logging/ingest_batch=N/``,
-  ``chunk_stats/ingest_batch=N/``. A batch commits via dynamic
-  partition overwrite of its own directories, so a killed run re-runs
-  idempotently (the batch record is written last).
+  ``chunk_stats/ingest_batch=N/``. A batch replaces its own
+  directories and no other batch's, and its batch record is written
+  last.
+
+- Recovery has one rule, Iceberg's: a commit publishes a fixed set of
+  data files. Before batch N writes anything, its ``.staged`` record
+  fixes the batch's files and its overlap decision. A re-run after a
+  kill at any point finishes batch N with exactly those files,
+  replacing whatever the killed attempt left; files that arrived since
+  are ingested afterwards, in the same call, as batch N+1. A staged
+  file that vanished or changed size is refused like a recorded one.
 
 - Conversations that REAPPEAR in a later batch (late turns appended to
   an existing conv_id) are handled by conversation-scoped recompute:
@@ -103,6 +111,8 @@ RAW_SCHEMA = StructType(
 )
 RAW_COLS = RAW_SCHEMA.fieldNames()
 TOMBSTONES = "tombstones"
+#: a tombstone row: the superseded hub row's raw columns and its batch
+TOMBSTONE_SCHEMA = StructType([*RAW_SCHEMA.fields, StructField("ingest_batch", IntegerType())])
 
 
 def list_input_files(in_dir: str) -> list[dict]:
@@ -156,12 +166,14 @@ def _write_batch_partition(
 def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """A sink's live rows across all ingest batches: the raw rows minus
     every committed tombstone's (ingest_batch, conv_id). Columns and
-    their order are the raw sink's."""
-    rows = spark.read.parquet(os.path.join(out_dir, name))
+    their order are the raw sink's. Both are read with the schemas the
+    last batch record and ``TOMBSTONE_SCHEMA`` hold."""
+    last = _batch_records(ckpt.CheckpointLog(out_dir))[-1]
+    rows = ckpt.read_with_schema(spark, last["sink_schemas"][name], os.path.join(out_dir, name))
     tombstones = os.path.join(out_dir, TOMBSTONES)
     if not os.path.isdir(tombstones):
         return rows
-    dead = spark.read.parquet(tombstones).select("ingest_batch", "conv_id")
+    dead = spark.read.schema(TOMBSTONE_SCHEMA).parquet(tombstones).select("ingest_batch", "conv_id")
     return rows.join(dead, ["ingest_batch", "conv_id"], "anti").select(*rows.columns)
 
 
@@ -177,9 +189,11 @@ def hub_lookup(spark: SparkSession, out_dir: str, conv_id: str) -> DataFrame:
     table's files regardless of batch count — the read-path payoff of
     the bucketed layout (at 10^12 turns: one bucket's manifest, not the
     table's). The residual conv_id equality prunes further via parquet
-    row-group stats (sinks sort within files by conv_id)."""
+    row-group stats (sinks sort within files by conv_id). The hub is
+    read with the last batch record's ``schema``."""
+    last = _batch_records(ckpt.CheckpointLog(out_dir))[-1]
     return (
-        spark.read.parquet(os.path.join(out_dir, "classified"))
+        ckpt.read_with_schema(spark, last["schema"], os.path.join(out_dir, "classified"))
         .filter(F.col("conv_bucket") == ckpt.conv_bucket(F.lit(conv_id)))
         .filter(F.col("conv_id") == conv_id)
     )
@@ -198,6 +212,13 @@ def run_incremental(
     batches>, "batch_id": int | None, "new_files": [...],
     "superseded_convs": int}. ``batch_id`` is None when there was
     nothing new to do.
+
+    Recovery rule: the ``.staged`` record fixes a batch's files. A
+    re-run after a kill finishes that batch with exactly those files,
+    replacing each of its output directories; a staged file that
+    vanished or changed size is refused like any recorded one. Files
+    that arrived after the staging are then ingested as the next batch
+    in the same call, whose result (counts are cumulative) is returned.
 
     ``fail_at`` is a test hook simulating a mid-run kill: 'staged'
     raises right after the staging commit, 'new_batch' after the new
@@ -218,8 +239,12 @@ def run_incremental(
                 "reprocess from scratch (new out_dir) instead"
             )
 
+    batch_id = len(batches)
+    bstage = f"ingest.b{batch_id}"
+    # a killed attempt's staged record fixes this batch's file set
+    staged = log.read(f"{bstage}.staged")
     known: dict[str, int] = {}
-    for rec in batches:
+    for rec in [*batches, *([staged] if staged else [])]:
         for f in rec["files"]:
             known[f["file"]] = f["bytes"]
     current = list_input_files(in_dir)
@@ -244,7 +269,9 @@ def run_incremental(
         counts["logging_rows"] = 0
     counts.update(batches[-1]["counts"] if batches else {})
     new_files = [f for f in current if f["file"] not in known]
-    if not new_files:
+    # files that arrived after the staging wait for the next batch
+    files, later = (new_files, []) if staged is None else (staged["files"], new_files)
+    if not files:
         return {
             "counts": counts,
             "batch_id": None,
@@ -252,8 +279,6 @@ def run_incremental(
             "superseded_convs": 0,
         }
 
-    batch_id = len(batches)
-    bstage = f"ingest.b{batch_id}"
     staging = os.path.join(out_dir, "_staging", f"b{batch_id}")
     staged_hub = os.path.join(staging, "hub_retained")
     staged_tombstones = os.path.join(staging, TOMBSTONES)
@@ -261,33 +286,14 @@ def run_incremental(
     hub_root = os.path.join(out_dir, "classified")
 
     new_turns = spark.read.schema(RAW_SCHEMA).parquet(
-        *[os.path.join(in_dir, f["file"]) for f in new_files]
+        *[os.path.join(in_dir, f["file"]) for f in files]
     )
 
     # --- overlap detection + staging (all BEFORE any mutation) ----------
-    # The staged marker freezes the decision: a re-run after a mid-commit
-    # kill must not re-derive "affected" from a half-swapped hub.
-    staged = log.read(f"{bstage}.staged")
-    new_file_names = [f["file"] for f in new_files]
-    if staged is not None and staged.get("files") != new_file_names:
-        # input grew between a killed attempt and this re-run: the frozen
-        # overlap decision doesn't cover the newly arrived files. Before
-        # the supersede commit the OLD batches are unmutated, so
-        # restaging is safe as long as the re-derivation ignores any
-        # half-written ingest_batch == batch_id partitions from the killed
-        # attempt (the filter below); once the commit has begun the old
-        # hub no longer holds the superseded rows and the batch must
-        # finish with its original file set first.
-        if log.read(f"{bstage}.cow") is not None:
-            raise ValueError(
-                f"input files changed during recovery of batch {batch_id} "
-                "after its supersede commit; re-run without the new "
-                "files present is impossible — finish/inspect this batch "
-                "manually (staged data is under "
-                f"{staged['staging']}), then ingest the extra files as "
-                "the next batch"
-            )
-        staged = None
+    # The staged record freezes the decision: a re-run after a mid-commit
+    # kill must not re-derive "affected" from a half-swapped hub. This
+    # batch writes nothing before the record lands, so the hub read here
+    # holds earlier batches only.
     if staged is None:
         # a stale retained dir from an earlier staging must never be
         # renamed into the hub
@@ -306,19 +312,7 @@ def run_incremental(
                 r["b"]
                 for r in new_convs.select(ckpt.conv_bucket().alias("b")).distinct().collect()
             ]
-            # ADVICE r6 (high): exclude THIS batch's partitions from the
-            # overlap derivation. A kill in the new_batch window leaves
-            # ingest_batch == batch_id hub/sink partitions on disk with no
-            # .cow record; a restage (input grew during recovery) that
-            # read them would (a) duplicate new_turns into the tombstones
-            # and (b) put (batch_id, bucket) into affected_pairs, whose
-            # commit then rmtree's the freshly written batch's own
-            # partitions — silently dropping conversations. On a first
-            # attempt nothing of batch_id exists yet, so the filter is a
-            # no-op there.
-            hub = ckpt.read_with_schema(spark, batches[-1]["schema"], hub_root).filter(
-                F.col("ingest_batch") != batch_id
-            )
+            hub = ckpt.read_with_schema(spark, batches[-1]["schema"], hub_root)
             candidates = hub.filter(F.col("conv_bucket").isin(new_buckets))
             # one row per affected pair; a conversation lives in exactly
             # one pair, so the per-pair counts add up to the superseded
@@ -370,7 +364,7 @@ def run_incremental(
                 "deleted": deleted_now,
                 "retained_dirs": retained_dirs,
                 "staging": staging,
-                "files": new_file_names,
+                "files": files,
             },
         )
         staged = log.read(f"{bstage}.staged")
@@ -394,7 +388,7 @@ def run_incremental(
         .withColumn("conv_bucket", ckpt.conv_bucket())
     )
 
-    # --- new-batch hub + sinks (dynamic overwrite = idempotent) ---------
+    # --- new-batch hub + sinks (a re-run replaces each directory) -------
     _write_batch_partition(
         inc_hub, hub_root, ["ingest_batch", "conv_bucket"], ["conv_id", "turn_idx"]
     )
@@ -404,6 +398,7 @@ def run_incremental(
     ).drop("ingest_batch", "conv_bucket")
 
     observed: dict[str, dict] = {}
+    sink_schemas: dict[str, str] = {}
 
     def commit(name, df, partition_by, order_by, metrics, follow=None) -> None:
         # observed below the literal ingest_batch, so the write's sort can
@@ -419,12 +414,11 @@ def run_incremental(
             else:
                 _write_batch_partition(frame, root, cols, order_by)
 
-        if follow is not None:
-            # a first write with no rows replaces no partition, so a
-            # killed attempt's appended follow-up is removed here
-            shutil.rmtree(f"{root}/ingest_batch={batch_id}", ignore_errors=True)
+        # whatever a killed attempt left here goes, its follow-up included
+        shutil.rmtree(f"{root}/ingest_batch={batch_id}", ignore_errors=True)
         observed[name] = ckpt.observed_writes(write, df, metrics, follow)
         ckpt.checked_lineage(f"{root}/ingest_batch={batch_id}", observed[name]["rows"])
+        sink_schemas[name] = df.withColumn("ingest_batch", F.lit(batch_id)).schema.json()
 
     write_sinks(batch_hub, cfg, commit)
 
@@ -432,12 +426,9 @@ def run_incremental(
         raise RuntimeError("injected kill at new_batch")
 
     # --- supersede commit: renames only, no Spark job -------------------
-    # The .cow record comes FIRST: from here on the old hub is no longer
-    # intact, so a restage is refused. Every step below is idempotent and
-    # re-applied by each re-run until the batch record lands.
+    # Every step is idempotent and re-applied by each re-run until the
+    # batch record lands.
     if affected_pairs:
-        if log.read(f"{bstage}.cow") is None:
-            log.record(f"{bstage}.cow", {"affected_pairs": [list(p) for p in affected_pairs]})
         moved = {tuple(p) for p in staged["retained_dirs"]}
         for b, k in affected_pairs:
             live = _pair_dir(hub_root, b, k)
@@ -466,7 +457,7 @@ def run_incremental(
         bstage,
         {
             "rows": sum(counts.values()),
-            "files": new_files,
+            "files": files,
             "counts": counts,
             "chunk_totals": chunk_totals,
             "over_cap": stats["over_cap"] if stats else 0,
@@ -475,13 +466,16 @@ def run_incremental(
             "deleted": staged["deleted"],
             "config": fingerprint,
             "schema": hub_schema,
+            "sink_schemas": sink_schemas,
         },
     )
     shutil.rmtree(staging, ignore_errors=True)
+    if later:
+        return run_incremental(spark, in_dir, out_dir, cfg)
     return {
         "counts": counts,
         "batch_id": batch_id,
-        "new_files": [f["file"] for f in new_files],
+        "new_files": [f["file"] for f in files],
         "superseded_convs": superseded_convs,
     }
 

@@ -339,29 +339,35 @@ def test_kill_before_cow_resumes(spark, kill_env, tmp_path_factory):
     _compare_outputs(spark, out, str(base / "oneshot"))
 
 
-def test_kill_after_first_hub_rename_resumes(spark, kill_env, tmp_path_factory):
-    """Kill inside the supersede commit, right after its first hub
-    rename: part of the hub is swapped, the rest and the tombstones are
-    still staged. The re-run must finish the commit and converge to the
-    one-shot outputs and counts."""
+def _add_bucket_mate(spark, stage: str, in_dir: str) -> None:
+    """Add a copy of c0 under a conv_id in c0's bucket, so that bucket
+    keeps retained rows when c0 is superseded and its hub dir is swapped
+    by rename (the 'hub_rename' kill window)."""
     import zlib
 
-    base = tmp_path_factory.mktemp("inc_kill3")
-    in_dir = str(base / "input")
-    os.makedirs(in_dir)
-    _copy_parts(f"{kill_env['stage']}/a", in_dir, "batch_a")
-    # a copy of c0 under a conv_id in c0's bucket, so that bucket keeps
-    # retained rows and its hub dir is swapped by rename
     bucket = zlib.crc32(EXT_FILL_CONV.encode()) % 32
     mate = next(
         f"{EXT_FILL_CONV}_mate{i}"
         for i in range(10_000)
         if zlib.crc32(f"{EXT_FILL_CONV}_mate{i}".encode()) % 32 == bucket
     )
-    spark.read.parquet(f"{kill_env['stage']}/a").filter(
-        F.col("conv_id") == EXT_FILL_CONV
-    ).withColumn("conv_id", F.lit(mate)).coalesce(1).write.parquet(str(base / "mate"))
-    _copy_parts(str(base / "mate"), in_dir, "batch_a_mate")
+    mate_dir = f"{in_dir}_mate"
+    spark.read.parquet(f"{stage}/a").filter(F.col("conv_id") == EXT_FILL_CONV).withColumn(
+        "conv_id", F.lit(mate)
+    ).coalesce(1).write.mode("overwrite").parquet(mate_dir)
+    _copy_parts(mate_dir, in_dir, "batch_a_mate")
+
+
+def test_kill_after_first_hub_rename_resumes(spark, kill_env, tmp_path_factory):
+    """Kill inside the supersede commit, right after its first hub
+    rename: part of the hub is swapped, the rest and the tombstones are
+    still staged. The re-run must finish the commit and converge to the
+    one-shot outputs and counts."""
+    base = tmp_path_factory.mktemp("inc_kill3")
+    in_dir = str(base / "input")
+    os.makedirs(in_dir)
+    _copy_parts(f"{kill_env['stage']}/a", in_dir, "batch_a")
+    _add_bucket_mate(spark, kill_env["stage"], in_dir)
     out = str(base / "out")
     assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
     _copy_parts(f"{kill_env['stage']}/c", in_dir, "batch_c")
@@ -455,55 +461,44 @@ def _fresh(tmp_path_factory, stage, name):
 
 def test_files_arriving_during_recovery_restage(spark, split_c, tmp_path_factory):
     """Kill at 'staged', then MORE input files arrive before the re-run:
-    the frozen overlap decision no longer covers the batch, so the
-    re-run must restage over the full new-file set (nothing was mutated
-    yet) — otherwise the extra files' overlaps would duplicate rows."""
+    the staged record fixed batch 1's files, so one plain re-run
+    finishes batch 1 with exactly those and ingests the arrivals as
+    batch 2. Re-using the frozen overlap decision for the arrivals would
+    duplicate c0/c3 across batches 0 and 1."""
     in_dir, out, oneshot = _fresh(tmp_path_factory, split_c, "inc_regrow")
     assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
     # the kill happens with a NO-overlap file set staged (affected = []);
-    # the files that arrive next DO overlap — replaying the frozen
-    # decision would duplicate c0/c3 across batches 0 and 1
+    # the files that arrive next DO overlap
     _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
     with pytest.raises(RuntimeError, match="injected kill at staged"):
         run_incremental(spark, in_dir, out, CFG, fail_at="staged")
     _copy_parts(f"{split_c}/c_ext", in_dir, "batch_c_ext")
     result = run_incremental(spark, in_dir, out, CFG)
-    assert result["batch_id"] == 1
+    assert result["batch_id"] == 2
     assert result["superseded_convs"] == 2
+    b1 = ckpt.CheckpointLog(out).read("ingest.b1")
+    assert b1["superseded_convs"] == 0
+    assert all(f["file"].startswith("batch_c_new") for f in b1["files"])
     one = _oneshot(spark, in_dir, oneshot)
     assert result["counts"] == one["counts"]
     _compare_outputs(spark, out, oneshot)
 
 
 def test_files_arriving_after_cow_commit_refused(spark, split_c, tmp_path_factory):
-    """Kill at 'cow' (old hub pairs swapped, tombstones committed), then more files
-    arrive: the batch can no longer be re-derived, so the run refuses
-    loudly; finishing with the original file set first, then ingesting
-    the extra files as the next batch, converges."""
+    """Kill at 'cow' (old hub pairs swapped, tombstones committed), then
+    more files arrive: one plain re-run finishes batch 1 with its staged
+    files and ingests the arrivals as batch 2, with no operator step.
+    (The name is kept from when this case was refused.)"""
     in_dir, out, oneshot = _fresh(tmp_path_factory, split_c, "inc_cowgrow")
     assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
     _copy_parts(f"{split_c}/c_ext", in_dir, "batch_c_ext")
     with pytest.raises(RuntimeError, match="injected kill at cow"):
         run_incremental(spark, in_dir, out, CFG, fail_at="cow")
     _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
-    with pytest.raises(ValueError, match="during recovery"):
-        run_incremental(spark, in_dir, out, CFG)
-    # finish the killed batch with its original file set…
-    extra = [
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.startswith("batch_c_new")
-    ]
-    held = {}
-    for p in extra:
-        held[p] = p + ".held"
-        os.replace(p, held[p])
-    assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 1
-    # …then the extra files land as the NEXT batch
-    for p, h in held.items():
-        os.replace(h, p)
     result = run_incremental(spark, in_dir, out, CFG)
     assert result["batch_id"] == 2
+    assert result["superseded_convs"] == 0
+    assert ckpt.CheckpointLog(out).read("ingest.b1")["superseded_convs"] == 2
     one = _oneshot(spark, in_dir, oneshot)
     assert result["counts"] == one["counts"]
     _compare_outputs(spark, out, oneshot)
@@ -512,15 +507,13 @@ def test_files_arriving_after_cow_commit_refused(spark, split_c, tmp_path_factor
 def test_files_arriving_during_new_batch_recovery_restage(
     spark, split_c, tmp_path_factory
 ):
-    """ADVICE r6 (high): kill at 'new_batch' — the batch's hub/sink
-    partitions are already on disk, the .cow record is NOT — then more
-    input files arrive before the re-run. The restage must derive the
-    overlap from the OLD batches only (ingest_batch != batch_id):
-    reading the half-written batch would duplicate its rows into
-    the tombstones and rmtree the freshly rewritten batch's own
-    partitions with empty retained rows, silently dropping
-    conversations. Mirrors test_files_arriving_during_recovery_restage
-    one failure window later."""
+    """Kill at 'new_batch' — the batch's hub/sink partitions are already
+    on disk, the supersede commit has not run — then more input files
+    arrive before the re-run. The re-run replaces batch 1's directories
+    from its staged files and decision, commits it, and ingests the
+    arrivals as batch 2. Mirrors
+    test_files_arriving_during_recovery_restage one failure window
+    later."""
     in_dir, out, oneshot = _fresh(tmp_path_factory, split_c, "inc_nbgrow")
     assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
     # overlapping extension files are staged AND the new batch is fully
@@ -528,13 +521,45 @@ def test_files_arriving_during_new_batch_recovery_restage(
     _copy_parts(f"{split_c}/c_ext", in_dir, "batch_c_ext")
     with pytest.raises(RuntimeError, match="injected kill at new_batch"):
         run_incremental(spark, in_dir, out, CFG, fail_at="new_batch")
-    # growth during recovery -> restage over the full file set
     _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
     result = run_incremental(spark, in_dir, out, CFG)
-    assert result["batch_id"] == 1
+    assert result["batch_id"] == 2
     one = _oneshot(spark, in_dir, oneshot)
     assert result["counts"] == one["counts"]
     _compare_outputs(spark, out, oneshot)
+
+
+def test_files_arriving_after_hub_rename_converge(spark, split_c, tmp_path_factory):
+    """Kill inside the supersede commit, then more files arrive: one
+    plain re-run finishes the commit for batch 1's staged files and
+    ingests the arrivals as batch 2."""
+    in_dir, out, oneshot = _fresh(tmp_path_factory, split_c, "inc_renamegrow")
+    _add_bucket_mate(spark, split_c, in_dir)
+    assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
+    _copy_parts(f"{split_c}/c_ext", in_dir, "batch_c_ext")
+    with pytest.raises(RuntimeError, match="injected kill at hub_rename"):
+        run_incremental(spark, in_dir, out, CFG, fail_at="hub_rename")
+    _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
+    result = run_incremental(spark, in_dir, out, CFG)
+    assert result["batch_id"] == 2
+    one = _oneshot(spark, in_dir, oneshot)
+    assert result["counts"] == one["counts"]
+    _compare_outputs(spark, out, oneshot)
+
+
+def test_staged_file_removed_before_rerun_refused(spark, split_c, tmp_path_factory):
+    """Kill at 'staged', then one of the staged input files is deleted:
+    the staged record fixed the batch's files, so the re-run refuses it
+    like a recorded file instead of silently staging a smaller batch."""
+    in_dir, out, _ = _fresh(tmp_path_factory, split_c, "inc_stagedel")
+    assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
+    _copy_parts(f"{split_c}/c_new", in_dir, "batch_c_new")
+    _copy_parts(f"{split_c}/c_ext", in_dir, "batch_c_ext")
+    with pytest.raises(RuntimeError, match="injected kill at staged"):
+        run_incremental(spark, in_dir, out, CFG, fail_at="staged")
+    os.remove(os.path.join(in_dir, "batch_c_ext_0.parquet"))
+    with pytest.raises(ValueError, match="append-only"):
+        run_incremental(spark, in_dir, out, CFG)
 
 
 def test_append_reads_no_earlier_batch_sink_files(spark, env, tmp_path_factory):

@@ -24,6 +24,9 @@ from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.functions import chunking as C
 from aws_log_ingestion_spark.functions import jsoncost as jc
 from aws_log_ingestion_spark.operators.chunks import (
+    _META,
+    _envelope,
+    _payload_text,
     chunk_counts_fast,
     chunk_raw_costs,
     chunk_replay,
@@ -175,8 +178,6 @@ META_VARIANTS = [
 @pytest.mark.parametrize("meta", META_VARIANTS)
 @pytest.mark.parametrize("path", ["infra", "logging"])
 def test_empty_len_exprs_match_pure(spark, meta, path):
-    from aws_log_ingestion_spark.operators.chunks import _envelope
-
     cfg = PipelineConfig(tags={"env": "prod", "team": "a-b"})
     want = C.empty_payload_len(_envelope(meta, path, cfg))
     lit = {k: F.lit(v) for k, v in meta.items()}
@@ -311,8 +312,9 @@ def test_walk_preserialized_assembly_bitexact_on_hostile_text(spark, path):
     """The pre-serialized string-join payload assembly in
     chunk_counts_fast's walk must stay bit-identical to whole-object
     json.dumps under escape-heavy text: unicode (ensure_ascii \\uXXXX),
-    quotes, backslashes, tabs/newlines and control chars — at a tiny cap
-    so the ambiguous gzip band (the only place gz_len runs) is hit."""
+    quotes, backslashes, tabs/newlines and control chars, in the events
+    and in the envelope's owner and log stream — at a tiny cap so the
+    ambiguous gzip band (the only place gz_len runs) is hit."""
     hostile = [
         'quote " and \\ backslash \t tab',
         "unicode é中文\U0001f600 mixed",
@@ -334,9 +336,18 @@ def test_walk_preserialized_assembly_bitexact_on_hostile_text(spark, path):
         )
         for i in range(40)
     ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts_ms long"
-    ).withColumn("ts", (F.col("ts_ms") / 1000).cast("timestamp")).drop("ts_ms")
+    # envelope values holding both marker texts, raw and escaped: the
+    # template's real events list must still be the split point
+    markers = '"logs": [] "logEvents": [] \\"logEvents\\": []'
+    df = (
+        spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, text string, tool string, ts_ms long"
+        )
+        .withColumn("ts", (F.col("ts_ms") / 1000).cast("timestamp"))
+        .drop("ts_ms")
+        .withColumn("owner", F.lit(f"owner {markers}"))
+        .withColumn("log_stream_name", F.lit(f"stream {markers}"))
+    )
     cfg = PipelineConfig(max_payload_size=2000)
     hub = classify(df, cfg)
     exact = {r["conv_id"]: r.asDict() for r in chunk_replay(hub, path, cfg).collect()}
@@ -347,3 +358,30 @@ def test_walk_preserialized_assembly_bitexact_on_hostile_text(spark, path):
     assert fast["c0"]["n_chunks"] == exact["c0"]["n_chunks"]
     assert fast["c0"]["n_chunks"] > 1  # the cap actually forced splitting
     assert fast["c0"]["n_events"] == 40
+
+
+@pytest.mark.parametrize("path", ["infra", "logging"])
+def test_walk_payload_text_splits_at_events_list(path):
+    """The walk's string-join payload equals json.dumps of the whole
+    payload byte for byte when every envelope value holds the
+    events-list marker texts, raw and escaped. (gzip absorbs a misplaced
+    or repeated insertion, so chunk counts alone cannot pin this.)"""
+    markers = '"logs": [] "logEvents": [] \\"logEvents\\": []'
+    first = {
+        "conv_id": "c0",
+        **{m: f"{m} {markers}" for m in _META},
+        "log_group": f"/aws/lambda/fn {markers}",
+    }
+    msgs = [
+        {"id": str(i), "timestamp": i, "message": f"event {i} {markers} é\t\x01"}
+        for i in range(5)
+    ]
+    obj0 = _envelope(first, path, PipelineConfig())
+    payload = _payload_text(obj0, path, [json.dumps(m) for m in msgs])
+    for lo, hi in [(0, 0), (0, 1), (1, 4), (0, 5)]:
+        if path == "infra":
+            entry = {**json.loads(obj0["entry"]), "logEvents": msgs[lo:hi]}
+            want = {"context": obj0["context"], "entry": json.dumps(entry)}
+        else:
+            want = [{"common": obj0[0]["common"], "logs": msgs[lo:hi]}]
+        assert payload(lo, hi) == json.dumps(want), (lo, hi)

@@ -1,6 +1,8 @@
-"""The runners read parquet with schemas they already hold: the hub with
-the ``schema`` its record carries, input files and tombstones with
-``incremental.RAW_SCHEMA``. A plain ``spark.read.parquet`` starts a
+"""The runners and the incremental readers read parquet with schemas they
+already hold: the hub with the ``schema`` its record carries, the
+incremental sinks with their batch record's ``sink_schemas``, input
+files and tombstones with ``incremental.RAW_SCHEMA`` (plus
+``ingest_batch``). A plain ``spark.read.parquet`` starts a
 schema-inference job outside any SQL execution; these tests count such
 jobs in one job group and expect none."""
 
@@ -12,7 +14,12 @@ from contextlib import contextmanager
 
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators import checkpoint as ckpt
-from aws_log_ingestion_spark.plans.incremental import run_incremental
+from aws_log_ingestion_spark.plans.incremental import (
+    TOMBSTONE_SCHEMA,
+    hub_lookup,
+    live_rows,
+    run_incremental,
+)
 from aws_log_ingestion_spark.plans.job import run_pipeline
 
 CFG = PipelineConfig(logging_enabled=True)
@@ -60,6 +67,14 @@ def test_run_pipeline_infers_no_schema(spark, template_df, template_meta_df, tmp
     )
 
 
+def _late_turns(template_df):
+    """Late turns of c0: ingested after the templates, they supersede
+    one conversation."""
+    return template_df.filter("conv_id = 'c0'").selectExpr(
+        "conv_id", "turn_idx + 1000 AS turn_idx", "role", "text", "tool", "ts"
+    )
+
+
 def test_incremental_append_infers_no_schema(spark, template_df, tmp_path):
     """An append with late turns reads new input files, the hub (overlap
     and batch read-back) and the tombstones."""
@@ -67,12 +82,42 @@ def test_incremental_append_infers_no_schema(spark, template_df, tmp_path):
     out = str(tmp_path / "out")
     template_df.coalesce(1).write.parquet(f"{in_dir}/b0")
     assert run_incremental(spark, in_dir, out, CFG)["batch_id"] == 0
-    late = template_df.filter("conv_id = 'c0'").selectExpr(
-        "conv_id", "turn_idx + 1000 AS turn_idx", "role", "text", "tool", "ts"
-    )
-    late.coalesce(1).write.parquet(f"{in_dir}/b1")
+    _late_turns(template_df).coalesce(1).write.parquet(f"{in_dir}/b1")
     with _job_group(spark) as jobs:
         result = run_incremental(spark, in_dir, out, CFG)
     assert result["batch_id"] == 1 and result["superseded_convs"] == 1
     assert jobs
     assert not _jobs_outside_sql(spark, jobs)
+
+
+def test_incremental_readers_infer_no_schema(spark, template_df, tmp_path):
+    """``live_rows`` and ``hub_lookup`` over a two-batch out dir with
+    tombstones read with the recorded schemas, which equal what a plain
+    read infers."""
+    in_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    template_df.coalesce(1).write.parquet(f"{in_dir}/b0")
+    run_incremental(spark, in_dir, out, CFG)
+    _late_turns(template_df).coalesce(1).write.parquet(f"{in_dir}/b1")
+    assert run_incremental(spark, in_dir, out, CFG)["superseded_convs"] == 1
+    with _job_group(spark) as jobs:
+        assert live_rows(spark, out, "chunk_stats").count() > 0
+    assert jobs
+    assert not _jobs_outside_sql(spark, jobs)
+    with _job_group(spark) as jobs:
+        assert hub_lookup(spark, out, "c0").count() > 0
+    assert jobs
+    assert not _jobs_outside_sql(spark, jobs)
+
+    record = ckpt.CheckpointLog(out).read("ingest.b1")
+    reads = {"classified": record["schema"], **record["sink_schemas"]}
+    assert sorted(reads) == ["chunk_stats", "classified", "infra", "logging"]
+    for name, schema in reads.items():
+        root = f"{out}/{name}"
+        assert ckpt.read_with_schema(spark, schema, root).schema == (
+            spark.read.parquet(root).schema
+        ), name
+    tombstones = f"{out}/tombstones"
+    assert spark.read.schema(TOMBSTONE_SCHEMA).parquet(tombstones).schema == (
+        spark.read.parquet(tombstones).schema
+    )
