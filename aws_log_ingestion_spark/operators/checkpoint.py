@@ -176,11 +176,11 @@ def write_parquet(
     ``mode`` is how the write commits:
 
     - ``"overwrite"``: replace ``path`` whole (checkpoint-gated stage
-      writes).
+      writes, each incremental batch's directory).
     - ``"dynamic"``: replace only the partition directories present in
       ``df``; output is staged and published at job commit, so a failed
-      job publishes nothing (the hub, every incremental batch write).
-    - ``"append"``: add files (the streaming skin).
+      job publishes nothing (the ``run_pipeline`` hub).
+    - ``"append"``: add files (the streaming skin, follow-up writes).
     """
     cols = [*partition_by, *order_by]
     if cols:

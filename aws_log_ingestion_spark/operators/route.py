@@ -115,7 +115,7 @@ def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     order_by, metrics, follow=None)``, in the order infra, logging,
     chunk_stats. The commit owns the write: ``checkpoint.write_parquet``
     with the partition and order columns fixed here, in its checkpointed
-    overwrite, per-batch dynamic overwrite or streaming append mode.
+    overwrite, per-batch directory overwrite or streaming append mode.
     ``metrics`` are the ``observe()`` aggregates a counting commit puts
     on the write, so no runner re-reads a sink to count it. ``follow``,
     when given, is called once after the write; a frame it returns is

@@ -16,9 +16,9 @@ while doing per-run work proportional to the NEW data:
 - Every output root gains an ``ingest_batch`` partition level:
   ``classified/ingest_batch=N/conv_bucket=K/``,
   ``infra/ingest_batch=N/sink=S/``, ``logging/ingest_batch=N/``,
-  ``chunk_stats/ingest_batch=N/``. A batch replaces its own
-  directories and no other batch's, and its batch record is written
-  last.
+  ``chunk_stats/ingest_batch=N/``. A batch is written straight into
+  its own ``ingest_batch=N/`` directories, replacing them and no other
+  batch's, and its batch record is written last.
 
 - Recovery has one rule, Iceberg's: a commit publishes a fixed set of
   data files. Before batch N writes anything, its ``.staged`` record
@@ -80,6 +80,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -94,7 +95,7 @@ from ..operators import checkpoint as ckpt
 from ..operators import chunks as chunk_op
 from ..operators.route import INFRA_SINKS, route_count_exprs, write_sinks
 from ..sources.derive import conv_meta_from_transcripts
-from .job import prepare
+from . import job
 
 #: the transcript columns an input file contributes, with their types:
 #: input files and tombstones are read with this schema, so no read
@@ -153,14 +154,32 @@ def _cfg_fingerprint(cfg: PipelineConfig) -> dict:
     return json.loads(json.dumps(fp))
 
 
+def _batch_dir(root: str, batch: int) -> str:
+    return os.path.join(root, f"ingest_batch={batch}")
+
+
+def _with_batch(df: DataFrame, batch: int) -> DataFrame:
+    """``df`` with the ``ingest_batch`` column its batch directory adds on
+    read: the frame whose schema a batch record holds."""
+    return df.withColumn("ingest_batch", F.lit(batch))
+
+
 def _write_batch_partition(
-    df: DataFrame, root: str, partition_cols: list[str], order_cols: list[str]
+    df: DataFrame,
+    root: str,
+    batch: int,
+    partition_cols: list[str],
+    order_cols: list[str],
+    mode: str = "overwrite",
 ) -> None:
-    """Dynamic-partition-overwrite commit of one batch's directories.
-    Only the partitions present in ``df`` are replaced — a re-run after a
-    mid-write kill converges (idempotent), and other batches' directories
-    are never touched."""
-    ckpt.write_parquet(df, root, partition_cols, order_cols, mode="dynamic")
+    """Write one batch's rows into ``<root>/ingest_batch=<batch>/``, which
+    ``mode="overwrite"`` replaces whole: a re-run after a mid-write kill
+    converges (idempotent), and other batches' directories are never
+    touched. ``df`` has no ``ingest_batch`` column; the directory supplies
+    it on read. A literal batch column in the written frame would put the
+    batch id into the write stage's generated code, and Spark would
+    compile that stage anew for every append."""
+    ckpt.write_parquet(df, _batch_dir(root, batch), partition_cols, order_cols, mode)
 
 
 def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
@@ -178,7 +197,7 @@ def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
 
 
 def _pair_dir(root: str, batch: int, bucket: int) -> str:
-    return os.path.join(root, f"ingest_batch={batch}", f"conv_bucket={bucket}")
+    return os.path.join(_batch_dir(root, batch), f"conv_bucket={bucket}")
 
 
 def hub_lookup(spark: SparkSession, out_dir: str, conv_id: str) -> DataFrame:
@@ -345,11 +364,11 @@ def run_incremental(
                     staged_tombstones,
                 )
                 deleted_now = {k: int(v or 0) for k, v in obs.get.items()}
-                _write_batch_partition(
+                ckpt.write_parquet(
                     affected_parts.join(new_convs, "conv_id", "anti"),
                     staged_hub,
                     ["ingest_batch", "conv_bucket"],
-                    ["conv_id", "turn_idx"],
+                    ckpt.HUB_ORDER,
                 )
                 retained_dirs = [
                     [b, k]
@@ -375,24 +394,33 @@ def run_incremental(
 
     # --- recompute input: new turns + prior turns of superseded convs ---
     inc_turns = new_turns
+    batch_rows = sum(
+        pq.ParquetFile(os.path.join(in_dir, f["file"])).metadata.num_rows for f in files
+    )
     if affected_pairs:
         # the tombstones sit in staging until the commit renames them
         tomb_dir = staged_tombstones if os.path.isdir(staged_tombstones) else tombstones
         inc_turns = inc_turns.unionByName(
             spark.read.schema(RAW_SCHEMA).parquet(tomb_dir)
         )
+        batch_rows += sum(e["rows"] for e in ckpt.file_lineage(tomb_dir))
     conv_meta = conv_meta_from_transcripts(inc_turns)
-    inc_hub = (
-        prepare(inc_turns, conv_meta, cfg)
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .withColumn("conv_bucket", ckpt.conv_bucket())
-    )
+    # footer rows, no Spark job: a batch of at most SKEW_THRESHOLD rows
+    # cannot hold a conversation above it, so the skew probe is skipped
+    skew_threshold = 0 if batch_rows <= job.SKEW_THRESHOLD else None
+    inc_hub = job.prepare(inc_turns, conv_meta, cfg, skew_threshold)
 
     # --- new-batch hub + sinks (a re-run replaces each directory) -------
     _write_batch_partition(
-        inc_hub, hub_root, ["ingest_batch", "conv_bucket"], ["conv_id", "turn_idx"]
+        inc_hub.withColumn("conv_bucket", ckpt.conv_bucket()),
+        hub_root,
+        batch_id,
+        ["conv_bucket"],
+        ckpt.HUB_ORDER,
     )
-    hub_schema = inc_hub.schema.json()
+    hub_schema = (
+        _with_batch(inc_hub, batch_id).withColumn("conv_bucket", ckpt.conv_bucket()).schema.json()
+    )
     batch_hub = ckpt.read_with_schema(spark, hub_schema, hub_root).filter(
         F.col("ingest_batch") == batch_id
     ).drop("ingest_batch", "conv_bucket")
@@ -401,24 +429,17 @@ def run_incremental(
     sink_schemas: dict[str, str] = {}
 
     def commit(name, df, partition_by, order_by, metrics, follow=None) -> None:
-        # observed below the literal ingest_batch, so the write's sort can
-        # still drop that constant key; only this batch's footers are read
+        # only this batch's footers are read
         root = os.path.join(out_dir, name)
-        cols = ["ingest_batch", *partition_by]
 
         def write(frame: DataFrame, append: bool) -> None:
-            frame = frame.withColumn("ingest_batch", F.lit(batch_id))
-            if append:
-                # a follow-up appends into the partition just overwritten
-                ckpt.write_parquet(frame, root, cols, order_by, mode="append")
-            else:
-                _write_batch_partition(frame, root, cols, order_by)
+            # a follow-up appends into the directory just overwritten
+            mode = "append" if append else "overwrite"
+            _write_batch_partition(frame, root, batch_id, partition_by, order_by, mode)
 
-        # whatever a killed attempt left here goes, its follow-up included
-        shutil.rmtree(f"{root}/ingest_batch={batch_id}", ignore_errors=True)
         observed[name] = ckpt.observed_writes(write, df, metrics, follow)
-        ckpt.checked_lineage(f"{root}/ingest_batch={batch_id}", observed[name]["rows"])
-        sink_schemas[name] = df.withColumn("ingest_batch", F.lit(batch_id)).schema.json()
+        ckpt.checked_lineage(_batch_dir(root, batch_id), observed[name]["rows"])
+        sink_schemas[name] = _with_batch(df, batch_id).schema.json()
 
     write_sinks(batch_hub, cfg, commit)
 

@@ -123,9 +123,14 @@ def get_spark(
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # keep AQE from coalescing below the core count: the conv_id
-        # window sort must use every core, not 3 fat partitions (default
-        # advisory 64MB collapses small-but-CPU-heavy shuffles)
+        # 8m instead of the default 64MB advisory size, so large
+        # shuffles split finer. Small ones are not helped: with
+        # coalescePartitions.parallelismFirst on (the default) AQE ignores
+        # the advisory size and coalesces down to the 1 MB minPartitionSize
+        # floor. At benchmark scale the hub's 1.66 MB shuffle therefore
+        # runs its fill window, sort and write as ONE task (0.42 s, ~20% of
+        # a warm batch_bucketed op on 4 vCPUs) while the other cores idle;
+        # see ROADMAP Direction 2.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         # Generated-class cache (static conf; LRU, default 100 entries).
         # Measured working sets, in distinct generated classes: template
@@ -136,6 +141,20 @@ def get_spark(
         # warm batch_bucketed op on 4 vCPUs, 0-6 at 1024, and cpu_s fell
         # 14%. 1024 is > 4x the largest working set.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # PySpark's call-site capture (errors/utils.py::_with_origin) walks
+        # the Python stack and calls the JVM (active session, a conf read,
+        # PySparkCurrentOrigin set/clear) on every functions.* and Column
+        # call: one F.col costs 13 py4j round trips (~490 us) with it and
+        # 3 (~170 us) without. Building route.write_sinks' three frames
+        # over the template hub takes ~8,600 round trips with it and
+        # ~2,700 without (tests/test_plan_build.py). A warm batch_bucketed
+        # op's wall_s fell 2.25 ->
+        # 2.07 s (medians of 10 interleaved pairs, 4 vCPUs). Trade-off: an
+        # error raised from an expression loses the Python file:line in its
+        # "DataFrame query context"; the exception and its Spark-side
+        # context stay. PySpark reads this once per process, at the first
+        # functions.* call, so the session conf is the place to set it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # subset-key co-partitioning (pre-3.3 behavior): a side already
         # hash-clustered on conv_id satisfies a join on

@@ -5,10 +5,10 @@ Spark keeps compiled generated classes in an LRU cache
 ``run_pipeline`` over the template corpus uses ~130 distinct classes, so
 at the default every repeated run evicted its own classes and recompiled
 about 100 of them, and every streaming micro-batch 30-50. ``get_spark``
-sizes the cache to 1024; these tests pin that repeated runs and
-micro-batches reuse compiled classes. A warm run is not pinned at zero:
-AQE replans by stage completion order, so it can still generate a few
-new classes.
+sizes the cache to 1024; these tests pin that repeated runs,
+micro-batches and appends reuse compiled classes. A warm run is not
+pinned at zero: AQE replans by stage completion order, so it can still
+generate a few new classes.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators import checkpoint as ckpt
+from aws_log_ingestion_spark.plans.incremental import run_incremental
 from aws_log_ingestion_spark.plans.job import codegen_compilations, run_pipeline
 from aws_log_ingestion_spark.streaming.stream_job import make_batch_processor
 
@@ -51,3 +52,30 @@ def test_micro_batches_reuse_compiled_classes(spark, template_df, template_meta_
         process(batch, batch_id)
         compiled.append(codegen_compilations(spark) - before)
     assert max(compiled[1:]) <= 10, compiled
+
+
+def test_third_append_reuses_compiled_classes(spark, template_df, tmp_path):
+    """A bootstrap and three appends in one session, each append with new
+    conversations plus late turns of one bootstrapped conversation. Each
+    batch is written into its own ingest_batch directory without a batch
+    column, so no write stage's generated code holds the batch id and the
+    third append compiles almost nothing (with a literal batch column,
+    the hub's and the sinks' write stages compiled 8 classes per append)."""
+    conv_ids = sorted(r["conv_id"] for r in template_df.select("conv_id").distinct().collect())
+    in_dir, out = str(tmp_path / "in"), str(tmp_path / "out")
+    boot = conv_ids[0::4]
+    template_df.filter(F.col("conv_id").isin(boot)).coalesce(1).write.parquet(f"{in_dir}/b0")
+    run_incremental(spark, in_dir, out, CFG)
+    compiled = []
+    for i in range(1, 4):
+        late = template_df.filter(F.col("conv_id") == boot[i - 1]).withColumn(
+            "turn_idx", F.col("turn_idx") + 1000
+        )
+        template_df.filter(F.col("conv_id").isin(conv_ids[i::4])).unionByName(late).coalesce(
+            1
+        ).write.parquet(f"{in_dir}/b{i}")
+        before = codegen_compilations(spark)
+        result = run_incremental(spark, in_dir, out, CFG)
+        compiled.append(codegen_compilations(spark) - before)
+        assert result["batch_id"] == i and result["superseded_convs"] == 1
+    assert compiled[2] <= 3, compiled

@@ -1,13 +1,17 @@
 """Hot-conversation skew: the two-pass salted forward-fill must equal the
-naive window on a genuinely hot conversation (FIXTURES.md §4 hot_conv)."""
+naive window on a genuinely hot conversation (FIXTURES.md §4 hot_conv),
+and the skew probe runs where a conversation can exceed the threshold."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from test_read_schemas import _job_group
 
+from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.functions import patterns as P
 from aws_log_ingestion_spark.operators.classify import forward_fill, forward_fill_salted
 from aws_log_ingestion_spark.plans import job as J
+from aws_log_ingestion_spark.plans.incremental import run_incremental
 from aws_log_ingestion_spark.sources import datagen
 
 
@@ -141,3 +145,34 @@ def test_salted_fill_carry_across_empty_blocks(spark):
         for r in forward_fill_salted(df, "v", "fill", salt_range=2).collect()
     }
     assert got == {0: "v1", 1: "v1", 2: "v1", 3: "v1", 4: "v1", 5: "v1", 6: "v2", 7: "v2"}
+
+
+def test_incremental_runs_skew_probe_only_when_it_can_fire(
+    spark, template_df, tmp_path, monkeypatch
+):
+    """``run_incremental`` counts the batch's rows from parquet footers: a
+    batch of at most ``SKEW_THRESHOLD`` rows cannot hold a conversation
+    above it and runs no ``max_conv_rows`` job; below the batch's rows
+    the probe runs once."""
+    cfg = PipelineConfig(logging_enabled=True)
+    probes = []
+    probe = J.max_conv_rows
+
+    def grouped_probe(df):
+        with _job_group(spark) as jobs:
+            m = probe(df)
+        probes.append(jobs)
+        return m
+
+    monkeypatch.setattr(J, "max_conv_rows", grouped_probe)
+    in_dir, out = str(tmp_path / "in"), str(tmp_path / "out")
+    conv_ids = sorted(r["conv_id"] for r in template_df.select("conv_id").distinct().collect())
+    template_df.filter(F.col("conv_id").isin(conv_ids[0::2])).write.parquet(f"{in_dir}/b0")
+    run_incremental(spark, in_dir, out, cfg)
+    assert probes == []
+
+    batch = template_df.filter(F.col("conv_id").isin(conv_ids[1::2]))
+    batch.write.parquet(f"{in_dir}/b1")
+    monkeypatch.setattr(J, "SKEW_THRESHOLD", batch.count() - 1)
+    run_incremental(spark, in_dir, out, cfg)
+    assert len(probes) == 1 and probes[0], probes
