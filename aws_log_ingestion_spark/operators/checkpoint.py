@@ -9,7 +9,7 @@ per-partition lineage, written after each successful sink commit. A
 re-run consults the manifest and skips (or verifies) completed sinks, so
 a mid-job kill converges to identical per-sink counts. Every
 ``run_pipeline`` stage commits through ``commit_stage``, which counts on
-the write itself (an Iceberg snapshot summary, not a rescan).
+the write itself (one ``observe()``, not a rescan).
 ``write_parquet`` is the package's one DataFrame parquet writer; every
 runner commits through it.
 """
@@ -105,61 +105,6 @@ def file_lineage(path: str) -> list[dict]:
                     }
                 )
     return out
-
-
-# --- Iceberg catalog routing (VERDICT r3 #7) -------------------------------
-# Sinks write to Iceberg tables when (a) a SparkCatalog is configured AND
-# (b) the Iceberg runtime jar is actually on the classpath; parquet paths
-# otherwise (this sandbox — no jar — always takes the parquet branch;
-# SURVEY.md §7 licenses the fallback). Detection is split so the branch
-# choice itself is testable without the jar.
-
-ICEBERG_NAMESPACE = os.environ.get("SPARK_GRAFT_ICEBERG_NAMESPACE", "logs")
-
-
-def configured_catalogs(spark) -> list[str]:
-    """Names of catalogs declared via ``spark.sql.catalog.<name>`` conf."""
-    names = set()
-    for k, _v in spark.sparkContext.getConf().getAll():
-        parts = k.split(".")
-        # spark.sql.catalog.<name> exactly (sub-keys like .type have 5+)
-        if len(parts) == 4 and parts[:3] == ["spark", "sql", "catalog"]:
-            names.add(parts[3])
-    return sorted(names)
-
-
-def iceberg_available(spark) -> bool:
-    """True iff the Iceberg Spark runtime is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def iceberg_catalog(spark) -> str | None:
-    """The catalog name sinks should write through, or None for parquet.
-
-    A catalog conf WITHOUT the runtime jar falls back to parquet (loud in
-    the manifest via ``sink_format``) instead of failing every write."""
-    cats = configured_catalogs(spark)
-    if cats and iceberg_available(spark):
-        return cats[0]
-    return None
-
-
-def sink_format(spark) -> dict:
-    """The branch decision, recorded verbatim into stage manifests."""
-    cats = configured_catalogs(spark)
-    cat = iceberg_catalog(spark)
-    return {
-        "format": "iceberg" if cat else "parquet",
-        "catalog": cat,
-        "catalogs_configured": cats,
-        "iceberg_runtime": iceberg_available(spark),
-    }
 
 
 def write_parquet(
@@ -278,30 +223,18 @@ def observed_write(
     order_cols=("conv_id", "turn_idx"),
     extra: dict | None = None,
 ) -> int:
-    """Write one sink with observe() metrics + checkpoint record: Iceberg
-    ``writeTo`` when a catalog is usable, ``commit_stage`` otherwise.
+    """``commit_stage`` of one unpartitioned sink sorted by ``order_cols``,
+    with ``extra`` added to its record; returns the row count (the
+    recorded count when the stage is already checkpointed).
 
-    Returns the row count. If the stage is already checkpointed, the
-    write is skipped and the recorded count returned (idempotent resume).
-    ``observe`` rides the write job — no second scan for the count.
+    It stays a separate function so the logging write is one named call:
+    pipebench times the logging layer by wrapping ``observed_write``, and
+    the infra and chunks intervals of its layer split are bounded by that
+    span.
     """
-    prior = log.read(stage)
-    if prior is not None:
-        return prior["rows"]
-    fmt = sink_format(df.sparkSession)
-    if fmt["format"] == "parquet":
-        payload = {**fmt, **(extra or {})}
-        return commit_stage(df, path, log, stage, (), order_cols, payload=lambda _: payload)["rows"]
-    obs = Observation(f"obs_{stage}")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    table = f"{fmt['catalog']}.{ICEBERG_NAMESPACE}.{stage}"
-    # createOrReplace = one atomic snapshot commit per stage — the
-    # Iceberg analog of the parquet overwrite + manifest record
-    observed.sortWithinPartitions(*order_cols).writeTo(table).using(
-        "iceberg"
-    ).createOrReplace()
-    log.record(stage, {"rows": obs.get["rows"], **fmt, "table": table, **(extra or {})})
-    return obs.get["rows"]
+    return commit_stage(
+        df, path, log, stage, (), order_cols, payload=lambda _: extra or {}
+    )["rows"]
 
 
 #: hub buckets: ``conv_bucket = crc32(conv_id) % N_BUCKETS`` —
@@ -351,7 +284,7 @@ def read_with_schema(spark: SparkSession, schema_json: str, *paths: str) -> Data
     return spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(*paths)
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> dict:
+def read_manifest(out_dir: str) -> dict:
     """All recorded stages as {stage: payload}."""
     ckpt_dir = os.path.join(out_dir, "_checkpoints")
     result = {}

@@ -204,7 +204,7 @@ def run_pipeline(
 
     write_sinks(hub, cfg, commit)
 
-    manifest = ckpt.read_manifest(spark, out_dir)
+    manifest = ckpt.read_manifest(out_dir)
     return {"counts": counts, "manifest": manifest}
 
 

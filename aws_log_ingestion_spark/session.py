@@ -71,6 +71,31 @@ def _driver_memory(cores: int | None, master_env: str) -> str:
     return "8g" if master_env.startswith("local-cluster") else _heap_for(cores)
 
 
+def _extra_conf_env() -> dict[str, str]:
+    """``SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"`` as a dict: Spark conf
+    overrides without code changes, e.g. ``spark.ui.enabled=true``, a
+    codec A/B (``spark.sql.parquet.compression.codec=snappy``) or JVM
+    flags (``spark.driver.extraJavaOptions=-XX:+UseParallelGC``).
+
+    Measured and not adopted: ``-XX:TieredStopAtLevel=1`` (C1 only, to
+    cut the JIT share of a warm run) made warm batch_bucketed ops slower,
+    3.5-4.6 s against 2.1-3.7 s with one session per setting on 4 vCPUs,
+    and roughly doubled executor-thread CPU: the generated code needs C2.
+    """
+    conf = {}
+    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
+        if not kv.strip():
+            continue
+        k, sep, v = kv.partition("=")
+        if not sep or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF entry {kv.strip()!r} is not key=value "
+                "(entries are separated by ';')"
+            )
+        conf[k.strip()] = v.strip()
+    return conf
+
+
 def get_spark(
     app_name: str = "transcript-log-pipeline",
     cores: int | None = None,
@@ -83,6 +108,8 @@ def get_spark(
     integer forces ``local[cores]`` (tests / bench). Shuffle partitions
     default to 2x cores locally — AQE coalesces down when input is small.
     """
+    # parsed first, so a malformed entry fails before any builder or JVM work
+    env_conf = _extra_conf_env()
     builder = SparkSession.builder.appName(app_name)
     # SPARK_GRAFT_MASTER overrides the topology without touching callers:
     # e.g. "local-cluster[4,8,14336]" = 4 SEPARATE executor JVMs x 8 cores
@@ -165,46 +192,25 @@ def get_spark(
         # Arrow batches feed the two pandas UDFs; 10k rows balances Python
         # worker latency against per-batch memory for long text columns.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # zstd default (storage-efficient finals); SPARK_GRAFT_PARQUET_CODEC
-        # lets the bench A/B cheaper codecs for intermediate-heavy runs
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        # zstd: storage-efficient finals
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # committer v2: task commits rename straight into the destination
         # instead of a serial driver-side job-commit rename pass —
         # interleaved A/B on the 4x2-executor arm: 26.1s/181.7 CPU-s vs
         # 29.4s/203.7 base (~11% both measures; v2 won every rep). Safe
-        # for the BATCH sinks because every batch write is gated by the
-        # checkpoint manifest and fresh-start truncate
-        # (operators/checkpoint.py): a mid-job failure's partial files
-        # are truncated on resume. The streaming foreachBatch sinks have
-        # no such truncate gate, so stream_job.py pins its appends back
-        # to committer v1 per-write (ADVICE r4).
+        # for the overwrite writes because each is gated by a checkpoint
+        # record (commit_stage's, or an incremental batch's): a stage
+        # without its record is rewritten whole, and the overwrite removes
+        # a failed job's partial files. Appends have no such gate, so
+        # checkpoint.write_parquet(mode="append") pins them back to
+        # committer v1 per write (ADVICE r4).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _driver_memory(cores, master_env or ""))
     )
-    # GC/JVM experiments without code changes (e.g. -XX:+UseParallelGC).
-    # Measured and not adopted: -XX:TieredStopAtLevel=1 (C1 only, to cut
-    # the JIT share of a warm run) made warm batch_bucketed ops slower,
-    # 3.5-4.6 s against 2.1-3.7 s with one session per setting on 4
-    # vCPUs, and roughly doubled executor-thread CPU: the generated code
-    # needs C2.
-    java_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTIONS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-    # arbitrary conf overrides for A/B experiments:
-    #   SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    extra_env = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if extra_env:
-        for kv in extra_env.split(";"):
-            if kv.strip():
-                k, v = kv.split("=", 1)
-                builder = builder.config(k.strip(), v.strip())
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # SPARK_GRAFT_EXTRA_CONF, then ``extra_conf``, override any key above
+    for k, v in {**env_conf, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # DEBUG_LOGGING_ENABLED parity (/root/reference/src/function.py:353-359)
     from .config import debug_logging_enabled

@@ -35,7 +35,7 @@ def test_third_pipeline_run_reuses_compiled_classes(
     for i in range(3):
         out = str(tmp_path / f"run{i}")
         run_pipeline(spark, template_df, template_meta_df, out, CFG, resume=False)
-        compiled.append(ckpt.read_manifest(None, out)["chunks"]["codegen_classes"])
+        compiled.append(ckpt.read_manifest(out)["chunks"]["codegen_classes"])
     assert None not in compiled, compiled
     assert compiled[2] <= 30, compiled
 

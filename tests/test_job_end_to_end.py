@@ -85,7 +85,7 @@ def test_sink_files_ordered_and_readable(spark, clean_run):
 
 def test_chunk_manifest_written(spark, clean_run):
     run_dir, _, _ = clean_run
-    manifest = ckpt.read_manifest(None, run_dir)
+    manifest = ckpt.read_manifest(run_dir)
     assert "chunks" in manifest
     totals = manifest["chunks"]["totals"]
     # the totals observed on the write equal a rollup of what it wrote
@@ -118,11 +118,11 @@ def test_resume_is_idempotent(spark, template_df, template_meta_df, clean_run):
     """Re-running over an existing checkpoint dir reproduces identical
     counts without rewriting (manifest wall-times unchanged)."""
     out, counts, hub_rows = clean_run
-    before = ckpt.read_manifest(None, out)
+    before = ckpt.read_manifest(out)
     assert "classified" in before
     cfg = PipelineConfig(logging_enabled=True)
     result2 = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
-    after = ckpt.read_manifest(None, out)
+    after = ckpt.read_manifest(out)
     assert result2["counts"] == counts
     assert _hub_rows(spark, out) == hub_rows
     for stage, payload in before.items():
@@ -147,7 +147,7 @@ def test_partial_failure_resume(spark, template_df, template_meta_df, clean_run,
     _, counts, hub_rows = clean_run
     assert result["counts"] == counts
     assert _hub_rows(spark, out) == hub_rows
-    assert ckpt.read_manifest(None, out)["classified"]["wall_time"] == hub_time
+    assert ckpt.read_manifest(out)["classified"]["wall_time"] == hub_time
 
 
 def test_chunk_stats_one_row_per_conv_and_path(spark, clean_run):
@@ -301,55 +301,10 @@ def test_task_failure_in_hub_job_publishes_nothing(
     assert _hub_rows(spark, out) == hub_rows
 
 
-def test_iceberg_branch_selection(spark, tmp_path):
-    """VERDICT r3 #7: sinks route through an Iceberg catalog ONLY when
-    both the catalog conf and the runtime jar are present; this sandbox
-    has neither, and a conf WITHOUT the jar must still fall back to
-    parquet (recorded loud in the manifest) instead of failing writes."""
-    from aws_log_ingestion_spark.operators import checkpoint as ckpt
-
-    class _FakeConf:
-        def __init__(self, pairs):
-            self._p = pairs
-
-        def getAll(self):
-            return self._p
-
-    class _FakeJvmClassForName:
-        def forName(self, name):
-            raise Exception("no iceberg jar")
-
-    class _FakeSpark:
-        def __init__(self, pairs):
-            self.sparkContext = type(
-                "SC", (), {"getConf": lambda s: _FakeConf(pairs)}
-            )()
-            self._jvm = type(
-                "JVM", (), {"java": type("J", (), {"lang": type("L", (), {"Class": _FakeJvmClassForName()})()})()}
-            )()
-
-    # catalog configured, jar absent -> parquet fallback, decision recorded
-    fake = _FakeSpark(
-        [
-            ("spark.sql.catalog.ice", "org.apache.iceberg.spark.SparkCatalog"),
-            ("spark.sql.catalog.ice.type", "hadoop"),
-            ("spark.app.name", "x"),
-        ]
-    )
-    assert ckpt.configured_catalogs(fake) == ["ice"]
-    assert ckpt.iceberg_available(fake) is False
-    assert ckpt.iceberg_catalog(fake) is None
-    fmt = ckpt.sink_format(fake)
-    assert fmt == {
-        "format": "parquet",
-        "catalog": None,
-        "catalogs_configured": ["ice"],
-        "iceberg_runtime": False,
-    }
-
-    # no catalog at all (the live session) -> parquet, and observed_write
-    # records the branch decision in the stage manifest
-    assert ckpt.sink_format(spark)["format"] == "parquet"
+def test_logging_record_is_a_plain_stage_record(spark, clean_run, tmp_path):
+    """The logging sink commits like every other stage: ``observed_write``
+    counts on its write and records exactly a ``commit_stage`` record, to
+    which ``run_pipeline`` adds only the resolved ``endpoint``."""
     out = str(tmp_path / "sink")
     log = ckpt.CheckpointLog(out)
     df = spark.createDataFrame(
@@ -358,5 +313,8 @@ def test_iceberg_branch_selection(spark, tmp_path):
     rows = ckpt.observed_write(df, f"{out}/t", log, "t")
     rec = log.read("t")
     assert rows == 2 and rec["rows"] == 2
-    assert rec["format"] == "parquet" and rec["catalog"] is None
     assert sum(e["rows"] for e in rec["lineage"]) == 2
+    plain = set(ckpt.commit_stage(df, f"{out}/p", log, "p")) | {"job_id", "stage", "wall_time"}
+    assert set(rec) == plain
+    run_dir, _, _ = clean_run
+    assert set(ckpt.read_manifest(run_dir)["logging"]) == plain | {"endpoint"}

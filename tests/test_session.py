@@ -1,6 +1,8 @@
-"""Driver heap sizing (session.py): the default heap never exceeds a share
-of physical RAM, and an explicit SPARK_DRIVER_MEMORY larger than RAM is
-refused before any JVM starts. Physical RAM is faked, so no Spark runs."""
+"""Session settings from the environment (session.py): the default heap
+never exceeds a share of physical RAM, an explicit SPARK_DRIVER_MEMORY
+larger than RAM is refused before any JVM starts, and a malformed
+SPARK_GRAFT_EXTRA_CONF is refused by name. Physical RAM is faked, so no
+Spark runs."""
 
 from __future__ import annotations
 
@@ -50,3 +52,12 @@ def test_mem_bytes_units():
     assert session._mem_bytes("100b") == 100
     with pytest.raises(ValueError):
         session._mem_bytes("8 gigs")
+
+
+def test_extra_conf_parsed_and_malformed_entry_refused(monkeypatch):
+    for bad in ("spark.ui.enabled", "=true"):
+        monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", f"spark.sql.shuffle.partitions=8;{bad}")
+        with pytest.raises(ValueError, match=f"SPARK_GRAFT_EXTRA_CONF entry '{bad}'"):
+            session.get_spark(cores=1)
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", " a=1; b = x=y ;")
+    assert session._extra_conf_env() == {"a": "1", "b": "x=y"}
