@@ -22,9 +22,10 @@ CPU-s in its worker, decoded rows or not. cProfile of a reused worker
 which re-reads the 1,328-entry ``pyspark.zip`` directory once per
 zipimporter; a worker holds 16 of them. A trivial UDF over 1/8/32/64
 tasks cost 0.29/2.4/8.6/17.8 Python CPU-s. Hence the hub is written in
-ONE job (operators/checkpoint.py::observed_write_bucketed): splitting it
-into one job per conversation range, e.g. 4 ranges, would run the marker
-branch in 4x8 tasks instead of 8, for ~6x the Python CPU.
+ONE job (operators/checkpoint.py::observed_write_bucketed, one file per
+write task): splitting it into one job per conversation range, e.g. 4
+ranges, would run the marker branch in 4x8 tasks instead of 8, for ~6x
+the Python CPU.
 """
 
 from __future__ import annotations

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -120,25 +119,27 @@ def write_parquet(
     Sort when both are empty) and always sets ``parquet_text_options``.
     ``mode`` is how the write commits:
 
-    - ``"overwrite"``: replace ``path`` whole (checkpoint-gated stage
-      writes, each incremental batch's directory).
-    - ``"dynamic"``: replace only the partition directories present in
-      ``df``; output is staged and published at job commit, so a failed
-      job publishes nothing (the ``run_pipeline`` hub).
-    - ``"append"``: add files (the streaming skin, follow-up writes).
+    - ``"overwrite"``: replace ``path`` whole; each task's files land in
+      ``path`` as the task commits (the session's committer v2), so a
+      failed job can leave some behind (checkpoint-gated stage writes,
+      each incremental batch's directory).
+    - ``"publish"``: replace ``path`` whole, with every file published
+      at job commit (committer v1), so a failed job publishes nothing
+      (the ``run_pipeline`` hub).
+    - ``"append"``: add files, committer v1 (the streaming skin,
+      follow-up writes).
     """
     cols = [*partition_by, *order_by]
     if cols:
         df = df.sortWithinPartitions(*cols)
     options = parquet_text_options(df)
-    if mode == "dynamic":
-        options["partitionOverwriteMode"] = "dynamic"
-    elif mode == "append":
+    if mode != "overwrite":
         # The session default is committer v2 (fast, but a mid-job failure
-        # can leave partial task files visible); the overwrite modes'
-        # checkpoint truncate gate cleans those up, but appends have no
-        # truncate gate — pin them back to v1 so only a whole-batch replay
-        # (the existing at-least-once story) can duplicate rows (ADVICE r4).
+        # can leave partial task files visible); an overwrite's rerun
+        # removes them. Appends have no rerun that removes, and the hub
+        # must publish nothing from a failed job: committer v1 stages task
+        # output under _temporary and publishes it at job commit, so only
+        # a whole-batch replay can duplicate appended rows (ADVICE r4).
         options["mapreduce.fileoutputcommitter.algorithm.version"] = "1"
     writer = df.write.mode("append" if mode == "append" else "overwrite").options(**options)
     if partition_by:
@@ -237,45 +238,51 @@ def observed_write(
     )["rows"]
 
 
-#: hub buckets: ``conv_bucket = crc32(conv_id) % N_BUCKETS`` —
-#: content-derived, so deterministic across runs and uniform under skew,
-#: and computable from a conv_id alone (``incremental.hub_lookup``)
+#: ``run_incremental``'s hub buckets: ``conv_bucket = crc32(conv_id) %
+#: N_BUCKETS`` — content-derived, so deterministic across runs and
+#: uniform under skew, and computable from a conv_id alone
+#: (``incremental.hub_lookup``). Each (batch, bucket) directory is that
+#: hub's copy-on-write unit. The ``run_pipeline`` hub has no buckets.
 N_BUCKETS = 32
 HUB_ORDER = ("conv_id", "turn_idx")
 
 
 def conv_bucket(conv_id: Column | str = "conv_id") -> Column:
-    """The hub's ``conv_bucket`` of a conv_id column (or literal)."""
+    """The incremental hub's ``conv_bucket`` of a conv_id column (or literal)."""
     return (F.crc32(conv_id) % N_BUCKETS).cast("int")
 
 
 def observed_write_bucketed(df: DataFrame, path: str, log: CheckpointLog, stage: str) -> int:
-    """The hub write: one Spark job, one checkpoint record.
+    """The ``run_pipeline`` hub write: one Spark job, one file per write
+    task, each sorted by ``HUB_ORDER``, and one checkpoint record. If the
+    stage is already recorded, the write is skipped and the recorded
+    count returned.
 
-    Conversations hash into ``N_BUCKETS`` ``conv_bucket=`` directories,
-    each sorted by ``HUB_ORDER`` within its files, and ``commit_stage``
-    records the stage with ``buckets``. If the stage is already
-    recorded, the write is skipped and the recorded count returned.
+    It stays a separate function so the hub write is one named call:
+    pipebench times the hub layer by wrapping it, which is also why it
+    keeps the name it had when the hub was written into ``conv_bucket=``
+    directories.
 
-    Without a record the old output is removed first: dynamic partition
-    overwrite only replaces the buckets present in the new data, so a
-    previous run's other buckets would survive (the Iceberg analog is
-    CREATE OR REPLACE). The write itself is a dynamic partition
-    overwrite: output is staged under ``.spark-staging-*`` and the bucket
-    directories are published at job commit, so a job killed or failed
+    The hub is read whole and resumed whole, so it has no partition
+    directories: over conv_id-bucketed input its exchange-free plan
+    writes one file per bucket, where ``N_BUCKETS`` directories would
+    open that many writers in every task. Measured and not adopted, on a
+    4-vCPU prototype of pipebench's ``batch_bucketed``: this flat write
+    with the union attach's exchange kept. AQE coalesces that small
+    shuffle into one task, so the hub is one file and ``infra``,
+    ``logging`` and the chunk map each read it in one task too (chunk
+    map 0.45 -> 0.87 s); wall_s fell 9%, not robustly across seeds.
+    That is what a random layout gets at that scale.
+
+    The write replaces ``path`` whole, stale files and directories
+    included, and commits in ``"publish"`` mode (committer v1): task
+    output is published at job commit, so a job killed or failed
     mid-write publishes nothing. A kill at any point before the record
     redoes the whole hub — the distributed analog of the reference's
     per-invocation at-least-once retry (src/function.py:136-177), with
     the manifest as the dedup ledger.
     """
-    prior = log.read(stage)
-    if prior is not None:
-        return prior["rows"]
-    shutil.rmtree(path, ignore_errors=True)
-    return commit_stage(
-        df.withColumn("conv_bucket", conv_bucket()), path, log, stage, ["conv_bucket"], HUB_ORDER,
-        payload=lambda _: {"buckets": N_BUCKETS}, mode="dynamic",
-    )["rows"]
+    return commit_stage(df, path, log, stage, (), HUB_ORDER, mode="publish")["rows"]
 
 
 def read_with_schema(spark: SparkSession, schema_json: str, *paths: str) -> DataFrame:

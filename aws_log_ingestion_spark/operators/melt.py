@@ -94,7 +94,8 @@ def with_melt_fills(
       exchange-free after it. On a random layout it costs a
       SortMergeJoin (3 Exchanges, 3 Sorts) once the marker side is too
       large to broadcast, so it is the attach step for clustered input
-      only.
+      only: ``plans/job.py::prepare`` picks it when the input's scan
+      reports a conv_id hash partitioning (a bucketed table).
 
     ``carry_decode`` accepts only a falsy value or ``"marker_join"``.
     """

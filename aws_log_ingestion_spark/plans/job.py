@@ -11,9 +11,11 @@ recomputations of the conv_id window — and doubles as the resume point:
 a re-run that finds the hub checkpoint skips straight to the un-written
 sinks. Measured locally (2M turns): hub-through-storage beats both
 recompute-per-sink (~2.4x) and .cache() (~1.3x). The hub itself is one
-Spark job with one checkpoint record (operators/checkpoint.py::
-observed_write_bucketed); every write goes through
-``checkpoint.write_parquet``.
+Spark job that writes one file per task, with one checkpoint record
+(operators/checkpoint.py::observed_write_bucketed); every write goes
+through ``checkpoint.write_parquet``. Over conv_id-bucketed input
+(``maintenance.bucketize_transcripts``) the hub plans with no fact-side
+exchange (``prepare``), so its write runs one task per bucket.
 
 Run via spark-submit (package zipped by scripts/make_pyfiles.sh):
     spark-submit --py-files dist/aws_log_ingestion_spark.zip \
@@ -57,6 +59,20 @@ def max_conv_rows(transcripts: DataFrame) -> int:
     return int(row["m"] or 0)
 
 
+def conv_id_clustered(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan reports a hash partitioning on
+    ``conv_id`` alone, as a conv_id-bucketed table scan does. Reads the
+    planned output partitioning (a few py4j calls, no Spark job)."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    keys = part.expressions()
+    if keys.size() != 1:
+        return False
+    key = keys.apply(0)
+    return key.getClass().getSimpleName() == "AttributeReference" and key.name() == "conv_id"
+
+
 def prepare(
     transcripts: DataFrame,
     conv_meta: DataFrame,
@@ -67,13 +83,21 @@ def prepare(
 
     When logging is enabled the hub materialises ``trace_id`` and
     ``lambda_request_id`` via ``with_melt_fills``: the ordered fill
-    window rides the SAME conv_id exchange the classifier's max-window
-    already pays, so the logging sink (and the chunk cost pass) become
+    window rides the SAME conv_id clustering the classifier's max-window
+    already needs, so the logging sink (and the chunk cost pass) become
     pure projections of hub columns — the second 10^12-turn conv_id
     shuffle+sort the r3 plan paid in the logging stage is gone. Infra
     sinks drop the two fill columns again (``infra_union``): the
     reference's infra payload is the raw filtered entry and never
     carries them (/root/reference/src/function.py:255-261).
+
+    The attach step of the decoded trace markers follows the input's
+    layout. Over input already clustered on conv_id
+    (``conv_id_clustered``: a bucketed table scan) they attach by
+    ``marker_join``, and the hub plans with no fact-side exchange. Every
+    other input (a random layout, incremental batches, streaming
+    micro-batches) keeps the union attach and its one conv_id exchange;
+    there the union's Python-UDF branch would hide any clustering.
 
     Skew auto-routing (VERDICT r5 #3): a pre-pass probes the largest
     conversation; above ``skew_threshold`` rows (default
@@ -86,20 +110,21 @@ def prepare(
     skewed = bool(threshold) and max_conv_rows(transcripts) > threshold
     hub = transcripts
     if cfg.logging_enabled:
-        # Fills FIRST: both shapes decode the NR-marker rows in one
-        # filtered branch (melt._decode_markers) unioned with the rest.
-        # The plain fill pays the conv_id exchange + (conv_id, turn_idx)
-        # sort; the classifier's unordered max-window then rides the
-        # SAME clustering with no new exchange or sort. The reverse
-        # order duplicates the classify window into both union branches
-        # (each with its own exchange+sort) — 3 exchanges instead of 1
-        # (plan-asserted in scripts/dump_plans.py). The salted shape
-        # fills both columns in one classify.forward_fill_salted pass.
-        hub = (
-            with_melt_fills_salted(hub, cfg)
-            if skewed
-            else with_melt_fills(hub, cfg, decode_traces=True)
-        )
+        # Fills FIRST: every shape decodes the NR-marker rows in one
+        # filtered branch (melt._decode_markers). The plain fill pays the
+        # conv_id exchange (none over clustered input) + (conv_id,
+        # turn_idx) sort; the classifier's unordered max-window then
+        # rides the SAME clustering with no new exchange or sort. The
+        # reverse order duplicates the classify window into both union
+        # branches (each with its own exchange+sort) — 3 exchanges
+        # instead of 1 (plan-asserted in scripts/dump_plans.py). The
+        # salted shape fills both columns in one
+        # classify.forward_fill_salted pass.
+        if skewed:
+            hub = with_melt_fills_salted(hub, cfg)
+        else:
+            attach = "marker_join" if conv_id_clustered(transcripts) else False
+            hub = with_melt_fills(hub, cfg, decode_traces=True, carry_decode=attach)
     return enrich(
         classify(hub, cfg, fill_request_ids=False, skew_safe=skewed), conv_meta
     )
@@ -137,16 +162,15 @@ def run_pipeline(
     if not resume:
         log.clear()
 
-    # stage 0: the hub — the single wide shuffle, written once, in one
-    # job, into conv_bucket directories, with one checkpoint record.
+    # stage 0: the hub — the job's one wide stage (no exchange at all
+    # over conv_id-bucketed input), written once, in one job, one file
+    # per task, with one checkpoint record.
     hub_path = f"{out_dir}/classified"
     if not log.is_done("classified"):
         ckpt.observed_write_bucketed(
             prepare(transcripts, conv_meta, cfg), hub_path, log, "classified"
         )
-    hub = ckpt.read_with_schema(spark, log.read("classified")["schema"], hub_path).drop(
-        "conv_bucket"
-    )
+    hub = ckpt.read_with_schema(spark, log.read("classified")["schema"], hub_path)
 
     counts: dict[str, int] = {}
 

@@ -202,10 +202,14 @@ def bucketize_transcripts(
 ) -> DataFrame:
     """Rewrite a random-layout transcript directory as the conv_id-
     bucketed, (conv_id, turn_idx)-sorted table (same layout as bench.py's
-    ``write_bucketed``; Iceberg: ``bucket(n, conv_id)`` transform). Every
-    per-conversation stage over ``spark.table(table_name)`` then runs
-    with zero fact-side exchange — measured ~15-25% wall / ~15% CPU at
-    5M turns (BENCH/BASELINE.md), compounding at 10^12."""
+    ``write_bucketed``; Iceberg: ``bucket(n, conv_id)`` transform). Its
+    scan reports the conv_id hash partitioning, so ``job.prepare`` builds
+    ``run_pipeline``'s hub over ``spark.table(table_name)`` with zero
+    fact-side exchange (the marker-join attach; plan-asserted in
+    scripts/dump_plans.py) and writes it in one task per bucket. Measured
+    for bench.py's bucketed mode: ~15-25% wall / ~15% CPU at 5M turns
+    (BENCH/BASELINE.md). The chunk stage still groups the hub on conv_id
+    with its own exchanges."""
     t = spark.read.parquet(in_path)
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     (

@@ -154,10 +154,11 @@ def get_spark(
         # shuffles split finer. Small ones are not helped: with
         # coalescePartitions.parallelismFirst on (the default) AQE ignores
         # the advisory size and coalesces down to the 1 MB minPartitionSize
-        # floor. At benchmark scale the hub's 1.66 MB shuffle therefore
-        # runs its fill window, sort and write as ONE task (0.42 s, ~20% of
-        # a warm batch_bucketed op on 4 vCPUs) while the other cores idle;
-        # see ROADMAP Direction 2.
+        # floor. Over a random layout at benchmark scale the hub's ~1.7 MB
+        # shuffle therefore runs its fill window, sort and write as ONE
+        # task while the other cores idle. Over conv_id-bucketed input the
+        # hub has no exchange and writes one task per bucket
+        # (plans/job.py::prepare); see ROADMAP Direction 2.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         # Generated-class cache (static conf; LRU, default 100 entries).
         # Measured working sets, in distinct generated classes: template
@@ -201,8 +202,9 @@ def get_spark(
         # for the overwrite writes because each is gated by a checkpoint
         # record (commit_stage's, or an incremental batch's): a stage
         # without its record is rewritten whole, and the overwrite removes
-        # a failed job's partial files. Appends have no such gate, so
-        # checkpoint.write_parquet(mode="append") pins them back to
+        # a failed job's partial files. Appends have no such gate, and the
+        # run_pipeline hub must publish nothing from a failed job, so
+        # checkpoint.write_parquet's "append" and "publish" modes pin
         # committer v1 per write (ADVICE r4).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")

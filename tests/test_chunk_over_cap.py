@@ -86,7 +86,7 @@ def runs(spark, tmp_path_factory):
     result = run_pipeline(spark, transcripts, meta, out["pipeline"], CFG, resume=False)
     make_batch_processor(meta, out["stream"], CFG)(transcripts, 0)
 
-    hub = spark.read.parquet(f"{out['pipeline']}/classified").drop("conv_bucket")
+    hub = spark.read.parquet(f"{out['pipeline']}/classified")
     want = chunk_op.chunk_counts_fast(infra_union(hub, CFG), "infra", CFG).unionByName(
         chunk_op.chunk_counts_fast(hub, "logging", CFG)
     )

@@ -139,7 +139,7 @@ def _oneshot(spark, in_dir, out_dir):
 def _compare_outputs(spark, inc_out, one_out):
     """The hub read raw (it is physically exact); the sinks read live."""
     got = spark.read.parquet(f"{inc_out}/classified").drop("ingest_batch", "conv_bucket")
-    want = spark.read.parquet(f"{one_out}/classified").drop("conv_bucket")
+    want = spark.read.parquet(f"{one_out}/classified")
     _assert_same_rows(got, want, "classified")
     for sink in ("infra", "logging", "chunk_stats"):
         got = live_rows(spark, inc_out, sink).drop("ingest_batch")

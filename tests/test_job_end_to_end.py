@@ -4,6 +4,7 @@ reference oracle, and kill-and-resume idempotency (BASELINE.md targets)."""
 from __future__ import annotations
 
 import os
+import re
 import uuid
 
 import pytest
@@ -12,7 +13,8 @@ from pyspark.sql import functions as F
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators import checkpoint as ckpt
 from aws_log_ingestion_spark.operators.chunks import chunk_totals_fast
-from aws_log_ingestion_spark.plans.job import run_pipeline
+from aws_log_ingestion_spark.plans.job import conv_id_clustered, prepare, run_pipeline
+from aws_log_ingestion_spark.plans.maintenance import bucketize_transcripts
 from aws_log_ingestion_spark.sources import datagen
 from reference_oracle import (
     load_reference,
@@ -47,13 +49,25 @@ def _sorted_items(d: dict) -> tuple:
     return tuple(sorted(d.items()))
 
 
+def _sorted_rows(df) -> list[dict]:
+    """``df``'s rows as plain dicts, in a canonical order."""
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=repr)
+
+
 def _hub_rows(spark, out_dir):
-    """The hub as plain dicts sorted by (conv_id, turn_idx), without the
-    bucket partition column (a stage-level hub write has none)."""
-    rows = spark.read.parquet(f"{out_dir}/classified").drop("conv_bucket").collect()
-    return sorted(
-        (r.asDict(recursive=True) for r in rows), key=lambda d: (d["conv_id"], d["turn_idx"])
-    )
+    """The hub as plain dicts, in a canonical order."""
+    return _sorted_rows(spark.read.parquet(f"{out_dir}/classified"))
+
+
+def _parquet_files(path: str) -> dict[str, tuple[int, int]]:
+    """Every ``.parquet`` file under ``path``, at any depth -> (bytes, mtime_ns)."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(root, f))
+                out[os.path.relpath(os.path.join(root, f), path)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -65,6 +79,17 @@ def clean_run(spark, template_df, template_meta_df, tmp_path_factory):
     cfg = PipelineConfig(logging_enabled=True)
     result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=False)
     return out, result["counts"], _hub_rows(spark, out)
+
+
+@pytest.fixture(scope="module")
+def bucketed_templates(spark, template_df, tmp_path_factory):
+    """The template corpus as a 4-bucket conv_id table, written by
+    ``maintenance.bucketize_transcripts``, read with ``spark.table``."""
+    base = tmp_path_factory.mktemp("bucketed_templates")
+    template_df.write.parquet(str(base / "raw"))
+    table = "templates_bucketed"
+    yield bucketize_transcripts(spark, str(base / "raw"), str(base / "table"), table, 4)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 @requires_reference
@@ -134,8 +159,6 @@ def test_partial_failure_resume(spark, template_df, template_meta_df, clean_run,
     final counts equal a clean run's and the hub is not rewritten."""
     out = str(tmp_path / "partial")
     cfg = PipelineConfig(logging_enabled=True)
-    from aws_log_ingestion_spark.plans.job import prepare
-
     log = ckpt.CheckpointLog(out)
     ckpt.observed_write(
         prepare(template_df, template_meta_df, cfg), f"{out}/classified", log, "classified"
@@ -160,13 +183,13 @@ def test_chunk_stats_one_row_per_conv_and_path(spark, clean_run):
     assert stats.count() == stats.select("conv_id", "path").distinct().count()
 
 
-def test_mid_stage_kill_resumes_per_conv_range(
+def test_mid_stage_kill_rewrites_hub_once(
     spark, template_df, template_meta_df, clean_run, tmp_path, monkeypatch
 ):
     """Kill after the hub job commits but before its checkpoint record:
     the resume rewrites the hub exactly once and converges to a clean
     run's counts and hub rows. The new record's lineage sums to the input
-    turns and lies only under the hub's ``conv_bucket=0..31`` dirs."""
+    turns and names only files at the top of the hub directory."""
     out = str(tmp_path / "midstage")
     path = f"{out}/classified"
     cfg = PipelineConfig(logging_enabled=True)
@@ -183,7 +206,8 @@ def test_mid_stage_kill_resumes_per_conv_range(
             run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
     log = ckpt.CheckpointLog(out)
     assert not os.listdir(log.dir)
-    assert [d for d in os.listdir(path) if d.startswith("conv_bucket=")]
+    stale = _parquet_files(path)
+    assert stale
 
     writes = []
     write = ckpt.write_parquet
@@ -198,23 +222,12 @@ def test_mid_stage_kill_resumes_per_conv_range(
     assert writes.count(path) == 1
     assert result["counts"] == counts
     assert _hub_rows(spark, out) == hub_rows
+    assert not set(_parquet_files(path).items()) & set(stale.items())
     rec = log.read("classified")
     n_turns = template_df.count()
     assert rec["rows"] == n_turns
     assert sum(e["rows"] for e in rec["lineage"]) == n_turns
-    buckets = {f"conv_bucket={b}" for b in range(ckpt.N_BUCKETS)}
-    assert {e["file"].split("/", 1)[0] for e in rec["lineage"]} <= buckets
-
-
-def _bucket_files(path: str, buckets) -> dict[str, tuple[int, int]]:
-    """Every file in the hub's ``conv_bucket=<b>`` dirs -> (bytes, mtime_ns)."""
-    out = {}
-    for b in buckets:
-        d = os.path.join(path, f"conv_bucket={b}")
-        for f in os.listdir(d) if os.path.isdir(d) else []:
-            st = os.stat(os.path.join(d, f))
-            out[f"conv_bucket={b}/{f}"] = (st.st_size, st.st_mtime_ns)
-    return out
+    assert all("/" not in e["file"] for e in rec["lineage"])
 
 
 def _sql_executions_for_group(spark, group: str) -> list[int]:
@@ -232,28 +245,27 @@ def _sql_executions_for_group(spark, group: str) -> list[int]:
     return out
 
 
-def test_resume_of_two_pending_ranges_is_one_write_job(
+def test_resume_over_stale_hub_is_one_write_job(
     spark, template_df, template_meta_df, tmp_path
 ):
     """A dir holding stale hub output and no hub record: the resume
-    writes the hub in ONE SQL execution and no stale file survives, not
-    even in a bucket dir the new data never writes (a dynamic partition
-    overwrite alone would keep it)."""
+    writes the hub in ONE SQL execution and no stale file survives, nor
+    a stale subdirectory (here one from the hub's old ``conv_bucket=``
+    layout) that the new write never touches."""
     out = str(tmp_path / "stale_hub")
     path = f"{out}/classified"
     cfg = PipelineConfig(logging_enabled=True)
-    from aws_log_ingestion_spark.plans.job import prepare
 
     log = ckpt.CheckpointLog(out)
     hub_df = prepare(template_df, template_meta_df, cfg)
     ckpt.observed_write_bucketed(hub_df, path, log, "classified")
     os.remove(os.path.join(log.dir, "classified.json"))
-    stale = _bucket_files(path, range(ckpt.N_BUCKETS))
     orphan = os.path.join(path, "conv_bucket=99")
     os.makedirs(orphan)
     with open(os.path.join(orphan, "part-stale.parquet"), "wb") as f:
         f.write(b"stale")
-    assert stale
+    stale = _parquet_files(path)
+    assert len(stale) > 1
 
     sc = spark.sparkContext
     group = f"hub_resume_{uuid.uuid4().hex}"
@@ -266,39 +278,93 @@ def test_resume_of_two_pending_ranges_is_one_write_job(
     assert len(_sql_executions_for_group(spark, group)) == 1
     assert total == template_df.count()
     assert not os.path.exists(orphan)
-    assert not set(_bucket_files(path, range(ckpt.N_BUCKETS))) & set(stale)
+    assert not set(_parquet_files(path).items()) & set(stale.items())
     assert sum(e["rows"] for e in log.read("classified")["lineage"]) == total
 
 
 def test_task_failure_in_hub_job_publishes_nothing(
-    spark, template_df, template_meta_df, clean_run, tmp_path
+    spark, template_df, template_meta_df, bucketed_templates, clean_run, tmp_path
 ):
     """A task failing inside the single hub job aborts it whole: no hub
-    record, no published bucket dir. A rerun on clean input converges to
-    a clean run's counts and hub rows."""
-    out = str(tmp_path / "task_failure")
-    path = f"{out}/classified"
+    record and no published ``.parquet`` file, on the random layout and
+    on the bucketed table, whose exchange-free hub job writes in one task
+    per bucket. The failing task first sleeps, so the other tasks have
+    committed by the time it fails: under committer v2 their files would
+    be published. A rerun on clean input converges to a clean run's
+    counts and hub rows."""
     cfg = PipelineConfig(logging_enabled=True)
-    from aws_log_ingestion_spark.plans.job import prepare
-
-    poisoned = prepare(template_df, template_meta_df, cfg).withColumn(
-        "text",
-        F.when(F.col("conv_id") == "c0", F.raise_error(F.lit("injected task failure"))).otherwise(
-            F.col("text")
-        ),
-    )
-    log = ckpt.CheckpointLog(out)
-    with pytest.raises(Exception, match="injected task failure"):
-        ckpt.observed_write_bucketed(poisoned, path, log, "classified")
-    assert not [f for f in os.listdir(log.dir) if f.startswith("classified")]
-    assert not os.path.isdir(path) or not [
-        d for d in os.listdir(path) if d.startswith("conv_bucket=")
-    ]
-
-    result = run_pipeline(spark, template_df, template_meta_df, out, cfg, resume=True)
     _, counts, hub_rows = clean_run
+    sc = spark.sparkContext
+    sleep = F.reflect(F.lit("java.lang.Thread"), F.lit("sleep"), F.lit(3000).cast("long"))
+    for layout, transcripts in (("random", template_df), ("bucketed", bucketed_templates)):
+        out = str(tmp_path / layout)
+        path = f"{out}/classified"
+        poisoned = prepare(transcripts, template_meta_df, cfg).withColumn(
+            "text",
+            F.when(
+                F.col("conv_id") == "c0",
+                F.raise_error(F.concat(F.lit("injected task failure"), F.coalesce(sleep, F.lit("")))),
+            ).otherwise(F.col("text")),
+        )
+        log = ckpt.CheckpointLog(out)
+        group = f"hub_failure_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "hub write with a failing task")
+        try:
+            with pytest.raises(Exception, match="injected task failure"):
+                ckpt.observed_write_bucketed(poisoned, path, log, "classified")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert not [f for f in os.listdir(log.dir) if f.startswith("classified")], layout
+        assert not _parquet_files(path), layout
+        if layout == "bucketed":
+            # the failing stage is the hub's write stage, one task per bucket
+            tracker = sc.statusTracker()
+            stages = [
+                tracker.getStageInfo(st)
+                for j in tracker.getJobIdsForGroup(group)
+                for st in tracker.getJobInfo(j).stageIds
+            ]
+            assert [s.numTasks for s in stages if s and s.numFailedTasks] == [4]
+
+        result = run_pipeline(spark, transcripts, template_meta_df, out, cfg, resume=True)
+        assert result["counts"] == counts, layout
+        assert _hub_rows(spark, out) == hub_rows, layout
+
+
+def test_bucketed_input_hub_has_no_exchange(spark, template_df, template_meta_df, bucketed_templates):
+    """``prepare`` reads the input's layout: over the conv_id-bucketed
+    table it attaches the trace markers by join and plans the hub with no
+    hash Exchange (only the marker and enrich BroadcastExchanges); over
+    the random layout it keeps exactly one, the union attach's conv_id
+    exchange."""
+    cfg = PipelineConfig(logging_enabled=True)
+    assert conv_id_clustered(bucketed_templates)
+    assert not conv_id_clustered(template_df)
+
+    def hash_exchanges(df) -> int:
+        plan = prepare(df, template_meta_df, cfg)._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in plan, plan
+        return len(re.findall(r"\bExchange hashpartitioning", plan))
+
+    assert hash_exchanges(bucketed_templates) == 0
+    assert hash_exchanges(template_df) == 1
+
+
+def test_bucketed_run_equals_random_layout_run(
+    spark, template_meta_df, bucketed_templates, clean_run, tmp_path
+):
+    """``run_pipeline`` over the bucketed table writes the same hub rows,
+    sink counts and sink rows as over the random layout."""
+    run_dir, counts, hub_rows = clean_run
+    out = str(tmp_path / "bucketed")
+    cfg = PipelineConfig(logging_enabled=True)
+    result = run_pipeline(spark, bucketed_templates, template_meta_df, out, cfg, resume=False)
     assert result["counts"] == counts
     assert _hub_rows(spark, out) == hub_rows
+    for sink in ("infra", "logging", "chunk_stats"):
+        got = _sorted_rows(spark.read.parquet(f"{out}/{sink}"))
+        assert got == _sorted_rows(spark.read.parquet(f"{run_dir}/{sink}")), sink
 
 
 def test_logging_record_is_a_plain_stage_record(spark, clean_run, tmp_path):
