@@ -14,18 +14,20 @@ _decode_markers``, filters to the NR-marker rows (a tiny minority)
 first, so Arrow ships only those (SURVEY.md §4 item 4); every fill
 shape carries that branch's output.
 
-Once the rows are filtered, TASK COUNT, not decoded rows, sets the
-Python CPU: every task that evaluates a Python UDF pays a fixed ~0.28
-CPU-s in its worker, decoded rows or not. cProfile of a reused worker
-(Python 3.11, pyspark 4.1, 4 cores) puts all of it in
-``pyspark.worker_util.setup_spark_files -> importlib.invalidate_caches()``,
-which re-reads the 1,328-entry ``pyspark.zip`` directory once per
-zipimporter; a worker holds 16 of them. A trivial UDF over 1/8/32/64
-tasks cost 0.29/2.4/8.6/17.8 Python CPU-s. Hence the hub is written in
-ONE job (operators/checkpoint.py::observed_write_bucketed, one file per
-write task): splitting it into one job per conversation range, e.g. 4
-ranges, would run the marker branch in 4x8 tasks instead of 8, for ~6x
-the Python CPU.
+Per task, a Python UDF's fixed cost is worker set-up, not decoded rows.
+PySpark's worker calls ``importlib.invalidate_caches()`` at every task
+start (``pyspark.worker_util.setup_spark_files``). Before CPython 3.13
+each zipimporter then re-reads its archive's whole directory, and a
+worker holds 16: ``pyspark.zip`` x12, the py4j zip x2 and the Spark core
+jar x2, ~0.14 CPU-s per task (a trivial UDF over 8 tasks: 1.1-1.2 Python
+CPU-s; Python 3.11, pyspark 4.1, 4 cores). A worker imports this package
+when it unpickles this UDF, and the import installs
+``functions/zipcache.py``, which skips the re-read of an unchanged
+archive: after a worker's first tasks the same 8 tasks cost ~0.3 Python
+CPU-s, ~0.035 per task. The hub is still written in ONE job
+(operators/checkpoint.py::observed_write_bucketed, one file per write
+task): one job per conversation range would run the marker branch once
+per range.
 """
 
 from __future__ import annotations

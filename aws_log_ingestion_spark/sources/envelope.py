@@ -6,8 +6,10 @@ Envelope-fidelity path for SURVEY.md §2 rows 1-2: the reference decodes
 ``logEvents`` via per-event loops (:197,521,534). Here: ``unbase64`` is
 native; gzip-in-a-cell needs an Arrow-batched pandas UDF; ``from_json``
 with an explicit schema + ``explode(logEvents)`` replace the dynamic
-json.loads. Production ingest reads Iceberg directly — this source exists
-for envelope-format compatibility and its tests.
+json.loads; ``FAILFAST`` makes a malformed entry raise, as json.loads does,
+instead of parsing to NULL and vanishing in the explode. Production ingest
+reads Iceberg directly — this source exists for envelope-format
+compatibility and its tests.
 """
 
 from __future__ import annotations
@@ -77,7 +79,8 @@ def decode_envelopes(envelopes: DataFrame, data_col: str = "data") -> DataFrame:
     per log ENTRY with the parsed struct."""
     raw = F.unbase64(F.col(data_col))
     return envelopes.withColumn(
-        "entry", F.from_json(gunzip_str(raw), LOG_ENTRY_SCHEMA)
+        "entry",
+        F.from_json(gunzip_str(raw), LOG_ENTRY_SCHEMA, {"mode": "FAILFAST"}),
     ).drop(data_col)
 
 

@@ -1,16 +1,14 @@
-"""The pipeline and chunk-stage gate queries against their DuckDB oracles.
+"""Every gate query of ``__spark_entry__.queries()`` against its DuckDB
+oracle.
 
-Each query in ``GATE_QUERIES`` is compared with its ``oracle_sql()``
-text on sf0.001 by the same per-query comparison
-``scripts/check_correctness.py`` uses, and must report MATCH:
-
-- the pipeline queries, from the derived transcripts through parse,
-  classify, routing, the MELT projection and fills, enrichment and the
-  trace decode;
-- the chunk queries ``chunk_census``, ``chunk_gz_parity``,
-  ``chunk_raw_costs`` and ``chunk_events_by_sink``, which run through the
-  chunk staging (operators/chunks.py ``_staged`` and ``_per_conv``) and, for
-  ``chunk_gz_parity``, both gzip replays."""
+Each query is compared with its ``oracle_sql()`` text on sf0.001 by the
+same per-query comparison ``scripts/check_correctness.py`` uses, and must
+report MATCH. The set covers the pipeline (parse, classify, routing, the
+MELT projection and fills, enrichment, the trace decode), the chunk stage
+(operators/chunks.py ``_staged`` and ``_per_conv``; ``chunk_gz_parity``
+runs both gzip replays) and the corpus-curation and media operators,
+many of which run Python UDFs.
+"""
 
 from __future__ import annotations
 
@@ -18,24 +16,10 @@ import os
 
 import pytest
 
+import __spark_entry__ as e
+
 SF_DIR = "/root/testdata/sf0.001"
-GATE_QUERIES = [
-    "transcripts_derive",
-    "parse_flags",
-    "classify_sinks",
-    "route_counts",
-    "infra_lambda_filtered",
-    "agent_reformat",
-    "request_id_fill",
-    "melt_shape",
-    "conv_meta_derive",
-    "enrich_owner",
-    "trace_decode",
-    "chunk_census",
-    "chunk_gz_parity",
-    "chunk_raw_costs",
-    "chunk_events_by_sink",
-]
+GATE_QUERIES = list(e.queries())
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason=f"gate input {SF_DIR} is absent"
@@ -53,7 +37,6 @@ def duck():
 
 @pytest.mark.parametrize("name", GATE_QUERIES)
 def test_chunk_gate_query_matches_oracle(spark, duck, name):
-    import __spark_entry__ as e
     from scripts.check_correctness import compare_query
 
     ok, detail = compare_query(

@@ -1,8 +1,11 @@
-"""Envelope decode path against the reference's OWN golden fixtures
-(/root/reference/test/events/*.json) + the foreachBatch streaming skin."""
+"""Envelope decode path: a reference-free round trip, malformed envelopes
+failing loudly, the reference's OWN golden fixtures
+(/root/reference/test/events/*.json), and the foreachBatch streaming skin."""
 
 from __future__ import annotations
 
+import base64
+import hashlib
 import json
 import os
 
@@ -43,6 +46,61 @@ def decoded(spark):
     payloads = [(i, encode_envelope(json.dumps(e))) for i, e in enumerate(entries)]
     df = spark.createDataFrame(payloads, ["idx", "data"])
     return decode_envelopes(df).cache()
+
+
+#: a hand-built log entry, shaped as the reference's own builder makes one
+HAND_ENTRY = {
+    "messageType": "DATA_MESSAGE",
+    "owner": "123456789012",
+    "logGroup": "/aws/lambda/checkout",
+    "logStream": "2024/01/02/[$LATEST]abc",
+    "subscriptionFilters": ["nr"],
+    "logEvents": [
+        {"id": "e0", "timestamp": 1704153600000, "message": "START RequestId: r-1\n"},
+        {"id": "e1", "timestamp": 1704153600250, "message": 'ünï "quoted"\tline'},
+        {"id": "e2", "timestamp": 1704153601999, "message": "END RequestId: r-1\n"},
+    ],
+}
+
+
+def _turns(spark, payload: str) -> list:
+    df = spark.createDataFrame([(payload,)], ["data"])
+    turns = entries_to_turns(decode_envelopes(df))
+    return turns.select(
+        "conv_id", "turn_idx", "role", "text", "tool",
+        F.unix_millis("ts").alias("ts_ms"), "log_group", "log_stream", "owner",
+    ).orderBy("turn_idx").collect()
+
+
+def test_envelope_roundtrip_equals_entry_events(spark):
+    e = HAND_ENTRY
+    conv_id = hashlib.sha256(
+        f"{e['logGroup']}|{e['logStream']}".encode()
+    ).hexdigest()[:16]
+    want = [
+        (conv_id, i, "user", ev["message"], "lambda", ev["timestamp"],
+         e["logGroup"], e["logStream"], e["owner"])
+        for i, ev in enumerate(e["logEvents"])
+    ]
+    got = [tuple(r) for r in _turns(spark, encode_envelope(json.dumps(e)))]
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "payload, error",
+    [
+        # the reference's b64decode refuses this as well (bad padding)
+        ("!!!not base64***", "does not have enough valid bits"),
+        (base64.b64encode(b"plain bytes, not gzip").decode(), "incorrect header check"),
+        (encode_envelope(json.dumps(HAND_ENTRY)[:-20]), "MALFORMED_RECORD_IN_PARSING"),
+    ],
+    ids=["bad_base64", "bad_gzip", "bad_json"],
+)
+def test_malformed_envelope_fails_loudly(spark, payload, error):
+    """The reference's b64decode/gzip/json.loads raise on each of these
+    (src/function.py:636-638); a silently dropped entry would lose logs."""
+    with pytest.raises(Exception, match=error):
+        _turns(spark, payload)
 
 
 @requires_reference

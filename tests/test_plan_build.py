@@ -9,6 +9,8 @@ spends building its three frames.
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.errors.utils
 from py4j.clientserver import ClientServerConnection
 
@@ -40,10 +42,14 @@ def test_write_sinks_builds_frames_within_round_trip_budget(
     monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
     calls = 0
     send = ClientServerConnection.send_command
+    # py4j's finalizer thread deletes Java objects that Python's GC frees
+    # meanwhile; only this thread's commands build the frames
+    caller = threading.get_ident()
 
     def counted(self, command):
         nonlocal calls
-        calls += 1
+        if threading.get_ident() == caller:
+            calls += 1
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
