@@ -1,6 +1,7 @@
 """Envelope decode path: a reference-free round trip, malformed envelopes
-failing loudly, the reference's OWN golden fixtures
-(/root/reference/test/events/*.json), and the foreachBatch streaming skin."""
+failing loudly, the reference's OWN golden fixtures (its
+test/events/*.json, at ``FIXTURE_DIR``), and the foreachBatch streaming
+skin."""
 
 from __future__ import annotations
 
