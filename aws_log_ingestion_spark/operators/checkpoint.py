@@ -126,8 +126,8 @@ def write_parquet(
     - ``"publish"``: replace ``path`` whole, with every file published
       at job commit (committer v1), so a failed job publishes nothing
       (the ``run_pipeline`` hub).
-    - ``"append"``: add files, committer v1 (the streaming skin,
-      follow-up writes).
+    - ``"append"``: add files, committer v1 (the chunk stage's
+      follow-up write).
     """
     cols = [*partition_by, *order_by]
     if cols:
@@ -136,10 +136,11 @@ def write_parquet(
     if mode != "overwrite":
         # The session default is committer v2 (fast, but a mid-job failure
         # can leave partial task files visible); an overwrite's rerun
-        # removes them. Appends have no rerun that removes, and the hub
-        # must publish nothing from a failed job: committer v1 stages task
-        # output under _temporary and publishes it at job commit, so only
-        # a whole-batch replay can duplicate appended rows (ADVICE r4).
+        # removes them. An append's files go only with the overwrite its
+        # stage reruns first (each follow-up appends into the directory
+        # its stage just overwrote), and the hub must publish nothing
+        # from a failed job: committer v1 stages task output under
+        # _temporary and publishes it at job commit (ADVICE r4).
         options["mapreduce.fileoutputcommitter.algorithm.version"] = "1"
     writer = df.write.mode("append" if mode == "append" else "overwrite").options(**options)
     if partition_by:

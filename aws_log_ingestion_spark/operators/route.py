@@ -8,8 +8,8 @@ family/EntryType combination is a filtered write to its own table —
 separate tables (not a partition column) because the sinks carry
 different schemas, exactly like the reference's differently-shaped
 payloads (SURVEY.md §2 row 15). ``write_sinks`` is the one place that
-builds the sink frames; the batch, incremental and streaming runners
-each pass only their commit.
+builds the sink frames; the batch and incremental runners each pass
+only their commit.
 
 Writes sort within partitions by (conv_id, turn_idx) so per-turn order —
 load-bearing in the reference's tests — is physically preserved and
@@ -114,8 +114,9 @@ def write_sinks(hub: DataFrame, cfg: PipelineConfig, commit) -> None:
     from the hub and hand it to ``commit(name, df, partition_by,
     order_by, metrics, follow=None)``, in the order infra, logging,
     chunk_stats. The commit owns the write: ``checkpoint.write_parquet``
-    with the partition and order columns fixed here, in its checkpointed
-    overwrite, per-batch directory overwrite or streaming append mode.
+    with the partition and order columns fixed here, as ``run_pipeline``'s
+    checkpointed stage or ``run_incremental``'s per-batch directory
+    overwrite.
     ``metrics`` are the ``observe()`` aggregates a counting commit puts
     on the write, so no runner re-reads a sink to count it. ``follow``,
     when given, is called once after the write; a frame it returns is

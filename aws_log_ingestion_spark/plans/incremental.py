@@ -143,6 +143,15 @@ def _batch_records(log: ckpt.CheckpointLog) -> list[dict]:
     return records
 
 
+def _last_batch_record(out_dir: str) -> dict:
+    """The newest batch record of ``out_dir``; an out_dir that
+    ``run_incremental`` never committed a batch to is refused."""
+    batches = _batch_records(ckpt.CheckpointLog(out_dir))
+    if not batches:
+        raise ValueError(f"no incremental batch record in {out_dir}")
+    return batches[-1]
+
+
 def _cfg_fingerprint(cfg: PipelineConfig) -> dict:
     # JSON round-trip so the fresh fingerprint is type-identical to one
     # read back from a stored batch record (ADVICE r6: sorted(v.items())
@@ -187,7 +196,7 @@ def live_rows(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     every committed tombstone's (ingest_batch, conv_id). Columns and
     their order are the raw sink's. Both are read with the schemas the
     last batch record and ``TOMBSTONE_SCHEMA`` hold."""
-    last = _batch_records(ckpt.CheckpointLog(out_dir))[-1]
+    last = _last_batch_record(out_dir)
     rows = ckpt.read_with_schema(spark, last["sink_schemas"][name], os.path.join(out_dir, name))
     tombstones = os.path.join(out_dir, TOMBSTONES)
     if not os.path.isdir(tombstones):
@@ -210,7 +219,7 @@ def hub_lookup(spark: SparkSession, out_dir: str, conv_id: str) -> DataFrame:
     table's). The residual conv_id equality prunes further via parquet
     row-group stats (sinks sort within files by conv_id). The hub is
     read with the last batch record's ``schema``."""
-    last = _batch_records(ckpt.CheckpointLog(out_dir))[-1]
+    last = _last_batch_record(out_dir)
     return (
         ckpt.read_with_schema(spark, last["schema"], os.path.join(out_dir, "classified"))
         .filter(F.col("conv_bucket") == ckpt.conv_bucket(F.lit(conv_id)))

@@ -24,7 +24,6 @@ Run via spark-submit (package zipped by scripts/make_pyfiles.sh):
 
 from __future__ import annotations
 
-import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -41,8 +40,9 @@ from ..sources.derive import conv_meta_from_events, transcripts_from_events
 # a conversation above this many turns would serialise the hub's conv_id
 # window onto one task (the whole partition must fit one task's sort);
 # above it prepare() switches to the salted two-pass fills + agg-join
-# classify. 0 disables the probe (plain window unconditionally).
-SKEW_THRESHOLD = int(os.environ.get("SPARK_GRAFT_SKEW_THRESHOLD", "1000000"))
+# classify. prepare(skew_threshold=0) disables the probe (plain window
+# unconditionally).
+SKEW_THRESHOLD = 1_000_000
 
 
 def max_conv_rows(transcripts: DataFrame) -> int:
@@ -95,13 +95,13 @@ def prepare(
     layout. Over input already clustered on conv_id
     (``conv_id_clustered``: a bucketed table scan) they attach by
     ``marker_join``, and the hub plans with no fact-side exchange. Every
-    other input (a random layout, incremental batches, streaming
-    micro-batches) keeps the union attach and its one conv_id exchange;
-    there the union's Python-UDF branch would hide any clustering.
+    other input (a random layout, incremental batches) keeps the union
+    attach and its one conv_id exchange; there the union's Python-UDF
+    branch would hide any clustering.
 
     Skew auto-routing (VERDICT r5 #3): a pre-pass probes the largest
     conversation; above ``skew_threshold`` rows (default
-    SPARK_GRAFT_SKEW_THRESHOLD=1M) the hub switches to the salted
+    ``SKEW_THRESHOLD``, 1M) the hub switches to the salted
     two-pass fills + agg-join classifier, whose tasks are bounded at the
     salt range instead of the hottest conversation's full length. Output
     is hash-identical to the plain-window plan (tests/test_skew.py)."""

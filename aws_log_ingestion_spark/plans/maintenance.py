@@ -4,15 +4,15 @@ Two jobs a 10^12-turn deployment runs continuously, expressed over the
 parquet fallback layout (on Iceberg they are `rewrite_data_files` and a
 bucket-transform `REPLACE TABLE ... PARTITIONED BY`):
 
-1. **Compaction** — incremental ingest (plans/incremental.py) and
-   streaming appends (streaming/stream_job.py) accrete one file set per
-   batch; at scale that is millions of small files, and scan task
-   scheduling + footer reads dominate the read path long before data
-   volume does. ``compact_parquet_root`` rewrites every leaf partition
-   directory whose file count exceeds what its byte size justifies at
-   ``target_bytes`` per file, preserving the partition directory layout,
-   the row multiset (verified from parquet footers before the swap),
-   and the within-file (conv_id, turn_idx) clustering the sinks write.
+1. **Compaction** — incremental ingest (plans/incremental.py) accretes
+   one file set per batch; at scale that is millions of small files, and
+   scan task scheduling + footer reads dominate the read path long
+   before data volume does. ``compact_parquet_root`` rewrites every
+   leaf partition directory whose file count exceeds what its byte size
+   justifies at ``target_bytes`` per file, preserving the partition
+   directory layout, the row multiset (verified from parquet footers
+   before the swap), and the within-file (conv_id, turn_idx) clustering
+   the sinks write.
 
 2. **Bucketization** — the measured zero-exchange hub (BENCH/BASELINE.md
    "bucketed ingest": the job's ONE shuffle disappears when the input is

@@ -41,8 +41,9 @@ def windowed_turn_rate(
         # classification's conversation-level any() is a conv_id window —
         # not expressible on an unbounded stream (Spark rejects non-time
         # windows there). Streaming callers feed the CLASSIFIED hub table
-        # (the foreachBatch job's output), the same layering production
-        # uses; batch callers may pass raw transcripts.
+        # (what run_pipeline and run_incremental write), the same
+        # layering production uses; batch callers may pass raw
+        # transcripts.
         if df.isStreaming:
             raise ValueError(
                 "streaming input must already carry a 'sink' column "

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import collections
 import os
 import sys
 
@@ -34,3 +35,17 @@ def template_meta_df(spark):
     return datagen.meta_to_spark_df(
         spark, datagen.conv_meta_rows(datagen.all_template_rows())
     ).cache()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line per distinct skip reason with its count, so every run
+    reports what it skipped and why."""
+    reasons = collections.Counter(
+        rep.longrepr[2].removeprefix("Skipped: ")
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple)
+    )
+    if reasons:
+        terminalreporter.section("skip reasons")
+    for reason, n in reasons.most_common():
+        terminalreporter.write_line(f"{n} × {reason}")

@@ -1,13 +1,13 @@
-"""The chunk stage's two phases through all three runners.
+"""The chunk stage's two phases through both runners.
 
 ``chunk_stats`` is written as the rows that provably fit one chunk, then,
 only when that write saw a (conv_id, path) row over the cap, the exact
 walk of those rows appended (``chunks.sink_chunk_counts``). At a 600 B
-cap most (conv_id, path) rows are over the cap, so here ``run_pipeline``, two
-``run_incremental`` batches (the second with late turns) and one
-``make_batch_processor`` micro-batch all take the follow-up, and each
-must equal ``chunk_counts_fast`` per (conv_id, path). The corpus adds a
-conversation whose first infra row is a later turn with different meta.
+cap most (conv_id, path) rows are over the cap, so here ``run_pipeline``
+and two ``run_incremental`` batches (the second with late turns) all
+take the follow-up, and each must equal ``chunk_counts_fast`` per
+(conv_id, path). The corpus adds a conversation whose first infra row is
+a later turn with different meta.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from aws_log_ingestion_spark.plans.incremental import live_rows, run_incremental
 from aws_log_ingestion_spark.plans.job import prepare, run_pipeline
 from aws_log_ingestion_spark.sources import datagen
 from aws_log_ingestion_spark.sources.derive import conv_meta_from_transcripts
-from aws_log_ingestion_spark.streaming.stream_job import make_batch_processor
 
 CAP = 600
 CFG = PipelineConfig(logging_enabled=True, max_payload_size=CAP)
@@ -76,7 +75,7 @@ def runs(spark, tmp_path_factory):
     in_dir = str(root / "in")
     first, late = _batches(spark)
     first.coalesce(1).write.parquet(f"{in_dir}/b0")
-    out = {name: str(root / name) for name in ("pipeline", "incremental", "stream")}
+    out = {name: str(root / name) for name in ("pipeline", "incremental")}
     assert run_incremental(spark, in_dir, out["incremental"], CFG)["batch_id"] == 0
     late.coalesce(1).write.parquet(f"{in_dir}/b1")
     assert run_incremental(spark, in_dir, out["incremental"], CFG)["batch_id"] == 1
@@ -84,7 +83,6 @@ def runs(spark, tmp_path_factory):
     transcripts = spark.read.parquet(f"{in_dir}/b0", f"{in_dir}/b1")
     meta = conv_meta_from_transcripts(transcripts)
     result = run_pipeline(spark, transcripts, meta, out["pipeline"], CFG, resume=False)
-    make_batch_processor(meta, out["stream"], CFG)(transcripts, 0)
 
     hub = spark.read.parquet(f"{out['pipeline']}/classified")
     want = chunk_op.chunk_counts_fast(infra_union(hub, CFG), "infra", CFG).unionByName(
@@ -146,7 +144,7 @@ def test_cap_sends_most_rows_through_the_walk(runs):
     assert want[("c0", "logging")]["n_chunks"] > 1
 
 
-@pytest.mark.parametrize("runner", ["pipeline", "incremental", "stream"])
+@pytest.mark.parametrize("runner", ["pipeline", "incremental"])
 def test_runner_chunk_stats_equal_chunk_counts_fast(spark, runs, runner):
     assert _by_key(_stats(spark, runs, runner)) == runs["want"]
 

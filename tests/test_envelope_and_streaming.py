@@ -1,7 +1,7 @@
 """Envelope decode path: a reference-free round trip, malformed envelopes
-failing loudly, the reference's OWN golden fixtures (its
-test/events/*.json, at ``FIXTURE_DIR``), and the foreachBatch streaming
-skin."""
+failing loudly, and the reference's OWN golden fixtures (its
+test/events/*.json, at ``FIXTURE_DIR``). Sink equality with
+``run_pipeline`` on the template corpus is ``tests/test_sink_fanout.py``'s."""
 
 from __future__ import annotations
 
@@ -13,9 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators.classify import classify
-from aws_log_ingestion_spark.sources import datagen
 from aws_log_ingestion_spark.sources.envelope import (
     decode_envelopes,
     encode_envelope,
@@ -155,44 +153,3 @@ def test_trace_id_decodes_from_real_sam_blob(spark, decoded):
     )
     ref = load_reference()
     assert decode_trace_id_str(marker) == ref._get_trace_id(marker)
-
-
-def test_streaming_foreachbatch_equals_batch(spark, tmp_path):
-    """availableNow stream over the template corpus produces the same
-    per-sink counts and rows as a clean ``run_pipeline`` over the same
-    input."""
-    from aws_log_ingestion_spark.plans.job import run_pipeline
-    from aws_log_ingestion_spark.streaming.stream_job import run_stream
-
-    rows = datagen.all_template_rows()
-    tdf = datagen.to_spark_df(spark, rows)
-    meta = datagen.meta_to_spark_df(spark, datagen.conv_meta_rows(rows))
-
-    in_dir = str(tmp_path / "stream_in")
-    out_dir = str(tmp_path / "stream_out")
-    batch_dir = str(tmp_path / "batch_out")
-    tdf.write.mode("overwrite").parquet(in_dir)
-
-    cfg = PipelineConfig(logging_enabled=True)
-    q = run_stream(spark, in_dir, meta, out_dir, cfg, trigger_once=True)
-    q.awaitTermination(120)
-    exp = run_pipeline(
-        spark, spark.read.parquet(in_dir), meta, batch_dir, cfg, resume=False
-    )["counts"]
-
-    infra = spark.read.parquet(f"{out_dir}/infra")
-    logging = spark.read.parquet(f"{out_dir}/logging")
-    got = {
-        r["sink"]: r["n"]
-        for r in infra.groupBy("sink").agg(F.count("*").alias("n")).collect()
-    }
-    assert got.get("lambda", 0) == exp["infra_lambda_rows"]
-    assert got.get("vpc", 0) == exp["infra_vpc_rows"]
-    assert got.get("other", 0) == exp["infra_other_rows"]
-    assert logging.count() == exp["logging_rows"]
-
-    for sink, df in (("infra", infra), ("logging", logging)):
-        want = spark.read.parquet(f"{batch_dir}/{sink}")
-        df = df.select(*want.columns)
-        assert df.exceptAll(want).count() == 0
-        assert want.exceptAll(df).count() == 0

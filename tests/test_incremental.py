@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 import shutil
 
 import pytest
@@ -24,7 +25,7 @@ from pyspark.sql import functions as F
 from aws_log_ingestion_spark.config import PipelineConfig
 from aws_log_ingestion_spark.operators import checkpoint as ckpt
 from aws_log_ingestion_spark.operators.chunks import chunk_totals_fast
-from aws_log_ingestion_spark.plans.incremental import live_rows, run_incremental
+from aws_log_ingestion_spark.plans.incremental import hub_lookup, live_rows, run_incremental
 from aws_log_ingestion_spark.plans.job import run_pipeline
 from aws_log_ingestion_spark.sources.derive import (
     conv_meta_from_transcripts,
@@ -420,8 +421,6 @@ def test_b3_double_supersede_extension_only_batch(spark, env):
 
 
 def test_hub_lookup_prunes_partitions(spark, env):
-    from aws_log_ingestion_spark.plans.incremental import hub_lookup
-
     looked = hub_lookup(spark, env["out"], EXT_FLIP_CONV)
     full = (
         spark.read.parquet(f"{env['out']}/classified")
@@ -433,9 +432,32 @@ def test_hub_lookup_prunes_partitions(spark, env):
     # plan-level: the conv_bucket predicate lands in PartitionFilters,
     # so the scan reads one bucket directory per batch, not the table
     plan = looked._jdf.queryExecution().executedPlan().toString()
-    import re
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and "conv_bucket" in pf.group(1), plan
+
+
+@pytest.fixture(scope="module")
+def staged_only(spark, template_df, tmp_path_factory):
+    """An out_dir whose first batch was killed right after staging: a
+    ``.staged`` record and no batch record."""
+    base = tmp_path_factory.mktemp("staged_only")
+    in_dir, out = str(base / "in"), str(base / "out")
+    template_df.coalesce(1).write.parquet(in_dir)
+    with pytest.raises(RuntimeError, match="injected kill at staged"):
+        run_incremental(spark, in_dir, out, CFG, fail_at="staged")
+    return out
+
+
+def test_live_rows_refuses_out_dir_without_batch_record(spark, staged_only):
+    msg = f"no incremental batch record in {re.escape(staged_only)}"
+    with pytest.raises(ValueError, match=msg):
+        live_rows(spark, staged_only, "logging")
+
+
+def test_hub_lookup_refuses_out_dir_without_batch_record(spark, staged_only):
+    msg = f"no incremental batch record in {re.escape(staged_only)}"
+    with pytest.raises(ValueError, match=msg):
+        hub_lookup(spark, staged_only, "c0")
 
 
 @pytest.fixture(scope="module")

@@ -262,6 +262,10 @@ def _zipwith_shingle_sets(docs, n=3):
     formulation any future shingle_sets rewrite must equal per-row
     (the r7 ml.NGram attempt was value-equal but lost fresh-session,
     see OPTIMIZATION_r07.md pass 7; these pins stay as the contract)."""
+    # It copies shingle_sets' internals today on purpose: the pin guards
+    # future rewrites. Its element order (array_distinct's first
+    # occurrence) is part of that formulation contract, so the tests
+    # compare arrays, not sets; do not sort them to make a rewrite pass.
     words = F.split(
         F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "), " "
     )

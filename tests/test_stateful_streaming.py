@@ -1,11 +1,13 @@
-"""Fills across input batches and the foreachBatch streaming skin.
+"""Fills across input batches, and the watermarked windowed rollup.
 
 A conversation whose turns arrive in different input files is
 ``run_incremental``'s job: each new file is one ingest batch, and a
 conversation that reappears is recomputed whole from the hub's raw turns,
-so the trace/request-id carry survives the batch boundary. The streaming
-skin (``run_stream`` / ``make_batch_processor``) covers the reference's
-model, whole conversations per micro-batch."""
+so the trace/request-id carry survives the batch boundary. Whole
+conversations per batch, the reference's model, are the
+``three_batches`` runner of ``tests/test_sink_fanout.py``. The one
+Structured Streaming query left is ``streaming/windowed.py``'s rollup
+over the classified hub."""
 
 from __future__ import annotations
 
@@ -202,130 +204,3 @@ def test_stream_stateful_logging_equals_batch_melt_over_3_batch_split(
     got = sorted((r.asDict() for r in got_df.collect()), key=key)
     want = sorted((r.asDict() for r in want_df.collect()), key=key)
     assert got == want
-
-
-def test_run_stream_3_conversation_batches_equals_batch_job(spark, tmp_path):
-    """The plain foreachBatch skin under a 3-batch CONVERSATION-ALIGNED
-    split (the reference's model: one invocation carries whole entries)
-    must reproduce the batch job's per-sink counts AND per-turn routed
-    text exactly."""
-    from aws_log_ingestion_spark.config import PipelineConfig
-    from aws_log_ingestion_spark.operators.classify import classify
-    from aws_log_ingestion_spark.operators.enrich import enrich
-    from aws_log_ingestion_spark.operators.route import infra_union
-    from aws_log_ingestion_spark.sources import datagen as dg
-    from aws_log_ingestion_spark.streaming.stream_job import run_stream
-
-    cfg = PipelineConfig(logging_enabled=True)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-
-    rows = dg.all_template_rows()
-    tdf = dg.to_spark_df(spark, rows)
-    meta = dg.meta_to_spark_df(spark, dg.conv_meta_rows(rows))
-    # three files, whole conversations per file (crc32-style bucketing on
-    # the driver side via hash of conv_id string)
-    for part in range(3):
-        tdf.filter(F.abs(F.hash("conv_id")) % 3 == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-
-    # force one file per micro-batch
-    schema = dg.to_spark_df(spark, []).schema
-    from aws_log_ingestion_spark.streaming.stream_job import make_batch_processor
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(make_batch_processor(meta, out_dir, cfg))
-        .option("checkpointLocation", f"{out_dir}/_ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len(q.recentProgress) >= 3
-
-    hub = enrich(classify(tdf, cfg), meta)
-    key = lambda t: (t[0], t[1], t[2])
-    got_infra = sorted(
-        (r["sink"], r["conv_id"], r["turn_idx"], r["text"])
-        for r in spark.read.parquet(f"{out_dir}/infra").collect()
-    )
-    want_infra = sorted(
-        (r["sink"], r["conv_id"], r["turn_idx"], r["text"])
-        for r in infra_union(hub, cfg).collect()
-    )
-    assert got_infra == want_infra
-    got_log = spark.read.parquet(f"{out_dir}/logging").count()
-    assert got_log == tdf.count()
-
-
-def test_stream_chunk_stats_equal_batch_over_3_batches(spark, tmp_path):
-    """VERDICT r5 #8: the streaming chunk stage. foreachBatch appends
-    chunk_counts_fast per micro-batch; under a
-    3-batch CONVERSATION-ALIGNED split the appended union must equal the
-    batch job's one-shot chunk stats row-for-row (and therefore the
-    rolled-up totals)."""
-    from aws_log_ingestion_spark.config import PipelineConfig
-    from aws_log_ingestion_spark.operators import chunks as chunk_op
-    from aws_log_ingestion_spark.operators.classify import classify
-    from aws_log_ingestion_spark.operators.enrich import enrich
-    from aws_log_ingestion_spark.operators.route import infra_union
-    from aws_log_ingestion_spark.sources import datagen as dg
-    from aws_log_ingestion_spark.streaming.stream_job import (
-        make_batch_processor,
-    )
-
-    cfg = PipelineConfig(logging_enabled=True)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-
-    rows = dg.all_template_rows()
-    tdf = dg.to_spark_df(spark, rows)
-    meta = dg.meta_to_spark_df(spark, dg.conv_meta_rows(rows))
-    for part in range(3):
-        tdf.filter(F.abs(F.hash("conv_id")) % 3 == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-
-    schema = dg.to_spark_df(spark, []).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(make_batch_processor(meta, out_dir, cfg))
-        .option("checkpointLocation", f"{out_dir}/_ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len(q.recentProgress) >= 3
-
-    hub = enrich(classify(tdf, cfg), meta)
-    want_stats = chunk_op.chunk_counts_fast(
-        infra_union(hub, cfg), "infra", cfg
-    ).unionByName(chunk_op.chunk_counts_fast(hub, "logging", cfg))
-    want = sorted(
-        tuple(r.asDict().items()) for r in want_stats.collect()
-    )
-    got = sorted(
-        tuple(r.asDict().items())
-        for r in spark.read.parquet(f"{out_dir}/chunk_stats").collect()
-    )
-    assert got == want
-
-    # rolled-up totals agree too (the graded aggregate)
-    want_tot = {
-        (r["sink"], r["path"]): r.asDict()
-        for r in chunk_op.chunk_totals_fast(want_stats).collect()
-    }
-    got_tot = {
-        (r["sink"], r["path"]): r.asDict()
-        for r in chunk_op.chunk_totals_fast(
-            spark.read.parquet(f"{out_dir}/chunk_stats")
-        ).collect()
-    }
-    assert got_tot == want_tot
